@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: times every SparkEntry query at the target scale
   * factor and prints ONE JSON line for the driver.
   *
@@ -33,10 +31,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
       // Generous pre-coalesce width so AQE sizes each shuffle by BYTES,
       // not by the core count: at 10-100x data, 32 shuffle partitions put
       // millions of rows per task and spill; with a wide initial width
@@ -45,9 +41,7 @@ object Bench {
       // session config survive a scale-up (BENCH_SF10.md).
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "512"))
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: initializes codegen, parquet readers and the shuffle

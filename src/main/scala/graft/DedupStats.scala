@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-leg candidate-volume report for the prefix-filtered dedup family
   * (`Dedup.prefixJoinStats`): prints ONE JSON line per config with
   * n_docs / prefix_rows / candidates / output_pairs / cand_per_output,
@@ -17,13 +15,8 @@ import org.apache.spark.sql.SparkSession
 object DedupStats {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     for (t <- Seq(0.7, 0.9)) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: prints the formatted physical plan of one or more
   * SparkEntry queries (default: a pushdown/broadcast-sensitive sample),
   * or — with `--audit` — sweeps the WHOLE registry and prints summary
@@ -208,12 +206,7 @@ object Explain {
     val audit = args.contains("--audit")
     val rest = args.filterNot(_ == "--audit")
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (audit) {
       var cartesian = List.empty[String]

@@ -11,7 +11,7 @@ import graft.functions.expr.{HeavyHittersAgg, MinHashSignature, MyersLevenshtein
   * `min_hash_signature(hashes, numHashes, seed)`.
   *
   * Cluster use: `--conf spark.sql.extensions=graft.GraftExtensions` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`. For an
+  * `GraftSession.local(n).withExtensions(new GraftExtensions)`. For an
   * already-running session, [[GraftExtensions.register]] installs the same
   * functions into its registry.
   */

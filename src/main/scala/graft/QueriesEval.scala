@@ -253,12 +253,6 @@ object QueriesEval {
     ()
   }
 
-  // r20 scratch accessors (stage attribution harness only)
-  private[graft] def c5CatalogForScratch(s: SparkSession, d: String) =
-    c5Catalog(s, d)
-  private[graft] def c5QuantCatalogForScratch(s: SparkSession, d: String) =
-    c5QuantCatalog(s, d)
-
   /** Shared oracle CTE prefix mirroring [[predGt]] relationally. */
   private val EvalCtes: String =
     s"""WITH li AS (SELECT o_custkey AS u, l_partkey AS it, l_shipdate AS sd
@@ -918,8 +912,9 @@ object QueriesEval {
       val users = split.select(col("u")).distinct()
       // Array-form seen-item exclusion (the predGt r15 device): the
       // users×100 cross-join + anti-join fan-out was c7's DOMINANT sf10
-      // stage (62.9 s of 210, r15 C7Profile attribution — NOT the fact
-      // join+agg r14 guessed); pred = rank-ordered top-100 array filtered
+      // stage (62.9 s of 210, r15 stage attribution by the C7Profile
+      // harness, last in commit 65b4b15 — NOT the fact join+agg r14
+      // guessed); pred = rank-ordered top-100 array filtered
       // against each user's train∩top100 set (≤100 ids via broadcast
       // semi-join), no fan-out, order preserved by construction.
       val topItems = top100Arr.select(explode(col("__arr")).as("it"))
@@ -1197,8 +1192,8 @@ object QueriesEval {
       // the barrier pins it to exactly once per row per pass. With the
       // centroid checkpoint in clusterPrunedTopK this took the approx
       // arm from 5.6 to 3.7 s, parity with c5's float arm (ScratchC5b
-      // V0 vs V3); values are untouched, the row still decodes int8
-      // inside the timed retrieval.
+      // V0 vs V3, harness last in commit 65b4b15); values are untouched,
+      // the row still decodes int8 inside the timed retrieval.
       val items = Similarity.evalBarrier(qcat.select(col("item_id"),
         transform(col("qvec"), x => x.cast("float") * col("scale"))
           .as("embedding")))

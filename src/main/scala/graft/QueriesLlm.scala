@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Vectors
 import graft.multimodal.Multimodal
 import graft.ops.{Dedup, Relational, Similarity, TextAnalysis}
+import graft.sources.SyntheticData
 
 /** LLM-training-data pipeline tranche (builder-brief north-star components):
   * deduplication (exact, MinHash-LSH, SimHash, inverted-index Jaccard),
@@ -1061,7 +1062,7 @@ object QueriesLlm {
       val refTop = Similarity.rerankExactTopK(
         short.select(col("query_id"), col("item_id")),
         e.filter(col("vec_id") < 50), e, "vec_id", "vec_id", "embedding",
-        5, "cosine")
+        5, cb.metric)
         .select(col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))
         .unionAll(refTop.withColumn("__arm", lit("r")))
@@ -1123,7 +1124,7 @@ object QueriesLlm {
       val refTop = Similarity.rerankExactTopK(
         short.select(col("nprobe"), col("query_id"), col("item_id")),
         e.filter(col("vec_id") < 50), e, "vec_id", "vec_id", "embedding",
-        5, "cosine", armCols = Seq("nprobe"))
+        5, cb.metric, armCols = Seq("nprobe"))
         .select(col("nprobe"), col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))
         .unionAll(refTop.withColumn("__arm", lit("r")))
@@ -1184,7 +1185,7 @@ object QueriesLlm {
       val refTop = Similarity.rerankExactTopK(
         short.select(col("nprobe"), col("query_id"), col("item_id")),
         e.filter(col("vec_id") < 50), e, "vec_id", "vec_id", "embedding",
-        5, "cosine", armCols = Seq("nprobe"))
+        5, idx.metric, armCols = Seq("nprobe"))
         .select(col("nprobe"), col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))
         .unionAll(refTop.withColumn("__arm", lit("r")))
@@ -1212,7 +1213,7 @@ object QueriesLlm {
     //     invisible there. This row re-measures raw-vs-residual every
     //     round on the deterministic hash-derived mixture-of-Gaussians
     //     corpus (the d_semantic_recall_geo device at cluster
-    //     granularity — graft.ResidualCurve.mogCorpus, no RNG, same
+    //     granularity — SyntheticData.mogCorpus, no RNG, same
     //     rows every run; the sf dir is intentionally unused: the
     //     corpus IS the planted geometry) at the adjudicated operating
     //     point mog:2000:16:0.15, lloyd=2, nprobe=4, m=16, ksub=64,
@@ -1223,7 +1224,7 @@ object QueriesLlm {
     //     quantization. No SQL oracle (native kernels + recall
     //     measurement); VectorSpec pins the structural margin. ---
     ("r14d_ivfpq_residual_geo", (s, _) => {
-      val e = graft.ResidualCurve.mogCorpus(s, 2000, 16, 0.15)
+      val e = SyntheticData.mogCorpus(s, 2000, 16, 0.15)
         .localCheckpoint(true)
       val lloyd = 2; val nprobe = 4; val nlist = 16; val k = 5
       val queries = e.filter(col("vec_id") < 50)
@@ -1285,7 +1286,7 @@ object QueriesLlm {
         .select(col("__fam"), col("query_id"), col("item_id"))
       val refTop = Similarity.rerankExactTopK(
         shortAll.select(col("__fam"), col("query_id"), col("item_id")),
-        queries, e, "vec_id", "vec_id", "embedding", k, "cosine",
+        queries, e, "vec_id", "vec_id", "embedding", k, idx.metric,
         armCols = Seq("__fam"))
         .select(col("__fam"), col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))

@@ -39,16 +39,21 @@ object SparkEntry {
     // at the scan are unchanged.
     if (name == "documents" || name == "embeddings") {
       val want = s.sparkContext.defaultParallelism
-      val f = new java.io.File(s"$dir/$name.parquet")
-      val bytes =
-        if (f.isDirectory)
-          Option(f.listFiles()).map(_.filter(_.isFile).map(_.length()).sum)
-            .getOrElse(0L)
-        else f.length()
+      val bytes = tableBytes(s, s"$dir/$name.parquet")
       val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
       val scanParts = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
       if (scanParts < want) df.repartition(want) else df
     } else df
+  }
+
+  /** On-disk bytes of a table path (a file, or a directory summed
+    * recursively), resolved through the path's own Hadoop FileSystem so
+    * a plain path and its `file:`/`hdfs:`/`s3a:` URI size the same —
+    * `java.io.File` reads any URI-form path as absent, 0 bytes. */
+  private[graft] def tableBytes(s: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sessionState.newHadoopConf())
+      .getContentSummary(p).getLength
   }
 
   /** Memoized table row count, keyed by parquet path. Sizing decisions
@@ -1712,8 +1717,9 @@ object SparkEntry {
     //     unrolled form's 1..10 require() points at). Identical math and
     //     float-op ordering by construction, so it hashes against the
     //     identical oracle; GraphSpec pins exact double equality vs the
-    //     unrolled form at k ≤ 10 and PrScaleRun measures flat s/step to
-    //     k = 50 at sf1 (BENCH_SF10.md r14 addendum). ---
+    //     unrolled form at k ≤ 10 and the PrScaleRun harness (last in
+    //     commit 65b4b15) measured flat s/step to k = 50 at sf1
+    //     (BENCH_SF10.md r14 addendum). ---
     ("g1b_pagerank_ckpt", (s, d) => {
       // same explicit-width basket key exchange as g1_pagerank (r20)
       val li = T(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey"))

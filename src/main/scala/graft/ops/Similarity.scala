@@ -321,11 +321,12 @@ object Similarity {
     // all recompute the identical 2 000-row table. Checkpointing holds
     // nlist rows (config-sized) and leaves every value bit-identical;
     // measured on c5b's dequantized 1 M-item catalog it is half of the
-    // 5.6 → 3.7 s cut (ScratchC5b V0 vs V3). Eager, not lazy — the lazy
-    // form deadlocks under concurrent materialization (r18, see
-    // refineCentroids). refineCentroids' own output is already
-    // checkpointed per round; seeding it with the checkpointed frame
-    // also spares iteration 1's second scan of the seed subtree.
+    // 5.6 → 3.7 s cut (V0 vs V3 of the ScratchC5b harness, last in
+    // commit 65b4b15). Eager, not lazy — the lazy form deadlocks under
+    // concurrent materialization (r18, see refineCentroids).
+    // refineCentroids' own output is already checkpointed per round;
+    // seeding it with the checkpointed frame also spares iteration 1's
+    // second scan of the seed subtree.
     val seeds = pickCentroids(items, itemId, vecCol, nlist, seed)
       .localCheckpoint(true)
     val centroids =
@@ -815,10 +816,7 @@ object Similarity {
     val scored =
       if (nlist > 0) blockedScore(trn, tn, idCol, nlist, multiProbe, seed)
       else {
-        val dim = tn.limit(1).collect().headOption
-          .map(_.getSeq[Any](0).length).getOrElse(1)
-        val rowCap = math.max(1, (ExactDeconByteCap / (dim.toLong * 8L)).toInt)
-        val got = tn.limit(rowCap + 1).collect()
+        val (got, rowCap, dim) = collectTestCapped(tn)
         val bytes = math.min(got.length, rowCap).toLong * dim * 8L
         val trainBytes = trn.queryExecution.optimizedPlan.stats.sizeInBytes
         if (got.length <= rowCap &&
@@ -828,10 +826,7 @@ object Similarity {
           blockedScore(trn, tn, idCol, autoDeconNlist(trainBytes),
             multiProbe, seed)
       }
-    scored
-      .select(col(idCol), round(col("__rawmax"), 6).as("max_sim"))
-      .withColumn("contaminated",
-        coalesce(col("max_sim") >= threshold, lit(false)))
+    flagContaminated(scored, idCol, threshold)
   }
 
   /** Exact-path byte budget for the collected test-vector literal: 16 MB
@@ -873,20 +868,35 @@ object Similarity {
     // same byte-derived rowCap is asserted here via a limit-gated collect,
     // so a test side past the exact-path budget fails loudly instead of
     // OOMing the driver.
-    val tn = deconTest(test, vecCol)
-    val dim = tn.limit(1).collect().headOption
-      .map(_.getSeq[Any](0).length).getOrElse(1)
-    val rowCap = math.max(1, (ExactDeconByteCap / (dim.toLong * 8L)).toInt)
-    val got = tn.limit(rowCap + 1).collect()
+    val (got, rowCap, dim) = collectTestCapped(deconTest(test, vecCol))
     require(got.length <= rowCap,
       s"semanticDecontaminateExact: test side exceeds the exact-path " +
         s"budget ($rowCap rows at dim=$dim) — use semanticDecontaminate " +
         "(auto-dispatch) or a blocked nlist > 0")
-    exactScoreFromRows(trn, got, idCol)
+    flagContaminated(exactScoreFromRows(trn, got, idCol), idCol, threshold)
+  }
+
+  /** The exact path's bounded collect of the normalized test side: probe
+    * one row for the dimension, derive the row cap from
+    * [[ExactDeconByteCap]], and collect at most cap+1 rows — so
+    * `rows.length > rowCap` means "over budget" without ever holding
+    * more than the budget on the driver. Returns (rows, rowCap, dim). */
+  private def collectTestCapped(
+      tn: DataFrame): (Array[org.apache.spark.sql.Row], Int, Int) = {
+    val dim = tn.limit(1).collect().headOption
+      .map(_.getSeq[Any](0).length).getOrElse(1)
+    val rowCap = math.max(1, (ExactDeconByteCap / (dim.toLong * 8L)).toInt)
+    (tn.limit(rowCap + 1).collect(), rowCap, dim)
+  }
+
+  /** Output shape shared by both decontamination paths: `max_sim`
+    * rounded to 6 decimals, and `contaminated` false for a null max. */
+  private def flagContaminated(scored: DataFrame, idCol: String,
+                               threshold: Double): DataFrame =
+    scored
       .select(col(idCol), round(col("__rawmax"), 6).as("max_sim"))
       .withColumn("contaminated",
         coalesce(col("max_sim") >= threshold, lit(false)))
-  }
 
   private def deconTrain(train: DataFrame, idCol: String,
                          vecCol: String): DataFrame =

@@ -1734,12 +1734,13 @@ object TextAnalysis {
     // checkpoint materializes every lead column once and makes every
     // family read all of them (verified: the lazy plan has one
     // exchange PER family, 0 ReusedExchange — it recomputes, narrowly,
-    // and still wins). Measured back-to-back interleaved (GopherAb):
-    // sf0.1 2.0 s materialized / 1.5 s lazy; sf10 38.5 / 26.6.
-    // Identical output either way (checksum-asserted in the A/B
-    // harness). `materialize = true` remains the knob for driving the
-    // families as SEPARATE actions (the bpeMergesMaterialized regime),
-    // where lazy would re-tokenize per ACTION with no shared plan.
+    // and still wins). Measured back-to-back interleaved (the GopherAb
+    // harness, last in commit 65b4b15): sf0.1 2.0 s materialized / 1.5 s
+    // lazy; sf10 38.5 / 26.6. Identical output either way
+    // (checksum-asserted in that A/B harness). `materialize = true`
+    // remains the knob for driving the families as SEPARATE actions (the
+    // bpeMergesMaterialized regime), where lazy would re-tokenize per
+    // ACTION with no shared plan.
     val withLeads0 = (1 until maxN).foldLeft(
       tok0.withColumn("__cstart", coalesce(
         sum((length(col("__tok")) + 1).cast("long")).over(wPrefix), lit(0L)))

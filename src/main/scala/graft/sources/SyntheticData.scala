@@ -66,4 +66,24 @@ object SyntheticData {
         (floor(rand(seed + 23) * 86400L * 30)).as("ts_offset"),
         when(rand(seed + 24) < positiveRate, 1).otherwise(0).as("label"),
         (rand(seed + 25) * 300).as("dwell_time"))
+
+  /** Deterministic mixture-of-Gaussians embedding corpus (no RNG — all
+    * hash-derived, same rows every run): center lane ∈ [−1, 1) from
+    * xxhash64(center, lane); point = center + sigma·u, u ∈ [−1, 1) from
+    * xxhash64(id, lane). Cluster id = vec_id % nCenters. The clustered
+    * regime real embedding tables live in — the corpus where residual
+    * encoding shows its textbook gain (and a spec fixture for pinning
+    * it). */
+  def mogCorpus(spark: SparkSession, nItems: Int, nCenters: Int,
+                sigma: Double, dim: Int = 64): DataFrame =
+    spark.range(nItems).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(dim - 1)), i => {
+        val c = pmod(col("id"), lit(nCenters.toLong))
+        val centerLane =
+          pmod(xxhash64(c, i), lit(2000000L)).cast("double") /
+            1000000.0 - 1.0
+        val noise = (pmod(xxhash64(col("id"), i, lit(7L)),
+          lit(2000000L)).cast("double") / 1000000.0 - 1.0) * sigma
+        (centerLane + noise).cast("float")
+      }).as("embedding"))
 }

@@ -215,6 +215,11 @@ object StreamingJobs {
       pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets)).cast("int"))
     val touched = incoming.select(col("__bucket")).distinct()
       .collect().map(_.getInt(0))
+    // A zero-row batch (the no-data batch Spark runs after a watermark
+    // advance) touches no bucket: nothing to merge, and staging nothing
+    // would leave no parquet file for the swap to read back
+    // ([UNABLE_TO_INFER_SCHEMA]).
+    if (touched.isEmpty) return
     // Explicit existence check, NOT a catch-all: a transient read failure on
     // an existing store must fail the micro-batch (checkpoint retries it),
     // never silently rewrite touched buckets from the batch alone.
@@ -245,11 +250,12 @@ object StreamingJobs {
     // file: without it, every writer task holding rows of a bucket opens
     // its own file, and since the merge shuffle's AQE-coalesced task
     // count grows with store size, file count crept toward
-    // numBuckets x tasks (IncDedupLongRun measured 64 buckets -> 462
+    // numBuckets x tasks (a 100-batch long run measured 64 buckets -> 462
     // files and 13-row parquet files inflating the store ~2x at
-    // numBuckets=1024). One extra exchange of the touched data — the
-    // same magnitude the merge shuffle already paid — buys a store whose
-    // file count is ≤ numBuckets FOREVER, with bucket-sized row groups.
+    // numBuckets=1024; IncDedupLongRun harness, last in commit 65b4b15).
+    // One extra exchange of the touched data — the same magnitude the
+    // merge shuffle already paid — buys a store whose file count is
+    // ≤ numBuckets FOREVER, with bucket-sized row groups.
     merged.repartition(col("__bucket"))
       .write.mode("overwrite").partitionBy("__bucket").parquet(stage)
     // Failure-injection point for the exactly-once proof (StreamingSpec):
@@ -316,6 +322,7 @@ object StreamingJobs {
         pmod(xxhash64(col("__key")), lit(numBuckets)).cast("int"))
     val touched = incoming.select(col("__bucket")).distinct()
       .collect().map(_.getInt(0))
+    if (touched.isEmpty) return
     val existing =
       if (pathExists(spark, storePath))
         spark.read.parquet(storePath)
@@ -367,6 +374,7 @@ object StreamingJobs {
         pmod(xxhash64(col("__key")), lit(numBuckets)).cast("int"))
     val touched = incoming.select(col("__bucket")).distinct()
       .collect().map(_.getInt(0))
+    if (touched.isEmpty) return
     val existing =
       if (pathExists(spark, storePath))
         spark.read.parquet(storePath)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -28,6 +28,11 @@ import graft.sources.Readers
   * asserted to 1e-9 — any regression in ANY stage (reader, labeling,
   * k-core, split, exclusion, ranking, metric math) moves at least one
   * number.
+  *
+  * The structure test also runs on a seeded, ML-1M-shaped fixture the
+  * spec writes itself (same `::` format, a tenth of the users and movies),
+  * so the reader → k-core → split → exclusion path is exercised on every
+  * box, including those without the real files.
   */
 class Ml1mEndToEndSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -35,18 +40,38 @@ class Ml1mEndToEndSpec extends AnyFunSuite {
   private val Ml1mDir = "/root/reference/ml-1m"
   private val PerUser = 30 // synthesized interactions per user before dedup
 
+  /** ML-1M-shaped fixture: 604 users and 388 movies (a tenth of ML-1M's
+    * 6040 and 3883), drawn from a fixed seed in the real files' `::`
+    * layout — users `id::gender::age::occupation::zip`, movies
+    * `id::Title (year)::Genre|Genre` with ML-1M's gapped id range. */
+  private lazy val fixtureDir: String = {
+    val dir = Files.createTempDirectory("graft-ml1m-fixture")
+    val rng = new scala.util.Random(1)
+    val ages = Seq(1, 18, 25, 35, 45, 50, 56)
+    val users = (1 to 604).map { u =>
+      val g = if (rng.nextBoolean()) "M" else "F"
+      s"$u::$g::${ages(rng.nextInt(ages.size))}::${rng.nextInt(21)}::" +
+        f"${rng.nextInt(100000)}%05d"
+    }
+    val movieIds = rng.shuffle((1 to 3952).toVector).take(388).sorted
+    val movies = movieIds.map { m =>
+      val gs = rng.shuffle(Readers.genres).take(1 + rng.nextInt(3))
+      s"$m::Movie $m (${1919 + rng.nextInt(82)})::${gs.mkString("|")}"
+    }
+    Files.write(dir.resolve("users.dat"),
+      users.mkString("\n").getBytes("ISO-8859-1"))
+    Files.write(dir.resolve("movies.dat"),
+      movies.mkString("\n").getBytes("ISO-8859-1"))
+    dir.toString
+  }
+
   /** Deterministic ratings: each user hash-picks 30 movie indices; rating
     * and timestamp derive from (user, movie) alone so duplicate picks are
     * identical rows and `distinct()` is exact. Written as a real
     * `::`-delimited ratings.dat and read back through Readers.loadRatings,
     * so the S1 scan path is part of the surface under test. */
-  private def synthesizeRatingsDat(movies: DataFrame, users: DataFrame): String = {
-    // Synthesis parameters are part of the cache filename — change PerUser
-    // or the hashing scheme and bump the version suffix, else a stale
-    // cached file silently survives and golden failures point at the
-    // wrong stage.
-    val out = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_ml1m_ratings_p${PerUser}_v1.dat")
+  private def synthesizeRatingsDat(movies: DataFrame, users: DataFrame,
+                                   out: Path): String = {
     if (!Files.exists(out)) {
       val nMovies = movies.count() // 3883
       val movieIdx = movies.select(col("movie_id"))
@@ -76,11 +101,14 @@ class Ml1mEndToEndSpec extends AnyFunSuite {
     out.toString
   }
 
-  private lazy val metrics: Map[String, Double] = {
-    val users = Readers.loadUsers(spark, s"$Ml1mDir/users.dat")
-    val movies = Readers.loadMovies(spark, s"$Ml1mDir/movies.dat")
+  /** The pipeline's metric vector over the `users.dat`/`movies.dat` in
+    * `dir`, with the synthesized ratings written to `ratingsOut`. */
+  private def metricsOf(dir: String,
+                        ratingsOut: Path): Map[String, Double] = {
+    val users = Readers.loadUsers(spark, s"$dir/users.dat")
+    val movies = Readers.loadMovies(spark, s"$dir/movies.dat")
     val ratings = Readers.loadRatings(spark,
-      synthesizeRatingsDat(movies, users))
+      synthesizeRatingsDat(movies, users, ratingsOut))
 
     // P4/P5: implicit labels at the reference threshold, positives only
     val pos = Relational.implicitLabels(ratings, "rating", 4.0)
@@ -135,12 +163,33 @@ class Ml1mEndToEndSpec extends AnyFunSuite {
     means + ("coverage" -> cov)
   }
 
-  test("ML-1M e2e: pipeline structure (k-core holds, exclusion holds)") {
-    val users = Readers.loadUsers(spark, s"$Ml1mDir/users.dat")
-    val movies = Readers.loadMovies(spark, s"$Ml1mDir/movies.dat")
-    assert(users.count() === 6040 && movies.count() === 3883)
-    assert(metrics("n_users") > 4000.0, s"test users = ${metrics("n_users")}")
-  }
+  // Synthesis parameters are part of the cache filename — change PerUser
+  // or the hashing scheme and bump the version suffix, else a stale
+  // cached file silently survives and golden failures point at the
+  // wrong stage.
+  private lazy val metrics: Map[String, Double] = metricsOf(Ml1mDir,
+    Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_ml1m_ratings_p${PerUser}_v1.dat"))
+
+  private lazy val fixtureMetrics: Map[String, Double] =
+    metricsOf(fixtureDir, Paths.get(fixtureDir, "ratings.dat"))
+
+  /** The structure test, per data directory: reader row counts, and
+    * enough users left with a non-empty test split after k-core. */
+  private def structureTest(label: String, dir: => String, nUsers: Long,
+                            nMovies: Long, minTestUsers: Double,
+                            m: => Map[String, Double]): Unit =
+    test(s"ML-1M e2e$label: pipeline structure (k-core holds, exclusion holds)") {
+      val users = Readers.loadUsers(spark, s"$dir/users.dat")
+      val movies = Readers.loadMovies(spark, s"$dir/movies.dat")
+      assert(users.count() === nUsers && movies.count() === nMovies)
+      assert(m("n_users") > minTestUsers, s"test users = ${m("n_users")}")
+    }
+
+  structureTest("", Ml1mDir, 6040, 3883, 4000.0, metrics)
+  // the fixture keeps 406 test users, about ML-1M's 4270/6040 share
+  structureTest(" (seeded fixture)", fixtureDir, 604, 388, 380.0,
+    fixtureMetrics)
 
   test("ML-1M e2e: full golden metric vector (popularity baseline)") {
     // Produced by this pipeline; re-derived, not copied from the reference

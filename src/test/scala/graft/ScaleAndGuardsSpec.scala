@@ -79,6 +79,37 @@ class ScaleAndGuardsSpec extends AnyFunSuite {
     }
   }
 
+  test("SparkEntry.T sizes a plain path and its file: URI the same " +
+      "(scan-floor byte count and partitioning decision)") {
+    val dir = Files.createTempDirectory("graft-tablebytes").toString
+    spark.range(2000).select(col("id").as("doc_id"),
+        concat(lit("doc "), col("id").cast("string")).as("text"))
+      .coalesce(2).write.parquet(s"$dir/documents.parquet")
+    val plain = s"$dir/documents.parquet"
+    val uri = "file:" + plain
+    // data files only: Hadoop's local FS hides the .crc side files
+    val dataBytes = new java.io.File(plain).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    assert(dataBytes > 0)
+    assert(SparkEntry.tableBytes(spark, plain) === dataBytes)
+    assert(SparkEntry.tableBytes(spark, uri) === dataBytes)
+    // a split size that makes the table "big" (more byte splits than
+    // cores): the floor must stand down for BOTH spellings — a 0-byte
+    // misread of the URI would repartition it
+    def floored(d: String): Boolean =
+      SparkEntry.T(spark, d, "documents").queryExecution.logical.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+      }.nonEmpty
+    val want = spark.sparkContext.defaultParallelism
+    val key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, math.max(1L, dataBytes / (want + 1)).toString)
+    try {
+      assert(!floored(dir))
+      assert(!floored("file:" + dir))
+    } finally spark.conf.unset(key)
+    assert(floored(dir) && floored("file:" + dir))
+  }
+
   test("w9_anomaly: zero-variance history emits no NaN rows (guard)") {
     val dir = Files.createTempDirectory("graft-w9").toString
     def day(d: Int) = timestamp_seconds(lit(86400L * d + 3600L))

@@ -366,6 +366,57 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === Set((1L, 300L, 9.0), (2L, 100L, 2.0)))
   }
 
+  test("bucketed merges: a zero-row batch is a no-op, not an " +
+      "[UNABLE_TO_INFER_SCHEMA] crash") {
+    val base = Files.createTempDirectory("graft-empty-batch").toString
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StreamingJobs.eventSchema)
+    // absent store: nothing is written
+    StreamingJobs.upsertBucketedBatch(empty, Seq("user_id"), "ts",
+      "event_id", base + "/store1", 64)
+    assert(!new java.io.File(base + "/store1").exists)
+    // existing store: left exactly as it was
+    val one = Seq((1L, 100L, 1L, "click", 1.0, "{}"))
+      .toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
+      .withColumn("ts", timestamp_seconds(col("ts_s")))
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+    StreamingJobs.upsertBucketedBatch(one, Seq("user_id"), "ts",
+      "event_id", base + "/store1", 64)
+    StreamingJobs.upsertBucketedBatch(empty, Seq("user_id"), "ts",
+      "event_id", base + "/store1", 64)
+    assert(spark.read.parquet(base + "/store1").select("event_id")
+      .as[Long].collect().toSeq === Seq(1L))
+    // the dedup stores' merges have the same touched-bucket shape
+    val noDocs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    StreamingJobs.incrementalDedupBatch(noDocs, "doc_id", "text",
+      base + "/store2", 0L, 8)
+    StreamingJobs.incrementalPassageDedupBatch(noDocs, "doc_id", "text",
+      base + "/store3", 0L, 8)
+    assert(!new java.io.File(base + "/store2").exists)
+    assert(!new java.io.File(base + "/store3").exists)
+  }
+
+  test("watermarked windowed features stream into the bucketed store " +
+      "across the no-data batch a watermark advance schedules") {
+    val base = Files.createTempDirectory("graft-window-upsert").toString
+    Seq((0L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L,
+        "click", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(base + "/in")
+    val q = StreamingJobs.upsertOnlineStorePartitioned(
+      StreamingJobs.windowedFeatures(
+        StreamingJobs.fileEvents(spark, base + "/in"), "user_id"),
+      Seq("user_id", "window_start"), "window_end", "events",
+      base + "/store", base + "/ckpt")
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.exists(p => p.batchId == 1 && p.numInputRows == 0),
+      "fixture should reach the no-data batch")
+    assert(spark.read.parquet(base + "/store")
+      .select(col("user_id"), col("clicks"), col("events"))
+      .as[(Long, Long, Long)].collect().toSeq === Seq((1L, 1L, 1L)))
+  }
+
   test("partitioned upsert: mid-write crash after staging, before swap, " +
       "recovers exactly-once from checkpoint (T6 failure injection)") {
     // The worst crash window: the micro-batch has done its work (staging
@@ -750,12 +801,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("incremental dedup long-run: store file count is bounded (swap replaces, never accumulates)") {
-    // The long-run contract the IncDedupLongRun harness measures at 100
-    // batches, pinned structurally at 12: the dynamic-partition swap
-    // REPLACES each touched bucket directory, so files-per-bucket never
-    // grows with batch count — the store needs no compaction pass. (The
-    // knob that governs REWRITE cost is numBuckets ∝ corpus; see the
-    // harness scaladoc.)
+    // The long-run contract the IncDedupLongRun harness (last in commit
+    // 65b4b15) measured at 100 batches, pinned structurally at 12: the
+    // dynamic-partition swap REPLACES each touched bucket directory, so
+    // files-per-bucket never grows with batch count — the store needs no
+    // compaction pass. (The knob that governs REWRITE cost is
+    // numBuckets ∝ corpus; see that harness's scaladoc.)
     val base = Files.createTempDirectory("graft-incdedup-lr").toString
     val store = base + "/store"
     def parquetFiles(): Long = {

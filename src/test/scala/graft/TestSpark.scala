@@ -6,12 +6,8 @@ import org.apache.spark.sql.SparkSession
   * lazy — JVM-wide here since suites run in one forked JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.local(4)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // Pay globalRowNumber's runtime invariant check (max(rn)==count) in
       // every test — turns exchange-reuse regressions into hard failures.
       .config("spark.graft.rankGuard", "true")

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Vectors => V}
 import graft.ops.Similarity
+import graft.sources.SyntheticData
 
 /** Vector-function invariants mirroring the reference's normalization and
   * retrieval tests (`tests/test_two_tower_model.py:43-69,127-135`;
@@ -745,10 +746,10 @@ class VectorSpec extends AnyFunSuite {
     // residuals shrink to the sigma-ball and the same m·ksub budget
     // codes them far more finely than raw vectors spanning the sphere.
     // Measured at these exact params: raw 0.21, residual 0.28 (and
-    // 0.276 vs 0.48 at the ResidualCurve mog:2000:16:0.15 point); the
-    // gap is structural, not noise — every input is hash-derived, so
+    // 0.276 vs 0.48 at the mog:2000:16:0.15 point of the ResidualCurve
+    // sweep, last in commit 65b4b15); the gap is structural, not noise — every input is hash-derived, so
     // the run is bit-reproducible.
-    val emb = ResidualCurve.mogCorpus(spark, 600, 12, 0.15, dim = 32)
+    val emb = SyntheticData.mogCorpus(spark, 600, 12, 0.15, dim = 32)
       .localCheckpoint()
     val qs = emb.filter(col("vec_id") < 20)
     val exact = Similarity.bruteForceTopK(qs, emb, "vec_id", "vec_id",
