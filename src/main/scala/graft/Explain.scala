@@ -35,7 +35,7 @@ object Explain {
     "x1_negative_sample" ->
       "exact path runtime-gated to catalogs <= maxExactCatalog(100K); bucketed path dispatches beyond",
     "r14_pq_recall" ->
-      "exact baseline uses the bruteForceTopK small-catalog contract; pqTopK/pqTopKRefined broadcast the REQUEST batch (vec_id<50 — request-sized by construction) and stream the codes-only catalog (dim*4/m smaller than the float scan); at catalog scale the composition is IVF centroid pruning, per the pqTopK scaladoc",
+      "exact baseline uses the bruteForceTopK small-catalog contract; pqTopK at k*R broadcasts the REQUEST batch (vec_id<50 — request-sized by construction) and streams the codes-only catalog (dim*4/m smaller than the float scan); rerankExactTopK then re-scores that shortlist against the broadcast candidate+query frame; at catalog scale the composition is IVF centroid pruning, per the pqTopK scaladoc",
     "r14b_ivfpq_recall" ->
       "exact baseline uses the bruteForceTopK small-catalog contract; IVF-PQ retrieval itself is the centroid_id equi-join (the c5 shape) with the nlist-bounded centroid cross (the ann_cluster_recall contract) and request-sized probe/LUT broadcasts",
     "c5c_ivf_stream_refresh" ->

@@ -1047,16 +1047,16 @@ object QueriesLlm {
       // codes-only catalog encoded ONCE for both arms (r19, guide §2.4):
       // the adc and refined arms are separate crossJoined subtrees, so
       // each otherwise re-runs the m NearestCentroids encodes per row
-      val enc = Some(Similarity.pqEncodedItems(e, "vec_id", "embedding",
-        cb).localCheckpoint(true))
+      val enc = Similarity.pqEncodedItems(e, "vec_id", "embedding", cb)
+        .localCheckpoint(true)
       // ONE ADC pass for BOTH arms (r20, guide §2.4 — VERDICT r19 #1):
       // the adc arm's top-5 is the rank ≤ 5 prefix of the refined arm's
-      // k·refineFactor shortlist (same deterministic (score desc, item)
-      // window), so shortlist once at k·refineFactor and checkpoint —
+      // k·R shortlist (R = 10; same deterministic (score desc, item)
+      // window), so shortlist once at k·R and checkpoint —
       // the old shape scored the codes catalog once per arm.
-      val short = Similarity.pqTopK(e.filter(col("vec_id") < 50), e,
-        "vec_id", "vec_id", "embedding", 5 * 10, cb, excludeSelf = true,
-        encodedItems = enc).localCheckpoint(true)
+      val short = Similarity.pqTopK(e.filter(col("vec_id") < 50), enc,
+        "vec_id", "embedding", 5 * 10, cb, excludeSelf = true)
+        .localCheckpoint(true)
       val adcTop = short.filter(col("rank") <= 5)
         .select(col("query_id"), col("item_id"))
       val refTop = Similarity.rerankExactTopK(
@@ -1103,7 +1103,7 @@ object QueriesLlm {
       val prepped = {
         val (c, ic) = Similarity.pqPrunedCatalog(e, "vec_id", "embedding",
           cb, nlist = 16)
-        Some((c.localCheckpoint(true), ic.localCheckpoint(true)))
+        (c.localCheckpoint(true), ic.localCheckpoint(true))
       }
       // two operating points: the pruning term is the dominant loss on
       // geometry-free synthetic embeddings (true neighbors spread across
@@ -1116,9 +1116,9 @@ object QueriesLlm {
       // window PER ARM (4×).
       val nprobes = Seq(4, 8)
       val short = Similarity.clusterPrunedShortlistPqMulti(
-        e.filter(col("vec_id") < 50), e, "vec_id", "vec_id", "embedding",
-        5 * 10, cb, nlist = 16, nprobes = nprobes, excludeSelf = true,
-        prepared = prepped).localCheckpoint(true)
+        e.filter(col("vec_id") < 50), prepped, "vec_id", "embedding",
+        5 * 10, cb, nprobes = nprobes, excludeSelf = true)
+        .localCheckpoint(true)
       val adcTop = short.filter(col("rank") <= 5)
         .select(col("nprobe"), col("query_id"), col("item_id"))
       val refTop = Similarity.rerankExactTopK(
@@ -1168,8 +1168,8 @@ object QueriesLlm {
       // residual-encoded catalog built ONCE for all four arms (r19,
       // guide §2.4): the assignment kernel + m residual encodes per row
       // otherwise re-ran per arm in its own crossJoined subtree
-      val enc = Some(Similarity.residualEncodedCatalog(e, "vec_id",
-        "embedding", idx).localCheckpoint(true))
+      val enc = Similarity.residualEncodedCatalog(e, "vec_id",
+        "embedding", idx).localCheckpoint(true)
       // ONE candidate pass for ALL FOUR arms (r20, guide §2.4 — VERDICT
       // r19 #1): the multi-arm residual shortlist probes once at
       // max(nprobe) with per-probe-pair LUTs, fans candidates by probe
@@ -1177,9 +1177,9 @@ object QueriesLlm {
       // re-score in one catalog scan.
       val nprobes = Seq(4, 8)
       val short = Similarity.clusterPrunedShortlistPqResidualMulti(
-        e.filter(col("vec_id") < 50), e, "vec_id", "vec_id", "embedding",
-        5 * 10, idx, nprobes = nprobes, excludeSelf = true,
-        encodedItems = enc).localCheckpoint(true)
+        e.filter(col("vec_id") < 50), enc, "vec_id", "embedding",
+        5 * 10, idx, nprobes = nprobes, excludeSelf = true)
+        .localCheckpoint(true)
       val adcTop = short.filter(col("rank") <= 5)
         .select(col("nprobe"), col("query_id"), col("item_id"))
       val refTop = Similarity.rerankExactTopK(
@@ -1258,27 +1258,25 @@ object QueriesLlm {
       val rawPrepped = {
         val (c, ic) = Similarity.pqPrunedCatalog(e, "vec_id", "embedding",
           cbRaw, nlist = nlist, refineIters = lloyd)
-        Some((c.localCheckpoint(true), ic.localCheckpoint(true)))
+        (c.localCheckpoint(true), ic.localCheckpoint(true))
       }
-      val resEnc = Some(Similarity.residualEncodedCatalog(e, "vec_id",
-        "embedding", idx).localCheckpoint(true))
+      val resEnc = Similarity.residualEncodedCatalog(e, "vec_id",
+        "embedding", idx).localCheckpoint(true)
       // ONE candidate pass per arm FAMILY (r20, guide §2.4 — VERDICT r19
       // #1): each family's adc top-k is the rank ≤ k prefix of its
-      // k·refineFactor shortlist (same deterministic window), so the raw
+      // k·R shortlist (R = 10; same deterministic window), so the raw
       // and residual pipelines each score candidates ONCE, one union
       // checkpoint materializes both, and BOTH refined arms re-score in
       // one catalog scan. The old shape ran 4 candidate passes + 2
       // rescore scans.
-      val shortAll = Similarity.clusterPrunedShortlistPqMulti(queries, e,
-        "vec_id", "vec_id", "embedding", k * 10, cbRaw, nlist = nlist,
-        nprobes = Seq(nprobe), refineIters = lloyd, excludeSelf = true,
-        prepared = rawPrepped)
+      val shortAll = Similarity.clusterPrunedShortlistPqMulti(queries,
+        rawPrepped, "vec_id", "embedding", k * 10, cbRaw,
+        nprobes = Seq(nprobe), excludeSelf = true)
         .select(col("query_id"), col("rank"), col("item_id"))
         .withColumn("__fam", lit("raw"))
         .unionAll(Similarity.clusterPrunedShortlistPqResidualMulti(
-          queries, e, "vec_id", "vec_id", "embedding", k * 10, idx,
-          nprobes = Seq(nprobe), excludeSelf = true,
-          encodedItems = resEnc)
+          queries, resEnc, "vec_id", "embedding", k * 10, idx,
+          nprobes = Seq(nprobe), excludeSelf = true)
           .select(col("query_id"), col("rank"), col("item_id"))
           .withColumn("__fam", lit("res")))
         .localCheckpoint(true)

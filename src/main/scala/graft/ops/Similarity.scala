@@ -67,6 +67,45 @@ object Similarity {
       .select(cols.map(c => col(s"__eb.`$c`").as(c)): _*)
   }
 
+  /** The metric prep every search path applies to each side: select
+    * (idCol as outId, vecCol as outVec, extra…) and, for "cosine",
+    * L2-normalize the vector ONCE below any join (O(n) norms), so the
+    * per-pair work is a bare dot product instead of a per-pair norm. */
+  private def metricPrep(df: DataFrame, idCol: String, vecCol: String,
+                         outId: String, outVec: String, metric: String,
+                         extra: Seq[Column] = Nil): DataFrame = {
+    val sel = df.select(Seq(col(idCol).as(outId), col(vecCol).as(outVec)) ++
+      extra: _*)
+    if (metric == "cosine") normalized(sel, outVec, outVec) else sel
+  }
+
+  /** The shared rank-and-limit tail: per (armCols…, query_id), the top `k`
+    * rows by (score desc, item_id) — ties by item id ascending (FIXTURES §3
+    * determinism rule). Rides Spark's WindowGroupLimit rank-limit pushdown.
+    * Returns (armCols…, query_id, rank, item_id, score). */
+  private def topKPerQuery(scored: DataFrame, k: Int,
+                           armCols: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy((armCols :+ "query_id").map(col): _*)
+      .orderBy(col("score").desc, col("item_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(armCols.map(col) ++
+        Seq(col("query_id"), col("rank"), col("item_id"), col("score")): _*)
+  }
+
+  /** Like bruteForceTopK's excludeSelf: when queries ⊆ items on shared ids,
+    * the query's own vector would otherwise take a top-k slot
+    * (recall-vs-exact harnesses read as a systematic 1/k miss). */
+  private def dropSelf(cand: DataFrame, excludeSelf: Boolean): DataFrame =
+    if (excludeSelf) cand.filter(col("query_id") =!= col("item_id"))
+    else cand
+
+  /** Collected array<float|double> cell → doubles (driver-side literals). */
+  private def toDoubles(v: Seq[Any]): Array[Double] = v.map {
+    case f: java.lang.Float => f.toDouble
+    case n: Number => n.doubleValue()
+  }.toArray
+
   /** R3: exact top-k neighbors for every query vector.
     * `queries`/`items`: (idCol, vecCol) frames. Output:
     * (query_id, rank, item_id, score). Ties broken by item id ascending
@@ -77,20 +116,12 @@ object Similarity {
                      itemId: String, vecCol: String, k: Int,
                      metric: String = "cosine",
                      excludeSelf: Boolean = false): DataFrame = {
-    // For cosine, L2-normalize each side ONCE below the join (O(n) norms)
-    // so the per-pair work is a bare dot product — at n² pairs, recomputing
-    // norms per pair is the difference between O(n²d) and O(n²d + nd).
-    val normalizeInputs = metric == "cosine"
-    def prep(df: DataFrame, idC: String, outId: String, outVec: String) =
-      if (normalizeInputs)
-        normalized(df.select(col(idC).as(outId), col(vecCol).as(outVec)),
-          outVec, outVec)
-      else df.select(col(idC).as(outId), col(vecCol).as(outVec))
     // barrier the STREAM side: its normalize projection would otherwise
     // re-evaluate per PAIR inside the nested-loop consume (see
     // evalBarrier; the broadcast build side materializes at the exchange)
-    val q = evalBarrier(prep(queries, queryId, "query_id", "__qv"))
-    val it = prep(items, itemId, "item_id", "__iv")
+    val q = evalBarrier(
+      metricPrep(queries, queryId, vecCol, "query_id", "__qv", metric))
+    val it = metricPrep(items, itemId, vecCol, "item_id", "__iv", metric)
     val scoreCol = metric match {
       case "cosine" => vecDotNative(col("__qv"), col("__iv"))
       case "dot"    => vecDotNative(col("__qv"), col("__iv"))
@@ -99,12 +130,7 @@ object Similarity {
     }
     val pairs0 = q.join(broadcast(it),
       if (excludeSelf) col("query_id") =!= col("item_id") else lit(true))
-    val scored = pairs0.withColumn("score", scoreCol)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("item_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("item_id"), col("score"))
+    topKPerQuery(pairs0.withColumn("score", scoreCol), k)
   }
 
   /** Deterministic centroid pick: the first `nlist` item vectors by a seeded
@@ -166,12 +192,6 @@ object Similarity {
     c
   }
 
-  /** Driver-collect a centroid table for the native assignment kernels.
-    * BOUNDED collect: the frame is nlist rows (config-sized — the same
-    * argument that justified `broadcast(centroids)` in the old join form,
-    * and the same contract as the numBuckets-bounded store-pruning
-    * collects). Sorted by id so the reference arrays are deterministic
-    * regardless of collect order. */
   /** Hard ceiling for any driver-collected centroid-table-shaped frame
     * (r20, VERDICT r19 #9): nlist is config-sized by every caller's
     * contract (n/500–n/1000 sizing rules top out in the thousands); 2²⁰
@@ -179,6 +199,12 @@ object Similarity {
     * vectors — past it the collect is a bug, not a configuration. */
   private[graft] val MaxCollectedCentroids: Int = 1 << 20
 
+  /** Driver-collect a centroid table for the native assignment kernels.
+    * BOUNDED collect: the frame is nlist rows (config-sized — the same
+    * argument that justified `broadcast(centroids)` in the old join form,
+    * and the same contract as the numBuckets-bounded store-pruning
+    * collects). Sorted by id so the reference arrays are deterministic
+    * regardless of collect order. */
   private def collectCentroids(
       centroids: DataFrame): (Array[Long], Array[Array[Double]]) = {
     // BOUNDED collect, RUNTIME-ENFORCED (r20): limit-gated at the shared
@@ -190,12 +216,7 @@ object Similarity {
     require(rows.length <= MaxCollectedCentroids,
       s"collectCentroids: centroid table exceeds the config-sized bound " +
         s"($MaxCollectedCentroids rows)")
-    val ids = rows.map(_.getLong(0))
-    val vecs = rows.map(_.getSeq[Any](1).map {
-      case f: java.lang.Float => f.toDouble
-      case n: Number => n.doubleValue()
-    }.toArray)
-    (ids, vecs)
+    (rows.map(_.getLong(0)), rows.map(r => toDoubles(r.getSeq[Any](1))))
   }
 
   private def idTypeOf(centroids: DataFrame) =
@@ -339,18 +360,12 @@ object Similarity {
         assignClustersTwoLevel(itemsIded, "__iv", centroids, nlist,
           seed = seed)
       else assignClusters(itemsIded, "__iv", centroids)
-    // each query probes its nprobe nearest centroids
-    val qProbe = {
-      val scored = queries
-        .select(col(queryId).as("query_id"), col(vecCol).as("__qv"))
-        .crossJoin(broadcast(centroids))
-        .withColumn("__d", l2Distance(col("__qv"), col("centroid_vec")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("__d"), col("centroid_id"))
-      scored.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= nprobe)
-        .select(col("query_id"), col("__qv"), col("centroid_id"))
-    }
+    // each query probes its nprobe nearest centroids with its RAW vector
+    // (the items were assigned raw too); both sides normalize afterwards
+    val qProbe = probeNearestCentroids(
+      queries.select(col(queryId).as("query_id"), col(vecCol).as("__qv")),
+      centroids, nprobe)
+      .select(col("query_id"), col("__qv"), col("centroid_id"))
     // The probe side is EXPLICITLY the broadcast build: the catalog's
     // static size estimate is explode-derived and survives the caller's
     // checkpoint, so at a 1M+-item catalog the planner otherwise picks
@@ -364,18 +379,9 @@ object Similarity {
     val pairs = broadcast(normalized(qProbe, "__qv", "__qn").drop("__qv"))
       .join(evalBarrier(normalized(itemsC, "__iv", "__in").drop("__iv")),
         Seq("centroid_id"))
-    val scored0 = pairs.withColumn("score", vecDotNative(col("__qn"), col("__in")))
-    // Like bruteForceTopK's excludeSelf: when queries ⊆ items on shared
-    // ids, the query's own vector would otherwise take a top-k slot
-    // (recall-vs-exact harnesses read as a systematic 1/k miss).
-    val scored =
-      if (excludeSelf) scored0.filter(col("query_id") =!= col("item_id"))
-      else scored0
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("item_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("item_id"), col("score"))
+    topKPerQuery(dropSelf(
+      pairs.withColumn("score", vecDotNative(col("__qn"), col("__in"))),
+      excludeSelf), k)
   }
 
   /** R4 (MLlib path — SURVEY §7.3 option (a)): approximate top-k using
@@ -445,12 +451,11 @@ object Similarity {
       if (printedFloorConfigs.add(maxDistance))
         System.err.println(s"[graft][warn] $msg")
     } else lastLshFloorWarning = None
-    def prep(df: DataFrame, idC: String, outId: String) =
-      normalized(df.select(col(idC).as(outId), col(vecCol).as("__v")),
-        "__v", "__v")
+    def featurized(df: DataFrame, idC: String, outId: String) =
+      metricPrep(df, idC, vecCol, outId, "__v", "cosine")
         .withColumn("features", array_to_vector(col("__v")))
-    val qn = prep(queries, queryId, "query_id")
-    val in = prep(items, itemId, "item_id")
+    val qn = featurized(queries, queryId, "query_id")
+    val in = featurized(items, itemId, "item_id")
     val lsh = new BucketedRandomProjectionLSH()
       .setBucketLength(bucketLength)
       .setNumHashTables(bands * bandSize)
@@ -491,11 +496,7 @@ object Similarity {
     val scored = candidates
       .withColumn("score", vecDotNative(col("__qv"), col("__iv")))
       .filter(col("score") >= lit(1.0) - lit(maxDistance * maxDistance) / 2.0)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("item_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("item_id"), col("score"))
+    topKPerQuery(scored, k)
   }
 
   /** R9: intra-list diversity — mean pairwise cosine DISTANCE among each
@@ -505,9 +506,8 @@ object Similarity {
   def intraListDiversity(recs: DataFrame, userCol: String, predCol: String,
                          topN: Int, embeddings: DataFrame, itemId: String,
                          vecCol: String): DataFrame = {
-    val normEmb = normalized(
-      embeddings.select(col(itemId).as("__item"), col(vecCol).as("__v")),
-      "__v", "__v")
+    val normEmb =
+      metricPrep(embeddings, itemId, vecCol, "__item", "__v", "cosine")
     val exploded = recs.select(col(userCol),
       posexplode(slice(col(predCol), 1, topN)).as(Seq("pos", "__item")))
       .join(broadcast(normEmb), Seq("__item"))
@@ -900,7 +900,7 @@ object Similarity {
 
   private def deconTrain(train: DataFrame, idCol: String,
                          vecCol: String): DataFrame =
-    normalized(train.select(col(idCol), col(vecCol).as("__v")), "__v", "__v")
+    metricPrep(train, idCol, vecCol, idCol, "__v", "cosine")
 
   /** Normalized test side with degenerate rows dropped: a null vector or
     * a null lane would NPE / MatchError the driver-side collect while
@@ -926,10 +926,7 @@ object Similarity {
   private def exactScoreFromRows(trn: DataFrame,
                                  rows: Array[org.apache.spark.sql.Row],
                                  idCol: String): DataFrame = {
-    val testVecs = rows.map(_.getSeq[Any](0).map {
-      case f: java.lang.Float => f.toDouble
-      case n: Number => n.doubleValue()
-    }.toArray)
+    val testVecs = rows.map(r => toDoubles(r.getSeq[Any](0)))
     if (testVecs.isEmpty)
       trn.select(col(idCol),
         lit(null).cast("double").as("__rawmax"))
@@ -1019,11 +1016,7 @@ object Similarity {
               trainSampleN: Int = 0): PqCodebook = {
     require(metric == "cosine" || metric == "l2", s"pqTrain: metric=$metric")
     require(m >= 1 && ksub >= 1, s"pqTrain: m=$m ksub=$ksub")
-    val base0 =
-      if (metric == "cosine")
-        normalized(items.select(col(itemId).as("__id"),
-          col(vecCol).as("__v")), "__v", "__v")
-      else items.select(col(itemId).as("__id"), col(vecCol).as("__v"))
+    val base0 = metricPrep(items, itemId, vecCol, "__id", "__v", metric)
     val base =
       if (trainSampleN > 0)
         base0.withColumn("__h", xxhash64(col("__id"), lit(seed)))
@@ -1039,10 +1032,6 @@ object Similarity {
       org.apache.spark.sql.functions.size(col("__v"))).head.getInt(0)
     require(dim % m == 0, s"pqTrain: dim=$dim not divisible by m=$m")
     val dsub = dim / m
-    def toD(v: Seq[Any]): Array[Double] = v.map {
-      case f: java.lang.Float => f.toDouble
-      case n: Number => n.doubleValue()
-    }.toArray
     // seeds: first ksub per subspace in (hash(id, seed + j), id) order —
     // pickCentroids' pick, one windowed pass over the exploded
     // subvectors, collected (m·ksub rows — the centroid-table bound)
@@ -1059,7 +1048,7 @@ object Similarity {
     val kEff = byJ.values.map(_.length).min
     var cents: Array[Array[Array[Double]]] = Array.tabulate(m)(j =>
       byJ(j).sortBy(_.getInt(1)).take(kEff)
-        .map(r => toD(r.getSeq[Any](2))))
+        .map(r => toDoubles(r.getSeq[Any](2))))
     // Lloyd rounds with DRIVER-side centroid state: assignment is the
     // native no-join projection (the pqEncode kernel chain) and the
     // per-(subspace, code, dim) means are ONE map-combined aggregation —
@@ -1136,13 +1125,36 @@ object Similarity {
       (c, j) => element_at(lut, j * ksub + c + 1)),
       lit(0.0), (acc, x) => acc + x)
 
+  /** ADC-scores every (`__lut`, `__codes`) candidate: `__d` is the
+    * [[pqAdcDist]] distance and `score` its metric form — 1 − d/2 for
+    * cosine (on unit vectors ||q−x||² = 2 − 2·cos, so recall harnesses
+    * compare ranks directly against the exact baseline), −d for l2. */
+  private def withAdcScore(cand: DataFrame, ksub: Int,
+                           metric: String): DataFrame =
+    cand.withColumn("__d", pqAdcDist(col("__lut"), col("__codes"), ksub))
+      .withColumn("score",
+        if (metric == "cosine") lit(1.0) - col("__d") / 2.0
+        else -col("__d"))
+
+  /** The codes-only catalog [[pqTopK]] scans — (item_id, __codes). A pure
+    * deterministic function of (items, cb), so a multi-arm recall harness
+    * encodes it ONCE (localCheckpoint it) and passes it to every arm. The
+    * evalBarrier keeps the m encode projections from re-evaluating per
+    * PAIR in pqTopK's nested-loop consume (measured: 17.9 s for 50×2 K
+    * pairs vs 0.6 s barriered, m=16/ksub=64). */
+  def pqEncodedItems(items: DataFrame, itemId: String, vecCol: String,
+                     cb: PqCodebook): DataFrame =
+    evalBarrier(pqEncode(items.select(col(itemId).as("item_id"),
+      col(vecCol).as("__iv")), "__iv", cb, "__codes").drop("__iv"))
+
   /** R4 (PQ form): approximate top-k via PQ/ADC — items carry only their
-    * m-byte codes; each query builds its LUT once and every candidate
-    * costs m lookups. Output contract matches [[bruteForceTopK]]:
-    * (query_id, rank, item_id, score), ties by item id; for the cosine
-    * metric `score` is the ADC approximation 1 − d²/2 of the cosine (on
-    * unit vectors ||q−x||² = 2 − 2·cos), so recall harnesses compare
-    * ranks directly against the exact baseline.
+    * m-byte codes (`encodedItems`, the [[pqEncodedItems]] catalog of the
+    * same `cb`); each query builds its LUT once and every candidate costs
+    * m lookups. Output contract matches [[bruteForceTopK]]:
+    * (query_id, rank, item_id, score), ties by item id; `score` is the
+    * ADC approximation (see [[withAdcScore]]). For exact scores on the
+    * survivors (the faiss `refine` pattern), shortlist k·R here and
+    * re-score with [[rerankExactTopK]].
     *
     * Scale shape: same request-batch-bounded BNLJ contract as
     * [[bruteForceTopK]] — the BROADCAST side is the query batch
@@ -1150,76 +1162,28 @@ object Similarity {
     * item rows (4·dsub× smaller than the float vectors the exact form
     * streams); at catalog scale compose with IVF pruning —
     * [[clusterPrunedTopKPq]], recall-gated by `r14b_ivfpq_recall`. */
-  /** The deterministic codes-only catalog [[pqTopK]] builds internally —
-    * (item_id, __codes) — exposed so a multi-arm recall harness encodes
-    * ONCE (localCheckpoint it, pass via `encodedItems`). */
-  def pqEncodedItems(items: DataFrame, itemId: String, vecCol: String,
-                     cb: PqCodebook): DataFrame =
-    evalBarrier(pqEncode(items.select(col(itemId).as("item_id"),
-      col(vecCol).as("__iv")), "__iv", cb, "__codes").drop("__iv"))
-
-  def pqTopK(queries: DataFrame, items: DataFrame, queryId: String,
-             itemId: String, vecCol: String, k: Int, cb: PqCodebook,
-             excludeSelf: Boolean = false,
-             encodedItems: Option[DataFrame] = None): DataFrame = {
-    val q0 =
-      if (cb.metric == "cosine")
-        normalized(queries.select(col(queryId).as("query_id"),
-          col(vecCol).as("__qv")), "__qv", "__qv")
-      else queries.select(col(queryId).as("query_id"), col(vecCol).as("__qv"))
-    // the broadcast build side materializes the LUT at the exchange; the
-    // STREAM side's encode projections need the evalBarrier or they
-    // re-evaluate per PAIR in the nested-loop consume (measured: 17.9 s
-    // for 50×2 K pairs vs 0.6 s barriered, m=16/ksub=64).
-    // `encodedItems` (r19, guide §2.4): the codes-only catalog is a pure
-    // deterministic function of (items, cb) — multi-arm harnesses build
-    // it once via [[pqEncodedItems]] instead of once per arm.
-    val q = q0.withColumn("__lut", pqLut(col("__qv"), cb)).drop("__qv")
-    val it = encodedItems.getOrElse(
-      pqEncodedItems(items, itemId, vecCol, cb))
-    val pairs = broadcast(q).join(it,
+  def pqTopK(queries: DataFrame, encodedItems: DataFrame, queryId: String,
+             vecCol: String, k: Int, cb: PqCodebook,
+             excludeSelf: Boolean = false): DataFrame = {
+    // the broadcast build side materializes the LUT at the exchange
+    val q = metricPrep(queries, queryId, vecCol, "query_id", "__qv",
+      cb.metric).withColumn("__lut", pqLut(col("__qv"), cb)).drop("__qv")
+    val pairs = broadcast(q).join(encodedItems,
       if (excludeSelf) col("query_id") =!= col("item_id") else lit(true))
-    val scored = pairs
-      .withColumn("__d", pqAdcDist(col("__lut"), col("__codes"), cb.ksub))
-      .withColumn("score",
-        if (cb.metric == "cosine") lit(1.0) - col("__d") / 2.0
-        else -col("__d"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("item_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("item_id"), col("score"))
+    topKPerQuery(withAdcScore(pairs, cb.ksub, cb.metric), k)
   }
 
-  /** IVF∘PQ — the faiss `IVFx,PQy` composition and the catalog-scale
-    * serving form of [[pqTopK]]: cluster pruning bounds WHICH items are
-    * scored (the [[clusterPrunedTopK]] centroid_id equi-join — scored
-    * pairs shrink by ~nprobe/nlist) while PQ bounds WHAT each scored
-    * item costs (m-code ADC lookups over a dim·4/m-compressed payload).
-    * `refineFactor` > 0 adds the exact re-rank tail ([[pqTopKRefined]]):
-    * the ADC shortlist's survivors are re-scored with full vectors, so
-    * `score` is then exact. Two broadcast joins keep the per-query LUT
-    * out of the candidate stream: the (query, centroid) probe frame and
-    * the (query, lut) frame broadcast separately — candidates reference
-    * the LUT from the hash table instead of materializing m·ksub doubles
-    * per pair. Recall gated per round by `r14b_ivfpq_recall`; both loss
-    * terms (pruning, quantization) are measured against the same exact
-    * baseline there. */
-  /** The deterministic (centroids, encoded catalog) pair
-    * [[clusterPrunedTopKPq]] builds internally, exposed so a caller
-    * measuring several operating points of the SAME index computes it
-    * ONCE (localCheckpoint it, then pass via `prepared`). Returns
-    * (centroids: (centroid_id, centroid_vec),
+  /** The deterministic (centroids, encoded catalog) pair of the raw-vector
+    * IVF∘PQ index: [[clusterPrunedTopKPq]] builds it internally, and a
+    * caller measuring several operating points of the SAME index builds
+    * it ONCE (localCheckpoint it) for [[clusterPrunedShortlistPqMulti]].
+    * Returns (centroids: (centroid_id, centroid_vec),
     *  itemsC: (item_id, centroid_id, __codes)); itemsC is eval-barriered
-    * for the multi-match probe join exactly as the internal form. */
+    * for the multi-match probe join. */
   def pqPrunedCatalog(items: DataFrame, itemId: String, vecCol: String,
                       cb: PqCodebook, nlist: Int, seed: Long = 42,
                       refineIters: Int = 0): (DataFrame, DataFrame) = {
-    val it0 =
-      if (cb.metric == "cosine")
-        normalized(items.select(col(itemId).as("item_id"),
-          col(vecCol).as("__iv")), "__iv", "__iv")
-      else items.select(col(itemId).as("item_id"), col(vecCol).as("__iv"))
+    val it0 = metricPrep(items, itemId, vecCol, "item_id", "__iv", cb.metric)
     val seeds = pickCentroids(it0, "item_id", "__iv", nlist, seed)
     val centroids =
       if (refineIters > 0) refineCentroids(it0, "__iv", seeds, refineIters)
@@ -1233,73 +1197,52 @@ object Similarity {
     (centroids, itemsC)
   }
 
+  /** IVF∘PQ — the faiss `IVFx,PQy` composition and the catalog-scale
+    * serving form of [[pqTopK]]: cluster pruning bounds WHICH items are
+    * scored (the [[clusterPrunedTopK]] centroid_id equi-join — scored
+    * pairs shrink by ~nprobe/nlist) while PQ bounds WHAT each scored
+    * item costs (m-code ADC lookups over a dim·4/m-compressed payload).
+    * Builds its [[pqPrunedCatalog]] internally; `score` is the ADC
+    * score. Two broadcast joins keep the per-query LUT out of the
+    * candidate stream: the (query, centroid) probe frame and the
+    * (query, lut) frame broadcast separately — candidates reference the
+    * LUT from the hash table instead of materializing m·ksub doubles per
+    * pair. Recall gated per round by `r14b_ivfpq_recall` (through
+    * [[clusterPrunedShortlistPqMulti]], pinned equal to this function
+    * arm by arm); both loss terms (pruning, quantization) are measured
+    * against the same exact baseline there. */
   def clusterPrunedTopKPq(queries: DataFrame, items: DataFrame,
                           queryId: String, itemId: String, vecCol: String,
                           k: Int, cb: PqCodebook, nlist: Int = 64,
                           nprobe: Int = 8, seed: Long = 42,
-                          refineIters: Int = 0, refineFactor: Int = 0,
-                          excludeSelf: Boolean = false,
-                          prepared: Option[(DataFrame, DataFrame)] = None)
-      : DataFrame = {
-    require(refineFactor >= 0, s"clusterPrunedTopKPq: refineFactor")
-    def prep(df: DataFrame, idC: String, outId: String, outVec: String) =
-      if (cb.metric == "cosine")
-        normalized(df.select(col(idC).as(outId), col(vecCol).as(outVec)),
-          outVec, outVec)
-      else df.select(col(idC).as(outId), col(vecCol).as(outVec))
-    val it0 = prep(items, itemId, "item_id", "__iv")
-    // `prepared` (r19, guide §2.4): the (centroids, encoded catalog)
-    // pair is a pure deterministic function of (items, cb, nlist, seed,
-    // refineIters) and is by far the heaviest subtree here — a recall
-    // harness measuring several (nprobe, refineFactor) operating points
-    // of the SAME index otherwise re-seeds, re-refines, re-encodes and
-    // re-assigns the full catalog once PER ARM (separate crossJoined
-    // subtrees share nothing). Build it once with [[pqPrunedCatalog]],
-    // localCheckpoint it, and pass it to every arm. None = the original
-    // self-contained behavior, bit-identical either way.
-    val (centroids, itemsC) = prepared.getOrElse(
-      pqPrunedCatalog(items, itemId, vecCol, cb, nlist, seed, refineIters))
-    val q0 = prep(queries, queryId, "query_id", "__qv")
-    val qProbe = {
-      val scored = q0.crossJoin(broadcast(centroids))
-        .withColumn("__d", l2Distance(col("__qv"), col("centroid_vec")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("__d"), col("centroid_id"))
-      scored.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= nprobe)
-        .select(col("query_id"), col("centroid_id"))
-    }
+                          refineIters: Int = 0,
+                          excludeSelf: Boolean = false): DataFrame = {
+    val (centroids, itemsC) =
+      pqPrunedCatalog(items, itemId, vecCol, cb, nlist, seed, refineIters)
+    val q0 = metricPrep(queries, queryId, vecCol, "query_id", "__qv",
+      cb.metric)
+    val qProbe = probeNearestCentroids(q0, centroids, nprobe)
+      .select(col("query_id"), col("centroid_id"))
     val qLut = q0.withColumn("__lut", pqLut(col("__qv"), cb))
       .select(col("query_id"), col("__lut"))
-    val cand0 = itemsC.join(broadcast(qProbe), Seq("centroid_id"))
+    val cand = itemsC.join(broadcast(qProbe), Seq("centroid_id"))
       .join(broadcast(qLut), Seq("query_id"))
-    val cand =
-      if (excludeSelf) cand0.filter(col("query_id") =!= col("item_id"))
-      else cand0
-    val adc = cand
-      .withColumn("__d", pqAdcDist(col("__lut"), col("__codes"), cb.ksub))
-      .withColumn("score",
-        if (cb.metric == "cosine") lit(1.0) - col("__d") / 2.0
-        else -col("__d"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("item_id"))
-    if (refineFactor == 0)
-      adc.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("item_id"), col("score"))
-    else {
-      val short = adc.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k * refineFactor)
-        .select(col("query_id"), col("item_id"))
-      val rescored = evalBarrier(it0).join(
-        broadcast(short.join(q0, Seq("query_id"))), Seq("item_id"))
-        .withColumn("score",
-          if (cb.metric == "cosine") vecDotNative(col("__qv"), col("__iv"))
-          else -l2Distance(col("__qv"), col("__iv")))
-      rescored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("item_id"), col("score"))
-    }
+    topKPerQuery(
+      withAdcScore(dropSelf(cand, excludeSelf), cb.ksub, cb.metric), k)
+  }
+
+  /** Multi-operating-point arm fan-out: every ADC-scored candidate joins
+    * exactly the `nprobes` arms whose window admits its probe rank `__rn`
+    * (`nprobe >= __rn` — the probe's (distance, centroid_id) order is
+    * deterministic, so arm np's candidate set is the __rn ≤ np prefix,
+    * bit-identical to a solo run at that nprobe). Returns
+    * (nprobe, query_id, item_id, score). */
+  private def probeArms(scored: DataFrame, nprobes: Seq[Int]): DataFrame = {
+    val npLit = array(nprobes.sorted.map(lit(_)): _*)
+    scored
+      .withColumn("nprobe",
+        explode(filter(npLit, np => np >= col("__rn"))))
+      .select(col("nprobe"), col("query_id"), col("item_id"), col("score"))
   }
 
   /** Multi-operating-point ADC shortlist over ONE candidate pass (r20,
@@ -1307,108 +1250,75 @@ object Similarity {
     * `nprobe` points of the SAME index previously built one probe window +
     * one LUT broadcast + one codes-catalog scan + one rank window PER ARM
     * (separate crossJoined subtrees share nothing). Here the probe runs
-    * once at max(nprobes) KEEPING each centroid's probe rank `__rn`; every
-    * candidate then fans into exactly the arms whose nprobe admits it
-    * (`nprobe >= __rn` — the probe window's (distance, centroid_id) order
-    * is deterministic, so arm np's candidate set is the __rn ≤ np prefix,
-    * bit-identical to a solo run at that nprobe), and ONE window ranked
-    * per (nprobe, query) yields each arm's ADC shortlist. Returns
+    * once at max(nprobes) KEEPING each centroid's probe rank `__rn`, every
+    * candidate fans into its arms ([[probeArms]]), and ONE window ranked
+    * per (nprobe, query) yields each arm's ADC shortlist. `prepared` is
+    * the index's [[pqPrunedCatalog]], built once by the caller. Returns
     * (nprobe, query_id, rank, item_id, score) for rank ≤ shortK; for any
     * np in `nprobes`, filter(nprobe = np && rank ≤ k) equals
-    * [[clusterPrunedTopKPq]](…, nprobe = np, refineFactor = 0) at k ≤
-    * shortK (differential pin in VectorSpec). Feed rank ≤ k·refineFactor
-    * to [[rerankExactTopK]] for the refined arms. */
-  def clusterPrunedShortlistPqMulti(queries: DataFrame, items: DataFrame,
-                                    queryId: String, itemId: String,
-                                    vecCol: String, shortK: Int,
-                                    cb: PqCodebook, nlist: Int,
-                                    nprobes: Seq[Int], seed: Long = 42,
-                                    refineIters: Int = 0,
-                                    excludeSelf: Boolean = false,
-                                    prepared: Option[(DataFrame, DataFrame)] =
-                                      None): DataFrame = {
+    * [[clusterPrunedTopKPq]](…, nprobe = np) on the same catalog at k ≤
+    * shortK (differential pin in VectorSpec). Feed rank ≤ k·R to
+    * [[rerankExactTopK]] for the refined arms. */
+  def clusterPrunedShortlistPqMulti(queries: DataFrame,
+                                    prepared: (DataFrame, DataFrame),
+                                    queryId: String, vecCol: String,
+                                    shortK: Int, cb: PqCodebook,
+                                    nprobes: Seq[Int],
+                                    excludeSelf: Boolean = false)
+      : DataFrame = {
     require(shortK >= 1, s"clusterPrunedShortlistPqMulti: shortK=$shortK")
     require(nprobes.nonEmpty && nprobes.forall(_ >= 1) &&
       nprobes.distinct.length == nprobes.length,
       s"clusterPrunedShortlistPqMulti: nprobes=$nprobes")
-    def prep(df: DataFrame, idC: String, outId: String, outVec: String) =
-      if (cb.metric == "cosine")
-        normalized(df.select(col(idC).as(outId), col(vecCol).as(outVec)),
-          outVec, outVec)
-      else df.select(col(idC).as(outId), col(vecCol).as(outVec))
-    val (centroids, itemsC) = prepared.getOrElse(
-      pqPrunedCatalog(items, itemId, vecCol, cb, nlist, seed, refineIters))
-    val q0 = prep(queries, queryId, "query_id", "__qv")
-    val maxProbe = nprobes.max
-    val qProbe = {
-      val scored = q0.crossJoin(broadcast(centroids))
-        .withColumn("__d", l2Distance(col("__qv"), col("centroid_vec")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("__d"), col("centroid_id"))
-      scored.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= maxProbe)
-        .select(col("query_id"), col("centroid_id"), col("__rn"))
-    }
+    val (centroids, itemsC) = prepared
+    val q0 = metricPrep(queries, queryId, vecCol, "query_id", "__qv",
+      cb.metric)
+    val qProbe = probeNearestCentroids(q0, centroids, nprobes.max)
+      .select(col("query_id"), col("centroid_id"), col("__rn"))
     val qLut = q0.withColumn("__lut", pqLut(col("__qv"), cb))
       .select(col("query_id"), col("__lut"))
-    val cand0 = itemsC.join(broadcast(qProbe), Seq("centroid_id"))
+    val cand = itemsC.join(broadcast(qProbe), Seq("centroid_id"))
       .join(broadcast(qLut), Seq("query_id"))
-    val cand =
-      if (excludeSelf) cand0.filter(col("query_id") =!= col("item_id"))
-      else cand0
-    val npLit = array(nprobes.sorted.map(lit(_)): _*)
-    val armed = cand
-      .withColumn("__d", pqAdcDist(col("__lut"), col("__codes"), cb.ksub))
-      .withColumn("score",
-        if (cb.metric == "cosine") lit(1.0) - col("__d") / 2.0
-        else -col("__d"))
-      .withColumn("nprobe",
-        explode(filter(npLit, np => np >= col("__rn"))))
-      .select(col("nprobe"), col("query_id"), col("item_id"), col("score"))
-    val w = Window.partitionBy(col("nprobe"), col("query_id"))
-      .orderBy(col("score").desc, col("item_id"))
-    armed.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= shortK)
-      .select(col("nprobe"), col("query_id"), col("rank"), col("item_id"),
-        col("score"))
+    topKPerQuery(probeArms(withAdcScore(dropSelf(cand, excludeSelf),
+      cb.ksub, cb.metric), nprobes), shortK, Seq("nprobe"))
   }
 
-  /** Exact re-rank of an ADC shortlist — the [[pqTopKRefined]] /
-    * refineFactor tail factored out so a MULTI-ARM harness re-scores every
-    * arm's shortlist in ONE catalog scan + one broadcast (r20, guide
-    * §2.4): `short` carries (armCols…, query_id, item_id); full vectors
-    * never shuffle (candidates + their query vectors are the broadcast
-    * build, the item scan streams). Returns (armCols…, query_id, rank,
-    * item_id, score) with rank ≤ k per (armCols…, query_id) and `score`
-    * the exact metric score — for a single arm this is bit-identical to
-    * the refineFactor branch of the single-arm functions (ranked by
-    * (score desc, item_id), same expression tree). */
+  /** Exact score of a (`__qv`, `__iv`) pair on metric-prepped vectors. */
+  private def exactScore(metric: String): Column =
+    if (metric == "cosine") vecDotNative(col("__qv"), col("__iv"))
+    else -l2Distance(col("__qv"), col("__iv"))
+
+  /** Exact re-rank of an ADC shortlist — the faiss `refine`/`RFlat`
+    * pattern: ADC shortlists R·k candidates per query from the codes-only
+    * scan ([[pqTopK]] at k·R, or a multi-arm shortlist's rank ≤ k·R),
+    * then ONLY those candidates are re-scored with their full float
+    * vectors and the exact top-k returned. Recall becomes "did the true
+    * top-k survive into the ADC top-R" — far laxer than ADC ordering the
+    * top-k itself (measured on the sf0.01 `embeddings` table: m=8/ksub=16
+    * ADC-only 0.20 recall@5 → 0.69 at R=10; m=16/ksub=64 0.56 → 0.98) —
+    * while the full-vector reads drop from the whole catalog to
+    * requests·R rows. `short` carries (armCols…, query_id, item_id), so
+    * a MULTI-ARM harness re-scores every arm's shortlist in ONE catalog
+    * scan + one broadcast (r20, guide §2.4); full vectors never shuffle
+    * (candidates + their query vectors are the broadcast build, the item
+    * scan streams). Returns (armCols…, query_id, rank, item_id, score)
+    * with rank ≤ k per (armCols…, query_id) and `score` the exact metric
+    * score, so consumers see [[bruteForceTopK]] semantics on the
+    * survivors. */
   def rerankExactTopK(short: DataFrame, queries: DataFrame,
                       items: DataFrame, queryId: String, itemId: String,
                       vecCol: String, k: Int, metric: String,
                       armCols: Seq[String] = Nil): DataFrame = {
     require(metric == "cosine" || metric == "l2",
       s"rerankExactTopK: metric=$metric")
-    def prep(df: DataFrame, idC: String, outId: String, outVec: String) =
-      if (metric == "cosine")
-        normalized(df.select(col(idC).as(outId), col(vecCol).as(outVec)),
-          outVec, outVec)
-      else df.select(col(idC).as(outId), col(vecCol).as(outVec))
-    val q = prep(queries, queryId, "query_id", "__qv")
+    val q = metricPrep(queries, queryId, vecCol, "query_id", "__qv", metric)
     // evalBarrier: the normalize projection streams against a
     // multi-match broadcast probe — deferred eval re-runs it per match
-    val it = evalBarrier(prep(items, itemId, "item_id", "__iv"))
+    val it = evalBarrier(
+      metricPrep(items, itemId, vecCol, "item_id", "__iv", metric))
     val candQ = broadcast(short.join(q, Seq("query_id")))
-    val scored = it.join(candQ, Seq("item_id"))
-      .withColumn("score",
-        if (metric == "cosine") vecDotNative(col("__qv"), col("__iv"))
-        else -l2Distance(col("__qv"), col("__iv")))
-    val w = Window.partitionBy((armCols :+ "query_id").map(col): _*)
-      .orderBy(col("score").desc, col("item_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(armCols.map(col) ++
-        Seq(col("query_id"), col("rank"), col("item_id"), col("score")): _*)
+    topKPerQuery(it.join(candQ, Seq("item_id"))
+      .withColumn("score", exactScore(metric)), k, armCols)
   }
 
   /** [[pqEncode]] minus the normalization — for callers that already hold
@@ -1425,75 +1335,23 @@ object Similarity {
     df.withColumn(outCol, codes)
   }
 
-  /** PQ/ADC with exact re-ranking (the faiss `refine`/`RFlat` pattern):
-    * ADC shortlists `refineFactor · k` candidates per query from the
-    * codes-only scan, then ONLY those candidates are re-scored with
-    * their full float vectors and the exact top-k returned. Recall is
-    * now "did the true top-k survive into the ADC top-R" — far laxer
-    * than ADC ordering the top-k itself (measured on the driver
-    * embeddings: m=8/ksub=16 ADC-only 0.20 recall@5 → 0.69 at
-    * refineFactor=10; m=16/ksub=64 0.56 → 0.98) — while the full-vector
-    * reads drop from the whole catalog to requests·R rows: the scan
-    * stays 4·dsub× compressed, the exact math runs on a request-sized
-    * frame. `score` is the exact metric score (cosine/neg-L2), so
-    * downstream consumers see [[bruteForceTopK]] semantics on the
-    * survivors. */
-  def pqTopKRefined(queries: DataFrame, items: DataFrame, queryId: String,
-                    itemId: String, vecCol: String, k: Int, cb: PqCodebook,
-                    refineFactor: Int = 4,
-                    excludeSelf: Boolean = false,
-                    encodedItems: Option[DataFrame] = None): DataFrame = {
-    require(refineFactor >= 1, s"pqTopKRefined: refineFactor=$refineFactor")
-    val cand = pqTopK(queries, items, queryId, itemId, vecCol,
-      k * refineFactor, cb, excludeSelf, encodedItems)
-      .select(col("query_id"), col("item_id"))
-    def prep(df: DataFrame, idC: String, outId: String, outVec: String) =
-      if (cb.metric == "cosine")
-        normalized(df.select(col(idC).as(outId), col(vecCol).as(outVec)),
-          outVec, outVec)
-      else df.select(col(idC).as(outId), col(vecCol).as(outVec))
-    val q = prep(queries, queryId, "query_id", "__qv")
-    // evalBarrier: the normalize projection streams against a
-    // multi-match broadcast probe — deferred eval re-runs it per match
-    val it = evalBarrier(prep(items, itemId, "item_id", "__iv"))
-    // candidates (requests·R rows) + their query vectors are the
-    // broadcast build; the item scan streams and only candidate rows
-    // survive the probe — full vectors never shuffle.
-    val candQ = broadcast(cand.join(q, Seq("query_id")))
-    val scored = it.join(candQ, Seq("item_id"))
-      .withColumn("score",
-        if (cb.metric == "cosine") vecDotNative(col("__qv"), col("__iv"))
-        else -l2Distance(col("__qv"), col("__iv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("item_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("item_id"), col("score"))
-  }
-
-  /** The query-side IVF probe: per query, its `nprobe` nearest
-    * centroids (request-sized cross against the nlist-bounded table;
-    * ties broken by centroid_id so the probed set is DETERMINISTIC —
-    * [[servedTopKFromStore]] relies on recomputing it bit-identically).
-    * Queries are metric-prepped here ("cosine" → L2-normalized once).
-    * Returns (query_id, centroid_id, __qv). */
-  private[graft] def probeNearestCentroids(queries: DataFrame,
-                                           queryId: String, vecCol: String,
-                                           centroids: DataFrame, nprobe: Int,
-                                           metric: String): DataFrame = {
-    val q0 =
-      if (metric == "cosine")
-        normalized(queries.select(col(queryId).as("query_id"),
-          col(vecCol).as("__qv")), "__qv", "__qv")
-      else queries.select(col(queryId).as("query_id"),
-        col(vecCol).as("__qv"))
-    val scored = q0.crossJoin(broadcast(centroids))
-      .withColumn("__d", l2Distance(col("__qv"), col("centroid_vec")))
+  /** The IVF probe, the one place it is built: per query, its `nprobe`
+    * nearest centroids by l2 distance (request-sized cross against the
+    * nlist-bounded table; ties broken by centroid_id so the probed set is
+    * DETERMINISTIC — [[servedTopKFromStore]] relies on recomputing it
+    * bit-identically, the multi-arm shortlists on arm np being the
+    * `__rn` ≤ np prefix). `q` is the already-prepped (query_id, __qv)
+    * frame. Returns q's columns plus the centroid's, `__d` and the probe
+    * rank `__rn` (1 = nearest); callers select what they need. */
+  private[graft] def probeNearestCentroids(q: DataFrame,
+                                           centroids: DataFrame,
+                                           nprobe: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("__d"), col("centroid_id"))
-    scored.withColumn("__rn", row_number().over(w))
+    q.crossJoin(broadcast(centroids))
+      .withColumn("__d", l2Distance(col("__qv"), col("centroid_vec")))
+      .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= nprobe)
-      .select(col("query_id"), col("centroid_id"), col("__qv"))
   }
 
   /** R4, STORED-ASSIGNMENT serving form (r17 — the probe half of the
@@ -1526,29 +1384,15 @@ object Similarity {
     require(nprobe >= 1, s"clusterPrunedTopKStored: nprobe=$nprobe")
     require(metric == "cosine" || metric == "l2",
       s"clusterPrunedTopKStored: metric=$metric")
-    def prep(df: DataFrame, idC: String, outId: String, outVec: String,
-             extra: Seq[Column] = Nil) =
-      if (metric == "cosine")
-        normalized(df.select(Seq(col(idC).as(outId),
-          col(vecCol).as(outVec)) ++ extra: _*), outVec, outVec)
-      else df.select(Seq(col(idC).as(outId), col(vecCol).as(outVec)) ++
-        extra: _*)
-    val it = evalBarrier(prep(catalog, itemId, "item_id", "__iv",
-      Seq(col("centroid_id"))))
-    val qProbe = probeNearestCentroids(queries, queryId, vecCol,
-      centroids, nprobe, metric)
-    val cand0 = it.join(broadcast(qProbe), Seq("centroid_id"))
-    val cand =
-      if (excludeSelf) cand0.filter(col("query_id") =!= col("item_id"))
-      else cand0
-    val scored = cand.withColumn("score",
-      if (metric == "cosine") vecDotNative(col("__qv"), col("__iv"))
-      else -l2Distance(col("__qv"), col("__iv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("item_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("item_id"), col("score"))
+    val it = evalBarrier(metricPrep(catalog, itemId, vecCol, "item_id",
+      "__iv", metric, Seq(col("centroid_id"))))
+    val qProbe = probeNearestCentroids(
+      metricPrep(queries, queryId, vecCol, "query_id", "__qv", metric),
+      centroids, nprobe)
+      .select(col("query_id"), col("centroid_id"), col("__qv"))
+    val cand = it.join(broadcast(qProbe), Seq("centroid_id"))
+    topKPerQuery(dropSelf(cand, excludeSelf)
+      .withColumn("score", exactScore(metric)), k)
   }
 
   /** [[clusterPrunedTopKStored]] with REAL partition pruning over the
@@ -1581,8 +1425,9 @@ object Similarity {
     // BOUNDED collect, RUNTIME-ENFORCED (r20, VERDICT r19 #9): distinct
     // probed ids ≤ min(nlist, requests·nprobe) rows — the centroid-table
     // bound, asserted via a limit-gated collect instead of review.
-    val probedRows = probeNearestCentroids(queries, queryId, vecCol,
-      centroids, nprobe, metric)
+    val probedRows = probeNearestCentroids(
+      metricPrep(queries, queryId, vecCol, "query_id", "__qv", metric),
+      centroids, nprobe)
       .select(col("centroid_id").cast("long")).distinct()
       .limit(MaxCollectedCentroids + 1).collect()
     require(probedRows.length <= MaxCollectedCentroids,
@@ -1631,17 +1476,14 @@ object Similarity {
     require(cb.metric == "l2",
       "IvfPqIndex: residual codebooks are always l2-trained")
     val nlist: Int = centVecs.length
-    /** Row-major centroid_id·dim + t layout for the residual literals. */
-    private[graft] lazy val centFlat: Array[Double] = {
-      val out = new Array[Double](nlist * dim)
-      var i = 0
-      while (i < nlist) {
-        System.arraycopy(centVecs(i), 0, out, i * dim, dim)
-        i += 1
-      }
-      out
-    }
+    /** The frozen table as one literal for the residual kernels. */
+    private[graft] lazy val coarseLit: Column = coarseLiteral(centVecs)
   }
+
+  /** A centroid table as ONE row-major literal — slot centroid_id·dim + t
+    * — so a residual is a slice lookup, not a join. */
+  private def coarseLiteral(centVecs: Array[Array[Double]]): Column =
+    typedLit(centVecs.flatten.toSeq)
 
   /** Rebuild a (centroid_id, centroid_vec) frame from driver arrays —
     * nlist rows, so search never re-derives centroids (and never re-runs
@@ -1677,33 +1519,16 @@ object Similarity {
                  seed: Long = 42, coarseIters: Int = 0, pqIters: Int = 2,
                  trainSampleN: Int = 0): IvfPqIndex = {
     require(metric == "cosine" || metric == "l2", s"ivfPqTrain: $metric")
-    val it0 =
-      if (metric == "cosine")
-        normalized(items.select(col(itemId).as("__id"),
-          col(vecCol).as("__v")), "__v", "__v")
-      else items.select(col(itemId).as("__id"), col(vecCol).as("__v"))
+    val it0 = metricPrep(items, itemId, vecCol, "__id", "__v", metric)
     val seeds = pickCentroids(it0, "__id", "__v", nlist, seed)
     val cents =
       if (coarseIters > 0) refineCentroids(it0, "__v", seeds, coarseIters)
       else seeds
-    // BOUNDED collect: nlist rows (the centroid-table bound)
-    val rows = cents
-      .select(col("centroid_id").cast("long"), col("centroid_vec"))
-      .collect().sortBy(_.getLong(0))
-    require(rows.indices.forall(i => rows(i).getLong(0) == i.toLong),
+    val (ids, centVecs) = collectCentroids(cents)
+    require(ids.indices.forall(i => ids(i) == i.toLong),
       "ivfPqTrain: centroid ids must be the contiguous 0-based range")
-    val centVecs = rows.map(_.getSeq[Any](1).map {
-      case f: java.lang.Float => f.toDouble
-      case n: Number => n.doubleValue()
-    }.toArray)
     val dim = centVecs.head.length
-    val flat = {
-      val out = new Array[Double](centVecs.length * dim)
-      centVecs.indices.foreach(i =>
-        System.arraycopy(centVecs(i), 0, out, i * dim, dim))
-      out
-    }
-    val coarseLit = typedLit(flat.toSeq)
+    val coarseLit = coarseLiteral(centVecs)
     // residual frame over the frozen table (literal lookup by id — the
     // centroids are already driver-side, a join would re-shuffle nothing
     // but still plan an exchange)
@@ -1732,7 +1557,7 @@ object Similarity {
                                   idx: IvfPqIndex): Column = {
     val cb = idx.cb
     val ids = Array.tabulate(cb.ksub)(_.toLong)
-    val coarseLit = typedLit(idx.centFlat.toSeq)
+    val coarseLit = idx.coarseLit
     array((0 until cb.m).map { j =>
       val sub = zip_with(
         slice(vecCol, j * cb.dsub + 1, cb.dsub),
@@ -1756,7 +1581,7 @@ object Similarity {
                             idx: IvfPqIndex): Column = {
     val cb = idx.cb
     val cbLit = typedLit(cb.flat.toSeq)
-    val coarseLit = typedLit(idx.centFlat.toSeq)
+    val coarseLit = idx.coarseLit
     transform(sequence(lit(0), lit(cb.m * cb.ksub - 1)), i => {
       val j = floor(i.cast("double") / cb.ksub).cast("int")
       aggregate(sequence(lit(0), lit(cb.dsub - 1)), lit(0.0), (acc, t) => {
@@ -1770,43 +1595,17 @@ object Similarity {
     })
   }
 
-  /** R4, residual IVF∘PQ form (faiss `IVFx,PQy` semantics): cluster
-    * pruning bounds WHICH items are scored (centroid_id equi-join), PQ
-    * over RESIDUALS bounds WHAT each scored item costs — and because the
-    * codebook only has to span the within-cell displacement (not the
-    * whole space), ADC distances are far closer to exact than
-    * [[clusterPrunedTopKPq]]'s raw-vector codes at identical
-    * (nlist, nprobe, m, ksub). Output contract matches
-    * [[bruteForceTopK]].
-    *
-    * Plan shape: items are assigned (native kernel), residual-encoded
-    * slice-wise, and eval-barriered BEFORE the multi-match probe join;
-    * the broadcast build side is the (query, probed centroid, LUT) frame
-    * — requests·nprobe rows of m·ksub doubles (the per-probe LUT is the
-    * price of residual encoding; at requests=50, nprobe=8, m=16,
-    * ksub=64 that is 3 MB). One broadcast hash join on centroid_id then
-    * streams the codes-only catalog; ADC is m lookups per candidate.
-    * `refineFactor` > 0 re-scores the ADC shortlist with full vectors
-    * (the [[pqTopKRefined]] tail — `score` becomes exact).
-    *
-    * For cosine, ADC approximates ||q − x||² directly (q − x =
-    * (q − c) − (x − c) within the probed cell), so score = 1 − d²/2 on
-    * unit vectors, same as the raw-PQ path. */
-  /** The deterministic residual-encoded catalog
-    * [[clusterPrunedTopKPqResidual]] builds internally — (item_id,
-    * centroid_id, __codes) — exposed so a caller measuring several
-    * (nprobe, refineFactor) operating points of the SAME index encodes
-    * the catalog ONCE (localCheckpoint it, pass via `encodedItems`).
-    * The coarse table lives in `idx` (driver-side), so unlike the raw-PQ
-    * form there is no centroid frame to share — only the catalog side. */
+  /** The deterministic residual-encoded catalog — (item_id, centroid_id,
+    * __codes) — that [[clusterPrunedTopKPqResidual]] builds internally; a
+    * caller measuring several operating points of the SAME index encodes
+    * it ONCE (localCheckpoint it) for
+    * [[clusterPrunedShortlistPqResidualMulti]]. The coarse table lives in
+    * `idx` (driver-side), so unlike the raw-PQ form there is no centroid
+    * frame to share — only the catalog side. */
   def residualEncodedCatalog(items: DataFrame, itemId: String,
                              vecCol: String, idx: IvfPqIndex): DataFrame = {
     val cents = centroidFrame(items.sparkSession, idx.centVecs)
-    val it0 =
-      if (idx.metric == "cosine")
-        normalized(items.select(col(itemId).as("item_id"),
-          col(vecCol).as("__iv")), "__iv", "__iv")
-      else items.select(col(itemId).as("item_id"), col(vecCol).as("__iv"))
+    val it0 = metricPrep(items, itemId, vecCol, "item_id", "__iv", idx.metric)
     // barrier 1: assignment kernel evaluated once per item (projection
     // collapse would otherwise inline it into all m encode slices);
     // barrier 2: codes evaluated once before the multi-match probe join
@@ -1817,144 +1616,81 @@ object Similarity {
           .as("__codes")))
   }
 
+  /** R4, residual IVF∘PQ form (faiss `IVFx,PQy` semantics): cluster
+    * pruning bounds WHICH items are scored (centroid_id equi-join), PQ
+    * over RESIDUALS bounds WHAT each scored item costs — and because the
+    * codebook only has to span the within-cell displacement (not the
+    * whole space), ADC distances are far closer to exact than
+    * [[clusterPrunedTopKPq]]'s raw-vector codes at identical
+    * (nlist, nprobe, m, ksub). Output contract matches
+    * [[bruteForceTopK]]; `score` is the ADC score.
+    *
+    * Plan shape: items are assigned (native kernel), residual-encoded
+    * slice-wise ([[residualEncodedCatalog]]), and eval-barriered BEFORE
+    * the multi-match probe join; the broadcast build side is the (query,
+    * probed centroid, LUT) frame — requests·nprobe rows of m·ksub doubles
+    * (the per-probe LUT is the price of residual encoding; at
+    * requests=50, nprobe=8, m=16, ksub=64 that is 3 MB). One broadcast
+    * hash join on centroid_id then streams the codes-only catalog; ADC is
+    * m lookups per candidate.
+    *
+    * For cosine, ADC approximates ||q − x||² directly (q − x =
+    * (q − c) − (x − c) within the probed cell), so score = 1 − d²/2 on
+    * unit vectors, same as the raw-PQ path. */
   def clusterPrunedTopKPqResidual(queries: DataFrame, items: DataFrame,
                                   queryId: String, itemId: String,
                                   vecCol: String, k: Int, idx: IvfPqIndex,
-                                  nprobe: Int = 8, refineFactor: Int = 0,
-                                  excludeSelf: Boolean = false,
-                                  encodedItems: Option[DataFrame] = None)
-      : DataFrame = {
+                                  nprobe: Int = 8,
+                                  excludeSelf: Boolean = false): DataFrame = {
     require(nprobe >= 1, s"clusterPrunedTopKPqResidual: nprobe=$nprobe")
-    require(refineFactor >= 0,
-      s"clusterPrunedTopKPqResidual: refineFactor=$refineFactor")
-    val cb = idx.cb
-    val spark = queries.sparkSession
-    def prep(df: DataFrame, idC: String, outId: String, outVec: String) =
-      if (idx.metric == "cosine")
-        normalized(df.select(col(idC).as(outId), col(vecCol).as(outVec)),
-          outVec, outVec)
-      else df.select(col(idC).as(outId), col(vecCol).as(outVec))
-    val cents = centroidFrame(spark, idx.centVecs)
-    val it0 = prep(items, itemId, "item_id", "__iv")
-    // `encodedItems` (r19, guide §2.4): the residual-encoded catalog is
-    // a pure deterministic function of (items, idx) and the heaviest
-    // subtree here (assignment kernel + m NearestCentroids encodes per
-    // row) — a multi-arm recall harness otherwise re-encodes the full
-    // catalog once per arm. Build once via [[residualEncodedCatalog]],
-    // localCheckpoint, pass to every arm. None = original behavior.
-    val itemsC = encodedItems.getOrElse(
-      residualEncodedCatalog(items, itemId, vecCol, idx))
-    val q0 = prep(queries, queryId, "query_id", "__qv")
-    val qProbe = {
-      val scored = q0.crossJoin(broadcast(cents))
-        .withColumn("__d", l2Distance(col("__qv"), col("centroid_vec")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("__d"), col("centroid_id"))
-      scored.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= nprobe)
-        .select(col("query_id"), col("centroid_id"), col("__qv"))
-    }
+    val itemsC = residualEncodedCatalog(items, itemId, vecCol, idx)
+    val q0 = metricPrep(queries, queryId, vecCol, "query_id", "__qv",
+      idx.metric)
+    val qProbe = probeNearestCentroids(q0,
+      centroidFrame(queries.sparkSession, idx.centVecs), nprobe)
+      .select(col("query_id"), col("centroid_id"), col("__qv"))
     // per-probe LUT on the request-sized frame; materializes at the
     // broadcast exchange
     val qLut = qProbe.select(col("query_id"), col("centroid_id"),
       pqLutResidual(col("__qv"), col("centroid_id"), idx).as("__lut"))
-    val cand0 = itemsC.join(broadcast(qLut), Seq("centroid_id"))
-    val cand =
-      if (excludeSelf) cand0.filter(col("query_id") =!= col("item_id"))
-      else cand0
-    val adc = cand
-      .withColumn("__d", pqAdcDist(col("__lut"), col("__codes"), cb.ksub))
-      .withColumn("score",
-        if (idx.metric == "cosine") lit(1.0) - col("__d") / 2.0
-        else -col("__d"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("item_id"))
-    if (refineFactor == 0)
-      adc.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("item_id"), col("score"))
-    else {
-      val short = adc.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k * refineFactor)
-        .select(col("query_id"), col("item_id"))
-      val rescored = evalBarrier(it0).join(
-        broadcast(short.join(q0, Seq("query_id"))), Seq("item_id"))
-        .withColumn("score",
-          if (idx.metric == "cosine") vecDotNative(col("__qv"), col("__iv"))
-          else -l2Distance(col("__qv"), col("__iv")))
-      rescored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("item_id"), col("score"))
-    }
+    val cand = itemsC.join(broadcast(qLut), Seq("centroid_id"))
+    topKPerQuery(
+      withAdcScore(dropSelf(cand, excludeSelf), idx.cb.ksub, idx.metric), k)
   }
 
   /** Residual twin of [[clusterPrunedShortlistPqMulti]] (r20, guide §2.4):
     * several `nprobe` operating points of the SAME residual IVF∘PQ index
-    * shortlisted in ONE candidate pass. The per-PROBE-PAIR LUT (the
-    * residual-PQ law) is built once on the max(nprobes) probe frame with
-    * the probe rank `__rn` kept; each candidate fans into the arms whose
-    * nprobe admits its probe rank, then ONE (nprobe, query) window ranks
-    * every arm. filter(nprobe = np && rank ≤ k) equals
-    * [[clusterPrunedTopKPqResidual]](…, nprobe = np, refineFactor = 0)
-    * at k ≤ shortK (differential pin in VectorSpec); feed rank ≤
-    * k·refineFactor to [[rerankExactTopK]] for the refined arms. */
+    * shortlisted in ONE candidate pass over `encodedItems` (the index's
+    * [[residualEncodedCatalog]], built once by the caller). The
+    * per-PROBE-PAIR LUT (the residual-PQ law) is built once on the
+    * max(nprobes) probe frame with the probe rank `__rn` kept; each
+    * candidate fans into its arms ([[probeArms]]), then ONE
+    * (nprobe, query) window ranks every arm. filter(nprobe = np &&
+    * rank ≤ k) equals [[clusterPrunedTopKPqResidual]](…, nprobe = np) at
+    * k ≤ shortK (differential pin in VectorSpec); feed rank ≤ k·R to
+    * [[rerankExactTopK]] for the refined arms. */
   def clusterPrunedShortlistPqResidualMulti(queries: DataFrame,
-                                            items: DataFrame,
-                                            queryId: String, itemId: String,
-                                            vecCol: String, shortK: Int,
-                                            idx: IvfPqIndex,
+                                            encodedItems: DataFrame,
+                                            queryId: String, vecCol: String,
+                                            shortK: Int, idx: IvfPqIndex,
                                             nprobes: Seq[Int],
-                                            excludeSelf: Boolean = false,
-                                            encodedItems: Option[DataFrame] =
-                                              None): DataFrame = {
+                                            excludeSelf: Boolean = false)
+      : DataFrame = {
     require(shortK >= 1,
       s"clusterPrunedShortlistPqResidualMulti: shortK=$shortK")
     require(nprobes.nonEmpty && nprobes.forall(_ >= 1) &&
       nprobes.distinct.length == nprobes.length,
       s"clusterPrunedShortlistPqResidualMulti: nprobes=$nprobes")
-    val cb = idx.cb
-    val spark = queries.sparkSession
-    def prep(df: DataFrame, idC: String, outId: String, outVec: String) =
-      if (idx.metric == "cosine")
-        normalized(df.select(col(idC).as(outId), col(vecCol).as(outVec)),
-          outVec, outVec)
-      else df.select(col(idC).as(outId), col(vecCol).as(outVec))
-    val cents = centroidFrame(spark, idx.centVecs)
-    val itemsC = encodedItems.getOrElse(
-      residualEncodedCatalog(items, itemId, vecCol, idx))
-    val q0 = prep(queries, queryId, "query_id", "__qv")
-    val maxProbe = nprobes.max
-    val qProbe = {
-      val scored = q0.crossJoin(broadcast(cents))
-        .withColumn("__d", l2Distance(col("__qv"), col("centroid_vec")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("__d"), col("centroid_id"))
-      scored.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= maxProbe)
-        .select(col("query_id"), col("centroid_id"), col("__qv"),
-          col("__rn"))
-    }
+    val q0 = metricPrep(queries, queryId, vecCol, "query_id", "__qv",
+      idx.metric)
+    val qProbe = probeNearestCentroids(q0,
+      centroidFrame(queries.sparkSession, idx.centVecs), nprobes.max)
+      .select(col("query_id"), col("centroid_id"), col("__qv"), col("__rn"))
     val qLut = qProbe.select(col("query_id"), col("centroid_id"),
       col("__rn"), pqLutResidual(col("__qv"), col("centroid_id"), idx)
         .as("__lut"))
-    val cand0 = itemsC.join(broadcast(qLut), Seq("centroid_id"))
-    val cand =
-      if (excludeSelf) cand0.filter(col("query_id") =!= col("item_id"))
-      else cand0
-    val npLit = array(nprobes.sorted.map(lit(_)): _*)
-    val armed = cand
-      .withColumn("__d", pqAdcDist(col("__lut"), col("__codes"), cb.ksub))
-      .withColumn("score",
-        if (idx.metric == "cosine") lit(1.0) - col("__d") / 2.0
-        else -col("__d"))
-      .withColumn("nprobe",
-        explode(filter(npLit, np => np >= col("__rn"))))
-      .select(col("nprobe"), col("query_id"), col("item_id"), col("score"))
-    val w = Window.partitionBy(col("nprobe"), col("query_id"))
-      .orderBy(col("score").desc, col("item_id"))
-    armed.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= shortK)
-      .select(col("nprobe"), col("query_id"), col("rank"), col("item_id"),
-        col("score"))
+    val cand = encodedItems.join(broadcast(qLut), Seq("centroid_id"))
+    topKPerQuery(probeArms(withAdcScore(dropSelf(cand, excludeSelf),
+      idx.cb.ksub, idx.metric), nprobes), shortK, Seq("nprobe"))
   }
 }

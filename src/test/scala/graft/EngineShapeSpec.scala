@@ -43,4 +43,28 @@ class EngineShapeSpec extends AnyFunSuite {
     }
     assert(sites === Seq("GraftSession.scala"))
   }
+
+  private def similaritySource: String = new String(
+    Files.readAllBytes(mainDir.resolve("graft/ops/Similarity.scala")), "UTF-8")
+
+  /** Copies of `snippet` in `text`, ignoring whitespace on both sides so a
+    * line break inside a copy cannot hide it. */
+  private def copies(text: String, snippet: String): Int = {
+    val flat = text.replaceAll("\\s", "")
+    java.util.regex.Pattern.quote(snippet.replaceAll("\\s", "")).r
+      .findAllMatchIn(flat).length
+  }
+
+  test("Similarity: one metric prep helper, no optional-catalog parameters") {
+    val src = similaritySource
+    assert("""\bdef\s+prep\b""".r.findFirstIn(src).isEmpty)
+    assert(copies(src, "Option[DataFrame") === 0)
+    assert(copies(src, "Option[(DataFrame") === 0)
+  }
+
+  test("Similarity: one top-k tail and one IVF probe window") {
+    val src = similaritySource
+    assert(copies(src, """orderBy(col("score").desc, col("item_id"))""") === 1)
+    assert(copies(src, """orderBy(col("__d"), col("centroid_id"))""") === 1)
+  }
 }

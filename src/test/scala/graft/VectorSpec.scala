@@ -618,8 +618,9 @@ class VectorSpec extends AnyFunSuite {
       .select("query_id", "rank", "item_id", "score")
       .as[(Long, Int, Long, Double)].collect()
       .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
-    val adc = Similarity.pqTopK(queries, items, "vec_id", "vec_id",
-      "embedding", 5, cb)
+    val adc = Similarity.pqTopK(queries,
+      Similarity.pqEncodedItems(items, "vec_id", "embedding", cb),
+      "vec_id", "embedding", 5, cb)
       .select("query_id", "rank", "item_id", "score")
       .as[(Long, Int, Long, Double)].collect()
       .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
@@ -631,8 +632,8 @@ class VectorSpec extends AnyFunSuite {
     }
   }
 
-  test("pqTopKRefined: exact scores on survivors; recall >= raw ADC on the " +
-    "driver embeddings; refineFactor covering the catalog recovers exact") {
+  test("pqTopK shortlist + rerankExactTopK: exact scores on survivors; " +
+    "recall >= raw ADC; a catalog-covering shortlist recovers exact") {
     val e = SparkEntry.T(spark, "/root/testdata/sf0.001", "embeddings")
     val qs = e.filter(col("vec_id") < 10)
     val cb = Similarity.pqTrain(e, "vec_id", "embedding", m = 8, ksub = 16,
@@ -646,10 +647,15 @@ class VectorSpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toSet
       exact.keySet.count(got.contains).toDouble / exact.size
     }
-    val adc = Similarity.pqTopK(qs, e, "vec_id", "vec_id", "embedding", 5,
-      cb, excludeSelf = true)
-    val refined = Similarity.pqTopKRefined(qs, e, "vec_id", "vec_id",
-      "embedding", 5, cb, refineFactor = 4, excludeSelf = true)
+    val enc = Similarity.pqEncodedItems(e, "vec_id", "embedding", cb)
+    // ADC shortlist of k·R, then the exact re-rank (the faiss refine)
+    def refinedAt(r: Int) = Similarity.rerankExactTopK(
+      Similarity.pqTopK(qs, enc, "vec_id", "embedding", 5 * r, cb,
+        excludeSelf = true).select("query_id", "item_id"),
+      qs, e, "vec_id", "vec_id", "embedding", 5, cb.metric)
+    val adc = Similarity.pqTopK(qs, enc, "vec_id", "embedding", 5, cb,
+      excludeSelf = true)
+    val refined = refinedAt(4)
     assert(hitRate(refined) >= hitRate(adc) - 1e-9)
     // survivors carry EXACT scores (the refine contract)
     refined.select("query_id", "item_id", "score")
@@ -658,8 +664,7 @@ class VectorSpec extends AnyFunSuite {
       }
     // R >= catalog size: the shortlist is everything -> exact top-k back
     val n = e.count().toInt
-    val full = Similarity.pqTopKRefined(qs, e, "vec_id", "vec_id",
-      "embedding", 5, cb, refineFactor = n / 5 + 1, excludeSelf = true)
+    val full = refinedAt(n / 5 + 1)
     assert(hitRate(full) === 1.0)
   }
 
@@ -672,7 +677,8 @@ class VectorSpec extends AnyFunSuite {
     def ranks(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "item_id")
         .as[(Long, Int, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val pure = ranks(Similarity.pqTopK(qs, e, "vec_id", "vec_id",
+    val pure = ranks(Similarity.pqTopK(qs,
+      Similarity.pqEncodedItems(e, "vec_id", "embedding", cb), "vec_id",
       "embedding", 5, cb, excludeSelf = true))
     val unpruned = ranks(Similarity.clusterPrunedTopKPq(qs, e, "vec_id",
       "vec_id", "embedding", 5, cb, nlist = 6, nprobe = 6,
@@ -681,9 +687,11 @@ class VectorSpec extends AnyFunSuite {
     val n = e.count().toInt
     val exact = ranks(Similarity.bruteForceTopK(qs, e, "vec_id", "vec_id",
       "embedding", 5, "cosine", excludeSelf = true))
-    val recovered = ranks(Similarity.clusterPrunedTopKPq(qs, e, "vec_id",
-      "vec_id", "embedding", 5, cb, nlist = 6, nprobe = 6,
-      refineFactor = n / 5 + 1, excludeSelf = true))
+    val short = Similarity.clusterPrunedTopKPq(qs, e, "vec_id", "vec_id",
+      "embedding", 5 * (n / 5 + 1), cb, nlist = 6, nprobe = 6,
+      excludeSelf = true).select("query_id", "item_id")
+    val recovered = ranks(Similarity.rerankExactTopK(short, qs, e,
+      "vec_id", "vec_id", "embedding", 5, cb.metric))
     assert(recovered === exact)
   }
 
@@ -727,9 +735,11 @@ class VectorSpec extends AnyFunSuite {
     val n = e.count().toInt
     val exact = ranks(Similarity.bruteForceTopK(qs, e, "vec_id", "vec_id",
       "embedding", 5, "cosine", excludeSelf = true))
-    val recovered = ranks(Similarity.clusterPrunedTopKPqResidual(qs, e,
-      "vec_id", "vec_id", "embedding", 5, idx, nprobe = 6,
-      refineFactor = n / 5 + 1, excludeSelf = true))
+    val short = Similarity.clusterPrunedTopKPqResidual(qs, e, "vec_id",
+      "vec_id", "embedding", 5 * (n / 5 + 1), idx, nprobe = 6,
+      excludeSelf = true).select("query_id", "item_id")
+    val recovered = ranks(Similarity.rerankExactTopK(short, qs, e,
+      "vec_id", "vec_id", "embedding", 5, idx.metric))
     assert(recovered === exact)
     val a = ranks(Similarity.clusterPrunedTopKPqResidual(qs, e, "vec_id",
       "vec_id", "embedding", 5, idx, nprobe = 2, excludeSelf = true))
@@ -791,9 +801,10 @@ class VectorSpec extends AnyFunSuite {
     val queries = data.take(7).toDF("vec_id", "embedding")
     val cb = Similarity.pqTrain(items, "vec_id", "embedding", m = 4,
       ksub = 8, refineIters = 1)
-    val multi = Similarity.clusterPrunedShortlistPqMulti(queries, items,
-      "vec_id", "vec_id", "embedding", 20, cb, nlist = 6,
-      nprobes = Seq(2, 4), excludeSelf = true)
+    val multi = Similarity.clusterPrunedShortlistPqMulti(queries,
+      Similarity.pqPrunedCatalog(items, "vec_id", "embedding", cb,
+        nlist = 6), "vec_id", "embedding", 20, cb, nprobes = Seq(2, 4),
+      excludeSelf = true)
     Seq(2, 4).foreach { np =>
       val solo = ranked(Similarity.clusterPrunedTopKPq(queries, items,
         "vec_id", "vec_id", "embedding", 5, cb, nlist = 6, nprobe = np,
@@ -812,8 +823,9 @@ class VectorSpec extends AnyFunSuite {
     val idx = Similarity.ivfPqTrain(items, "vec_id", "embedding", m = 4,
       ksub = 8, nlist = 6, pqIters = 1)
     val multi = Similarity.clusterPrunedShortlistPqResidualMulti(queries,
-      items, "vec_id", "vec_id", "embedding", 20, idx,
-      nprobes = Seq(2, 4), excludeSelf = true)
+      Similarity.residualEncodedCatalog(items, "vec_id", "embedding", idx),
+      "vec_id", "embedding", 20, idx, nprobes = Seq(2, 4),
+      excludeSelf = true)
     Seq(2, 4).foreach { np =>
       val solo = ranked(Similarity.clusterPrunedTopKPqResidual(queries,
         items, "vec_id", "vec_id", "embedding", 5, idx, nprobe = np,
@@ -824,20 +836,23 @@ class VectorSpec extends AnyFunSuite {
     }
   }
 
-  test("rerankExactTopK pin: re-ranking the k*refineFactor ADC shortlist " +
-    "equals pqTopKRefined / the refineFactor branch exactly") {
+  test("rerankExactTopK pin: a catalog-covering ADC shortlist re-ranks to " +
+    "bruteForceTopK's ranks and scores; arms rank independently") {
     val data = seededVecs(60, 16, 31L)
     val items = data.toDF("vec_id", "embedding")
     val queries = data.take(7).toDF("vec_id", "embedding")
     val cb = Similarity.pqTrain(items, "vec_id", "embedding", m = 4,
       ksub = 8, refineIters = 1)
-    val short = Similarity.pqTopK(queries, items, "vec_id", "vec_id",
-      "embedding", 5 * 4, cb, excludeSelf = true)
+    // k·R >= catalog: every candidate survives into the shortlist, so the
+    // re-rank alone decides — it must reproduce the exact baseline
+    val short = Similarity.pqTopK(queries,
+      Similarity.pqEncodedItems(items, "vec_id", "embedding", cb),
+      "vec_id", "embedding", 60, cb, excludeSelf = true)
       .select(col("query_id"), col("item_id"))
     val rr = ranked(Similarity.rerankExactTopK(short, queries, items,
       "vec_id", "vec_id", "embedding", 5, "cosine"))
-    val solo = ranked(Similarity.pqTopKRefined(queries, items, "vec_id",
-      "vec_id", "embedding", 5, cb, refineFactor = 4, excludeSelf = true))
+    val solo = ranked(Similarity.bruteForceTopK(queries, items, "vec_id",
+      "vec_id", "embedding", 5, "cosine", excludeSelf = true))
     assert(rr === solo)
     // and with an arm column: each arm re-ranked within its own window
     val armed = short.withColumn("__fam", lit("x"))
