@@ -179,24 +179,45 @@ object Explain {
     * bound-contract word (`bound`/`bounded`/`BOUNDED collect` marker —
     * the collectCentroids/pqTrain/ivfPqTrain centroid-table contracts).
     * Anything else is reported as unbounded and FAILS the audit, so a
-    * future data-sized collect cannot land silently. Positive + negative
+    * future data-sized collect cannot land silently.
+    *
+    * The sentinel idiom is held to more: a collect whose own call chain
+    * is gated by `limit(N + 1)` passes only if the file compares a
+    * `.length`/`.size` against that same `N` (the `require(rows.length <=
+    * N, …)` after the collect, or a caller's over-budget branch). An
+    * unchecked sentinel silently truncates at N + 1 rows, so it is
+    * reported even though a `limit(` is in view. Positive + negative
     * controls in ScaleAndGuardsSpec. */
   private[graft] def unboundedCollects(srcDir: java.io.File): Seq[String] = {
-    val okRx = java.util.regex.Pattern.compile(
+    import java.util.regex.Pattern
+    val okRx = Pattern.compile(
       "limit\\s*\\(|require\\s*\\(|\\bbound(ed)?\\b",
-      java.util.regex.Pattern.CASE_INSENSITIVE)
+      Pattern.CASE_INSENSITIVE)
+    val sentinelRx =
+      Pattern.compile("limit\\s*\\(\\s*([\\w.]+)\\s*\\+\\s*1\\s*\\)")
     Option(srcDir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".scala")).sortBy(_.getName)
       .flatMap { f =>
         val src = scala.io.Source.fromFile(f, "UTF-8")
         val lines = try src.getLines().toVector finally src.close()
+        val text = lines.mkString("\n")
         lines.zipWithIndex.flatMap { case (l, i) =>
           if (!l.contains(".collect()")) None
           else {
-            val window =
-              lines.slice(math.max(0, i - 29), i + 1).mkString("\n")
-            if (okRx.matcher(window).find()) None
-            else Some(s"${f.getName}:${i + 1}")
+            // the collect's call chain: its line plus the `.`-continued
+            // lines above it
+            var from = i
+            while (from > 0 && lines(from).trim.startsWith(".")) from -= 1
+            val sentinel = sentinelRx.matcher(
+              lines.slice(from, i + 1).mkString("\n"))
+            val ok =
+              if (sentinel.find())
+                Pattern.compile("\\.(length|size)\\s*(<=|<|>=|>)\\s*" +
+                  Pattern.quote(sentinel.group(1)) + "(?![\\w.])")
+                  .matcher(text).find()
+              else okRx.matcher(
+                lines.slice(math.max(0, i - 29), i + 1).mkString("\n")).find()
+            if (ok) None else Some(s"${f.getName}:${i + 1}")
           }
         }
       }.toSeq

@@ -847,11 +847,12 @@ object QueriesEval {
     //     real ML-1M files against a 24-value golden vector in ScalaTest;
     //     this row puts the composition in the DuckDB oracle gate so the
     //     driver's hard signal sees it every round. Scale shape: one fact
-    //     scan feeds labeling+dedup (one (u,it) agg), k-core is 6
-    //     map-combined counts + semi-joins, the split rides the parallel
-    //     globalRowNumber, top-100 is TakeOrderedAndProject, exclusion is
-    //     a broadcast anti-join, and every metric mean is one agg over a
-    //     per-user frame. Oracle note: the shared mid-pipeline CTEs are
+    //     scan feeds labeling+dedup (one (u,it) agg), k-core is a linear
+    //     chain of 6 windowed key counts, the split labels rows with one
+    //     projection against cut keys found on a ts histogram, top-100 is
+    //     TakeOrderedAndProject, exclusion is a broadcast anti-join, and
+    //     every metric mean is one agg over a per-user frame. Oracle note:
+    //     the shared mid-pipeline CTEs are
     //     AS MATERIALIZED — DuckDB inlines multiply-referenced CTEs here
     //     and the 17-way per-user metric join re-evaluates the whole
     //     upstream pipeline per branch (measured 5.5 min → 0.5 s at
@@ -869,22 +870,21 @@ object QueriesEval {
       // localCheckpoint barriers (the c2 composition device) at the two
       // fan-out points: `inter` feeds the k-core chain AND the coverage
       // denominator, `split` feeds train/test/users/pop — without them
-      // every downstream consumer re-derives the fact scan + the
-      // 12-shuffle k-core chain (measured: 95.9 s at sf0.1 un-barriered
-      // vs ~13 s with; both frames are (u, it[, ts]) — catalog-pair
-      // sized, far below the corpus).
+      // every downstream consumer re-derives the fact scan + the k-core
+      // chain (measured with the old semi-join k-core: 95.9 s at sf0.1
+      // un-barriered vs ~13 s with; both frames are (u, it[, ts]) —
+      // catalog-pair sized, far below the corpus).
       val inter = Relational.implicitLabels(base, "rating", 25.0)
         .filter(col("label") === 1)
         .groupBy(col("u"), col("it")).agg(min(col("sd")).as("ts"))
         .localCheckpoint()
-      // Barrier the k-core result (r16, the c8 fan-out device): the r16
-      // histogram timeSplit reads its input in THREE subtrees (histogram,
-      // boundary rows, non-boundary rows) — un-barriered, each one
-      // re-derives the 12-shuffle k-core chain and the split stage costs
-      // as much as the old full-corpus rank (sf10 A/B matrix: split stage
-      // 127.3 s hist/no-barrier vs 15.5–37.2 s hist+barrier; rank+barrier
-      // measured 35.7–115.8 s on the same box windows). The frame is
-      // catalog-pair-sized, far below the corpus.
+      // Barrier the k-core result (r16, the c8 fan-out device): timeSplit
+      // reads its input in four queries (the count, the histogram cut
+      // groups, the boundary keys, then the labelling projection) — each
+      // would re-derive the k-core chain un-barriered (r16 sf10 A/B with
+      // the three-subtree split of that round: split stage 127.3 s
+      // no-barrier vs 15.5–37.2 s with). The frame is catalog-pair-sized,
+      // far below the corpus.
       val core = Relational.kCore(inter, "u", "it", 5, 5, 3)
         .localCheckpoint()
       // (u, it) is unique after the agg above, so the zero-padded

@@ -314,7 +314,7 @@ object SparkEntry {
              |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 450000)
              |ORDER BY c_custkey""".stripMargin)),
 
-    // --- J5: k-core semi-join loop, fixed 3 iterations (movielens.py:345-382) ---
+    // --- J5: k-core windowed-count chain, fixed 3 iterations (movielens.py:345-382) ---
     ("j5_kcore", (s, d) => {
       val li = T(s, d, "lineitem").select(col("l_partkey"), col("l_suppkey"))
       Relational.kCore(li, "l_partkey", "l_suppkey", 30, 590, 3)

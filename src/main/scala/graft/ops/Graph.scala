@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Graph operators over edge DataFrames — the third member of the graph
-  * family beside the k-core semi-join loop (Relational.kcore) and the two
+  * family beside the fixed-round k-core (Relational.kCore) and the two
   * connected-components forms (Dedup.connectedComponents /
   * connectedComponentsAlternating). Used on co-occurrence/click graphs for
   * item authority scoring.

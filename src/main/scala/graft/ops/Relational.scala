@@ -24,55 +24,59 @@ object Relational {
   /** J5: k-core filtering — keep rows whose user and item both appear at
     * least `minCount` times, for a FIXED number of iterations (the reference
     * runs exactly 3, not to convergence — `src/data/movielens.py:345-382`).
+    * Each iteration filters users first, then items; duplicate rows count
+    * and are kept; rows with a null user or item key are dropped.
     *
-    * Each iteration is two map-side-combined counts + two left-semi joins;
-    * at scale AQE turns the (small) qualifying-key sets into broadcast
-    * semi-joins automatically.
+    * Each half-iteration is a windowed count over its key followed by a
+    * filter, so the plan is one linear chain of `2 · iterations` key
+    * shuffles over a single read of `df`, with no join. (A semi-join
+    * against the qualifying keys would read the running frame on both of
+    * its sides, and three iterations would plan 4³ = 64 copies of the
+    * input.) The shuffles carry whole rows, not distinct keys; measured
+    * 1.5–2.8× faster than the semi-join form from 30.9 K to 3.1 M pairs
+    * (OPTIMIZATION_r20.md, correction to "left alone").
     */
   def kCore(df: DataFrame, userCol: String, itemCol: String,
             minUserCount: Int = 5, minItemCount: Int = 5,
             iterations: Int = 3): DataFrame = {
-    var cur = df
-    for (_ <- 1 to iterations) {
-      val okUsers = cur.groupBy(userCol).count()
-        .filter(col("count") >= minUserCount).select(userCol)
-      cur = cur.join(okUsers, Seq(userCol), "left_semi")
-      val okItems = cur.groupBy(itemCol).count()
-        .filter(col("count") >= minItemCount).select(itemCol)
-      cur = cur.join(okItems, Seq(itemCol), "left_semi")
+    def keep(cur: DataFrame, key: String, minCount: Int): DataFrame =
+      cur.filter(col(key).isNotNull)
+        .withColumn("__kc_n", count(lit(1)).over(Window.partitionBy(col(key))))
+        .filter(col("__kc_n") >= minCount)
+        .drop("__kc_n")
+    (1 to iterations).foldLeft(df) { (cur, _) =>
+      keep(keep(cur, userCol, minUserCount), itemCol, minItemCount)
     }
-    cur
   }
 
+  /** Rows one boundary lookup of [[timeSplit]] may return: each of its two
+    * ranks falls in one ts group and has one tiebreak key. */
+  private val MaxBoundaryRows = 2
+
   /** W2: global ordered fractional split (ref `src/data/movielens.py:162-202`):
-    * sort by time, first `trainFrac` → train, next `valFrac` → val, rest test.
+    * sort by (ts, tiebreak), first `trainFrac` → train, next `valFrac` →
+    * val, rest test — row for row the [[timeSplitRank]] labels, where row
+    * `rn` is train iff `rn <= n·trainFrac` and val iff
+    * `rn <= n·(trainFrac + valFrac)`.
     *
-    * Exact form WITHOUT ranking the corpus (the r16 rewrite): a global
-    * row_number only ever feeds two boundary predicates (80%/90%), so the
-    * boundary can be found on a (ts → count) HISTOGRAM instead of the
-    * fact table. The plan:
+    * This function RUNS SPARK ACTIONS WHEN IT IS CALLED, before it returns:
     *
-    *   1. histogram: `groupBy(ts).count()` — map-combined, shuffles
-    *      DISTINCT timestamps (narrow 2-field rows), never the facts;
-    *   2. exact cumulative counts over the histogram in ts order via
-    *      [[globalCumSum]] (the parallel two-phase prefix-sum device);
-    *   3. the (at most two) BOUNDARY ts groups — those whose cumulative
-    *      range straddles `n·trainFrac` or `n·(trainFrac+valFrac)` — get
-    *      their rows ranked by `tiebreakCol` WITHIN the group (a per-ts
-    *      window over only those rows) and labeled by exact global rank
-    *      `cum_prev + intra_rank`, reproducing the rank form bit-for-bit;
-    *   4. every other row is labeled by a pure range predicate on ts
-    *      against two broadcast scalars (last fully-train ts, last
-    *      fully-val ts) — no shuffle of the fact table AT ALL.
+    *   1. `n = df.count()`; the two cut ranks `r = floor(n·frac)` follow
+    *      on the driver, in the rank form's double arithmetic;
+    *   2. for each cut rank inside `(0, n)`, one limit-gated collect off a
+    *      (ts → count) histogram with exact cumulative counts
+    *      ([[globalCumSum]]) returns the ts group that holds it — at most
+    *      two rows;
+    *   3. for a rank that falls inside its group rather than on its last
+    *      row, one more limit-gated collect ranks only those groups' rows
+    *      by the tiebreak (a per-ts window) and returns the tiebreak key at
+    *      that rank — at most two rows, one query for both ranks.
     *
-    * vs the previous [[timeSplitRank]] body (kept for the differential
-    * spec): that form range-exchanges and window-sorts every fact row —
-    * c7's dominant sf10 stage at 55.9 s; this form shuffles only the
-    * histogram. When ts cardinality ~ rows (unique timestamps) the
-    * histogram is rows-sized but still narrow and aggregation-only, and
-    * the facts still never move. Null ts groups sort first (Spark asc
-    * null ordering, matching the rank form) and are force-routed through
-    * the exact boundary path so their labels stay rank-exact.
+    * The returned frame is then a single projection over `df`: a row is
+    * train iff `(ts, tiebreak) <= (g1, k1)` and val iff it is `<= (g2, k2)`
+    * in ascending nulls-first order, with the cut keys as literals. The fact
+    * rows are never shuffled, joined or windowed; only the histogram and
+    * the (at most two) boundary ts groups are.
     *
     * `tiebreakCol` must make (ts, tiebreak) a total order for boundary
     * labels to be well-defined — the same contract as the rank form. The
@@ -83,46 +87,66 @@ object Relational {
   def timeSplit(df: DataFrame, tsCol: String, tiebreakCol: String,
                 trainFrac: Double = 0.8, valFrac: Double = 0.1): DataFrame = {
     val ts = col(tsCol)
-    val hist = df.groupBy(ts.as("__g_ts")).agg(count(lit(1)).as("__g_c"))
-    val cum0 = globalCumSum(hist, Seq(col("__g_ts")), "__g_c", "__g_cum")
-    val tot = cum0.agg(sum(col("__g_c")).as("__g_n"))
-    val cum = cum0.crossJoin(broadcast(tot))
-      .withColumn("__g_k1", col("__g_n") * trainFrac)
-      .withColumn("__g_k2", col("__g_n") * (trainFrac + valFrac))
-      .withColumn("__g_prev", col("__g_cum") - col("__g_c"))
-    // Boundary groups: cumulative range (prev, cum] straddles a threshold
-    // strictly (cum == k exactly ⇒ the group is fully on one side). Null
-    // ts is always routed here so its rows get exact rank labels.
-    val boundary = cum.filter(
-        (col("__g_prev") < col("__g_k1") && col("__g_cum") > col("__g_k1")) ||
-        (col("__g_prev") < col("__g_k2") && col("__g_cum") > col("__g_k2")) ||
-        col("__g_ts").isNull)
-      .select(col("__g_ts"), col("__g_prev"), col("__g_k1"), col("__g_k2"))
-    // Range-predicate scalars for everything else: the last ts whose group
-    // is entirely ≤ each threshold. max() skips nulls — harmless, null
-    // groups never take this path.
-    val marks = cum.agg(
-      max(when(col("__g_cum") <= col("__g_k1"), col("__g_ts"))).as("__g_t1"),
-      max(when(col("__g_cum") <= col("__g_k2"), col("__g_ts"))).as("__g_t2"))
-    val wb = Window.partitionBy(ts).orderBy(col(tiebreakCol))
-    val outCols = df.columns.map(col) :+ col("split")
-    val bRows = df.join(broadcast(boundary), ts <=> col("__g_ts"))
-      .withColumn("__g_rn",
-        row_number().over(wb).cast("long") + col("__g_prev"))
-      .withColumn("split",
-        when(col("__g_rn") <= col("__g_k1"), "train")
-          .when(col("__g_rn") <= col("__g_k2"), "val")
-          .otherwise("test"))
-      .select(outCols: _*)
-    val nRows = df.join(broadcast(boundary.select(col("__g_ts"))),
-        ts <=> col("__g_ts"), "left_anti")
-      .crossJoin(broadcast(marks))
-      .withColumn("split",
-        when(ts <= col("__g_t1"), "train")
-          .when(ts <= col("__g_t2"), "val")
-          .otherwise("test"))
-      .select(outCols: _*)
-    bRows.unionByName(nRows)
+    val tb = col(tiebreakCol)
+    def literal(v: Any, c: String): Column =
+      lit(v).cast(df.select(col(c)).schema.head.dataType)
+    val n = df.count()
+    // `rn <= n * frac` ⟺ `rn <= floor(n * frac)`; NaN sorts above every
+    // rank in Spark's double order
+    def cutRank(x: Double): Long =
+      if (x.isNaN) n else math.max(0L, math.min(n, math.floor(x).toLong))
+    val r1 = cutRank(n * trainFrac)
+    val r2 = cutRank(n * (trainFrac + valFrac))
+    val inside = Seq(r1, r2).distinct.filter(r => r > 0 && r < n)
+    // (ts, cum - count, cum) of the group holding each inside rank
+    val groups: Map[Long, (Any, Long, Long)] =
+      if (inside.isEmpty) Map.empty
+      else {
+        val hist = df.groupBy(ts.as("__g_ts")).agg(count(lit(1)).as("__g_c"))
+        val rows = globalCumSum(hist, Seq(col("__g_ts")), "__g_c", "__g_cum")
+          .withColumn("__g_prev", col("__g_cum") - col("__g_c"))
+          .filter(inside.map(r =>
+            col("__g_prev") < r && col("__g_cum") >= r).reduce(_ || _))
+          .select(col("__g_ts"), col("__g_prev"), col("__g_cum"))
+          .limit(MaxBoundaryRows + 1).collect()
+        require(rows.length <= MaxBoundaryRows,
+          s"timeSplit: ${rows.length} boundary ts groups for two ranks")
+        val found = rows.map(g => (g.get(0), g.getLong(1), g.getLong(2)))
+        inside.map(r => r -> found.find { case (_, prev, cum) =>
+          prev < r && r <= cum }.get).toMap
+      }
+    // tiebreak key at each rank that falls strictly inside its group
+    val inner = inside.filter(r => r < groups(r)._3)
+    val keys: Map[Long, Any] =
+      if (inner.isEmpty) Map.empty
+      else {
+        def inGroup(r: Long) = ts <=> literal(groups(r)._1, tsCol)
+        val rows = df.filter(inner.map(inGroup).reduce(_ || _))
+          .withColumn("__g_rn",
+            row_number().over(Window.partitionBy(ts).orderBy(tb)))
+          .select(coalesce(inner.map(r => when(inGroup(r) &&
+              col("__g_rn") === r - groups(r)._2, lit(r))): _*).as("__g_r"),
+            tb.as("__g_tb"))
+          .filter(col("__g_r").isNotNull)
+          .limit(MaxBoundaryRows + 1).collect()
+        require(rows.length <= MaxBoundaryRows,
+          s"timeSplit: ${rows.length} boundary keys for two ranks")
+        rows.map(k => k.getLong(0) -> k.get(1)).toMap
+      }
+    // x < y and x <= y in ascending nulls-first order
+    def lt(x: Column, y: Column) = coalesce(x < y, x.isNull && y.isNotNull)
+    def le(x: Column, y: Column) = (x <=> y) || lt(x, y)
+    // (ts, tiebreak) <= the key at rank r
+    def upTo(r: Long): Column =
+      if (r <= 0) lit(false)
+      else if (r >= n) lit(true)
+      else {
+        val g = literal(groups(r)._1, tsCol)
+        keys.get(r).fold(le(ts, g))(k =>
+          lt(ts, g) || (ts <=> g && le(tb, literal(k, tiebreakCol))))
+      }
+    df.withColumn("split",
+      when(upTo(r1), "train").when(upTo(r2), "val").otherwise("test"))
   }
 
   /** The pre-r16 [[timeSplit]] body: exact split via a full-corpus

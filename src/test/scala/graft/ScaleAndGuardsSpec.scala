@@ -225,4 +225,57 @@ class ScaleAndGuardsSpec extends AnyFunSuite {
     assert(Explain.unboundedCollects(ops).isEmpty,
       s"ops/ carries unbounded collects: ${Explain.unboundedCollects(ops)}")
   }
+
+  test("audit: unbounded-collect checker — a limit(N + 1) sentinel passes " +
+    "only when a length is checked against N") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sentinel")
+      .toFile
+    def write(name: String, body: String*): Unit =
+      java.nio.file.Files.write(new java.io.File(dir, name).toPath,
+        body.mkString("\n").getBytes("UTF-8"))
+    try {
+      // POSITIVE controls: the sentinel row is fetched but never checked
+      // (silent truncation at N + 1, though a limit( is in view), and a
+      // check against some other name than the sentinel's N.
+      write("Unchecked.scala",
+        "object Unchecked {",
+        "  def f(df: org.apache.spark.sql.DataFrame, cap: Int) =",
+        "    df.limit(cap + 1).collect()",
+        "}")
+      write("WrongCap.scala",
+        "object WrongCap {",
+        "  def f(df: org.apache.spark.sql.DataFrame, cap: Int, m: Int) = {",
+        "    val rows = df",
+        "      .limit(cap + 1)",
+        "      .collect()",
+        "    require(rows.length <= m, \"m\")",
+        "    rows",
+        "  }",
+        "}")
+      // NEGATIVE controls: the require after a multi-line chain, and a
+      // capped helper whose caller branches on the over-budget row.
+      write("Checked.scala",
+        "object Checked {",
+        "  val MaxRows = 2",
+        "  def f(df: org.apache.spark.sql.DataFrame) = {",
+        "    val rows = df.filter(\"x > 0\")",
+        "      .limit(MaxRows + 1).collect()",
+        "    require(rows.length <= MaxRows, \"over\")",
+        "    rows",
+        "  }",
+        "  def g(df: org.apache.spark.sql.DataFrame, rowCap: Int) =",
+        "    (df.limit(rowCap + 1).collect(), rowCap)",
+        "  def h(df: org.apache.spark.sql.DataFrame) = {",
+        "    val (got, rowCap) = g(df, 10)",
+        "    if (got.length > rowCap) None else Some(got)",
+        "  }",
+        "}")
+      val flagged = Explain.unboundedCollects(dir)
+      assert(flagged == Seq("Unchecked.scala:3", "WrongCap.scala:5"),
+        s"sentinel controls failed: $flagged")
+    } finally {
+      Option(dir.listFiles()).foreach(_.foreach(_.delete()))
+      dir.delete()
+    }
+  }
 }
