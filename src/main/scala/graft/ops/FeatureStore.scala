@@ -1,8 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.DataType
 
 /** Feature-store semantics (SURVEY §2.1 S8/S9, §2.3 J8, §2.5 W7):
   * Feast-style feature views re-expressed as Spark relational contracts.
@@ -33,19 +39,147 @@ object FeatureStore {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** How a bucketed store is laid out: each row sits in partition
+    * `__bucket = pmod(xxhash64(keyCols…), numBuckets)` ([[bucketOf]]).
+    * The bucketed writers (`StreamingJobs.upsertBucketedBatch` and the
+    * two dedup stores) record it at the store root and refuse a batch
+    * that asks for another layout; [[onlineLookup]] reads it to prune a
+    * lookup to the requested keys' buckets. */
+  final case class BucketLayout(numBuckets: Int, keyCols: Seq[String])
+
+  /** The layout record under the store root: the bucket count on the
+    * first line, one key column per line after it. The `_` prefix keeps
+    * Spark's file listing from taking it for data. */
+  private val LayoutFile = "_bucket_layout"
+
+  /** The bucket column every bucketed writer adds. */
+  private[graft] def bucketOf(keys: Seq[Column], numBuckets: Int): Column =
+    pmod(xxhash64(keys: _*), lit(numBuckets)).cast("int")
+
+  private[graft] def readLayout(spark: SparkSession,
+                                root: String): Option[BucketLayout] = {
+    val p = new Path(root, LayoutFile)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .getLines().toList finally in.close()
+      Some(BucketLayout(lines.head.trim.toInt, lines.tail))
+    }
+  }
+
+  /** Write the record beside the store's data: staged, then renamed, so
+    * a reader never sees half a record. */
+  private[graft] def writeLayout(spark: SparkSession, root: String,
+                                 layout: BucketLayout): Unit = {
+    val p = new Path(root, LayoutFile)
+    val tmp = new Path(root, LayoutFile + ".tmp")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(tmp, true)
+    try out.write(((layout.numBuckets.toString +: layout.keyCols)
+      .mkString("", "\n", "\n")).getBytes("UTF-8"))
+    finally out.close()
+    require(fs.rename(tmp, p), s"writeLayout: rename $tmp -> $p failed")
+  }
+
+  /** Most request keys [[onlineLookup]] takes: the keys become literals
+    * in the scan's filter, so a request is a request, not a batch join. */
+  private[graft] val MaxLookupKeys: Int = 1 << 16
+
   /** S8: online point lookup — latest feature row per requested entity,
     * subject to TTL freshness vs the injected `now`
     * (ref `simple_feature_store.py:17-50`; TTLs `feature_definitions.py:48`).
-    * Request keys are typically tiny → broadcast semi-join, then latest-wins.
-    */
+    *
+    * The request keys are collected to the driver (at most
+    * [[MaxLookupKeys]]; no job when they are a local relation) and
+    * become a literal filter on the key columns, typed to those columns
+    * when the request's type up-casts to them, so Parquet can push it
+    * down. A key with a null part matches nothing, as under equality.
+    * When `features` reads a bucketed store directly — one file
+    * relation whose root holds a [[BucketLayout]] record for
+    * `view.entityCols`, with the key and `__bucket` columns unchanged —
+    * the lookup also filters `__bucket` to the requested keys' buckets,
+    * computed on the driver, and the scan reads only those partitions.
+    * Nothing is cached between calls: every lookup reads the store as
+    * the caller's frame lists it. Any other frame is read unpruned,
+    * with the same result. */
   def onlineLookup(features: DataFrame, view: FeatureView,
                    requestKeys: DataFrame, now: Column,
                    tiebreakCol: String): DataFrame = {
+    val keyCols = view.entityCols
+    val req = requestKeys.select(keyCols.map(col): _*)
+    val rows = req.limit(MaxLookupKeys + 1).collect()
+    require(rows.length <= MaxLookupKeys,
+      s"onlineLookup: more than $MaxLookupKeys request keys")
+    val keyTypes = features.select(keyCols.map(col): _*).schema
+      .map(_.dataType)
+    val lits = rows.filterNot(_.anyNull).distinct.toSeq.map(r =>
+      keyCols.indices.map(i =>
+        keyLiteral(r.get(i), req.schema(i).dataType, keyTypes(i))))
+    val typed = lits.forall(_.map(_.dataType) == keyTypes)
     val fresh = features.filter(
       col(view.tsCol) <= now &&
       col(view.tsCol) >= now - expr(s"INTERVAL ${view.ttlSeconds} SECONDS"))
-    val scoped = fresh.join(broadcast(requestKeys), view.entityCols, "left_semi")
-    latestPerKey(scoped, view.entityCols, view.tsCol, tiebreakCol)
+    val buckets = storeLayout(features, keyCols).filter(_ => typed)
+      .map(l => col("__bucket").isin(lits.map(ls => java.lang.Math.floorMod(
+        new XxHash64(ls).eval().asInstanceOf[Long], l.numBuckets.toLong)
+        .toInt).distinct.sorted: _*))
+    val scoped = fresh.filter(buckets.foldLeft(keyFilter(keyCols, lits))(_ && _))
+    latestPerKey(scoped, keyCols, view.tsCol, tiebreakCol)
+  }
+
+  /** A request value as a literal: of the key column's type when the
+    * request's type up-casts to it (the cast the semi-join's equality
+    * would apply), else of the request's own type, which the analyzer
+    * then coerces against the column as equality does. */
+  private def keyLiteral(v: Any, reqType: DataType,
+                         keyType: DataType): Literal = {
+    val l = Literal.create(v, reqType)
+    if (reqType == keyType || !Cast.canUpCast(reqType, keyType)) l
+    else Literal(Cast(l, keyType, Some(SQLConf.get.sessionLocalTimeZone))
+      .eval(), keyType)
+  }
+
+  /** Rows whose key equals one of `lits`' tuples. Each column gets an
+    * IN list (what Parquet pushes down); a composite key also matches
+    * the tuple as a struct, so a row pairing the parts of two different
+    * keys is dropped. */
+  private def keyFilter(keyCols: Seq[String], lits: Seq[Seq[Literal]]): Column =
+    if (lits.isEmpty) lit(false)
+    else {
+      val perCol = keyCols.indices.map(i => col(keyCols(i))
+        .isin(lits.map(_(i)).distinct.map(ColumnBridge.column): _*))
+        .reduce(_ && _)
+      if (keyCols.length == 1) perCol
+      else perCol && struct(keyCols.map(col): _*).isin(lits.map(ls =>
+        struct(ls.zip(keyCols).map { case (l, c) =>
+          ColumnBridge.column(l).as(c) }: _*)): _*)
+    }
+
+  /** The bucket layout of the store `features` reads directly: its one
+    * leaf is a file relation with a single root holding a layout record
+    * for `keyCols`, and the key and `__bucket` columns are the
+    * relation's own (not recomputed above it). */
+  private def storeLayout(features: DataFrame,
+                          keyCols: Seq[String]): Option[BucketLayout] = {
+    val plan = features.queryExecution.analyzed
+    plan.collectLeaves() match {
+      case Seq(lr: LogicalRelation) => lr.relation match {
+        case h: HadoopFsRelation if h.location.rootPaths.size == 1 =>
+          val own = lr.output.map(_.exprId).toSet
+          val resolve = SQLConf.get.resolver
+          val kept = (keyCols :+ "__bucket").forall(c =>
+            plan.output.find(a => resolve(a.name, c))
+              .exists(a => own(a.exprId)))
+          if (!kept) None
+          else readLayout(features.sparkSession,
+              h.location.rootPaths.head.toString)
+            .filter(_.keyCols == keyCols)
+        case _ => None
+      }
+      case _ => None
+    }
   }
 
   /** S9/J8: historical (point-in-time) feature retrieval — the as-of join.

@@ -1,9 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.Vectors._
 import graft.functions.expr.NearestKernel
 
@@ -1335,14 +1338,14 @@ object Similarity {
     df.withColumn(outCol, codes)
   }
 
-  /** The IVF probe, the one place it is built: per query, its `nprobe`
-    * nearest centroids by l2 distance (request-sized cross against the
-    * nlist-bounded table; ties broken by centroid_id so the probed set is
-    * DETERMINISTIC — [[servedTopKFromStore]] relies on recomputing it
-    * bit-identically, the multi-arm shortlists on arm np being the
-    * `__rn` ≤ np prefix). `q` is the already-prepped (query_id, __qv)
-    * frame. Returns q's columns plus the centroid's, `__d` and the probe
-    * rank `__rn` (1 = nearest); callers select what they need. */
+  /** The IVF probe, the one place it is built as a plan: per query, its
+    * `nprobe` nearest centroids by l2 distance (request-sized cross
+    * against the nlist-bounded table; ties broken by centroid_id so the
+    * probed set is DETERMINISTIC — the multi-arm shortlists on arm np
+    * being the `__rn` ≤ np prefix; [[probeOnDriver]] is its driver
+    * twin). `q` is the already-prepped (query_id, __qv) frame. Returns
+    * q's columns plus the centroid's, `__d` and the probe rank `__rn`
+    * (1 = nearest); callers select what they need. */
   private[graft] def probeNearestCentroids(q: DataFrame,
                                            centroids: DataFrame,
                                            nprobe: Int): DataFrame = {
@@ -1352,6 +1355,36 @@ object Similarity {
       .withColumn("__d", l2Distance(col("__qv"), col("centroid_vec")))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= nprobe)
+  }
+
+  /** [[probeNearestCentroids]] on the driver, over collected prepped
+    * query rows (query_id, __qv) and a collected centroid table: the
+    * same `l2Distance` (Double accumulation in array order, then sqrt;
+    * null when either vector or a lane is null or the lengths differ),
+    * the same order per query_id — distance ascending with nulls first
+    * and NaN last, then centroid_id — and the same `nprobe` cut. Returns
+    * (query_id, centroid_id, __qv) per probe, __qv as collected. */
+  private[graft] def probeOnDriver(queries: Seq[Row], ids: Array[Long],
+                                   vecs: Array[Array[Double]],
+                                   nprobe: Int): Seq[Row] = {
+    def dist(qv: Seq[Any], cv: Array[Double]): Option[Double] =
+      if (qv == null || qv.length != cv.length || qv.contains(null)) None
+      else {
+        val q = toDoubles(qv)
+        var acc = 0.0
+        var j = 0
+        while (j < q.length) { val d = q(j) - cv(j); acc += d * d; j += 1 }
+        Some(math.sqrt(acc))
+      }
+    queries.groupBy(_.get(0)).values.toSeq.flatMap { rows =>
+      rows.flatMap(r => ids.indices.map(c =>
+          (dist(r.getSeq[Any](1), vecs(c)), ids(c), r)))
+        .sortBy { case (d, id, _) => (d.isDefined, d.getOrElse(0.0), id) }(
+          Ordering.Tuple3(Ordering.Boolean, Ordering.Double.TotalOrdering,
+            Ordering.Long))
+        .take(nprobe)
+        .map { case (_, id, r) => Row(r.get(0), id, r.get(1)) }
+    }
   }
 
   /** R4, STORED-ASSIGNMENT serving form (r17 — the probe half of the
@@ -1369,7 +1402,7 @@ object Similarity {
     * shuffle and the eval barrier here block the join key from
     * reaching the parquet scan, so every partition is LISTED and READ —
     * use [[servedTopKFromStore]] to get file-listing pruning (it
-    * threads the probed centroid set below the catalog's dedup).
+    * passes the probed centroid set below the catalog's dedup).
     * `centroids` must be the SAME frozen table the store was assigned
     * with (the frozen-tokenizer contract); `metric` must match the
     * vector space the assignment ran in ("l2" raw / "cosine"
@@ -1384,35 +1417,44 @@ object Similarity {
     require(nprobe >= 1, s"clusterPrunedTopKStored: nprobe=$nprobe")
     require(metric == "cosine" || metric == "l2",
       s"clusterPrunedTopKStored: metric=$metric")
-    val it = evalBarrier(metricPrep(catalog, itemId, vecCol, "item_id",
-      "__iv", metric, Seq(col("centroid_id"))))
     val qProbe = probeNearestCentroids(
       metricPrep(queries, queryId, vecCol, "query_id", "__qv", metric),
       centroids, nprobe)
       .select(col("query_id"), col("centroid_id"), col("__qv"))
+    storedTopK(catalog, qProbe, itemId, vecCol, k, metric, excludeSelf)
+  }
+
+  /** The scoring tail of the stored-assignment forms: the catalog's
+    * rows join the (query_id, centroid_id, __qv) probe rows on
+    * centroid_id, exact scores, top `k` per query. */
+  private def storedTopK(catalog: DataFrame, qProbe: DataFrame,
+                         itemId: String, vecCol: String, k: Int,
+                         metric: String, excludeSelf: Boolean): DataFrame = {
+    val it = evalBarrier(metricPrep(catalog, itemId, vecCol, "item_id",
+      "__iv", metric, Seq(col("centroid_id"))))
     val cand = it.join(broadcast(qProbe), Seq("centroid_id"))
     topKPerQuery(dropSelf(cand, excludeSelf)
       .withColumn("score", exactScore(metric)), k)
   }
 
-  /** [[clusterPrunedTopKStored]] with REAL partition pruning over the
-    * base+delta store (the serving composition the r17 store layout was
-    * built for): the probed centroid set is computed FIRST (one
-    * request-sized job — queries × nlist cross, then a driver collect
-    * bounded by min(nlist, requests·nprobe), the collectCentroids
-    * class), the catalog is assembled with that set as an IN-filter on
-    * each half BELOW the union/dedup
+  /** Most query rows [[servedTopKFromStore]] collects to probe on the
+    * driver: it serves requests, not batches. */
+  private[graft] val MaxServedQueries: Int = 1 << 16
+
+  /** [[clusterPrunedTopKStored]] answered from the base+delta store, sized
+    * to a request: the prepped query rows (at most [[MaxServedQueries]];
+    * no job when they are a local relation) and the centroid table
+    * ([[collectCentroids]]) are collected, and [[probeOnDriver]] probes
+    * on the driver — the same probe rows the Spark probe computes. The
+    * catalog reads only the probed cells
     * ([[graft.streaming.StreamingJobs.ivfServingCatalog]]'s
-    * `probedCentroids`), so the filter lands in the scans'
-    * partitionFilters and unprobed partitions are never LISTED — the
-    * only ANN plan here that skips I/O, not just compute. The probe
-    * inside [[clusterPrunedTopKStored]] recomputes the same set
-    * (deterministic tie-break), and the catalog's cell-straddle guard
-    * (base rows of ids with ANY delta row are dropped under pruning —
-    * ADVICE r18) makes the pruned view exactly the unpruned catalog
-    * filtered to probed cells, so results are identical to serving
-    * against the full catalog: every probed (query, cell) pair sees
-    * exactly the rows the unpruned join would feed it. Returns the
+    * `probedCentroids`: directories resolved with Hadoop FS calls, schema
+    * from one footer, centroid_id partition filter on each scan) with
+    * the delta-wins dedup and the cell-straddle anti-join, so it equals
+    * the unpruned catalog filtered to the probed cells; its rows join a
+    * broadcast local relation of the (query_id, centroid_id, __qv) probe
+    * rows on centroid_id. Results are identical to
+    * [[clusterPrunedTopKStored]] over the full catalog. Returns the
     * [[bruteForceTopK]] output contract. */
   def servedTopKFromStore(queries: DataFrame, basePath: String,
                           deltaPath: String, queryId: String,
@@ -1420,25 +1462,24 @@ object Similarity {
                           centroids: DataFrame, nprobe: Int,
                           metric: String = "l2",
                           excludeSelf: Boolean = false): DataFrame = {
-    // centroid_id is IntegerType or LongType depending on the producer
-    // (a parquet partition dir reads back as int) — collect numerically.
-    // BOUNDED collect, RUNTIME-ENFORCED (r20, VERDICT r19 #9): distinct
-    // probed ids ≤ min(nlist, requests·nprobe) rows — the centroid-table
-    // bound, asserted via a limit-gated collect instead of review.
-    val probedRows = probeNearestCentroids(
-      metricPrep(queries, queryId, vecCol, "query_id", "__qv", metric),
-      centroids, nprobe)
-      .select(col("centroid_id").cast("long")).distinct()
-      .limit(MaxCollectedCentroids + 1).collect()
-    require(probedRows.length <= MaxCollectedCentroids,
-      s"servedTopKFromStore: probed centroid set exceeds the " +
-        s"centroid-table bound ($MaxCollectedCentroids) — nlist/nprobe " +
-        "are config-sized by contract")
-    val probed = probedRows.map(_.getLong(0)).toSeq.sorted
-    val catalog = graft.streaming.StreamingJobs.ivfServingCatalog(
-      queries.sparkSession, basePath, deltaPath, itemId, Some(probed))
-    clusterPrunedTopKStored(queries, catalog, queryId, itemId, vecCol, k,
-      centroids, nprobe, metric, excludeSelf)
+    require(nprobe >= 1, s"servedTopKFromStore: nprobe=$nprobe")
+    require(metric == "cosine" || metric == "l2",
+      s"servedTopKFromStore: metric=$metric")
+    val spark = queries.sparkSession
+    val q = metricPrep(queries, queryId, vecCol, "query_id", "__qv", metric)
+    val qRows = q.limit(MaxServedQueries + 1).collect()
+    require(qRows.length <= MaxServedQueries,
+      s"servedTopKFromStore: more than $MaxServedQueries query rows")
+    val (ids, vecs) = collectCentroids(centroids)
+    val probes = probeOnDriver(qRows.toSeq, ids, vecs, nprobe)
+    val qProbe = spark.createDataFrame(probes.asJava,
+      StructType(Seq(q.schema("query_id"),
+        StructField("centroid_id", LongType, nullable = false),
+        q.schema("__qv"))))
+    val catalog = graft.streaming.StreamingJobs.ivfServingCatalog(spark,
+      basePath, deltaPath, itemId,
+      Some(probes.map(_.getLong(1)).distinct.sorted))
+    storedTopK(catalog, qProbe, itemId, vecCol, k, metric, excludeSelf)
   }
 
   // =====================================================================

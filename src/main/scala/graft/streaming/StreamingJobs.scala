@@ -205,14 +205,38 @@ object StreamingJobs {
       .start()
 
   /** The per-micro-batch bucketed merge (exposed for batch upsert jobs and
-    * tests). The `touched` collect is bounded by numBuckets — a driver-side
-    * action on purpose, it IS the partition-pruning decision. */
+    * tests). The store records its layout (`numBuckets`, `keyCols`) at
+    * its root on the first merge; a batch with another layout fails
+    * before it touches the store. */
   def upsertBucketedBatch(batch: DataFrame, keyCols: Seq[String],
                           tsCol: String, tiebreakCol: String,
-                          storePath: String, numBuckets: Int): Unit = {
-    val spark = batch.sparkSession
-    val incoming = batch.withColumn("__bucket",
-      pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets)).cast("int"))
+                          storePath: String, numBuckets: Int): Unit =
+    mergeTouchedBuckets(batch.withColumn("__bucket",
+        FeatureStore.bucketOf(keyCols.map(col), numBuckets)),
+      storePath, FeatureStore.BucketLayout(numBuckets, keyCols)) { all =>
+      FeatureStore.latestPerKey(all, keyCols, tsCol, tiebreakCol)
+    }
+
+  /** The touched-buckets merge shared by every bucketed store: read the
+    * store's rows in the buckets `incoming` touches, `merge` them with
+    * `incoming`, and swap the result in ([[stageAndSwapBuckets]]).
+    * `layout` must match the one recorded at the store root: under a
+    * second bucket count the merge would read only the new buckets and
+    * leave a key's old row in its old bucket, so the key would have two
+    * rows. The record is written after the first swap (and after any
+    * swap that finds it missing, so a crash between the two heals on
+    * the next batch). A store written before the record existed is
+    * recorded with the layout of its next batch. The `touched` collect
+    * is bounded by numBuckets — a driver-side action on purpose, it IS
+    * the partition-pruning decision. */
+  private def mergeTouchedBuckets(incoming: DataFrame, storePath: String,
+                                  layout: FeatureStore.BucketLayout)(
+                                  merge: DataFrame => DataFrame): Unit = {
+    val spark = incoming.sparkSession
+    val recorded = FeatureStore.readLayout(spark, storePath)
+    recorded.foreach(r => require(r == layout,
+      s"bucketed store $storePath is laid out as $r; a batch with $layout " +
+        "would give a key rows in two buckets"))
     val touched = incoming.select(col("__bucket")).distinct()
       .collect().map(_.getInt(0))
     // A zero-row batch (the no-data batch Spark runs after a watermark
@@ -230,10 +254,10 @@ object StreamingJobs {
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         incoming.schema)
-    val merged = FeatureStore.latestPerKey(
-      existing.unionByName(incoming, allowMissingColumns = true),
-      keyCols, tsCol, tiebreakCol)
-    stageAndSwapBuckets(spark, merged, storePath)
+    stageAndSwapBuckets(spark,
+      merge(existing.unionByName(incoming, allowMissingColumns = true)),
+      storePath)
+    if (recorded.isEmpty) FeatureStore.writeLayout(spark, storePath, layout)
   }
 
   /** Stage the merged touched buckets, then dynamic-overwrite ONLY those
@@ -309,37 +333,32 @@ object StreamingJobs {
       .start()
 
   /** The per-micro-batch first-wins merge (exposed for batch backfills and
-    * tests). The `touched` collect is bounded by numBuckets — it IS the
-    * partition-pruning decision, same contract as [[upsertBucketedBatch]]. */
+    * tests); same touched-buckets merge and layout check as
+    * [[upsertBucketedBatch]], keyed on the content hash `__key`. */
   def incrementalDedupBatch(batch: DataFrame, idCol: String, textCol: String,
                             storePath: String, batchId: Long,
                             numBuckets: Int): Unit = {
-    val spark = batch.sparkSession
     val incoming = batch
       .withColumn("__key", md5(graft.ops.Dedup.normalizeText(col(textCol))))
       .withColumn("__seen_batch", lit(batchId))
-      .withColumn("__bucket",
-        pmod(xxhash64(col("__key")), lit(numBuckets)).cast("int"))
-    val touched = incoming.select(col("__bucket")).distinct()
-      .collect().map(_.getInt(0))
-    if (touched.isEmpty) return
-    val existing =
-      if (pathExists(spark, storePath))
-        spark.read.parquet(storePath)
-          .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        incoming.schema)
     // First writer wins: min (seen_batch, id) per content key. A replayed
     // batch carries its ORIGINAL batchId from the checkpoint, so the
     // minimum — and the store — is unchanged on retry.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__key"))
-      .orderBy(col("__seen_batch").asc, col(idCol).asc)
-    val merged = existing.unionByName(incoming, allowMissingColumns = true)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    stageAndSwapBuckets(spark, merged, storePath)
+    firstWinsMerge(incoming, storePath, numBuckets,
+      Seq(col("__seen_batch").asc, col(idCol).asc))
+  }
+
+  /** The first-writer-wins merge of both dedup stores: one row per
+    * `__key`, the first by `order`. */
+  private def firstWinsMerge(incoming: DataFrame, storePath: String,
+                             numBuckets: Int, order: Seq[Column]): Unit = {
+    val w = Window.partitionBy(col("__key")).orderBy(order: _*)
+    mergeTouchedBuckets(incoming.withColumn("__bucket",
+        FeatureStore.bucketOf(Seq(col("__key")), numBuckets)),
+      storePath, FeatureStore.BucketLayout(numBuckets, Seq("__key"))) { all =>
+      all.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+    }
   }
 
   /** The deduped corpus accumulated by [[incrementalDedupStream]], with
@@ -365,31 +384,12 @@ object StreamingJobs {
                                    textCol: String, storePath: String,
                                    batchId: Long, numBuckets: Int,
                                    size: Int = 16): Unit = {
-    val spark = batch.sparkSession
     val incoming = graft.ops.TextAnalysis
       .segmentPassages(batch, idCol, textCol, size)
       .withColumn("__key", md5(col("__passage")))
       .withColumn("__seen_batch", lit(batchId))
-      .withColumn("__bucket",
-        pmod(xxhash64(col("__key")), lit(numBuckets)).cast("int"))
-    val touched = incoming.select(col("__bucket")).distinct()
-      .collect().map(_.getInt(0))
-    if (touched.isEmpty) return
-    val existing =
-      if (pathExists(spark, storePath))
-        spark.read.parquet(storePath)
-          .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        incoming.schema)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__key"))
-      .orderBy(col("__seen_batch").asc, col(idCol).asc,
-        col("passage_idx").asc)
-    val merged = existing.unionByName(incoming, allowMissingColumns = true)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    stageAndSwapBuckets(spark, merged, storePath)
+    firstWinsMerge(incoming, storePath, numBuckets,
+      Seq(col("__seen_batch").asc, col(idCol).asc, col("passage_idx").asc))
   }
 
   /** Streaming form of [[incrementalPassageDedupBatch]] — the same
@@ -535,19 +535,20 @@ object StreamingJobs {
     * epoch's copy sits at base.old — readers fall back to it, seeing
     * the consistent pre-rebuild view).
     *
-    * `probedCentroids`: optional centroid_id IN-filter applied to EACH
-    * half BELOW the union/dedup — because the store is partitioned by
-    * centroid_id, the filter lands in the scan's partitionFilters and
-    * prunes at the FILE LISTING. This is the only way a reader gets
-    * partition pruning out of the store: the catalog's dedup shuffles
-    * (and downstream eval barriers block pushdown), so a centroid_id
-    * predicate applied ABOVE the catalog never reaches the scan
-    * ([[graft.ops.Similarity.servedTopKFromStore]] is the serving
-    * composition that threads the probed set down here). Pruned reads
-    * are EXACTLY equivalent to filtering the unpruned catalog to the
-    * probed cells (ADVICE r18 closed the cell-straddle divergence): an
-    * id whose fresh delta row lives in an UNPROBED cell but whose stale
-    * base row's cell IS probed must not serve the base row — the
+    * `probedCentroids`: read only those cells. Each half lists its
+    * root once with Hadoop FS calls, keeps the probed `centroid_id=`
+    * directories, and reads them (schema from one of their footers, so
+    * no Spark job infers it) under a centroid_id IN-filter that lands
+    * in the scan's partitionFilters; a half holding none of the probed
+    * cells is left out. The pruning happens BELOW the union/dedup,
+    * which is the only place it can: the catalog's dedup shuffles, so
+    * a centroid_id predicate applied ABOVE the catalog never reaches
+    * the scan ([[graft.ops.Similarity.servedTopKFromStore]] is the
+    * serving composition that passes the probed set here). Pruned
+    * reads are EXACTLY equivalent to filtering the unpruned catalog to
+    * the probed cells (ADVICE r18 closed the cell-straddle divergence):
+    * an id whose fresh delta row lives in an UNPROBED cell but whose
+    * stale base row's cell IS probed must not serve the base row — the
     * unpruned catalog's delta-wins dedup would have dropped it — so
     * when pruning is active and a delta exists, the base half is
     * anti-joined against the delta's id column read UNPRUNED
@@ -563,35 +564,83 @@ object StreamingJobs {
       if (pathExists(spark, basePath)) Some(basePath)
       else if (pathExists(spark, basePath + ".old")) Some(basePath + ".old")
       else None
-    val prune: DataFrame => DataFrame = df => probedCentroids match {
-      case Some(ids) => df.filter(col("centroid_id").isin(ids: _*))
-      case None => df
-    }
     val deltaExists = pathExists(spark, deltaPath)
-    val halves =
-      base.toSeq.map { bp =>
-        val b = prune(spark.read.parquet(bp))
-        // cell-straddle guard (see the probedCentroids scaladoc): under
-        // pruning, a base row whose id has ANY delta row is dropped
-        // here — the global delta-wins winner may live in an unprobed
-        // cell, and serving the stale base row would diverge from the
-        // unpruned catalog
-        val bSafe =
-          if (probedCentroids.isDefined && deltaExists)
-            b.join(spark.read.parquet(deltaPath).select(col(idCol)),
-              Seq(idCol), "left_anti")
-          else b
-        bSafe.withColumn("__epoch", lit(0))
-      } ++
-      Seq(deltaPath).filter(_ => deltaExists).map(dp =>
-        prune(spark.read.parquet(dp)).withColumn("__epoch", lit(1)))
-    require(halves.nonEmpty,
+    require(base.nonEmpty || deltaExists,
       s"ivfServingCatalog: neither $basePath(.old) nor $deltaPath exists")
+    val roots = base.toSeq.map(_ -> 0) ++
+      Seq(deltaPath -> 1).filter(_ => deltaExists)
+    val halves = probedCentroids match {
+      case None => roots.map { case (root, epoch) =>
+        spark.read.parquet(root).withColumn("__epoch", lit(epoch)) }
+      case Some(ids) =>
+        // the delta's ids, read whole, for the cell-straddle guard
+        lazy val deltaIds = Option.when(deltaExists)(
+            ivfCells(spark, deltaPath, None)).flatten
+          .map { case (_, schema) =>
+            spark.read.schema(schema).parquet(deltaPath).select(col(idCol)) }
+        roots.flatMap { case (root, epoch) =>
+          ivfCells(spark, root, Some(ids.toSet)).map { case (cells, schema) =>
+            val h = spark.read.schema(schema).option("basePath", root)
+              .parquet(cells.map(_.toString): _*)
+              .filter(col("centroid_id").isin(ids: _*))
+            // cell-straddle guard (see the probedCentroids scaladoc):
+            // under pruning, a base row whose id has ANY delta row is
+            // dropped here — the global delta-wins winner may live in an
+            // unprobed cell, and serving the stale base row would
+            // diverge from the unpruned catalog
+            (if (epoch == 1) h
+            else deltaIds.fold(h)(h.join(_, Seq(idCol), "left_anti")))
+              .withColumn("__epoch", lit(epoch))
+          }
+        }
+    }
+    // no probed cell in either half: the empty catalog, with its schema
+    val all = halves.reduceOption(_ unionByName _).getOrElse(
+      spark.read.parquet(roots.head._1).withColumn("__epoch", lit(0))
+        .filter(lit(false)))
     val w = Window.partitionBy(col(idCol)).orderBy(col("__epoch").desc)
-    halves.reduce(_ unionByName _)
-      .withColumn("__rn", row_number().over(w))
+    all.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__epoch", "__rn")
+  }
+
+  /** A store half's `centroid_id=` cell directories — only the `probed`
+    * ones, when given — and the schema of the first data file among
+    * them; None when they hold no data file. Hadoop FS calls only. */
+  private def ivfCells(spark: SparkSession, root: String,
+                       probed: Option[Set[Long]])
+      : Option[(Seq[org.apache.hadoop.fs.Path], StructType)] = {
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cells = fs.listStatus(rootPath).toSeq
+      .filter(st => st.isDirectory && (st.getPath.getName.split("=", 2) match {
+        case Array("centroid_id", v) =>
+          probed.forall(ids => v.toLongOption.exists(ids))
+        case _ => false
+      }))
+      .map(_.getPath)
+    cells.iterator.flatMap(c => fs.listStatus(c).iterator)
+      .find(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(f => cells -> footerSchema(spark, f.getPath))
+  }
+
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver — the schema `spark.read.parquet` infers from the same file
+    * with a Spark job: the schema Spark wrote into the footer, else the
+    * converted Parquet schema. */
+  private def footerSchema(spark: SparkSession,
+                           file: org.apache.hadoop.fs.Path): StructType = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+        spark.sparkContext.hadoopConfiguration))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData.get(
+        "org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(
+          org.apache.spark.sql.internal.SQLConf.get).convert(meta.getSchema))
   }
 
   /** The rebuild lock guarding the append/rebuild race: while present,

@@ -72,6 +72,144 @@ class SourcesSpec extends AnyFunSuite {
     assert(got === Map(1L -> "new")) // user 2 expired (250-10 > 100)
   }
 
+  // --- online lookup over a bucketed store (`upsertBucketedBatch`) ---
+  private val lookupView =
+    FeatureStore.FeatureView("f", Seq("user_id"), "ts", ttlSeconds = 500L)
+  private val lookupNow = timestamp_seconds(lit(2000L))
+
+  /** The lookup's contract as the broadcast semi-join states it. */
+  private def semiJoinLookup(features: org.apache.spark.sql.DataFrame,
+                             keys: org.apache.spark.sql.DataFrame,
+                             view: FeatureStore.FeatureView) =
+    FeatureStore.latestPerKey(features
+      .filter(col(view.tsCol) <= lookupNow &&
+        col(view.tsCol) >= lookupNow - expr(
+          s"INTERVAL ${view.ttlSeconds} SECONDS"))
+      .join(keys, view.entityCols, "left_semi"),
+      view.entityCols, view.tsCol, "v")
+
+  /** Keys 1..40, each with an older row and a latest row whose ts sits on
+    * a TTL edge of [1500, 2000] at now = 2000: just expired, both
+    * inclusive edges, inside, and in the future. */
+  private def lookupRows = (1L to 40L).flatMap { k =>
+    val ts = Seq(1499L, 1500L, 1700L, 2000L, 2001L)((k % 5).toInt)
+    Seq((k, ts - 100, -k), (k, ts, k))
+  }.toDF("user_id", "ts_s", "v")
+    .withColumn("ts", timestamp_seconds(col("ts_s"))).drop("ts_s")
+
+  private def lookupStore(numBuckets: Int): String = {
+    val store = Files.createTempDirectory("graft-lookup").toString + "/store"
+    graft.streaming.StreamingJobs.upsertBucketedBatch(lookupRows,
+      Seq("user_id"), "ts", "v", store, numBuckets)
+    store
+  }
+
+  private def fileScans(df: org.apache.spark.sql.DataFrame) =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+
+  private def bucketPruned(df: org.apache.spark.sql.DataFrame): Boolean =
+    fileScans(df).exists(_.partitionFilters.exists(
+      _.references.exists(_.name == "__bucket")))
+
+  test("bucketed online lookup equals the semi-join lookup in every " +
+    "bucket: duplicate, null and absent keys, TTL edges, composite keys, " +
+    "and frames without a bucket layout record") {
+    val store = lookupStore(8)
+    val keys = ((1L to 40L).map(Option(_)) ++
+      Seq(Some(3L), Some(3L), None, Some(999L), Some(1000L)))
+      .toDF("user_id")
+    assert(spark.read.parquet(store).select("__bucket").distinct().count()
+      === 8L, "the keys must cover every bucket")
+    def check(features: org.apache.spark.sql.DataFrame,
+              pruned: Boolean): Unit = {
+      val got = FeatureStore.onlineLookup(features, lookupView, keys,
+        lookupNow, "v")
+      val rows = got.collect()
+      assert(rows.toSet ===
+        semiJoinLookup(features, keys, lookupView).collect().toSet)
+      assert(rows.length === rows.map(_.getAs[Long]("user_id")).distinct
+        .length, "one row per key")
+      assert(bucketPruned(got) === pruned)
+    }
+    // the store, read directly: pruned to the requested keys' buckets
+    check(spark.read.parquet(store), pruned = true)
+    assert(FeatureStore.onlineLookup(spark.read.parquet(store), lookupView,
+        keys, lookupNow, "v").count() === 24L, // 3 of every 5 keys fresh
+      "the TTL edges are inclusive, the future and the expired excluded")
+    // the same rows with no layout record, and the raw rows (several per
+    // key, no store at all): read unpruned, same contract
+    val copy = store + "_copy"
+    spark.read.parquet(store).write.partitionBy("__bucket").parquet(copy)
+    check(spark.read.parquet(copy), pruned = false)
+    check(lookupRows, pruned = false)
+    // a store frame whose key column is recomputed is not pruned either
+    check(spark.read.parquet(store).withColumn("user_id",
+      col("user_id") + 0L), pruned = false)
+    // composite key: a request pairing the parts of two keys matches
+    // neither
+    val pairs = Seq((1L, 1L, 1800L, 1L), (1L, 2L, 1800L, 2L),
+        (2L, 1L, 1800L, 3L), (2L, 2L, 1800L, 4L))
+      .toDF("a", "b", "ts_s", "v")
+      .withColumn("ts", timestamp_seconds(col("ts_s")))
+    val pairView = FeatureStore.FeatureView("p", Seq("a", "b"), "ts", 500L)
+    val pairKeys = Seq((Option(1L), Option(2L)), (Some(2L), Some(1L)),
+      (None, Some(1L)), (Some(3L), Some(3L))).toDF("a", "b")
+    val got = FeatureStore.onlineLookup(pairs, pairView, pairKeys,
+      lookupNow, "v").select("v").as[Long].collect().toSet
+    assert(got === Set(2L, 3L))
+    assert(got === semiJoinLookup(pairs, pairKeys, pairView)
+      .select("v").as[Long].collect().toSet)
+  }
+
+  test("bucketed online lookup reads one bucket: the scan carries a " +
+    "__bucket partition filter and reads 1 of 8 bucket files, also for " +
+    "a request key column typed narrower than the store's") {
+    val store = lookupStore(8)
+    assert(new java.io.File(store).listFiles()
+      .count(_.getName.startsWith("__bucket=")) === 8)
+    Seq(Seq(7L).toDF("user_id"), Seq(7).toDF("user_id")).foreach { keys =>
+      val got = FeatureStore.onlineLookup(spark.read.parquet(store),
+        lookupView, keys, lookupNow, "v")
+      assert(got.collect().map(r => (r.getAs[Long]("user_id"),
+        r.getAs[Long]("v"))).toSeq === Seq((7L, 7L)))
+      val scans = fileScans(got)
+      assert(scans.length === 1)
+      assert(scans.head.partitionFilters.exists(
+        _.references.exists(_.name == "__bucket")),
+        "no __bucket partition filter on the lookup scan")
+      assert(scans.head.metrics("numFiles").value === 1L,
+        "the lookup read more than its key's bucket")
+    }
+  }
+
+  test("online lookup after an upsert sees the new row (nothing is " +
+    "cached per store version)") {
+    val store = lookupStore(4)
+    def lookup(k: Long): Seq[Long] = FeatureStore.onlineLookup(
+        spark.read.parquet(store), lookupView, Seq(k).toDF("user_id"),
+        lookupNow, "v").select("v").as[Long].collect().toSeq
+    assert(lookup(2L) === Seq(2L)) // its latest row is at ts 1700
+    graft.streaming.StreamingJobs.upsertBucketedBatch(
+      Seq((2L, 1900L, 200L)).toDF("user_id", "ts_s", "v")
+        .withColumn("ts", timestamp_seconds(col("ts_s"))).drop("ts_s"),
+      Seq("user_id"), "ts", "v", store, 4)
+    assert(lookup(2L) === Seq(200L))
+  }
+
+  test("one-key online lookup over a bucketed store runs at most 2 Spark " +
+    "jobs") {
+    val store = lookupStore(8)
+    val features = spark.read.parquet(store)
+    val keys = Seq(7L).toDF("user_id")
+    val (rows, jobs) = TestSpark.jobsOf(FeatureStore.onlineLookup(features,
+      lookupView, keys, lookupNow, "v").collect())
+    assert(rows.length === 1)
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
   test("as-of join: latest feature at-or-before entity time within TTL (simple_feature_store.py:52-71)") {
     val entity = Seq((1L, 300L), (1L, 150L), (2L, 300L))
       .toDF("user_id", "ets")

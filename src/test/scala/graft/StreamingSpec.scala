@@ -397,6 +397,59 @@ class StreamingSpec extends AnyFunSuite {
     assert(!new java.io.File(base + "/store3").exists)
   }
 
+  test("bucketed stores refuse a second bucket count: the layout recorded " +
+    "at the store root must match every later batch") {
+    val base = Files.createTempDirectory("graft-layout").toString
+    def feat(k: Long, ts: Long) = Seq((k, ts, k.toDouble))
+      .toDF("k", "ts_s", "v")
+      .withColumn("ts", timestamp_seconds(col("ts_s"))).select("k", "ts", "v")
+    val store = base + "/store"
+    StreamingJobs.upsertBucketedBatch(
+      (1L to 40L).map(k => (k, 100L, k.toDouble)).toDF("k", "ts_s", "v")
+        .withColumn("ts", timestamp_seconds(col("ts_s")))
+        .select("k", "ts", "v"), Seq("k"), "ts", "v", store, 64)
+    assert(ops.FeatureStore.readLayout(spark, store) ===
+      Some(ops.FeatureStore.BucketLayout(64, Seq("k"))))
+    def rows() = spark.read.parquet(store).select("k", "__bucket")
+      .as[(Long, Int)].collect().toSet
+    val before = rows()
+    // a key whose bucket differs under 32: merged into its new bucket, its
+    // old row would stay behind in the old one
+    val k = (1L to 40L).find(k => before.exists(r => r._1 == k && r._2 >= 32))
+      .get
+    val e = intercept[IllegalArgumentException] {
+      StreamingJobs.upsertBucketedBatch(feat(k, 200L), Seq("k"), "ts", "v",
+        store, 32)
+    }
+    assert(e.getMessage.contains("laid out as"))
+    assert(rows() === before, "the refused batch changed the store")
+    intercept[IllegalArgumentException] { // another key column set
+      StreamingJobs.upsertBucketedBatch(feat(k, 200L).withColumnRenamed(
+        "v", "w").withColumn("v", lit(0.0)), Seq("k", "w"), "ts", "v",
+        store, 64)
+    }
+    StreamingJobs.upsertBucketedBatch(feat(k, 200L), Seq("k"), "ts", "v",
+      store, 64)
+    assert(rows().count(_._1 == k) === 1)
+    // the dedup stores record and check their layout the same way
+    val docs = Seq((1L, "alpha beta"), (2L, "gamma delta")).toDF("doc_id",
+      "text")
+    StreamingJobs.incrementalDedupBatch(docs, "doc_id", "text",
+      base + "/dedup", 0L, 8)
+    intercept[IllegalArgumentException] {
+      StreamingJobs.incrementalDedupBatch(docs, "doc_id", "text",
+        base + "/dedup", 1L, 4)
+    }
+    StreamingJobs.incrementalPassageDedupBatch(docs, "doc_id", "text",
+      base + "/passages", 0L, 8)
+    intercept[IllegalArgumentException] {
+      StreamingJobs.incrementalPassageDedupBatch(docs, "doc_id", "text",
+        base + "/passages", 1L, 16)
+    }
+    assert(ops.FeatureStore.readLayout(spark, base + "/passages") ===
+      Some(ops.FeatureStore.BucketLayout(8, Seq("__key"))))
+  }
+
   test("watermarked windowed features stream into the bucketed store " +
       "across the no-data batch a watermark advance schedules") {
     val base = Files.createTempDirectory("graft-window-upsert").toString
@@ -1125,6 +1178,64 @@ class StreamingSpec extends AnyFunSuite {
       "the straddling id's STALE base row was served from the probed cell")
     assert(prunedRows.map(_.getLong(2)).toSet === Set(2L, 4L),
       s"expected exactly the live cell-0 candidates, got $prunedRows")
+    // every scan reads with the schema inference would give the store
+    val readSchemas = pruned.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.schema
+    }
+    assert(readSchemas.length === 2) // the probed base cells, delta ids
+    readSchemas.foreach(rs => assert(rs === spark.read.parquet(bs).schema))
+    // multi-query local-relation requests, with probed cells missing from
+    // one half: cell 2 lives only in the delta, cell 0 only in the base
+    Seq((5L, Seq(20f, 0.5f), 2L), (6L, Seq(19f, 0f), 2L))
+      .toDF("vec_id", "embedding", "centroid_id")
+      .write.mode("append").partitionBy("centroid_id").parquet(delta)
+    val cents3 = Seq((0L, Seq(0f, 0f)), (1L, Seq(10f, 10f)),
+      (2L, Seq(20f, 0f))).toDF("centroid_id", "centroid_vec")
+    val multi = Seq((100L, Seq(0f, 0f)), (101L, Seq(10f, 9f)),
+      (102L, Seq(19f, 1f)), (103L, Seq(0.2f, 0.1f)))
+      .toDF("u", "embedding")
+    for (np <- 1 to 3) {
+      val fullM = ops.Similarity.clusterPrunedTopKStored(multi,
+        StreamingJobs.ivfServingCatalog(spark, bs, delta, "vec_id"),
+        "u", "vec_id", "embedding", 3, cents3, nprobe = np)
+        .orderBy("query_id", "rank").collect().toSeq
+      val prunedM = ops.Similarity.servedTopKFromStore(multi, bs, delta,
+        "u", "vec_id", "embedding", 3, cents3, nprobe = np)
+        .orderBy("query_id", "rank").collect().toSeq
+      assert(prunedM === fullM, s"nprobe=$np")
+      assert(prunedM.map(_.getLong(0)).distinct.length === 4)
+    }
+    // a probed cell held by neither half: an empty answer, no failure
+    val far = cents3.union(Seq((3L, Seq(100f, 100f))).toDF("centroid_id",
+      "centroid_vec"))
+    assert(ops.Similarity.servedTopKFromStore(
+      Seq((104L, Seq(99f, 99f))).toDF("u", "embedding"), bs, delta, "u",
+      "vec_id", "embedding", 3, far, nprobe = 1).count() === 0L)
+  }
+
+  test("one-key served top-k from a rebuilt IVF store runs at most 5 " +
+    "Spark jobs and equals serving over the full catalog") {
+    val base = Files.createTempDirectory("graft-ivfjobs").toString
+    val bs = s"$base/store"; val delta = s"$base/delta"
+    val rnd = new scala.util.Random(11)
+    val vecs = (0 until 400).map(i =>
+      (i.toLong, Seq.fill(8)(rnd.nextGaussian())))
+    val df = vecs.toDF("vec_id", "vec")
+    val seeds = ops.Similarity.pickCentroids(df, "vec_id", "vec", 16)
+      .localCheckpoint()
+    StreamingJobs.ivfIndexedAppendBatch(df, seeds, "vec", delta)
+    val cents = StreamingJobs.rebuildIvfStore(spark, bs, delta, "vec_id",
+      "vec", 16)
+    val q = Seq((1L, vecs(7)._2)).toDF("u", "vec")
+    val (top, jobs) = TestSpark.jobsOf(ops.Similarity.servedTopKFromStore(
+      q, bs, delta, "u", "vec_id", "vec", 10, cents, 4, "cosine").collect())
+    assert(top.length === 10)
+    assert(jobs <= 5, s"$jobs jobs")
+    val full = ops.Similarity.clusterPrunedTopKStored(q,
+      StreamingJobs.ivfServingCatalog(spark, bs, delta, "vec_id"),
+      "u", "vec_id", "vec", 10, cents, 4, "cosine").collect()
+    assert(top.sortBy(_.getInt(1)).toSeq === full.sortBy(_.getInt(1)).toSeq)
   }
 
   test("rebuildIvfStore lock lifecycle (ADVICE r18): a bootstrap rebuild " +

@@ -14,6 +14,38 @@ class VectorSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  test("driver probe equals probeNearestCentroids: exact distance ties, " +
+    "zero, float, null, NaN and short vectors, a repeated query id, " +
+    "nprobe >= nlist") {
+    val cents = Seq((0L, Seq(1f, 0f)), (1L, Seq(0f, 1f)), (2L, Seq(-1f, 0f)),
+      (3L, Seq(0f, -1f)), (4L, Seq(0f, 0f)), (5L, Seq(0.5f, 0.5f)))
+      .toDF("centroid_id", "centroid_vec")
+    def f(xs: Float*): Option[Seq[Option[Float]]] = Option(xs.map(Option(_)))
+    val q = Seq(
+      (1L, f(0f, 0f)),       // 4 at 0, then 5, then four exact ties
+      (2L, f(0.5f, 0.5f)),   // 5 at 0, then 0, 1 and 4 tied
+      (3L, f(0.1f, 0.3f)),
+      (4L, Option(Seq(Some(1f), None))), // null lane: null distances
+      (5L, None),                        // null vector
+      (6L, f(1f)),                       // short vector: null distances
+      (7L, f(Float.NaN, 0f)),            // NaN distances sort last
+      (1L, f(10f, 10f)))     // repeated id: probed together with row 1
+      .toDF("query_id", "__qv")
+    val sorted = cents.orderBy("centroid_id").collect()
+    val ids = sorted.map(_.getLong(0))
+    val vecs = sorted.map(_.getSeq[Float](1).map(_.toDouble).toArray)
+    for (np <- Seq(1, 2, 3, 6, 9)) {
+      val inSpark = Similarity.probeNearestCentroids(q, cents, np)
+        .select("query_id", "centroid_id", "__rn").collect()
+        .groupBy(_.getLong(0)).map { case (k, rs) =>
+          k -> rs.sortBy(_.getInt(2)).map(_.getLong(1)).toSeq }
+      val driver = Similarity.probeOnDriver(q.collect().toSeq, ids, vecs, np)
+        .groupBy(_.getLong(0)).map { case (k, rs) =>
+          k -> rs.map(_.getLong(1)) }
+      assert(driver === inSpark, s"nprobe=$np")
+    }
+  }
+
   test("int8 quantize round-trip: golden lanes, error <= scale/2") {
     val df = Seq(Tuple1(Seq(1.0f, -0.5f, 0.25f, 0.0f))).toDF("v")
     val row = df.select(
