@@ -101,9 +101,7 @@ object QueriesEval {
     val pred = users.join(seen, Seq("u"), "left")
       .crossJoin(broadcast(top100Arr))
       .select(col("u"),
-        when(col("__excl").isNull, col("__arr"))
-          .otherwise(filter(col("__arr"),
-            x => !array_contains(col("__excl"), x))).as("pred"))
+        RankingMetrics.excludeSeen(col("__arr"), col("__excl")).as("pred"))
     val gt = test.groupBy(col("u"))
       .agg(sort_array(collect_set(col("it"))).as("gt"))
     // Explicit-width tail exchange (r20, guide §2.5): this frame is
@@ -923,9 +921,7 @@ object QueriesEval {
       val pred = users.join(seen, Seq("u"), "left")
         .crossJoin(broadcast(top100Arr))
         .select(col("u"),
-          when(col("__excl").isNull, col("__arr"))
-            .otherwise(filter(col("__arr"),
-              x => !array_contains(col("__excl"), x))).as("pred"))
+          RankingMetrics.excludeSeen(col("__arr"), col("__excl")).as("pred"))
       val gt = test.groupBy(col("u"))
         .agg(sort_array(collect_set(col("it"))).as("gt"))
       // third barrier: the per-user (pred, gt) frame is read twice (metric

@@ -233,7 +233,7 @@ object SparkEntry {
     // Oracle-safe arithmetic: moments are rounded at the source's true decimal
     // precision (acctbal has 2 decimals → sum exact at 2, sum-of-squares at 4),
     // then mean/std derive identically on both engines — bit-identical output,
-    // no final rounding. The general stddev_samp form lives in Relational.zscore.
+    // no final rounding.
     ("p_zscore", (s, d) => {
       val cust = T(s, d, "customer")
       val stats = cust.agg(
@@ -1927,11 +1927,6 @@ object SparkEntry {
   // Driver contract surface
   // ====================================================================
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * The SURVEY §7.2 end-to-end slice: scan → join → train/test split →
-    * popularity scoring → per-user top-k with seen-item exclusion →
-    * Recall/Precision/NDCG/HitRate/MRR/AP/Coverage — one Catalyst-planned
-    * job returning the metric row. */
   /** Flagship: the composed §3.3 recommend-request flow (lookup →
     * retrieve → exclude → re-rank → top-n → metadata) — the reference's
     * `POST /recommend` pipeline as one query. */

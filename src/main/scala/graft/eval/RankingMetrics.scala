@@ -97,11 +97,12 @@ object RankingMetrics {
   }
 
   /** E8: exclusion — drop already-seen items from the ranked list before
-    * metrics, preserving order (ref `metrics.py:281-283`). Prediction lists
-    * are de-duplicated ranked lists, so `array_except`'s distinct semantics
-    * are safe here. */
+    * metrics, preserving order (ref `metrics.py:281-283`). One per-row
+    * filter over the list, no fan-out; a null `excluded` set keeps the
+    * full list. */
   def excludeSeen(pred: Column, excluded: Column): Column =
-    array_except(pred, excluded)
+    when(excluded.isNull, pred)
+      .otherwise(filter(pred, x => !array_contains(excluded, x)))
 
   /** Attach per-user metric columns at each K (ref `metrics.py:291-299`):
     * recall_at_K, precision_at_K, ndcg_at_K, hit_rate_at_K + mrr, map. */

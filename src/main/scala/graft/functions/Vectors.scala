@@ -31,26 +31,15 @@ object Vectors {
   /** R1/F14: L2 norm. */
   def vecNorm(a: Column): Column = sqrt(vecNormSq(a))
 
-  /** R1: L2-normalize — zero vectors pass through unchanged (faiss leaves
-    * zero vectors as-is rather than dividing by zero).
-    *
-    * PERF CAVEAT: as a pure Column expression the norm lives inside the
-    * `transform` lambda and is re-evaluated per element — O(d²) per vector.
-    * Fine for ad-hoc use; bulk pipelines should use [[normalized]], which
-    * materializes the norm in its own column first (O(d)). */
-  def vecNormalize(a: Column): Column = {
-    val n = vecNorm(a)
-    when(n === 0.0, transform(a, x => x.cast("double")))
-      .otherwise(transform(a, x => x.cast("double") / n))
-  }
-
   /** Divide every element by a precomputed scalar column. */
   def vecScale(a: Column, s: Column): Column =
     transform(a, x => x.cast("double") / s)
 
-  /** DataFrame-level L2 normalization: the norm is computed once per row in
-    * its own (non-collapsible) projection, then referenced by the scaling
-    * lambda — O(d) per vector, the form bulk similarity pipelines use. */
+  /** R1: DataFrame-level L2 normalization — zero vectors pass through
+    * unchanged (faiss leaves zero vectors as-is rather than dividing by
+    * zero). The norm is computed once per row in its own
+    * (non-collapsible) projection, then referenced by the scaling lambda —
+    * O(d) per vector, not the O(d²) of a norm inside the lambda. */
   def normalized(df: DataFrame, vecCol: String, outCol: String): DataFrame =
     df.withColumn("__vecnorm", vecNormNative(col(vecCol)))
       .withColumn(outCol,
@@ -79,10 +68,6 @@ object Vectors {
     val denom = vecNorm(a) * vecNorm(b)
     when(denom === 0.0, lit(0.0)).otherwise(vecDot(a, b) / denom)
   }
-
-  /** Cosine distance (the diversity metric's pairwise distance,
-    * `metrics.py:430-434`). */
-  def cosineDistance(a: Column, b: Column): Column = lit(1.0) - cosine(a, b)
 
   /** Euclidean (L2) distance. */
   def l2Distance(a: Column, b: Column): Column =

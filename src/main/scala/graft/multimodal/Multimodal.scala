@@ -105,17 +105,6 @@ object Multimodal {
         org.apache.spark.sql.graftshim.ColumnBridge.expression(mediaCol),
         avgBits))
 
-  /** Multimodal near-dup over the LENGTH-CHANGING edit class
-    * ([[mediaNearDups]]'s pinned limitation — appends/inserts shift
-    * every fixed byte segment and scramble the block hash): content-
-    * defined chunking turns the payload into a SET of chunk hashes
-    * whose Jaccard is robust to local edits of any length, and the
-    * MinHash-LSH banding machinery ([[graft.ops.Dedup]] — signature,
-    * bands, hot-bucket cap, exact-Jaccard verify) runs over those sets
-    * unchanged. Output: (id1, id2, jaccard ≥ threshold), id1 < id2.
-    * Pick 2^avgBits well below typical payload size (enough chunks for
-    * Jaccard resolution: at ~20 chunks one edited chunk costs ~0.05
-    * Jaccard). Same hot-bucket/scale posture as minHashNearDups. */
   /** The (id, __set, __hs) chunk-set frame both the CDC candidate lane
     * and the chunk-Jaccard verify consume — exposed so a composition
     * that needs both (m_dedup_resolve) runs the GearChunkHashes kernel
@@ -128,6 +117,17 @@ object Multimodal {
         h => pmod(h, lit(graft.ops.Dedup.MinHashPrime))))
       .select(col(idCol), col("__set"), col("__hs"))
 
+  /** Multimodal near-dup over the LENGTH-CHANGING edit class
+    * ([[mediaNearDups]]'s pinned limitation — appends/inserts shift
+    * every fixed byte segment and scramble the block hash): content-
+    * defined chunking turns the payload into a SET of chunk hashes
+    * whose Jaccard is robust to local edits of any length, and the
+    * MinHash-LSH banding machinery ([[graft.ops.Dedup]] — signature,
+    * bands, hot-bucket cap, exact-Jaccard verify) runs over those sets
+    * unchanged. Output: (id1, id2, jaccard ≥ threshold), id1 < id2.
+    * Pick 2^avgBits well below typical payload size (enough chunks for
+    * Jaccard resolution: at ~20 chunks one edited chunk costs ~0.05
+    * Jaccard). Same hot-bucket/scale posture as minHashNearDups. */
   def mediaNearDupsCdc(df: DataFrame, idCol: String, mediaCol: String,
                        avgBits: Int = 6, numHashes: Int = 64,
                        bands: Int = 16, threshold: Double = 0.7,

@@ -100,10 +100,9 @@ object Dedup {
         x => concat_ws("", (0 until n).map(j => x.getField(s"$j")): _*))))
   }
 
-  /** MinHash signature of a shingle set: `numHashes` permutations
-    * `h_j(x) = (a_j * xxhash64(x) + b_j) mod p`, signature_j = min over
-    * shingles. Deterministic per seed. Per-row expression — the signature
-    * never leaves the row until banding. */
+  /** The modulus `p` of the MinHash permutations
+    * `h_j(x) = (a_j * xxhash64(x) + b_j) mod p`; signature_j = min over a
+    * row's shingles, deterministic per seed ([[minHashSignatureNative]]). */
   private[graft] val MinHashPrime = 2147483647L // 2^31 - 1 (Mersenne)
 
   /** Affine permutation parameters for [[minHashSignatureNative]] /
@@ -125,10 +124,6 @@ object Dedup {
     * re-inline the xxhash into every permutation expression. */
   def shingleHashes(shingles: Column): Column =
     transform(shingles, s => pmod(xxhash64(s), lit(MinHashPrime)))
-
-  def minHashSignature(shingles: Column, numHashes: Int,
-                       seed: Long = 42): Column =
-    minHashSignatureNative(shingleHashes(shingles), numHashes, seed)
 
   /** Native codegen'd signature: ONE pass over the hash array maintaining
     * all `numHashes` lane minimums in a local long[]
@@ -658,24 +653,6 @@ object Dedup {
         maxPostingSize),
       idCol, threshold, bucketCols)
 
-  /** Lossless prefix-filtered Jaccard join (Bayardo et al. 2007,
-    * "Scaling Up All Pairs Similarity Search"): order every document's
-    * distinct tokens by a global (df asc, token asc) canonical order and
-    * post only the first |A| − ⌈t·|A|⌉ + 1 — any pair with Jaccard ≥ t
-    * provably shares its lowest-ordered common token inside BOTH
-    * prefixes, so the equi-join on prefix postings generates a candidate
-    * superset of the answer; exact Jaccard is then verified on the full
-    * token arrays. This replaces the full posting join whose candidate
-    * volume is Σ_token C(df,2): corpus-hot tokens (df ∝ corpus) sit LAST
-    * in the canonical order and almost never enter a prefix, so the
-    * quadratic term vanishes without the lossy `maxPostingSize` cut
-    * (measured on the 100× corpus: distinct candidates 50.7 M → linear,
-    * output identical — the full-registry sf10 sweep found this).
-    *
-    * ⌈t·n⌉ is computed as ceil(t·n − 1e-9): double noise pushing t·n a
-    * hair ABOVE an exact integer would otherwise shorten the prefix and
-    * silently lose pairs (an undershoot merely admits extra candidates,
-    * which the verify stage discards). */
   /** Debug/test enforcement of the prefix-join family's id-uniqueness
     * contract: with `spark.graft.dedupIdGuard=true` (set in the test
     * suites), pays one extra count job to turn a duplicate id — which
@@ -750,6 +727,24 @@ object Dedup {
     (prefix, cand)
   }
 
+  /** Lossless prefix-filtered Jaccard join (Bayardo et al. 2007,
+    * "Scaling Up All Pairs Similarity Search"): order every document's
+    * distinct tokens by a global (df asc, token asc) canonical order and
+    * post only the first |A| − ⌈t·|A|⌉ + 1 — any pair with Jaccard ≥ t
+    * provably shares its lowest-ordered common token inside BOTH
+    * prefixes, so the equi-join on prefix postings generates a candidate
+    * superset of the answer; exact Jaccard is then verified on the full
+    * token arrays. This replaces the full posting join whose candidate
+    * volume is Σ_token C(df,2): corpus-hot tokens (df ∝ corpus) sit LAST
+    * in the canonical order and almost never enter a prefix, so the
+    * quadratic term vanishes without the lossy `maxPostingSize` cut
+    * (measured on the 100× corpus: distinct candidates 50.7 M → linear,
+    * output identical — the full-registry sf10 sweep found this).
+    *
+    * ⌈t·n⌉ is computed as ceil(t·n − 1e-9): double noise pushing t·n a
+    * hair ABOVE an exact integer would otherwise shorten the prefix and
+    * silently lose pairs (an undershoot merely admits extra candidates,
+    * which the verify stage discards). */
   private def jaccardViaPrefix(toks: DataFrame, idCol: String,
                                threshold: Double,
                                bucketCols: Seq[String]): DataFrame = {
@@ -1494,16 +1489,4 @@ object Dedup {
       .select(col("id1"), col("id2"), col("lev").cast("long").as("lev"),
         col("edit_sim"))
   }
-
-  /** Spark's threshold-bounded Levenshtein (returns −1 beyond the bound;
-    * banded DP with early termination). The `functions.levenshtein`
-    * 3-arg overload only takes a literal Int threshold, so the per-row
-    * bound goes through the expression constructor directly. Kept as the
-    * reference kernel for the Myers differential spec (the hot path uses
-    * [[graft.functions.expr.MyersLevenshtein]]). */
-  def boundedLevenshtein(a: Column, b: Column, t: Column): Column =
-    ColumnBridge.column(
-      org.apache.spark.sql.catalyst.expressions.Levenshtein(
-        ColumnBridge.expression(a), ColumnBridge.expression(b),
-        Some(ColumnBridge.expression(t))))
 }

@@ -118,9 +118,7 @@ object FeatureStore {
       keyCols.indices.map(i =>
         keyLiteral(r.get(i), req.schema(i).dataType, keyTypes(i))))
     val typed = lits.forall(_.map(_.dataType) == keyTypes)
-    val fresh = features.filter(
-      col(view.tsCol) <= now &&
-      col(view.tsCol) >= now - expr(s"INTERVAL ${view.ttlSeconds} SECONDS"))
+    val fresh = freshOnly(features, view.tsCol, now, view.ttlSeconds)
     val buckets = storeLayout(features, keyCols).filter(_ => typed)
       .map(l => col("__bucket").isin(lits.map(ls => java.lang.Math.floorMod(
         new XxHash64(ls).eval().asInstanceOf[Long], l.numBuckets.toLong)
@@ -288,31 +286,13 @@ object FeatureStore {
         featPayloadCols.map(c => col(s"f_$c")): _*)
   }
 
-  /** Skew-salted [[asOfJoin]]: a hot entity key (one user generating a
-    * large share of rows) serializes its whole TTL window through one
-    * reducer in the plain form. Salting widens the join key to
-    * (key…, __salt): each ENTITY row deterministically hashes to one of
-    * `salts` salts (derived from its key + timestamp, no nondeterministic
-    * ids), and every FEATURE row is replicated once per salt — so the hot
-    * key's entity rows spread across `salts` reducers while each still
-    * sees the full feature history it needs. Cost: features scan ×salts
-    * (features are the small side of a skewed as-of join); result is
-    * row-for-row equal to the unsalted form (asserted differentially in
-    * SourcesSpec). */
-  def saltedAsOf(entityDf: DataFrame, entityKeyCols: Seq[String],
-                 entityTsCol: String, features: DataFrame, view: FeatureView,
-                 featureTiebreak: String, salts: Int): DataFrame = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    val entityS = entityDf.withColumn("__salt",
-      pmod(xxhash64(entityKeyCols.map(col) :+ col(entityTsCol): _*),
-        lit(salts)).cast("int"))
-    val featS = features.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    val viewS = view.copy(entityCols = view.entityCols :+ "__salt")
-    asOfJoin(entityS, entityKeyCols :+ "__salt", entityTsCol, featS, viewS,
-      featureTiebreak)
-      .drop("__salt")
-  }
+  /** T8: TTL freshness filter on read of an online store — keeps the rows
+    * with `now − ttlSeconds ≤ ts ≤ now` (ref TTLs in
+    * `feature_definitions.py`; cache expiry `retrieval.py:643-657`). */
+  def freshOnly(store: DataFrame, tsCol: String, now: Column,
+                ttlSeconds: Long): DataFrame =
+    store.filter(col(tsCol) <= now &&
+      col(tsCol) >= now - expr(s"INTERVAL $ttlSeconds SECONDS"))
 
   /** T10: materialization — recompute a view's feature table over an event
     * range and emit the latest-per-key online snapshot

@@ -30,10 +30,6 @@ object Features {
   def expDecay(ageHours: Column, halfLifeHours: Double = 168.0): Column =
     exp(-ageHours / halfLifeHours)
 
-  /** F8: hours between two timestamps. */
-  def hoursBetween(later: Column, earlier: Column): Column =
-    (unix_timestamp(later) - unix_timestamp(earlier)) / 3600.0
-
   /** F21: list diversity ratio `|distinct| / max(|list|, 1)`
     * (`feature_engineering.py:311-315`). */
   def diversityRatio(arr: Column): Column =
@@ -130,11 +126,6 @@ object Features {
           w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .drop("__prev", "__new_session")
   }
-
-  /** F16-style quality blend (`feature_engineering.py:337-345`):
-    * weighted linear combination clipped to [0,1]. */
-  def qualityBlend(terms: Seq[(Column, Double)]): Column =
-    clip(terms.map { case (c, w) => c * w }.reduce(_ + _), 0.0, 1.0)
 
   /** Per-key exponentially weighted moving average of `valueCol` in event
     * order — the cumulative form of the reference's exp-decay idiom:

@@ -120,21 +120,4 @@ object Graph {
     }
     pr.select(col("id"), col("pr"))
   }
-
-  /** Measured dispatch between the two PageRank forms — the decision rule
-    * that used to live only in prose (VERDICT r14 "what's wrong" #3) made
-    * code: k ≤ 10 → the UNROLLED single-plan form (inside its domain it
-    * wins — the checkpointed form's per-round materialization cost 2.3×
-    * at sf10 k=3: 317 s vs 141 s, BENCH_SF10.md r13/r14 addenda); k > 10 →
-    * the CHECKPOINTED form (the only one that survives — the unrolled
-    * plan roughly doubles per step, while checkpointing is flat s/step to
-    * k=50 at sf1). The two forms are differentially spec-pinned equal on
-    * the overlap, so dispatch never changes values, only the execution
-    * strategy. */
-  def pageRankAuto(edges: DataFrame, srcCol: String, dstCol: String,
-                   iters: Int, damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, s"pageRankAuto: iters=$iters")
-    if (iters <= 10) pageRank(edges, srcCol, dstCol, iters, damping)
-    else pageRankCheckpointed(edges, srcCol, dstCol, iters, damping)
-  }
 }

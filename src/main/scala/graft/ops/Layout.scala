@@ -25,21 +25,6 @@ object Layout {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(tableName)
 
-  /** Write hive-style partitioned parquet: queries filtering on
-    * `partitionCols` scan only the matching directories (partition
-    * pruning — the scan's `PartitionFilters`, distinct from row-group
-    * `PushedFilters`). THE layout lever for a 100 TB corpus keyed by
-    * coarse dimensions (lang, source, date): a per-language job reads
-    * 1/N of the data without any index. Keep partition cardinality
-    * bounded (≲ 10⁴ directories) — high-cardinality keys belong in
-    * bucketing, not partitioning. */
-  def writePartitioned(df: DataFrame, path: String,
-                       partitionCols: Seq[String]): Unit =
-    df.write
-      .mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-
   /** Compact a fragmented parquet directory into ≈`targetRowsPerFile`
     * outputs — the small-files remedy for streaming / per-batch
     * incremental sinks, whose many tiny files degrade every later scan

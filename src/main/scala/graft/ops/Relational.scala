@@ -82,7 +82,7 @@ object Relational {
     * labels to be well-defined — the same contract as the rank form. The
     * boundary window puts one ts group on one task: fine unless a single
     * timestamp holds a cluster-breaking share of the corpus, in which
-    * case [[timeSplitApprox]] is the escape hatch.
+    * case [[timeSplitRank]] is the fallback.
     */
   def timeSplit(df: DataFrame, tsCol: String, tiebreakCol: String,
                 trainFrac: Double = 0.8, valFrac: Double = 0.1): DataFrame = {
@@ -166,37 +166,6 @@ object Relational {
           .when(col("__rn") <= col("__n") * (trainFrac + valFrac), "val")
           .otherwise("test"))
       .drop("__rn", "__n")
-  }
-
-  /** Scale-safe W2 variant: cutoffs from `approxQuantile` (two scans, no
-    * global sort). Boundary rows may land differently than the exact form —
-    * acceptable at 100 TB where a global row_number is not.
-    *
-    * `approxQuantile` is numeric-only, so timestamp/date columns are
-    * quantiled on their epoch value internally (cast both the quantile
-    * input and the comparison to the same double epoch) — the exact
-    * [[timeSplit]] and this variant therefore accept the same columns. */
-  def timeSplitApprox(df: DataFrame, tsCol: String,
-                      trainFrac: Double = 0.8, valFrac: Double = 0.1,
-                      relErr: Double = 1e-4): DataFrame = {
-    import org.apache.spark.sql.types.{DateType, TimestampType, TimestampNTZType}
-    val isTemporal = df.schema(tsCol).dataType match {
-      case TimestampType | TimestampNTZType | DateType => true
-      case _ => false
-    }
-    val numCol = "__ts_num"
-    val base =
-      if (isTemporal)
-        df.withColumn(numCol,
-          col(tsCol).cast(TimestampType).cast("double"))
-      else df.withColumn(numCol, col(tsCol).cast("double"))
-    val Array(c1, c2) = base.stat.approxQuantile(
-      numCol, Array(trainFrac, trainFrac + valFrac), relErr)
-    base.withColumn("split",
-      when(col(numCol) <= c1, "train")
-        .when(col(numCol) <= c2, "val")
-        .otherwise("test"))
-      .drop(numCol)
   }
 
   /** Exact global `row_number` WITHOUT the single-partition window.
@@ -343,25 +312,6 @@ object Relational {
     df.join(broadcast(encoder), Seq(keyCol), "left")
       .withColumn(idxCol, coalesce(col(idxCol), lit(unknownIndex)))
 
-  /** P10: z-score normalize — two-phase (one agg pass for mean/std, then a
-    * broadcast cross-join and arithmetic), ref `src/data/movielens.py:421-422`
-    * with the reference's 1e-8 epsilon. */
-  def zscore(df: DataFrame, cols: Seq[String], eps: Double = 1e-8): DataFrame = {
-    val aggs = cols.flatMap(c => Seq(
-      avg(col(c)).as(s"__mean_$c"), stddev_samp(col(c)).as(s"__std_$c")))
-    val stats = df.agg(aggs.head, aggs.tail: _*)
-    val joined = df.crossJoin(broadcast(stats))
-    cols.foldLeft(joined) { (d, c) =>
-      d.withColumn(s"${c}_z",
-        (col(c) - col(s"__mean_$c")) / (col(s"__std_$c") + eps))
-    }.drop(cols.flatMap(c => Seq(s"__mean_$c", s"__std_$c")): _*)
-  }
-
-  /** P9: min-max scaling with fixed bounds (ref `movielens.py:412-413`
-    * `age/56.0`, `synthetic.py:150-152`). */
-  def minMaxFixed(c: Column, min: Double, max: Double): Column =
-    (c - min) / (max - min)
-
   /** J6/F23: map-side dictionary lookup (OCCUPATION_MAP / AGE_MAP, ref
     * `src/data/movielens.py:47-59,123-124`) as a map-literal `element_at` —
     * no join, no shuffle. */
@@ -372,23 +322,6 @@ object Relational {
     coalesce(element_at(map(entries: _*), keyCol.cast("int")), lit(default))
   }
 
-  /** X1: per-user negative sampling — sample `n` items per user from the
-    * catalog excluding that user's positives (ref `src/data/movielens.py:488-512`).
-    *
-    * Two paths, dispatched on catalog size (one cheap `count` action):
-    *  - catalog <= `maxExactCatalog`: exact full-complement form — users ×
-    *    catalog (the reference also enumerates the full complement),
-    *    anti-joined against positives, then a seeded hash-ordered
-    *    `row_number <= n` per user: a uniform-ish pseudo-random sample,
-    *    fully deterministic per seed.
-    *  - larger catalogs: [[negativeSampleBucketed]] — NO cross join. The
-    *    enumeration of |users|x|catalog| pairs (even as a filtered
-    *    broadcast-nested-loop) is the one true cartesian at 100 TB, so the
-    *    bounded path replaces it with a hash-bucketed EQUI-join: items are
-    *    assigned to `k` deterministic buckets, each user probes `probes`
-    *    seeded buckets, giving an expected candidate pool of
-    *    `probes * |catalog| / k ~= oversample * n` per user before the
-    *    anti-join and window. */
   /** Deterministic per-group down-sampling (class cap) for training-data
     * mixes: keep at most `n` rows per group, chosen by a multiplicative
     * hash over a unique row id — unbiased w.r.t. storage order, identical
@@ -828,7 +761,7 @@ object Relational {
   /** Hashing-trick feature vectorizer (Weinberger et al. 2009): token →
     * dimension `pmod(murmur3(token), dim)` with a ±1 sign from a second
     * hash, summed per (row, slot). The dictionary-FREE encode: P11's
-    * [[idEncode]] needs a fitted vocabulary (a full corpus pass + a
+    * [[fitEncoder]] needs a fitted vocabulary (a full corpus pass + a
     * broadcast dict); this needs neither, which is what survives at
     * 100 TB with an unbounded vocab. Output is sparse (id, slot, value)
     * triples — the layout downstream training shards want; zero-sum
@@ -849,6 +782,23 @@ object Relational {
       .filter(col("value") =!= 0.0)
   }
 
+  /** X1: per-user negative sampling — sample `n` items per user from the
+    * catalog excluding that user's positives (ref `src/data/movielens.py:488-512`).
+    *
+    * Two paths, dispatched on catalog size (one cheap `count` action):
+    *  - catalog <= `maxExactCatalog`: exact full-complement form — users ×
+    *    catalog (the reference also enumerates the full complement),
+    *    anti-joined against positives, then a seeded hash-ordered
+    *    `row_number <= n` per user: a uniform-ish pseudo-random sample,
+    *    fully deterministic per seed.
+    *  - larger catalogs: [[negativeSampleBucketed]] — NO cross join. The
+    *    enumeration of |users|x|catalog| pairs (even as a filtered
+    *    broadcast-nested-loop) is the one true cartesian at 100 TB, so the
+    *    bounded path replaces it with a hash-bucketed EQUI-join: items are
+    *    assigned to `k` deterministic buckets, each user probes `probes`
+    *    seeded buckets, giving an expected candidate pool of
+    *    `probes * |catalog| / k ~= oversample * n` per user before the
+    *    anti-join and window. */
   def negativeSample(positives: DataFrame, userCol: String, itemCol: String,
                      items: DataFrame, n: Int, seed: Long = 42,
                      maxExactCatalog: Long = 100000,

@@ -329,7 +329,14 @@ object Similarity {
     * assignment's Θ(n·nlist) scoring term is the wall at that size. The
     * QUERY side stays flat (Θ(q·nlist), q = request batch, always
     * small). The serving flagship `c5_serving_ivf` gates this path with
-    * an in-query recall-vs-exact measurement on a ≥1 M-item catalog. */
+    * an in-query recall-vs-exact measurement on a ≥1 M-item catalog.
+    *
+    * Building the frame RUNS SPARK JOBS: the nlist-row seed centroid table
+    * is eagerly `localCheckpoint(true)`ed when this is called, before the
+    * returned frame is executed (or even if it never is). The checkpoint
+    * blocks are not released by this call; they stay pinned in executor
+    * storage until their RDD is garbage-collected, so a long-lived session
+    * that builds many indexes holds one such table per build. */
   def clusterPrunedTopK(queries: DataFrame, items: DataFrame, queryId: String,
                         itemId: String, vecCol: String, k: Int,
                         nlist: Int = 64, nprobe: Int = 8,
@@ -550,7 +557,13 @@ object Similarity {
     * p²). A boundary-split ε-pair's second-nearest centroid is almost
     * always its partner's nearest, so p = 2 recovers most splits
     * (measured on the planted geometric corpus — d_semantic_recall_geo).
-    * The p = 1 pair set is a subset of every p > 1 set by construction. */
+    * The p = 1 pair set is a subset of every p > 1 set by construction.
+    *
+    * Building the frame RUNS SPARK JOBS: the nlist-row centroid table is
+    * eagerly `localCheckpoint(true)`ed when this is called, before the
+    * returned frame is executed (or even if it never is), and its blocks
+    * stay pinned in executor storage until their RDD is garbage-collected
+    * — the same side effect as [[clusterPrunedTopK]]. */
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
                         threshold: Double, nlist: Int = 64,
                         seed: Long = 42,

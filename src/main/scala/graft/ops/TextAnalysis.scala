@@ -17,52 +17,6 @@ object TextAnalysis {
   /** Token count — whitespace tokenization. */
   def tokenCount(c: Column): Column = size(tokens(c))
 
-  /** BPE-ish subword count estimate: words plus intra-word punctuation and
-    * digit-group boundaries (a cheap proxy for BPE token counts — regex
-    * split on transitions). */
-  def subwordCount(c: Column): Column =
-    size(split(trim(c), "\\s+|(?<=[a-z])(?=[A-Z])|(?<=[A-Za-z])(?=\\d)|(?<=\\d)(?=[A-Za-z])|(?=[^\\w\\s])"))
-
-  /** Ratio of punctuation characters to total characters. */
-  def punctRatio(c: Column): Column = {
-    val n = length(c)
-    when(n === 0, 0.0).otherwise(
-      (n - length(regexp_replace(c, "[\\p{Punct}]", ""))).cast("double") / n)
-  }
-
-  /** Ratio of uppercase characters. */
-  def upperRatio(c: Column): Column = {
-    val n = length(c)
-    when(n === 0, 0.0).otherwise(
-      (n - length(regexp_replace(c, "[A-Z]", ""))).cast("double") / n)
-  }
-
-  /** Mean word length. */
-  def avgWordLen(c: Column): Column = {
-    val t = tokens(c)
-    when(size(t) === 0, 0.0).otherwise(
-      aggregate(t, lit(0L), (acc, w) => acc + length(w)).cast("double") /
-        size(t))
-  }
-
-  /** Stopword ratio against a broadcastable literal stopword list. */
-  def stopwordRatio(c: Column, stopwords: Seq[String]): Column = {
-    val t = tokens(c)
-    val sw = array(stopwords.map(lit): _*)
-    when(size(t) === 0, 0.0).otherwise(
-      size(filter(t, w => array_contains(sw, w))).cast("double") / size(t))
-  }
-
-  /** Heuristic quality score in [0,1]: favors mid-length docs with moderate
-    * punctuation and a healthy stopword rate (shape follows the reference's
-    * weighted-blend content-quality idiom, `feature_engineering.py:337-345`). */
-  def qualityScore(c: Column, stopwords: Seq[String]): Column = {
-    val lenScore = least(tokenCount(c).cast("double") / 100.0, lit(1.0))
-    val punctScore = lit(1.0) - least(punctRatio(c) * 5.0, lit(1.0))
-    val swScore = least(stopwordRatio(c, stopwords) * 4.0, lit(1.0))
-    Features.clip(lenScore * 0.4 + punctScore * 0.3 + swScore * 0.3, 0.0, 1.0)
-  }
-
   /** Language ID by marker-token profiles: score(lang) = count of distinct
     * doc tokens in that language's marker list; predict argmax (ties broken
     * by language code ascending). `profiles` rides along as array literals —
@@ -99,9 +53,6 @@ object TextAnalysis {
     aggregate(chars, lit(7L),
       (acc, ch) => pmod(acc * 31 + coalesce(ascii(ch), lit(0)), prime))
   }
-
-  /** Word n-grams of a document (for n-gram LM-ish analyses). */
-  def wordNgrams(c: Column, n: Int): Column = Dedup.wordShingles(c, n)
 
   /** TF-IDF weights per (document, term): tf = raw term count in the doc,
     * df = number of docs containing the term, idf = ln((1+N)/(1+df)) + 1
@@ -565,11 +516,6 @@ object TextAnalysis {
       ColumnBridge.expression(norm), merges))
   }
 
-  /** The vocabulary artifact [[bpeEncodeIds]] derives — (token, id) pairs,
-    * ids 1..V in (count desc, token asc) rank order over the ENCODED token
-    * stream, id 0 reserved for OOV. A trainer ships this table next to the
-    * id arrays; [[decodeTokenIds]] inverts with it. Driver-resident by
-    * construction (V rows — the centroid-table bound). */
   /** Fail-loud contract on a FROZEN vocab table (the [[validateMergeTable]]
     * convention, ADVICE r15): a hand-shipped table with duplicate tokens
     * or duplicate/non-positive ids would silently lose entries in the
@@ -595,6 +541,11 @@ object TextAnalysis {
         s"'${badId.map(_._1).getOrElse("")}' — id 0 is reserved for OOV")
   }
 
+  /** The vocabulary artifact [[bpeEncodeIds]] derives — (token, id) pairs,
+    * ids 1..V in (count desc, token asc) rank order over the ENCODED token
+    * stream, id 0 reserved for OOV. A trainer ships this table next to the
+    * id arrays; [[decodeTokenIds]] inverts with it. Driver-resident by
+    * construction (V rows — the centroid-table bound). */
   def bpeVocabIds(df: DataFrame, textCol: String,
                   merges: Seq[(String, String)],
                   vocabSize: Int): Seq[(String, Int)] = {
@@ -1425,6 +1376,23 @@ object TextAnalysis {
           .as("dup_ratio"))
   }
 
+  /** The d_passage_dedup segmenter, shared with the incremental store
+    * form: non-overlapping `size`-token passages as one row each —
+    * (idCol, passage_idx, __passage). Pure per-row explode. */
+  def segmentPassages(df: DataFrame, idCol: String, textCol: String,
+                      size: Int): DataFrame = {
+    require(size > 0, s"segmentPassages: size must be positive, got $size")
+    df.select(col(idCol), Dedup.tokens(col(textCol)).as("__t"))
+      .select(col(idCol),
+        posexplode(transform(
+          sequence(lit(0L), greatest(
+            ceil((org.apache.spark.sql.functions.size(col("__t")) - size)
+              .cast("double") / size).cast("long"), lit(0L))),
+          i => slice(col("__t"), (i * size + 1).cast("int"), lit(size)))))
+      .select(col(idCol), col("pos").cast("long").as("passage_idx"),
+        concat_ws(" ", col("col")).as("__passage"))
+  }
+
   /** Repeated-passage REMOVAL — the rewrite stage [[spanDupStats]] is the
     * observability for (C4's repeated-line drop / Lee et al. 2022
     * substring dedup, at passage granularity): documents are segmented
@@ -1446,23 +1414,6 @@ object TextAnalysis {
     * aggregations. First-occurrence-wins (not arbitrary-winner) makes the
     * output deterministic and growth-stable: appending new documents can
     * never change which EXISTING passage is the keeper. */
-  /** The d_passage_dedup segmenter, shared with the incremental store
-    * form: non-overlapping `size`-token passages as one row each —
-    * (idCol, passage_idx, __passage). Pure per-row explode. */
-  def segmentPassages(df: DataFrame, idCol: String, textCol: String,
-                      size: Int): DataFrame = {
-    require(size > 0, s"segmentPassages: size must be positive, got $size")
-    df.select(col(idCol), Dedup.tokens(col(textCol)).as("__t"))
-      .select(col(idCol),
-        posexplode(transform(
-          sequence(lit(0L), greatest(
-            ceil((org.apache.spark.sql.functions.size(col("__t")) - size)
-              .cast("double") / size).cast("long"), lit(0L))),
-          i => slice(col("__t"), (i * size + 1).cast("int"), lit(size)))))
-      .select(col(idCol), col("pos").cast("long").as("passage_idx"),
-        concat_ws(" ", col("col")).as("__passage"))
-  }
-
   def dedupPassages(df: DataFrame, idCol: String, textCol: String,
                     size: Int = 16): DataFrame = {
     val segmented = segmentPassages(df, idCol, textCol, size)

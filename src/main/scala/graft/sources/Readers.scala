@@ -92,15 +92,6 @@ object Readers {
     }
   }
 
-  /** S2: parquet sink. */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  /** S3/S4: parquet scan; the timestamp-field convention of Feast
-    * `FileSource` is just a column-name contract on the read side. */
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** S11: JSON sink (single file like the reference's results dump). */
   def writeJson(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").json(path)

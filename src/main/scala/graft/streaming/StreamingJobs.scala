@@ -147,37 +147,6 @@ object StreamingJobs {
       .toDF("user_id", "event_id", "clicks_5min", "views_5min", "events_5min")
   }
 
-  /** T6/S6/T10 (small-store fallback): per-batch upsert that rewrites the
-    * WHOLE store from current + incoming — O(store size) per micro-batch,
-    * fine for request-scoped or demo-sized stores only. The scale path is
-    * [[upsertOnlineStorePartitioned]], which rewrites only the hash
-    * buckets a batch touches. Checkpointing makes the upsert
-    * effectively-once. */
-  def upsertOnlineStore(features: DataFrame, keyCols: Seq[String],
-                        tsCol: String, tiebreakCol: String, storePath: String,
-                        checkpointPath: String): StreamingQuery =
-    features.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // Only a genuinely absent store falls back to empty; any other read
-        // failure (FS hiccup, corrupt footer) propagates and fails the
-        // micro-batch — a catch-all here would silently overwrite the store
-        // with just the incoming batch, destroying prior keys.
-        val existing =
-          if (pathExists(spark, storePath)) spark.read.parquet(storePath)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-        val merged = FeatureStore.latestPerKey(
-          existing.unionByName(batch, allowMissingColumns = true),
-          keyCols, tsCol, tiebreakCol)
-        merged.write.mode("overwrite").parquet(storePath + ".tmp")
-        spark.read.parquet(storePath + ".tmp")
-          .write.mode("overwrite").parquet(storePath)
-      }
-      .start()
-
   /** T6 at 100 TB: hash-bucket-partitioned online-store upsert. The store
     * is a parquet table partitioned by
     * `__bucket = pmod(xxhash64(key...), numBuckets)`; each micro-batch
@@ -313,12 +282,10 @@ object StreamingJobs {
     * merge idempotent under at-least-once delivery: replaying a batch
     * re-derives the same (seen-batch, id) minimum.
     *
-    * Complements the watermark-horizon `dedupStream` form: that one holds
-    * O(rate × watermark) in-memory state and forgets old content; this
-    * one is FULL-HISTORY — dedup identity lives in the partitioned store,
-    * not executor state, so the horizon is unbounded and restart-safe.
-    * Same content key as batch `Dedup.exactDupGroups`, so the three forms
-    * (batch, horizon-stream, incremental-store) agree on identity. */
+    * Dedup is FULL-HISTORY: identity lives in the partitioned store, not
+    * executor state, so the horizon is unbounded and restart-safe. Same
+    * content key as batch `Dedup.exactDupGroups`, so the batch and the
+    * streaming form agree on identity. */
   def incrementalDedupStream(docs: DataFrame, idCol: String,
                              textCol: String, storePath: String,
                              checkpointPath: String,
@@ -433,19 +400,6 @@ object StreamingJobs {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
-
-  /** T7/R7: streaming embedding-index append — item_update events append to
-    * the embedding table; ANN structures rebuild periodically downstream
-    * (the reference also rebuilds — `retrieval.py:228-246`). */
-  def appendEmbeddings(updates: DataFrame, tablePath: String,
-                       checkpointPath: String): StreamingQuery =
-    updates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", tablePath)
-      .start()
 
   /** R7∘R4 — streaming serving-index MAINTENANCE (r17 verdict #6): the
     * embedding append composed with the IVF path. Each arriving vector
@@ -827,76 +781,6 @@ object StreamingJobs {
       .toDF("user_id", "event_id", "session_idx")
   }
 
-  /** T11 on the Spark 4 `transformWithState` API: same gap-based
-    * sessionization as [[sessionizeStream]], with the idle-key bound
-    * expressed as DECLARATIVE state TTL (`TTLConfig`) instead of a
-    * hand-rolled timeout branch — the state store treats expired (last ts,
-    * counter) values as absent by itself. TTL requires
-    * `TimeMode.ProcessingTime`, which (like flatMapGroupsWithState
-    * timers) makes the engine schedule batches forever — so the TTL is
-    * opt-in here too: None → `TimeMode.None`, the query drains and
-    * terminates normally. Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`). Semantics parity with the
-    * batch form and TTL expiry are asserted in StreamingSpec. */
-  def sessionizeStreamTws(events: DataFrame, gapSeconds: Long,
-                          idleStateTtl: Option[java.time.Duration] = None)
-      : DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    val typed = events.select(
-      col("user_id"), col("event_id"), unix_timestamp(col("ts")).as("ts_s"))
-      .as[(Long, Long, Long)]
-    typed.groupByKey(_._1)
-      .transformWithState(new SessionizeProcessor(gapSeconds, idleStateTtl),
-        if (idleStateTtl.isDefined) TimeMode.ProcessingTime()
-        else TimeMode.None(),
-        OutputMode.Append())
-      .toDF("user_id", "event_id", "session_idx")
-  }
-
-  /** The [[sessionizeStreamTws]] stateful processor: per key a single
-    * (last ts, session counter) value with TTL — state logic identical to
-    * the flatMapGroupsWithState form, minus the hand-rolled timeout
-    * branch. */
-  private class SessionizeProcessor(gapSeconds: Long,
-                                    ttl: Option[java.time.Duration])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, Long), (Long, Long, Long)] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig, ValueState}
-    @transient private var st: ValueState[(Long, Long)] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long)]("sess",
-        org.apache.spark.sql.Encoders.product[(Long, Long)],
-        ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-    override def handleInputRows(
-        user: Long, rows: Iterator[(Long, Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, Long)] = {
-      var (lastTs, sessionIdx) =
-        if (st.exists()) st.get() else (Long.MinValue, 0L)
-      val out = rows.toList.sortBy(e => (e._3, e._2)).map { case (_, id, ts) =>
-        if (lastTs == Long.MinValue || ts - lastTs > gapSeconds)
-          sessionIdx += 1
-        lastTs = ts
-        (user, id, sessionIdx)
-      }
-      st.update((lastTs, sessionIdx))
-      out.iterator
-    }
-  }
-
-  /** Streaming exact dedup (SURVEY §2.13 L1, streaming form): keep the
-    * FIRST-arriving document per normalized-content hash, dropping
-    * later duplicates that arrive within the watermark horizon.
-    * `dropDuplicatesWithinWatermark` bounds the dedup state to the
-    * watermark window, so state is O(arrival rate × watermark), not
-    * O(corpus) — the property that makes streaming ingest dedup viable at
-    * 100 TB/day (a full-history dedup belongs in the batch layer, L1).
-    * The content hash matches the batch `Dedup.exactDupGroups` key, so a
-    * batch compaction pass downstream dedups across horizons with the
-    * same identity. */
   /** Streaming corpus-ingest term counts over tumbling event-time windows
     * (the trending-terms monitor — the text tranche's streaming member).
     * Explode → windowed count; the watermark lets closed windows emit and
@@ -912,14 +796,6 @@ object StreamingJobs {
       .groupBy(window(col(tsCol), s"$windowSeconds seconds"), col("term"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("win_start"), col("term"), col("cnt"))
-
-  def dedupStream(docs: DataFrame, textCol: String, tsCol: String,
-                  watermark: String = "10 minutes"): DataFrame =
-    docs
-      .withColumn("content_hash",
-        md5(graft.ops.Dedup.normalizeText(col(textCol))))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("content_hash")
 
   /** Stream-stream interval join — click→view attribution: each click
     * pairs with the SAME user's views at most `horizonSeconds` before it
@@ -965,11 +841,4 @@ object StreamingJobs {
       .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value"))
       .select(col("window.start").as("w_start"), col("event_type"),
         col("cnt"), col("sum_value"))
-
-  /** T8: TTL freshness filter on read of an online store (ref TTLs in
-    * `feature_definitions.py`; cache expiry `retrieval.py:643-657`). */
-  def freshOnly(store: DataFrame, tsCol: String, now: Column,
-                ttlSeconds: Long): DataFrame =
-    store.filter(col(tsCol) <= now &&
-      col(tsCol) >= now - expr(s"INTERVAL $ttlSeconds SECONDS"))
 }

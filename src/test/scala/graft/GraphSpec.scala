@@ -14,40 +14,6 @@ class GraphSpec extends AnyFunSuite {
     Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", iters)
       .as[(Long, Double)].collect().toMap
 
-  test("pageRankAuto: k <= 10 dispatches to the unrolled single-plan form, " +
-    "k > 10 to the checkpointed form; values agree with the chosen form") {
-    val rng = new scala.util.Random(15L)
-    val df = (1 to 200)
-      .map(_ => (rng.nextInt(40).toLong, rng.nextInt(40).toLong))
-      .filter { case (a, b) => a != b }.distinct.toDF("src", "dst")
-    def hasJoin(d: org.apache.spark.sql.DataFrame): Boolean =
-      d.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-      }.nonEmpty
-    // the unrolled form IS a (deep) join plan; the checkpointed form's
-    // final round is materialized, so its returned plan has no Join left
-    val small = Graph.pageRankAuto(df, "src", "dst", 3)
-    assert(hasJoin(small), "k=3 must be the unrolled join plan")
-    val big = Graph.pageRankAuto(df, "src", "dst", 12)
-    assert(!hasJoin(big),
-      "k=12 must be the checkpointed form (materialized: no Join in plan)")
-    def close(a: Map[Long, Double], b: Map[Long, Double]): Unit = {
-      assert(a.keySet === b.keySet)
-      a.foreach { case (id, v) =>
-        assert(math.abs(v - b(id)) <=
-          1e-12 * math.max(1.0, math.abs(b(id))), s"id=$id")
-      }
-    }
-    close(small.as[(Long, Double)].collect().toMap,
-      Graph.pageRank(df, "src", "dst", 3).as[(Long, Double)].collect().toMap)
-    close(big.as[(Long, Double)].collect().toMap,
-      Graph.pageRankCheckpointed(df, "src", "dst", 12)
-        .as[(Long, Double)].collect().toMap)
-    intercept[IllegalArgumentException] {
-      Graph.pageRankAuto(df, "src", "dst", 0)
-    }
-  }
-
   test("symmetric triangle stays uniform at every iteration") {
     val tri = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (1L, 3L), (3L, 1L))
     val pr = ranks(tri, iters = 4)

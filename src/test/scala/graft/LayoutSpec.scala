@@ -51,23 +51,6 @@ class LayoutSpec extends AnyFunSuite {
     }
   }
 
-  test("partitioned write prunes partitions on read (PartitionFilters, not data filters)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    Layout.writePartitioned(docs, dir, Seq("lang"))
-    val one = spark.read.parquet(dir).filter(col("lang") === "en")
-    val scan = one.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [isnotnull(lang"),
-      s"lang filter should prune partitions:\n$scan")
-    // pruned read returns exactly the partition's rows, and the executed
-    // scan reports a single selected partition (the lang=en directory)
-    assert(one.count() === docs.filter(col("lang") === "en").count())
-    val metrics = one.queryExecution.executedPlan.collectLeaves()
-      .head.metrics
-    assert(metrics.get("numPartitions").forall(_.value <= 1),
-      s"scan touched more than one hive partition: ${metrics.mapValues(_.value)}")
-  }
-
   test("compact: many small files become few, data identical") {
     import java.nio.file.Files
     val in = Files.createTempDirectory("graft-frag").toString

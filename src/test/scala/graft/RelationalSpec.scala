@@ -27,22 +27,6 @@ class RelationalSpec extends AnyFunSuite {
     split.unpersist()
   }
 
-  test("approximate time split holds ordering at scale-safe cost (timeSplitApprox)") {
-    val df = (0 until 1000).map(i => (i.toLong, i.toLong)).toDF("id", "ts")
-    val split = Relational.timeSplitApprox(df, "ts", 0.8, 0.1).cache()
-    val counts = split.groupBy("split").count().as[(String, Long)]
-      .collect().toMap
-    // approxQuantile cutoffs: proportions within a few percent, ordering exact
-    assert(math.abs(counts("train") - 800L) <= 30)
-    assert(math.abs(counts("test") - 100L) <= 30)
-    val trainMax = split.filter($"split" === "train").agg(max("ts")).head().getLong(0)
-    val valMin = split.filter($"split" === "val").agg(min("ts")).head().getLong(0)
-    val valMax = split.filter($"split" === "val").agg(max("ts")).head().getLong(0)
-    val testMin = split.filter($"split" === "test").agg(min("ts")).head().getLong(0)
-    assert(trainMax <= valMin && valMax <= testMin)
-    split.unpersist()
-  }
-
   test("leave-one-out: exactly 1 test row per user (test_data_loading.py:148-165)") {
     val df = Seq(
       (1L, 10L, 1L), (1L, 20L, 2L), (1L, 30L, 3L), (1L, 40L, 4L),
@@ -109,17 +93,6 @@ class RelationalSpec extends AnyFunSuite {
     val plan = neg.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-  }
-
-  test("timeSplitApprox works on TimestampType columns (epoch-cast internally)") {
-    val df = (0 until 200)
-      .map(i => (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-01 00:${i / 60}%02d:${i % 60}%02d")))
-      .toDF("id", "ts")
-    val split = Relational.timeSplitApprox(df, "ts", 0.8, 0.1)
-    val counts = split.groupBy("split").count().as[(String, Long)]
-      .collect().toMap
-    assert(math.abs(counts("train") - 160L) <= 10)
-    assert(split.columns.toSeq === Seq("id", "ts", "split"))
   }
 
   test("capPerGroup: deterministic across partitionings, exact cap, no bias to storage order") {
@@ -445,9 +418,9 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("z-score normalize: mean ~0, unit-ish std (movielens.py:421-422)") {
-    val df = (1 to 100).map(_.toDouble).toDF("x")
-    val z = Relational.zscore(df, Seq("x"))
-    val (m, s) = z.agg(avg("x_z"), stddev_samp("x_z")).as[(Double, Double)].head()
+    val z = SparkEntry.queries("p_zscore")(spark, "/root/testdata/sf0.001")
+    val (m, s) = z.agg(avg("acctbal_z"), stddev_samp("acctbal_z"))
+      .as[(Double, Double)].head()
     assert(math.abs(m) < 1e-9)
     assert(math.abs(s - 1.0) < 1e-6)
   }

@@ -279,40 +279,6 @@ class SourcesSpec extends AnyFunSuite {
       e3, Seq("user_id"), "ts", f3, view2, "fid")) === expected)
   }
 
-  test("salted as-of join equals the unsalted form on a 90%-one-key frame " +
-    "and widens the join key with the salt") {
-    val rnd = new scala.util.Random(11)
-    // 90% of entity rows on key 7 (the hot entity), the rest spread
-    val e = (1 to 500).map { i =>
-      val k = if (i <= 450) 7L else rnd.nextInt(20).toLong
-      (k, rnd.nextInt(1000).toLong, i.toLong)
-    }.toDF("user_id", "ets", "eid")
-      .withColumn("ts", timestamp_seconds(col("ets")))
-    val f = (1 to 300).map(i =>
-      (rnd.nextInt(20).toLong, rnd.nextInt(1000).toLong, i.toLong))
-      .toDF("user_id", "fts_s", "fid")
-      .withColumn("ts", timestamp_seconds(col("fts_s")))
-    val view = FeatureStore.FeatureView("f", Seq("user_id"), "ts", 200L)
-    def norm(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("eid"), col("f_fid"))
-      .as[(Long, Option[Long])].collect().toSet
-    val plain = FeatureStore.asOfJoin(e, Seq("user_id"), "ts", f, view, "fid")
-    val salted = FeatureStore.saltedAsOf(e, Seq("user_id"), "ts", f, view,
-      "fid", salts = 8)
-    assert(norm(salted) === norm(plain),
-      "salted as-of diverged from the unsalted form")
-    assert(salted.columns.toSeq === plain.columns.toSeq)
-    // the widened key reaches the physical join
-    val plan = salted.queryExecution.executedPlan.toString
-    assert(plan.contains("__salt"), s"salt missing from the plan:\n$plan")
-    // and the salt actually spreads the hot key across several salt values
-    val spread = e.withColumn("__salt",
-        pmod(xxhash64(col("user_id"), col("ts")), lit(8)))
-      .filter(col("user_id") === 7L)
-      .select(countDistinct(col("__salt"))).as[Long].head()
-    assert(spread >= 4, s"hot key only reached $spread of 8 salts")
-  }
-
   test("request-time source: one-row frame of request literals (S7, feature_definitions.py:259-272)") {
     val req = Readers.requestSource(spark,
       Map("device_type" -> "mobile", "time_of_day" -> 14, "is_weekend" -> false))

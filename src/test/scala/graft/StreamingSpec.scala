@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.Features
+import graft.ops.{Features, FeatureStore}
 import graft.streaming.StreamingJobs
 
 /** Structured Streaming parity tests: the streaming window job must produce
@@ -214,26 +214,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(branches("click").count() === 2)
     assert(branches("view").count() === 3)
     assert(branches("purchase").count() === 1)
-  }
-
-  test("streaming embedding append grows the index table (T7/R7)") {
-    val base = Files.createTempDirectory("graft-emb").toString
-    val src = s"$base/src"; val table = s"$base/table"; val cp = s"$base/cp"
-    Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)))
-      .toDF("vec_id", "embedding").write.mode("overwrite").parquet(src)
-    val stream = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(src)
-    val q = StreamingJobs.appendEmbeddings(stream, table, cp)
-    q.awaitTermination(60000)
-    assert(spark.read.parquet(table).count() === 2)
-    // second batch appends
-    Seq((3L, Seq(1f, 1f))).toDF("vec_id", "embedding")
-      .write.mode("append").parquet(src)
-    val q2 = StreamingJobs.appendEmbeddings(
-      spark.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(src),
-      table, cp)
-    q2.awaitTermination(60000)
-    assert(spark.read.parquet(table).count() === 3)
   }
 
   test("stateful trailing-window stream matches the batch RANGE-frame form (T3 exact semantics)") {
@@ -589,138 +569,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("transformWithState sessionization matches the batch form (T11, Spark 4 API)") {
-    val dir = Files.createTempDirectory("graft-tws").toString
-    eventsFixture(dir)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = StreamingJobs.sessionizeStreamTws(
-        StreamingJobs.fileEvents(spark, dir), gapSeconds = 100L)
-      val q = stream.writeStream.outputMode("append")
-        .format("memory").queryName("tws_out").start()
-      try q.processAllAvailable() finally q.stop()
-      val got = spark.table("tws_out").as[(Long, Long, Long)].collect().toSet
-      val batch = Features.sessionize(
-        spark.read.parquet(dir), "user_id", "ts", 100L)
-        .select(col("user_id"), col("event_id"), col("session_idx"))
-        .as[(Long, Long, Long)].collect().toSet
-      assert(got === batch)
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("transformWithState declarative TTL: idle key's state expires and " +
-    "re-sessionizes fresh") {
-    val dir = Files.createTempDirectory("graft-tws-ttl").toString
-    def append(rows: Seq[(Long, Long, Long)]): Unit = // (event_id, user, ts_s)
-      rows.toDF("event_id", "user_id", "ts_s")
-        .withColumn("ts", timestamp_seconds(col("ts_s")))
-        .withColumn("event_type", lit("click"))
-        .withColumn("value", lit(1.0))
-        .withColumn("props", lit("{}"))
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("append").parquet(dir)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // TTL forces TimeMode.ProcessingTime → continuous batches (same caveat
-    // as the flatMapGroupsWithState timers) → poll the sink, don't drain.
-    val stream = StreamingJobs.sessionizeStreamTws(
-      StreamingJobs.fileEvents(spark, dir), gapSeconds = 100L,
-      idleStateTtl = Some(java.time.Duration.ofSeconds(1)))
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName("tws_ttl_out").start()
-    def sink(): Set[(Long, Long, Long)] =
-      spark.table("tws_ttl_out").as[(Long, Long, Long)].collect().toSet
-    def waitFor(cond: => Boolean): Unit = {
-      val deadline = System.currentTimeMillis + 60000
-      while (!cond && System.currentTimeMillis < deadline) Thread.sleep(200)
-      assert(cond, s"condition not reached; sink=${sink()}")
-    }
-    try {
-      append(Seq((1L, 1L, 10L), (2L, 1L, 20L)))
-      waitFor(sink() === Set((1L, 1L, 1L), (1L, 2L, 1L)))
-      Thread.sleep(2000) // past the TTL: the stored value reads as absent
-      // user 1 returns after expiry → fresh index 1 (a surviving state
-      // would have produced session 2 given the huge ts gap)
-      append(Seq((4L, 1L, 100000L)))
-      waitFor(sink().contains((1L, 4L, 1L)))
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("transformWithState at 100K keys: RocksDB state + TTL eviction hold at size (T11 state bound)") {
-    // The state-size posture tested, not asserted: 100K distinct keys each
-    // write a RocksDB state entry in one pass, then ALL of them expire via
-    // the declarative TTL and a returning key restarts at session 1 — at
-    // index 2 the state would have survived (its huge ts gap would open a
-    // new session), so the assert proves eviction actually ran at size.
-    val dir = Files.createTempDirectory("graft-tws-big").toString
-    val n = 100000L
-    spark.range(n).select(
-      col("id").as("event_id"),
-      timestamp_seconds(col("id") % 86400).as("ts"),
-      col("id").as("user_id"),
-      lit("click").as("event_type"), lit(1.0).as("value"),
-      lit("{}").as("props"))
-      .write.mode("append").parquet(dir)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = StreamingJobs.sessionizeStreamTws(
-      StreamingJobs.fileEvents(spark, dir), gapSeconds = 100L,
-      idleStateTtl = Some(java.time.Duration.ofSeconds(2)))
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName("tws_big_out").start()
-    def cnt(): Long = spark.table("tws_big_out").count()
-    def waitFor(cond: => Boolean): Unit = {
-      val deadline = System.currentTimeMillis + 60000
-      while (!cond && System.currentTimeMillis < deadline) Thread.sleep(500)
-      assert(cond, s"condition not reached; sink rows=${cnt()}")
-    }
-    try {
-      waitFor(cnt() === n) // every key sessionized -> 100K live state entries
-      Thread.sleep(4000)   // all keys idle past the 2s TTL
-      Seq((n + 1, 123L, 100000000L)).toDF("event_id", "user_id", "ts_s")
-        .withColumn("ts", timestamp_seconds(col("ts_s")))
-        .withColumn("event_type", lit("click"))
-        .withColumn("value", lit(1.0))
-        .withColumn("props", lit("{}"))
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("append").parquet(dir)
-      waitFor(spark.table("tws_big_out")
-        .filter(col("user_id") === 123L && col("event_id") === (n + 1))
-        .as[(Long, Long, Long)].collect().toSet
-        .exists(_._3 == 1L))
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("streaming exact dedup keeps first arrival per content hash (L1 stream form)") {
-    val dir = Files.createTempDirectory("graft-sdedup").toString
-    Seq(
-      (1L, 10L, "the quick brown fox"),
-      (2L, 20L, "THE  quick brown FOX"), // dup of 1 after normalization
-      (3L, 30L, "a different document"),
-      (4L, 40L, "the quick brown fox")) // dup of 1 again
-      .toDF("doc_id", "ts_s", "text")
-      .withColumn("ts", timestamp_seconds(col("ts_s")))
-      .select("doc_id", "ts", "text")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream
-      .schema("doc_id LONG, ts TIMESTAMP, text STRING").parquet(dir)
-    val deduped = StreamingJobs.dedupStream(stream, "text", "ts")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("sdedup_out").start()
-    try q.processAllAvailable() finally q.stop()
-    val kept = spark.table("sdedup_out")
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept === Set(1L, 3L)) // first arrival survives per content group
-  }
-
   test("stream-stream interval join (attribution) matches the batch join") {
     val dir = Files.createTempDirectory("graft-attr-stream").toString
     // user 1: view@10 → clicks@100 (in horizon) and @400 (out);
@@ -799,7 +647,7 @@ class StreamingSpec extends AnyFunSuite {
   test("TTL freshness filter drops expired rows (T8)") {
     val store = Seq((1L, 100L), (2L, 240L)).toDF("k", "ts_s")
       .withColumn("ts", timestamp_seconds(col("ts_s")))
-    val fresh = StreamingJobs.freshOnly(store, "ts",
+    val fresh = FeatureStore.freshOnly(store, "ts",
       timestamp_seconds(lit(300L)), 100L)
     assert(fresh.select("k").as[Long].collect().toSeq === Seq(2L))
   }

@@ -81,8 +81,8 @@ class VectorSpec extends AnyFunSuite {
 
   test("normalize ⇒ unit norm; zero vector passes through") {
     val df = Seq(Seq(3f, 4f), Seq(0f, 0f)).toDF("a")
-    val norms = df.select(V.vecNorm(V.vecNormalize(col("a")))).as[Double]
-      .collect().toSeq
+    val norms = V.normalized(df, "a", "n").select(V.vecNorm(col("n")))
+      .as[Double].collect().toSeq
     assert(math.abs(norms.head - 1.0) < 1e-12)
     assert(norms(1) === 0.0)
   }
