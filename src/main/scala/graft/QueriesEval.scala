@@ -61,40 +61,38 @@ object QueriesEval {
         max(when(col("sd") >= lit(Cutoff).cast("timestamp"), 1).otherwise(0))
           .as("in_test"))
 
-  /** Per-user (pred array, gt array) frame. Scope = users with ground
+  /** The popularity recommender's per-user (u, gt, pred) frame over a
+    * train/test split of (u, it) pairs, shared by [[predGt]] and the
+    * `c7_e2e_eval` row: pred(u) = the global top-100 train items minus
+    * u's train items, gt(u) = u's test items. Scope = users with ground
     * truth (E9's skip-users-without-ground-truth, `metrics.py:275-276`);
-    * a gt user whose ENTIRE candidate list was excluded by the seen-item
-    * anti-join is KEPT with an empty pred (zero metrics) — the reference
-    * evaluates such users too, it never drops them. */
-  private def predGt(s: SparkSession, d: String): DataFrame = {
-    val split = pairsSplit(s, d)
-    val train = split.filter(col("in_train") === 1).select(col("u"), col("it"))
-    val test = split.filter(col("in_test") === 1).select(col("u"), col("it"))
+    * a gt user whose ENTIRE candidate list was excluded is KEPT with an
+    * empty pred (zero metrics) — the reference evaluates such users too.
+    *
+    * Global top-100 WITHOUT an unpartitioned window: `row_number() OVER
+    * (ORDER BY …)` moves the whole catalog-sized popularity frame to ONE
+    * task. `orderBy().limit()` plans as TakeOrderedAndProject
+    * (distributed partial top-k per partition); the rank is recovered by
+    * sorting the 100 survivors inside one array — struct (-c, it)
+    * ascending = (c desc, it asc) — a single-row aggregate over exactly
+    * 100 rows, not a data-sized sort.
+    *
+    * E8/R6 seen-item exclusion in ARRAY form (r15): the old shape
+    * cross-joined every user with all 100 candidates and anti-joined the
+    * fan-out back down, measured as c7's DOMINANT stage at sf10 (62.9 s
+    * of 210, r15 stage attribution by the C7Profile harness, last in
+    * commit 65b4b15). Here each user's excluded set is train ∩ top100
+    * (≤ 100 ids, built by a broadcast semi-join that only shuffles the
+    * matching train rows), and pred = the rank-ordered top-100 ARRAY
+    * minus that set via one per-row filter — order preserved by
+    * construction, users with nothing seen keep the full array. */
+  private def popularityPredGt(users: DataFrame, train: DataFrame,
+                               test: DataFrame): DataFrame = {
     val pop = train.groupBy(col("it")).agg(count(lit(1)).as("c"))
-    // Global top-100 WITHOUT an unpartitioned window: `row_number() OVER
-    // (ORDER BY …)` moves the whole catalog-sized popularity frame to ONE
-    // task (Spark's "No Partition Defined for Window" warning — at 100×
-    // items that single sort feeds the entire eval tranche).
-    // `orderBy().limit()` plans as TakeOrderedAndProject (distributed
-    // partial top-k per partition); the rank is then recovered by sorting
-    // the 100 survivors inside one array — struct (-c, it) ascending =
-    // (c desc, it asc) — and posexploding. The rank reconstruction is a
-    // single-row aggregate over exactly 100 rows, not a data-sized sort.
     val top100Arr = pop.orderBy(col("c").desc, col("it")).limit(100)
       .agg(sort_array(collect_list(struct((-col("c")).as("nc"), col("it"))))
         .as("__t"))
       .select(transform(col("__t"), x => x.getField("it")).as("__arr"))
-    val users = split.select(col("u")).distinct()
-    // E8/R6 seen-item exclusion in ARRAY form (r15, from the c7 sf10 stage
-    // attribution): the old shape cross-joined every user with all 100
-    // candidates and anti-joined the fan-out back down — users×100 rows
-    // through an exchange and a per-user collect_list sort, measured as
-    // c7's DOMINANT stage at sf10 (62.9 s of 210). Equivalent with no
-    // fan-out: each user's excluded set is train ∩ top100 (≤ 100 ids,
-    // built by a broadcast semi-join that only shuffles the matching
-    // train rows), and pred = the rank-ordered top-100 ARRAY minus that
-    // set via one per-row filter — order preserved by construction, users
-    // with nothing seen keep the full array.
     val topItems = top100Arr.select(explode(col("__arr")).as("it"))
     val seen = train.join(broadcast(topItems), Seq("it"), "left_semi")
       .groupBy(col("u")).agg(collect_set(col("it")).as("__excl"))
@@ -104,6 +102,16 @@ object QueriesEval {
         RankingMetrics.excludeSeen(col("__arr"), col("__excl")).as("pred"))
     val gt = test.groupBy(col("u"))
       .agg(sort_array(collect_set(col("it"))).as("gt"))
+    gt.join(pred, Seq("u"), "left")
+      .withColumn("pred",
+        coalesce(col("pred"), array().cast(pred.schema("pred").dataType)))
+  }
+
+  /** [[popularityPredGt]] over the raw cutoff split of the eval pairs. */
+  private def predGt(s: SparkSession, d: String): DataFrame = {
+    val split = pairsSplit(s, d)
+    val train = split.filter(col("in_train") === 1).select(col("u"), col("it"))
+    val test = split.filter(col("in_test") === 1).select(col("u"), col("it"))
     // Explicit-width tail exchange (r20, guide §2.5): this frame is
     // persisted and every eval row's per-user metric projection (ndcg/map
     // over 100-element arrays × 5 ks) runs at the CACHED partition count —
@@ -111,9 +119,7 @@ object QueriesEval {
     // tasks (measured: e_ndcg_mrr_ap spent 3.4 s of single-digit-task CPU
     // in the metric stages). REPARTITION_BY_NUM pins the cached width to
     // the cluster-sized shuffle-partition knob.
-    gt.join(pred, Seq("u"), "left")
-      .withColumn("pred",
-        coalesce(col("pred"), array().cast(pred.schema("pred").dataType)))
+    popularityPredGt(split.select(col("u")).distinct(), train, test)
       .repartition(s.sessionState.conf.defaultNumShufflePartitions, col("u"))
   }
 
@@ -235,6 +241,39 @@ object QueriesEval {
             .cast("array<tinyint>").as("qvec"),
           col("scale"))
     }
+
+  /** Exact cosine top-`k` of each request `u` over `catalog` (item_id,
+    * embedding), the baseline c5/c5b grade retrieval against: one catalog
+    * scan against the broadcast request batch, and the per-request window
+    * rides WindowGroupLimit's map-side partial limit, so per-partition
+    * state stays at q·k rows and the catalog is never shuffled.
+    * Returns (u, item_id). */
+  private def exactCatalogTopK(requests: DataFrame, catalog: DataFrame,
+                               k: Int): DataFrame = {
+    val qn = V.normalized(requests, "embedding", "__qv")
+      .select(col("u"), col("__qv"))
+    val cn = V.normalized(catalog, "embedding", "__iv")
+      .select(col("item_id"), col("__iv"))
+    val w = Window.partitionBy(col("u"))
+      .orderBy(col("score").desc, col("item_id"))
+    Similarity.evalBarrier(cn).crossJoin(broadcast(qn))
+      .withColumn("score", V.vecDotNative(col("__qv"), col("__iv")))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("u"), col("item_id"))
+  }
+
+  /** Plan REQUIRE of the serving rows: `served` must score through a
+    * `centroid_id` equi-join, so the cluster pruning is structural, not
+    * hoped-for. Reads `sparkPlan`, the pre-AQE plan (AQE wraps the
+    * executed plan in a leaf node and cannot add a join). */
+  private def requireCentroidJoin(served: DataFrame, row: String): Unit =
+    require(served.queryExecution.sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if (j.leftKeys ++ j.rightKeys).exists(
+            _.references.exists(_.name == "centroid_id")) => j
+    }.nonEmpty, s"$row: retrieval must score through a centroid_id " +
+      "equi-join (cluster pruning), none found in plan")
 
   /** Eager, UNTIMED seeding of the per-JVM serving-catalog fixtures
     * (VERDICT r18 "What's wrong" #2): c5/c5b's timed queries claim to
@@ -897,40 +936,14 @@ object QueriesEval {
         .select(col("u"), col("it"))
       val test = split.filter(col("split") === "test")
         .select(col("u"), col("it"))
-      // A7: popularity top-100 WITHOUT an unpartitioned window (the predGt
-      // device above: TakeOrderedAndProject + in-array rank recovery)
-      val pop = train.groupBy(col("it")).agg(count(lit(1)).as("c"))
-      val top100Arr = pop.orderBy(col("c").desc, col("it")).limit(100)
-        .agg(sort_array(collect_list(struct((-col("c")).as("nc"), col("it"))))
-          .as("__t"))
-        .select(transform(col("__t"), x => x.getField("it")).as("__arr"))
-      // users from the checkpointed split, not `core` (same set — every
+      // A7 + E8: the popularity top-100 and seen-item exclusion. Users
+      // come from the checkpointed split, not `core` (same set — every
       // core row lands in exactly one split), so nothing re-enters the
-      // k-core subtree
-      val users = split.select(col("u")).distinct()
-      // Array-form seen-item exclusion (the predGt r15 device): the
-      // users×100 cross-join + anti-join fan-out was c7's DOMINANT sf10
-      // stage (62.9 s of 210, r15 stage attribution by the C7Profile
-      // harness, last in commit 65b4b15 — NOT the fact join+agg r14
-      // guessed); pred = rank-ordered top-100 array filtered
-      // against each user's train∩top100 set (≤100 ids via broadcast
-      // semi-join), no fan-out, order preserved by construction.
-      val topItems = top100Arr.select(explode(col("__arr")).as("it"))
-      val seen = train.join(broadcast(topItems), Seq("it"), "left_semi")
-        .groupBy(col("u")).agg(collect_set(col("it")).as("__excl"))
-      val pred = users.join(seen, Seq("u"), "left")
-        .crossJoin(broadcast(top100Arr))
-        .select(col("u"),
-          RankingMetrics.excludeSeen(col("__arr"), col("__excl")).as("pred"))
-      val gt = test.groupBy(col("u"))
-        .agg(sort_array(collect_set(col("it"))).as("gt"))
-      // third barrier: the per-user (pred, gt) frame is read twice (metric
-      // means + coverage) and is test-user-sized — one short array row per
-      // user
-      val predGt = gt.join(pred, Seq("u"), "left")
-        .withColumn("pred",
-          coalesce(col("pred"), array().cast(pred.schema("pred").dataType)))
-        .localCheckpoint()
+      // k-core subtree. Third barrier: the per-user (pred, gt) frame is
+      // read twice (metric means + coverage) and is test-user-sized — one
+      // short array row per user
+      val predGt = popularityPredGt(split.select(col("u")).distinct(),
+        train, test).localCheckpoint()
       val per = RankingMetrics.perUserMetrics(predGt, "pred", "gt", ks)
       val metricCols = ks.flatMap(k => Seq(s"recall_at_$k", s"precision_at_$k",
         s"ndcg_at_$k", s"hit_rate_at_$k")) ++ Seq("mrr", "map")
@@ -1105,41 +1118,12 @@ object QueriesEval {
         .select(col("vec_id").as("u"), col("embedding"))
       val approx = Similarity.clusterPrunedTopK(requests, catalog, "u",
         "item_id", "embedding", k, nlist = nlist, nprobe = nprobe)
-      val pruneJoins = approx.queryExecution.sparkPlan.collect {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-            if j.leftKeys.exists(
-              _.references.exists(_.name == "centroid_id")) =>
-          j.nodeName
-      }
-      require(pruneJoins.nonEmpty,
-        "c5_serving_ivf: retrieval must score through a centroid_id " +
-          "equi-join (cluster pruning), none found in plan")
-      // exact reference: one catalog scan against the broadcast request
-      // batch; WindowGroupLimit keeps per-partition state at q·k rows
-      val qn = V.normalized(requests, "embedding", "__qv")
-        .select(col("u"), col("__qv"))
-      val cn = V.normalized(catalog, "embedding", "__iv")
-        .select(col("item_id"), col("__iv"))
-      val w = Window.partitionBy(col("u"))
-        .orderBy(col("score").desc, col("item_id"))
-      val exact = Similarity.evalBarrier(cn).crossJoin(broadcast(qn))
-        .withColumn("score", V.vecDotNative(col("__qv"), col("__iv")))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("u"), col("item_id"))
-      // ONE exact-baseline execution (r19, guide §2.4): the old
-      // semi-join-numerator + count-denominator form evaluated `exact` —
-      // the full 1 M-catalog scan × broadcast-request dot + window — in
-      // TWO separate crossJoined subtrees, so the row paid the catalog
-      // scan twice. Both sides emit unique (u, item_id), so one left
-      // join + one aggregate computes n_exact AND n_hits in a single
-      // pass of each arm. n_queries rides the SAME job (a 32-row count
-      // crossJoined like the others) instead of a separate action.
-      exact.join(
-          approx.select(col("query_id").as("u"), col("item_id"))
-            .withColumn("__hit", lit(1)),
-          Seq("u", "item_id"), "left")
-        .agg(count(lit(1)).as("n_exact"), count(col("__hit")).as("n_hits"))
+      requireCentroidJoin(approx, "c5_serving_ivf")
+      // the fold scans the 1 M catalog for the exact side once; n_queries
+      // rides the same job (a 32-row count) instead of a separate action
+      RankingMetrics.recallVsExact(exactCatalogTopK(requests, catalog, k),
+          approx.select(col("query_id").as("u"), col("item_id")),
+          Seq("u", "item_id"))
         .crossJoin(requests.agg(count(lit(1)).as("n_queries")))
         .select(lit(nCat).as("catalog_size"), lit(nlist).as("nlist"),
           lit(nprobe).as("nprobe"), col("n_queries"),
@@ -1200,37 +1184,12 @@ object QueriesEval {
         .select(col("vec_id").as("u"), col("embedding"))
       val approx = Similarity.clusterPrunedTopK(requests, items, "u",
         "item_id", "embedding", k, nlist = nlist, nprobe = nprobe)
-      val pruneJoins = approx.queryExecution.sparkPlan.collect {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-            if j.leftKeys.exists(
-              _.references.exists(_.name == "centroid_id")) =>
-          j.nodeName
-      }
-      require(pruneJoins.nonEmpty,
-        "c5b_serving_ivf_int8: retrieval must score through a " +
-          "centroid_id equi-join (cluster pruning), none found in plan")
+      requireCentroidJoin(approx, "c5b_serving_ivf_int8")
       // exact reference = the FLOAT catalog (ground truth a serving stack
-      // is graded against), same shape as c5: one catalog scan against
-      // the broadcast request batch, WindowGroupLimit-bounded top-k
-      val qn = V.normalized(requests, "embedding", "__qv")
-        .select(col("u"), col("__qv"))
-      val cn = V.normalized(catalog, "embedding", "__iv")
-        .select(col("item_id"), col("__iv"))
-      val w = Window.partitionBy(col("u"))
-        .orderBy(col("score").desc, col("item_id"))
-      val exact = Similarity.evalBarrier(cn).crossJoin(broadcast(qn))
-        .withColumn("score", V.vecDotNative(col("__qv"), col("__iv")))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("u"), col("item_id"))
-      // ONE exact-baseline execution (r19, guide §2.4) — same fold as
-      // c5_serving_ivf: the float-catalog exact scan ran twice under the
-      // old semi-join + count crossJoin shape.
-      exact.join(
-          approx.select(col("query_id").as("u"), col("item_id"))
-            .withColumn("__hit", lit(1)),
-          Seq("u", "item_id"), "left")
-        .agg(count(lit(1)).as("n_exact"), count(col("__hit")).as("n_hits"))
+      // is graded against)
+      RankingMetrics.recallVsExact(exactCatalogTopK(requests, catalog, k),
+          approx.select(col("query_id").as("u"), col("item_id")),
+          Seq("u", "item_id"))
         .crossJoin(requests.agg(count(lit(1)).as("n_queries")))
         .select(lit(nCat).as("catalog_size"), lit(nlist).as("nlist"),
           lit(nprobe).as("nprobe"), col("n_queries"),
@@ -1296,15 +1255,7 @@ object QueriesEval {
         val served = Similarity.servedTopKFromStore(requests, baseStore,
           delta, "u", "vec_id", "embedding", k, cents1, nprobe = nprobe,
           metric = "cosine", excludeSelf = true)
-        val pruneJoins = served.queryExecution.sparkPlan.collect {
-          case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-              if (j.leftKeys ++ j.rightKeys).exists(
-                _.references.exists(_.name == "centroid_id")) =>
-            j.nodeName
-        }
-        require(pruneJoins.nonEmpty,
-          "c5c_ivf_stream_refresh: serving must probe through a " +
-            "centroid_id equi-join over the stored assignment")
+        requireCentroidJoin(served, "c5c_ivf_stream_refresh")
         val prunedScans = served.queryExecution.sparkPlan.collect {
           case f: org.apache.spark.sql.execution.FileSourceScanExec
               if f.partitionFilters.exists(
@@ -1317,15 +1268,9 @@ object QueriesEval {
           catalog.select(col("vec_id"), col("embedding")), "u", "vec_id",
           "embedding", k, "cosine", excludeSelf = true)
           .select(col("query_id").as("u"), col("item_id"))
-        // ONE exact-baseline execution (r19, guide §2.4) — the c5 fold:
-        // the brute-force catalog scan ran twice under the old
-        // semi-join + count crossJoin shape.
-        exact.join(
-            served.select(col("query_id").as("u"), col("item_id"))
-              .withColumn("__hit", lit(1)),
-            Seq("u", "item_id"), "left")
-          .agg(count(lit(1)).as("n_exact"),
-            count(col("__hit")).as("n_hits"))
+        RankingMetrics.recallVsExact(exact,
+            served.select(col("query_id").as("u"), col("item_id")),
+            Seq("u", "item_id"))
           .crossJoin(catalog.agg(count(lit(1)).as("catalog_size")))
           .select(col("catalog_size"), lit(nlist).as("nlist"),
             lit(nprobe).as("nprobe"), lit(k).as("k"), col("n_hits"),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.eval.RankingMetrics
 import graft.functions.Vectors
 import graft.multimodal.Multimodal
 import graft.ops.{Dedup, Relational, Similarity, TextAnalysis}
@@ -126,6 +127,12 @@ object QueriesLlm {
       s"plantedOffset: doc_id must be non-negative, min=${r.get(0)}")
     r.getLong(1) + 1L
   }
+
+  /** One arm's hit count, for a recall row that reports its arms as
+    * columns: pivots the per-arm rows of [[RankingMetrics.recallVsExact]]
+    * (`arm` selects the arm's row). */
+  private def armHits(arm: org.apache.spark.sql.Column) =
+    max(when(arm, col("n_hits")))
 
   /** 3-step BPE oracle, shared by t_bpe_merges (recomputing form) and
     * t_bpe_materialized (checkpointing form) — the two must learn the
@@ -403,21 +410,12 @@ object QueriesLlm {
       def run(cap: Int) = Dedup.minHashNearDups(docs, "doc_id", "text",
         shingleLen = 3, numHashes = 64, bands = 16, threshold = 0.5,
         maxBucketSize = cap).select(col("id1"), col("id2"))
-      // ONE uncapped execution (r19, guide §2.4): the old
-      // semi-join-numerator + count-denominator form evaluated the
-      // uncapped LSH pipeline in TWO separate subtrees (Spark does not
-      // share subtrees across a crossJoin), so the most expensive arm ran
-      // twice per invocation. Both near-dup pipelines emit each pair at
-      // most once (candidates are `.distinct()` before the verify join),
-      // so numerator and denominator fold into one left join + one
-      // aggregate over a single execution of each arm: count(__hit)
-      // counts exactly the semi-join survivors.
-      run(0)
-        .join(run(64).withColumn("__hit", lit(1)), Seq("id1", "id2"), "left")
-        .agg(count(col("__hit")).as("n_kept"),
-          count(lit(1)).as("n_uncapped"))
-        .select(col("n_kept"), col("n_uncapped"),
-          round(col("n_kept").cast("double") / col("n_uncapped"), 4)
+      // both near-dup pipelines emit each pair at most once (candidates
+      // are `.distinct()` before the verify join), as the fold requires;
+      // it runs the uncapped pipeline once
+      RankingMetrics.recallVsExact(run(0), run(64), Seq("id1", "id2"))
+        .select(col("n_hits").as("n_kept"), col("n_exact").as("n_uncapped"),
+          round(col("n_hits").cast("double") / col("n_exact"), 4)
             .as("recall"))
     }, None),
 
@@ -482,19 +480,11 @@ object QueriesLlm {
       def run(cap: Int) = Dedup.simHashNearDups128(docs, "doc_id", "text",
         maxHamming = 16, blockCombos = 2, maxBucketSize = cap)
         .select(col("id1"), col("id2"))
-      // ONE lossless execution (r19, guide §2.4) — same fold as
-      // d_minhash_cap_recall: the old form ran the lossless banding
-      // pipeline (the expensive Σd² candidate join) twice, once under the
-      // semi-join numerator and once under the denominator count. Pair
-      // uniqueness holds (fp-pairs are `.distinct()`, ids map to exactly
-      // one fp group), so one left join + one aggregate computes both.
-      run(0)
-        .join(run(1024).withColumn("__hit", lit(1)), Seq("id1", "id2"),
-          "left")
-        .agg(count(col("__hit")).as("n_kept"),
-          count(lit(1)).as("n_lossless"))
-        .select(col("n_kept"), col("n_lossless"),
-          round(col("n_kept").cast("double") / col("n_lossless"), 4)
+      // pairs are unique (fp-pairs are `.distinct()`, ids map to exactly
+      // one fp group); the fold runs the lossless pipeline once
+      RankingMetrics.recallVsExact(run(0), run(1024), Seq("id1", "id2"))
+        .select(col("n_hits").as("n_kept"), col("n_exact").as("n_lossless"),
+          round(col("n_hits").cast("double") / col("n_exact"), 4)
             .as("recall"))
     }, None),
 
@@ -1008,19 +998,13 @@ object QueriesLlm {
         items8.filter(col("vec_id") < 50), items8,
         "vec_id", "vec_id", "embedding", 5, "cosine", excludeSelf = true)
         .select(col("query_id"), col("item_id"))
-      // ONE exact-baseline execution (r19, guide §2.4) — the c5 fold:
-      // numerator and denominator in one left join + aggregate instead
-      // of two crossJoined subtrees each re-running bruteForceTopK.
       val err = recon.select(
         avg(aggregate(
           zip_with(col("embedding"), col("__qv"),
             (a, b) => abs(a.cast("double") - b)),
           lit(0.0), (acc, x) => acc + x) / size(col("embedding")))
           .as("__mae"))
-      exact.join(approx.withColumn("__hit", lit(1)),
-          Seq("query_id", "item_id"), "left")
-        .agg(count(col("__hit")).as("n_hits"),
-          count(lit(1)).as("n_exact"))
+      RankingMetrics.recallVsExact(exact, approx, Seq("query_id", "item_id"))
         .crossJoin(err)
         .select(col("n_hits"), col("n_exact"),
           round(col("n_hits").cast("double") / col("n_exact"), 4).as("recall"),
@@ -1043,7 +1027,7 @@ object QueriesLlm {
         m = 16, ksub = 64, refineIters = 2)
       val exact = Similarity.bruteForceTopK(e.filter(col("vec_id") < 50), e,
         "vec_id", "vec_id", "embedding", 5, "cosine", excludeSelf = true)
-        .select(col("query_id"), col("item_id")).localCheckpoint()
+        .select(col("query_id"), col("item_id"))
       // codes-only catalog encoded ONCE for both arms (r19, guide §2.4):
       // the adc and refined arms are separate crossJoined subtrees, so
       // each otherwise re-runs the m NearestCentroids encodes per row
@@ -1066,19 +1050,17 @@ object QueriesLlm {
         .select(col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))
         .unionAll(refTop.withColumn("__arm", lit("r")))
-      // one inner join + one aggregate counts both arms' hits (both
-      // sides unique per arm on (query_id, item_id) — the r19 fold law)
-      val hits = exact.join(armed, Seq("query_id", "item_id"))
-        .agg(count(when(col("__arm") === "a", 1)).as("n_adc"),
-          count(when(col("__arm") === "r", 1)).as("n_refined"))
-      val tot = exact.agg(count(lit(1)).as("n_exact"))
-      hits.crossJoin(tot).select(
-        lit(cb.m).as("m"), lit(cb.ksub).as("ksub"), col("n_exact"),
-        round(col("n_adc").cast("double") / col("n_exact"), 4)
-          .as("recall_adc"),
-        round(col("n_refined").cast("double") / col("n_exact"), 4)
-          .as("recall_refined"),
-        round(lit(cb.dim * 4.0 / cb.m), 2).as("compression_x"))
+      RankingMetrics.recallVsExact(exact, armed, Seq("query_id", "item_id"),
+          Seq("__arm"))
+        .agg(max(col("n_exact")).as("n_exact"),
+          armHits(col("__arm") === "a").as("n_adc"),
+          armHits(col("__arm") === "r").as("n_refined"))
+        .select(lit(cb.m).as("m"), lit(cb.ksub).as("ksub"), col("n_exact"),
+          round(col("n_adc").cast("double") / col("n_exact"), 4)
+            .as("recall_adc"),
+          round(col("n_refined").cast("double") / col("n_exact"), 4)
+            .as("recall_refined"),
+          round(lit(cb.dim * 4.0 / cb.m), 2).as("compression_x"))
     }, None),
 
     // --- IVF∘PQ recall (the faiss `IVFx,PQy` composition — the serving
@@ -1094,8 +1076,7 @@ object QueriesLlm {
         m = 16, ksub = 64, refineIters = 2)
       val exact = Similarity.bruteForceTopK(e.filter(col("vec_id") < 50), e,
         "vec_id", "vec_id", "embedding", 5, "cosine", excludeSelf = true)
-        .select(col("query_id"), col("item_id")).localCheckpoint()
-      val tot = exact.agg(count(lit(1)).as("n_exact"))
+        .select(col("query_id"), col("item_id"))
       // (centroids, encoded catalog) built ONCE for all four arms (r19,
       // guide §2.4): every arm otherwise re-seeds centroids and re-runs
       // the m NearestCentroids encodes + assignment over the catalog in
@@ -1128,22 +1109,18 @@ object QueriesLlm {
         .select(col("nprobe"), col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))
         .unionAll(refTop.withColumn("__arm", lit("r")))
-      // one inner join + one grouped aggregate counts every arm's hits
-      // (each arm unique on (query_id, item_id) — the r19 fold law); a
-      // literal nprobe spine keeps a zero-hit arm's row present
-      import s.implicits._
-      val spine = nprobes.toDF("nprobe")
-      val hits = exact.join(armed, Seq("query_id", "item_id"))
+      RankingMetrics.recallVsExact(exact, armed, Seq("query_id", "item_id"),
+          Seq("nprobe", "__arm"))
         .groupBy(col("nprobe"))
-        .agg(count(when(col("__arm") === "a", 1)).as("n_ivfpq"),
-          count(when(col("__arm") === "r", 1)).as("n_refined"))
-      spine.join(hits, Seq("nprobe"), "left").crossJoin(tot).select(
-        lit(cb.m).as("m"), lit(cb.ksub).as("ksub"),
-        lit(16).as("nlist"), col("nprobe"), col("n_exact"),
-        round(coalesce(col("n_ivfpq"), lit(0L)).cast("double") /
-          col("n_exact"), 4).as("recall_ivfpq"),
-        round(coalesce(col("n_refined"), lit(0L)).cast("double") /
-          col("n_exact"), 4).as("recall_refined"))
+        .agg(max(col("n_exact")).as("n_exact"),
+          armHits(col("__arm") === "a").as("n_ivfpq"),
+          armHits(col("__arm") === "r").as("n_refined"))
+        .select(lit(cb.m).as("m"), lit(cb.ksub).as("ksub"),
+          lit(16).as("nlist"), col("nprobe"), col("n_exact"),
+          round(col("n_ivfpq").cast("double") / col("n_exact"), 4)
+            .as("recall_ivfpq"),
+          round(col("n_refined").cast("double") / col("n_exact"), 4)
+            .as("recall_refined"))
         .orderBy(col("nprobe"))
     }, None),
 
@@ -1163,8 +1140,7 @@ object QueriesLlm {
         m = 16, ksub = 64, nlist = 16)
       val exact = Similarity.bruteForceTopK(e.filter(col("vec_id") < 50), e,
         "vec_id", "vec_id", "embedding", 5, "cosine", excludeSelf = true)
-        .select(col("query_id"), col("item_id")).localCheckpoint()
-      val tot = exact.agg(count(lit(1)).as("n_exact"))
+        .select(col("query_id"), col("item_id"))
       // residual-encoded catalog built ONCE for all four arms (r19,
       // guide §2.4): the assignment kernel + m residual encodes per row
       // otherwise re-ran per arm in its own crossJoined subtree
@@ -1189,20 +1165,18 @@ object QueriesLlm {
         .select(col("nprobe"), col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))
         .unionAll(refTop.withColumn("__arm", lit("r")))
-      import s.implicits._
-      val spine = nprobes.toDF("nprobe")
-      val hits = exact.join(armed, Seq("query_id", "item_id"))
+      RankingMetrics.recallVsExact(exact, armed, Seq("query_id", "item_id"),
+          Seq("nprobe", "__arm"))
         .groupBy(col("nprobe"))
-        .agg(count(when(col("__arm") === "a", 1)).as("n_res"),
-          count(when(col("__arm") === "r", 1)).as("n_refined"))
-      spine.join(hits, Seq("nprobe"), "left").crossJoin(tot).select(
-        lit(idx.cb.m).as("m"), lit(idx.cb.ksub).as("ksub"),
-        lit(idx.nlist).as("nlist"), col("nprobe"),
-        col("n_exact"),
-        round(coalesce(col("n_res"), lit(0L)).cast("double") /
-          col("n_exact"), 4).as("recall_res_adc"),
-        round(coalesce(col("n_refined"), lit(0L)).cast("double") /
-          col("n_exact"), 4).as("recall_res_refined"))
+        .agg(max(col("n_exact")).as("n_exact"),
+          armHits(col("__arm") === "a").as("n_res"),
+          armHits(col("__arm") === "r").as("n_refined"))
+        .select(lit(idx.cb.m).as("m"), lit(idx.cb.ksub).as("ksub"),
+          lit(idx.nlist).as("nlist"), col("nprobe"), col("n_exact"),
+          round(col("n_res").cast("double") / col("n_exact"), 4)
+            .as("recall_res_adc"),
+          round(col("n_refined").cast("double") / col("n_exact"), 4)
+            .as("recall_res_refined"))
         .orderBy(col("nprobe"))
     }, None),
 
@@ -1230,7 +1204,7 @@ object QueriesLlm {
       val queries = e.filter(col("vec_id") < 50)
       val exact = Similarity.bruteForceTopK(queries, e,
         "vec_id", "vec_id", "embedding", k, "cosine", excludeSelf = true)
-        .select(col("query_id"), col("item_id")).localCheckpoint()
+        .select(col("query_id"), col("item_id"))
       // Codebook trainings memoized per JVM (VERDICT r18 #6: the gate
       // retrained BOTH codebooks every invocation — 18.6 s constant, the
       // second-heaviest registry row — but the MoG corpus and both
@@ -1251,7 +1225,6 @@ object QueriesLlm {
             t
         }
       }
-      val tot = exact.agg(count(lit(1)).as("n_exact"))
       // shared catalogs per arm FAMILY (r19, guide §2.4): the raw arms
       // otherwise each re-seed + 2-Lloyd-refine centroids and re-encode
       // the corpus; the residual arms each re-assign + residual-encode it
@@ -1289,19 +1262,16 @@ object QueriesLlm {
         .select(col("__fam"), col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))
         .unionAll(refTop.withColumn("__arm", lit("r")))
-      // one inner join + ONE global aggregate counts all four arms (each
-      // arm unique on (query_id, item_id) — the r19 fold law)
-      val hits = exact.join(armed, Seq("query_id", "item_id"))
-        .agg(
-          count(when(col("__fam") === "raw" && col("__arm") === "a", 1))
-            .as("n_raw_adc"),
-          count(when(col("__fam") === "res" && col("__arm") === "a", 1))
-            .as("n_res_adc"),
-          count(when(col("__fam") === "raw" && col("__arm") === "r", 1))
-            .as("n_raw_ref"),
-          count(when(col("__fam") === "res" && col("__arm") === "r", 1))
-            .as("n_res_ref"))
-      hits.crossJoin(tot).select(
+      def hitsOf(fam: String, arm: String) =
+        armHits(col("__fam") === fam && col("__arm") === arm)
+      RankingMetrics.recallVsExact(exact, armed, Seq("query_id", "item_id"),
+          Seq("__fam", "__arm"))
+        .agg(max(col("n_exact")).as("n_exact"),
+          hitsOf("raw", "a").as("n_raw_adc"),
+          hitsOf("res", "a").as("n_res_adc"),
+          hitsOf("raw", "r").as("n_raw_ref"),
+          hitsOf("res", "r").as("n_res_ref"))
+        .select(
           lit(16).as("m"), lit(64).as("ksub"), lit(nlist).as("nlist"),
           lit(nprobe).as("nprobe"), lit(lloyd).as("lloyd"),
           col("n_exact"),
@@ -1933,23 +1903,19 @@ object QueriesLlm {
       // refined >= seeded on a planted-cluster corpus.
       val e = SparkEntry.T(s, d, "embeddings")
       val qs = e.filter(col("vec_id") < 50)
-      // exact baseline checkpointed (r19, guide §2.4): it feeds THREE
-      // subtrees (two semi-join numerators + the denominator count), each
-      // of which re-ran the brute-force scan — the r14 rows' device.
       val exact = Similarity.bruteForceTopK(qs, e, "vec_id", "vec_id",
         "embedding", 5, "cosine", excludeSelf = true)
-        .select(col("query_id"), col("item_id")).localCheckpoint()
-      def recallOf(refineIters: Int, hitsName: String, recallName: String) = {
-        val approx = Similarity.clusterPrunedTopK(qs, e, "vec_id", "vec_id",
-          "embedding", 5, nlist = 16, nprobe = 4, refineIters = refineIters,
-          excludeSelf = true)
-          .select(col("query_id"), col("item_id"))
-        exact.join(approx, Seq("query_id", "item_id"), "left_semi")
-          .agg(count(lit(1)).as(hitsName))
-      }
-      recallOf(0, "n_hits", "recall")
-        .crossJoin(recallOf(2, "n_hits_refined", "recall_refined"))
-        .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
+        .select(col("query_id"), col("item_id"))
+      def approx(refineIters: Int) = Similarity.clusterPrunedTopK(qs, e,
+        "vec_id", "vec_id", "embedding", 5, nlist = 16, nprobe = 4,
+        refineIters = refineIters, excludeSelf = true)
+        .select(col("query_id"), col("item_id"),
+          lit(refineIters).as("__refine"))
+      RankingMetrics.recallVsExact(exact, approx(0).unionAll(approx(2)),
+          Seq("query_id", "item_id"), Seq("__refine"))
+        .agg(armHits(col("__refine") === 0).as("n_hits"),
+          armHits(col("__refine") === 2).as("n_hits_refined"),
+          max(col("n_exact")).as("n_exact"))
         .withColumn("recall", col("n_hits") / col("n_exact"))
         .withColumn("recall_refined", col("n_hits_refined") / col("n_exact"))
     }, None),
@@ -1965,21 +1931,19 @@ object QueriesLlm {
     ("ann_mllib_lsh_recall", (s, d) => {
       val e = SparkEntry.T(s, d, "embeddings")
       val qs = e.filter(col("vec_id") < 50)
-      // exact baseline checkpointed (r19, guide §2.4): three consumers,
-      // same rationale as ann_cluster_recall above.
       val exact = Similarity.bruteForceTopK(qs, e, "vec_id", "vec_id",
         "embedding", 5, "cosine", excludeSelf = true)
-        .select(col("query_id"), col("item_id")).localCheckpoint()
-      def recallOf(bandSize: Int, cap: Int, hitsName: String) = {
-        val approx = Similarity.lshTopK(qs, e, "vec_id", "vec_id",
-          "embedding", 5, bandSize = bandSize, maxBucketSize = cap)
-          .select(col("query_id"), col("item_id"))
-        exact.join(approx, Seq("query_id", "item_id"), "left_semi")
-          .agg(count(lit(1)).as(hitsName))
-      }
-      recallOf(1, Int.MaxValue, "n_hits")
-        .crossJoin(recallOf(2, 1024, "n_hits_bounded"))
-        .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
+        .select(col("query_id"), col("item_id"))
+      def approx(bandSize: Int, cap: Int) = Similarity.lshTopK(qs, e,
+        "vec_id", "vec_id", "embedding", 5, bandSize = bandSize,
+        maxBucketSize = cap)
+        .select(col("query_id"), col("item_id"), lit(bandSize).as("__band"))
+      RankingMetrics.recallVsExact(exact,
+          approx(1, Int.MaxValue).unionAll(approx(2, 1024)),
+          Seq("query_id", "item_id"), Seq("__band"))
+        .agg(armHits(col("__band") === 1).as("n_hits"),
+          armHits(col("__band") === 2).as("n_hits_bounded"),
+          max(col("n_exact")).as("n_exact"))
         .withColumn("recall", col("n_hits") / col("n_exact"))
         .withColumn("recall_bounded", col("n_hits_bounded") / col("n_exact"))
     }, None),
@@ -2126,9 +2090,14 @@ object QueriesLlm {
       // left join + aggregate — the old two-subtree form ran the banding
       // pipeline twice. `want` is unique on (id1, id2) by construction
       // (one planted copy per eligible doc), so the join fans nothing out.
+      // The fold runs over the FOUND pairs, not through
+      // RankingMetrics.recallVsExact, because the same pass also reports
+      // every found pair (n_pairs, max hamming): the recall fold would
+      // need the pair pipeline a second time for those.
       val nPlanted = eligible.agg(count(lit(1)).as("n_planted"))
-      pairs.join(want.withColumn("__hit", lit(1)), Seq("id1", "id2"), "left")
-        .agg(count(col("__hit")).as("n_recovered"),
+      pairs.join(want.withColumn("__planted", lit(1)), Seq("id1", "id2"),
+          "left")
+        .agg(count(col("__planted")).as("n_recovered"),
           count(lit(1)).as("n_pairs"),
           max(col("hamming")).as("max_found_hamming"))
         .crossJoin(nPlanted).select(
@@ -2183,10 +2152,12 @@ object QueriesLlm {
         .select(col("doc_id").as("id1"),
           (col("doc_id") + off).as("id2"))
       // ONE pairs execution (r19, guide §2.4) — the m_phash fold: the CDC
-      // banding + verify pipeline ran twice under the old two-subtree form.
+      // banding + verify pipeline ran twice under the old two-subtree form,
+      // and found-pair totals keep it off the recall fold there too.
       val nPlanted = eligible.agg(count(lit(1)).as("n_planted"))
-      pairs.join(want.withColumn("__hit", lit(1)), Seq("id1", "id2"), "left")
-        .agg(count(col("__hit")).as("n_recovered"),
+      pairs.join(want.withColumn("__planted", lit(1)), Seq("id1", "id2"),
+          "left")
+        .agg(count(col("__planted")).as("n_recovered"),
           count(lit(1)).as("n_pairs"),
           round(min(col("jaccard")), 4).as("min_jaccard"))
         .crossJoin(nPlanted).select(

@@ -68,25 +68,9 @@ object SparkEntry {
     rowCountCache.computeIfAbsent(s"$dir/$name.parquet",
       p => java.lang.Long.valueOf(s.read.parquet(p).count()))
 
-  /** Events table loader. The driver's events.parquet carries
-    * TIMESTAMP(NANOS) which Spark's vectorized parquet reader rejects;
-    * read nanos as long (legacy conf) and convert losslessly to a
-    * microsecond TimestampType column (the testdata has no sub-µs values). */
-  private[graft] def E(s: SparkSession, dir: String): DataFrame = {
-    try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      // TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet reads as NTZ;
-      // normalize to session-local (UTC) TIMESTAMP so downstream
-      // cast-to-long / unix_micros keep resolving.
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
-  }
+  /** Events table loader: [[eventsRange]] with no time bounds. */
+  private[graft] def E(s: SparkSession, dir: String): DataFrame =
+    eventsRange(s, dir, None, None)
 
   /** Drop catalog tables AND their stale warehouse directories — across
     * JVMs the in-memory catalog is gone but the directories remain, and
@@ -108,9 +92,18 @@ object SparkEntry {
       if (dir.exists) rm(dir)
     }
 
-  /** [[E]] with a time-range predicate applied on the RAW nanos long,
-    * BEFORE the timestamp conversion: a filter on the derived µs column
-    * can never reach the parquet scan (the conversion expression blocks
+  /** Events table loader with an optional time range. The testdata's
+    * events.parquet has carried three `ts` encodings, all normalized to a
+    * session-local (UTC) TIMESTAMP column: TIMESTAMP(NANOS), which Spark's
+    * vectorized parquet reader rejects, is read as a long (legacy conf)
+    * and converted losslessly to microseconds (the testdata has no sub-µs
+    * values); TIMESTAMP(MICROS, isAdjustedToUTC=false) reads as NTZ and
+    * is cast so downstream cast-to-long / unix_micros keep resolving; an
+    * LTZ column passes through.
+    *
+    * The range predicate applies on the RAW nanos long, BEFORE the
+    * timestamp conversion: a filter on the derived µs column can never
+    * reach the parquet scan (the conversion expression blocks
     * pushdown), so at 100 TB a time-sliced events job would full-scan.
     * Filtering the underlying long pushes as an ordinary range predicate
     * (and prunes row groups via min/max stats); the conversion then runs
@@ -853,8 +846,8 @@ object SparkEntry {
              |CAST(length(text) AS INTEGER) AS text_len
              |FROM documents ORDER BY doc_id""".stripMargin)),
 
-    // --- F24: Morton/Z-value computation (Layout.zValue2) — the cluster
-    //     key behind zorderWrite, oracle-proven bit-exact against the same
+    // --- F24: Morton/Z-value computation (Layout.zValue2) — a Z-order
+    //     cluster key, oracle-proven bit-exact against the same
     //     parallel-prefix bit spread written in DuckDB integer arithmetic.
     //     Dimensions here: p_size (small int) × a 16-bit key bucket. ---
     ("f_zorder", (s, d) =>
@@ -1182,8 +1175,7 @@ object SparkEntry {
     //     (globalRowNumber), then apply ntile's published bucket rule
     //     arithmetically — the first n%k buckets get ⌊n/k⌋+1 rows, the
     //     rest ⌊n/k⌋ (degenerates correctly to one row per bucket when
-    //     n < k). Relational.binByQuantiles remains the one-scan
-    //     approx-boundary variant. ---
+    //     n < k). ---
     ("p_quantile_bin", (s, d) => {
       val ranked = Relational.globalRowNumber(
         T(s, d, "orders").select(col("o_orderkey"), col("o_totalprice")),

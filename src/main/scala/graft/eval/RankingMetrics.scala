@@ -1,6 +1,7 @@
 package graft.eval
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Ranking-metric layer (SURVEY §2.10 E1–E10) — the reference's
@@ -135,22 +136,40 @@ object RankingMetrics {
       .agg((countDistinct(col("__item")).cast("double") / numItems)
         .as("coverage"))
 
-  /** E10/R10: popularity-weighted novelty — mean −log2(pop/total + 1e-10)
-    * over recommended top-K items (ref `metrics.py:449-478`; epsilon
-    * documented in FIXTURES §3). `popularity` = (itemCol, cnt). Items
-    * absent from the popularity table default to count 1, matching
-    * `item_popularity.get(item, 1)` at `metrics.py:474` (NOT 0, which
-    * would spike novelty to −log2(1e-10) ≈ 33.2 for unseen items). */
-  def noveltyAtK(recs: DataFrame, predCol: String, k: Int,
-                 popularity: DataFrame, itemCol: String, cntCol: String,
-                 total: Column): DataFrame = {
-    val exploded = recs.select(col("*"),
-      explode(slice(col(predCol), 1, k)).as(itemCol + "__rec"))
-    exploded
-      .join(broadcast(popularity),
-        exploded(itemCol + "__rec") === popularity(itemCol), "left")
-      .withColumn("__p",
-        coalesce(col(cntCol).cast("double"), lit(1.0)) / total)
-      .agg(avg(-log2(col("__p") + 1e-10)).as("novelty"))
+  /** Recall of approximate answer sets against an exact one — the
+    * reference's one evaluation rule for ANN retrieval and near-dup
+    * recall (SURVEY §2.9/§2.10): count the exact answers the approximate
+    * path also returns. `approx` may hold several arms, told apart by
+    * `armCols` (none = one arm); `exact` must be unique on `keys`, and
+    * `approx` unique on `keys` within each arm. Returns one row per arm
+    * that answered: `armCols…, n_exact, n_hits`, with 0 hits for an arm
+    * none of whose answers is exact (an empty `approx` gives one row with
+    * null arms and 0 hits).
+    *
+    * The exact set is read ONCE, with no checkpoint, and nothing is
+    * joined: the exact answers and every arm's answers are stacked in one
+    * union, and a max over each key's rows tells an arm's answer whether
+    * its key is exact. One grouped aggregate then counts the exact rows
+    * and each arm's hits; a last one-row aggregate puts `n_exact` beside
+    * each arm. An arm none of whose answers is exact keeps its row, with
+    * 0 hits, because its answers are in the union. */
+  def recallVsExact(exact: DataFrame, approx: DataFrame, keys: Seq[String],
+                    armCols: Seq[String] = Nil): DataFrame = {
+    val arms = armCols.map(col)
+    exact.select(keys.map(col) ++ armCols.map(c => lit(null).as(c)) :+
+        lit(1).as("__exact"): _*)
+      .union(approx.select((keys ++ armCols).map(col) :+
+        lit(null).cast("int").as("__exact"): _*))
+      .withColumn("__hit",
+        max(col("__exact")).over(Window.partitionBy(keys.map(col): _*)))
+      .groupBy(col("__exact").isNull.as("__answer") +: arms: _*)
+      .agg(count(col("__exact")).as("__n_exact"),
+        count(col("__hit")).as("n_hits"))
+      .agg(coalesce(sum(col("__n_exact")), lit(0L)).as("n_exact"),
+        collect_list(when(col("__answer"),
+          struct(arms :+ col("n_hits"): _*))).as("__arms"))
+      .select(col("n_exact"), explode_outer(col("__arms")).as("__a"))
+      .select(armCols.map(c => col("__a." + c)) ++ Seq(col("n_exact"),
+        coalesce(col("__a.n_hits"), lit(0L)).as("n_hits")): _*)
   }
 }

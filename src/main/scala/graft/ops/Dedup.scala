@@ -88,18 +88,6 @@ object Dedup {
           x => concat_ws(" ", (0 until n).map(j => x.getField(s"$j")): _*)))
     }
 
-  /** Character n-gram shingles (distinct). Same per-element-lambda trap as
-    * [[wordShingles]]: split to a char array once, zip shifted slices. */
-  def charShingles(c: Column, n: Int): Column = {
-    val s = normalizeText(c)
-    val chars = split(s, "")
-    val win = greatest(size(chars) - n + 1, lit(0))
-    val slices = (0 until n).map(j => slice(chars, lit(j + 1), win))
-    when(length(s) <= n, array(s))
-      .otherwise(array_distinct(transform(arrays_zip(slices: _*),
-        x => concat_ws("", (0 until n).map(j => x.getField(s"$j")): _*))))
-  }
-
   /** The modulus `p` of the MinHash permutations
     * `h_j(x) = (a_j * xxhash64(x) + b_j) mod p`; signature_j = min over a
     * row's shingles, deterministic per seed ([[minHashSignatureNative]]). */

@@ -30,11 +30,6 @@ object Features {
   def expDecay(ageHours: Column, halfLifeHours: Double = 168.0): Column =
     exp(-ageHours / halfLifeHours)
 
-  /** F21: list diversity ratio `|distinct| / max(|list|, 1)`
-    * (`feature_engineering.py:311-315`). */
-  def diversityRatio(arr: Column): Column =
-    size(array_distinct(arr)).cast("double") / greatest(size(arr), lit(1))
-
   /** A6/T5: multi-horizon trailing-window aggregation in one pass.
     *
     * For each (suffix → seconds-back) horizon, emits per entity:

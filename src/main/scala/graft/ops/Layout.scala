@@ -63,52 +63,6 @@ object Layout {
     spread(a).bitwiseOR(shiftleft(spread(b), 1))
   }
 
-  /** Z-order-clustered parquet write: range-partition + locally sort by
-    * [[zValue2]] over the two cluster columns, drop the scratch key,
-    * write `nFiles` outputs. Each file then covers a compact rectangle of
-    * the (a, b) space, so min/max footer stats prune scans filtering on
-    * either column — the layout lever for a 100 TB table queried along
-    * two independent dimensions (e.g. documents by (lang-bucket,
-    * length-bucket), events by (user-bucket, day)). */
-  def zorderWrite(df: DataFrame, aCol: String, bCol: String, path: String,
-                  nFiles: Int): Unit =
-    df.withColumn("__z", zValue2(col(aCol), col(bCol)))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-
-  /** Per-file layout statistics: row count and min/max of the given
-    * columns for every file in a parquet directory — the manifest a
-    * data-skipping table format (Delta/Iceberg-style) maintains, computed
-    * here from the data in one scan. Two uses: (a) quantify a layout's
-    * pruning power (what fraction of files a predicate could skip — how
-    * LayoutSpec grades [[zorderWrite]]), (b) audit ingest output for
-    * accidental full-domain files that defeat min/max skipping. One scan,
-    * one shuffle on file name (#files rows). */
-  def statsManifest(spark: org.apache.spark.sql.SparkSession, path: String,
-                    cols: Seq[String]): DataFrame = {
-    val df = spark.read.parquet(path)
-    df.groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("rows"),
-        cols.flatMap(c =>
-          Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))): _*)
-  }
-
-  /** Fraction of files a min/max-skippable equality/range predicate on
-    * `c` ∈ [lo, hi] can prune, given a [[statsManifest]] frame — the
-    * number a layout change (sort, Z-order, partition) should move. */
-  def pruneFraction(manifest: DataFrame, c: String,
-                    lo: Column, hi: Column): Double = {
-    val total = manifest.count()
-    if (total == 0L) 0.0
-    else {
-      val hit = manifest
-        .filter(col(s"max_$c") >= lo && col(s"min_$c") <= hi).count()
-      (total - hit).toDouble / total
-    }
-  }
-
   /** Two-phase salted aggregation for skewed keys: phase 1 pre-aggregates
     * on (key, salt) so a hot key spreads over `saltBuckets` reducers; phase
     * 2 merges the partials per key. Exactly the same sums/counts as a

@@ -398,28 +398,6 @@ object Relational {
   private[graft] def rateThreshold(r: Double): String =
     f"${math.min((r * 4294967296.0).toLong, 4294967295L)}%08x"
 
-  /** Quantile binning at scale: the `ntile`-free path. Exact global ntile
-    * needs a single-partition sort over the whole table (`p_quantile_bin`
-    * uses it where exactness is the point); this computes approximate
-    * bin BOUNDARIES in one pass (`approx_percentile`, t-digest,
-    * error ≤ `accuracy⁻¹` quantile mass) and assigns bins with a per-row
-    * broadcast lookup — no global sort, no shuffle of the data, linear at
-    * any scale. Bins are 1..nBins, boundary values go to the lower bin
-    * (assignment is `1 + #(boundaries < v)`). */
-  def binByQuantiles(df: DataFrame, valCol: String, nBins: Int,
-                     accuracy: Int = 10000): DataFrame = {
-    require(nBins >= 2, "need at least two bins")
-    val probs = (1 until nBins).map(_.toDouble / nBins)
-    val bounds = df.agg(
-      expr(s"approx_percentile($valCol, array(${probs.mkString(",")}), $accuracy)")
-        .as("__bs"))
-    df.crossJoin(broadcast(bounds))
-      .withColumn("bin",
-        aggregate(col("__bs"), lit(0),
-          (acc, b) => acc + when(col(valCol) > b, 1).otherwise(0)) + 1)
-      .drop("__bs")
-  }
-
   /** Numeric band self-join: all unordered pairs with |vA − vB| ≤ delta,
     * WITHOUT the O(n²) theta-join a naive `abs(a.v - b.v) <= delta`
     * condition plans (BroadcastNestedLoop/cartesian — the classic

@@ -302,8 +302,10 @@ object TextAnalysis {
     * fixed k ≈ 3 a registry query uses, hopeless at a tokenizer's
     * k = 30 000. Here each iteration's merged corpus is
     * eagerly `localCheckpoint`ed (lineage cut, state held as executor
-    * blocks; the k−1 generation is unpersisted as soon as generation k
-    * is materialized, so at most TWO corpus copies are ever live), and
+    * blocks; the k−1 generation is released through
+    * `ColumnBridge.unpersistCheckpoint` as soon as generation k is
+    * materialized, and the last one before returning, so at most TWO
+    * corpus copies are ever live and none outlives the call), and
     * the best pair is a 1-row sort-limit collected to the driver (the
     * centroid-table bound) and folded into the replace as a literal —
     * same counts, same tiebreak, same greedy merge, spec-pinned equal to
@@ -352,12 +354,13 @@ object TextAnalysis {
               lit(" " + l + "  " + r + " "),
               lit(" " + l + "\u0001" + r + " ")).as("__st"))
             .localCheckpoint()
-          prev.unpersist()
+          // generation 0 is the caller's lazy input: never release it
+          if (step > 1) ColumnBridge.unpersistCheckpoint(prev)
           steps += ((step.toLong, l, r, cnt))
           step += 1
       }
     }
-    state.unpersist()
+    if (step > 1) ColumnBridge.unpersistCheckpoint(state)
     steps.toSeq.toDF("step", "l", "r", "cnt")
   }
 

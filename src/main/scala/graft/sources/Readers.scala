@@ -11,8 +11,6 @@ import org.apache.spark.sql.types._
   *  - S2/S3 parquet sink/scan (ref `scripts/train_movielens.py:180-182`,
   *    `scripts/evaluate_model.py:116-118`)
   *  - S4  timestamp-field parquet source (ref `src/features/feature_definitions.py:38-43`)
-  *  - S7  request-time columns (ref `src/features/feature_definitions.py:259-272`)
-  *  - S11 JSON sink (ref `scripts/evaluate_model.py:334-346`)
   *
   * All readers return lazy DataFrames; Catalyst handles pushdown/pruning.
   */
@@ -90,16 +88,5 @@ object Readers {
       df.withColumn(colName,
         when(col("genres").contains(g), 1).otherwise(0))
     }
-  }
-
-  /** S11: JSON sink (single file like the reference's results dump). */
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").json(path)
-
-  /** S7: request-time feature columns — a one-row frame of request-scoped
-    * literals joined at query time (ref `feature_definitions.py:259-272`). */
-  def requestSource(spark: SparkSession, values: Map[String, Any]): DataFrame = {
-    val cols = values.toSeq.sortBy(_._1).map { case (k, v) => lit(v).as(k) }
-    spark.range(1).select(cols: _*)
   }
 }

@@ -32,25 +32,6 @@ class DedupTextSpec extends AnyFunSuite {
     assert(sh === Seq("a b c", "b c d"))
   }
 
-  test("char shingles golden: distinct 3-grams of normalized text") {
-    val df = Seq("abcabc").toDF("t")
-    val sh = df.select(Dedup.charShingles(col("t"), 3)).head().getSeq[String](0)
-    assert(sh === Seq("abc", "bca", "cab")) // distinct, first-occurrence order
-    val short = Seq("ab").toDF("t")
-    assert(short.select(Dedup.charShingles(col("t"), 3))
-      .head().getSeq[String](0) === Seq("ab"))
-  }
-
-  test("diversity ratio golden (F21, feature_engineering.py:311-315)") {
-    import graft.ops.Features
-    val df = Seq(
-      (Seq("a", "b", "a", "c")), (Seq.empty[String])).toDF("arr")
-    val got = df.select(Features.diversityRatio(col("arr"))).as[Double]
-      .collect().toSeq
-    assert(got.head === 0.75) // 3 distinct of 4
-    assert(got(1) === 0.0)    // empty list → 0/max(0,1)
-  }
-
   test("minhash LSH finds planted near-duplicates (recall vs exact jaccard)") {
     val exact = Dedup.tokenJaccardPairs(docs, "doc_id", "text", 0.7)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
@@ -1336,6 +1317,18 @@ class DedupTextSpec extends AnyFunSuite {
           s"trial=$trial tableSize=${table.size}")
       }
     }
+  }
+
+  test("bpeMergesMaterialized releases every checkpointed generation") {
+    val sc = spark.sparkContext
+    val docs = Seq("a b c d e f g h", "a b c d x y", "b c d e q r")
+      .toDF("text")
+    val before = sc.getPersistentRDDs.keySet
+    val table = TextAnalysis.bpeMergesMaterialized(docs, "text", 5)
+    assert(table.count() === 5)
+    val pinned = sc.getPersistentRDDs.keySet -- before
+    assert(pinned.isEmpty,
+      s"merge generations still pinned after the call: ${pinned.toSeq.sorted}")
   }
 
   test("bpeEncodeIds: deterministic vocab ids (count desc, token asc -> " +

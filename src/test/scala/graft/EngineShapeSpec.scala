@@ -126,17 +126,8 @@ class EngineShapeSpec extends AnyFunSuite {
         "stream form of dedupPassages; crash-recovery spec",
       "StreamingJobs.ivfIndexedAppendStream" ->
         "stream form of assignClusters; parity and rebuild spec",
-      // no registry row yet: kept until their specs go with them
-      "StreamingJobs.termCountStream" -> pending,
-      "RankingMetrics.noveltyAtK" -> pending,
-      "Features.diversityRatio" -> pending,
-      "Readers.writeJson" -> pending,
-      "Readers.requestSource" -> pending,
-      "Relational.binByQuantiles" -> pending,
-      "Dedup.charShingles" -> pending,
-      "Layout.zorderWrite" -> pending,
-      "Layout.statsManifest" -> pending,
-      "Layout.pruneFraction" -> pending)
+      // no registry row yet: kept until its spec goes with it
+      "StreamingJobs.termCountStream" -> pending)
   }
 
   /** Public defs of the objects under `ops/`, `functions/` (not the
@@ -250,6 +241,66 @@ class EngineShapeSpec extends AnyFunSuite {
         p.getFileName.toString
     }
     assert(sites === Seq("GraftSession.scala"))
+  }
+
+  /** `src/main` sources with comments blanked (string literals kept). */
+  private def mainCode: Seq[(Path, String)] =
+    sources.map { case (p, text) => p -> lex(text).code }
+
+  test("recall is folded only by RankingMetrics.recallVsExact: no " +
+    "__hit marker elsewhere") {
+    val fold = operatorDefs.filter(d =>
+      d.owner == "RankingMetrics" && d.name == "recallVsExact")
+    val outside = mainCode.flatMap { case (p, code) =>
+      code.split("\n", -1).zipWithIndex.collect {
+        case (l, i) if l.contains("\"__hit\"") &&
+            !fold.exists(d => d.file == p && d.lines.contains(i)) =>
+          s"$p:${i + 1}"
+      }
+    }
+    assert(outside.isEmpty, "recall folded by hand instead of through " +
+      s"RankingMetrics.recallVsExact: ${outside.mkString(", ")}")
+    assert(fold.size === 1, "RankingMetrics.recallVsExact not found")
+  }
+
+  test("no exact baseline is localCheckpointed") {
+    // a `val exact… =` statement runs to the next line indented no deeper
+    val valRx = """^(\s*)val\s+exact\w*\s*=""".r
+    def indent(l: String) = l.length - l.dropWhile(_ == ' ').length
+    val checkpointed = mainCode.flatMap { case (p, code) =>
+      val lines = code.split("\n", -1)
+      lines.indices.flatMap { i =>
+        valRx.findPrefixMatchOf(lines(i)).filter { m =>
+          val end = ((i + 1) until lines.length).find(j =>
+            lines(j).trim.nonEmpty && indent(lines(j)) <= m.group(1).length)
+            .getOrElse(lines.length)
+          (i until end).exists(j => lines(j).contains("localCheckpoint"))
+        }.map(_ => s"$p:${i + 1}")
+      }
+    }
+    assert(checkpointed.isEmpty, "an exact baseline read by the recall " +
+      "fold needs no checkpoint (the fold reads it once): " +
+      checkpointed.mkString(", "))
+  }
+
+  test("one plan check for the centroid_id pruning join") {
+    val collectRx = """sparkPlan\s*\.\s*collect\s*\{""".r
+    val checks = mainCode.flatMap { case (p, code) =>
+      collectRx.findAllMatchIn(code).map { m =>
+        var depth = 1; var j = m.end
+        while (j < code.length && depth > 0) {
+          if (code(j) == '{') depth += 1
+          else if (code(j) == '}') depth -= 1
+          j += 1
+        }
+        (p, lineOf(code, m.start), code.substring(m.end, j))
+      }.collect {
+        case (p, line, body) if body.contains("BaseJoinExec") &&
+            body.contains("centroid_id") => s"$p:$line"
+      }
+    }
+    assert(checks.size === 1, "the centroid_id join REQUIRE should be one " +
+      s"helper, found ${checks.size}: ${checks.mkString(", ")}")
   }
 
   private def similaritySource: String = new String(

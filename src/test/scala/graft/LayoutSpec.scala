@@ -96,63 +96,6 @@ class LayoutSpec extends AnyFunSuite {
     assert(rows === Seq(0L, 1L, 2L, 39L, 4294967295L))
   }
 
-  test("zorderWrite clusters BOTH dimensions; linear sort only its own") {
-    // 64×64 grid: x = id % 64, y = id / 64. A layout's pruning power on a
-    // dimension is how narrow each file's min/max span of it is — that is
-    // exactly what parquet row-group skipping uses. Linear x-sort leaves
-    // every file spanning the full y domain; Z-order gives each of the 16
-    // files a compact rectangle, so BOTH spans shrink.
-    val grid = spark.range(4096)
-      .select((col("id") % 64).as("x"),
-        (col("id") / 64).cast("long").as("y"))
-    val zDir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    val linDir = java.nio.file.Files.createTempDirectory("graft-linear").toString
-    Layout.zorderWrite(grid, "x", "y", zDir, nFiles = 16)
-    grid.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
-      .write.mode("overwrite").parquet(linDir)
-    def avgSpan(dir: String, dim: String): Double = {
-      val spans = spark.read.parquet(dir)
-        .groupBy(input_file_name().as("f"))
-        .agg((max(col(dim)) - min(col(dim))).as("span"))
-        .select(avg(col("span"))).as[Double].head()
-      spans
-    }
-    val zx = avgSpan(zDir, "x"); val zy = avgSpan(zDir, "y")
-    val lx = avgSpan(linDir, "x"); val ly = avgSpan(linDir, "y")
-    // linear: x tightly clustered, y spans ~the whole domain per file
-    assert(lx <= 8.0, s"linear x span $lx")
-    assert(ly >= 48.0, s"linear y span $ly")
-    // z-order: both dims bounded well under the 63-wide domain
-    assert(zx <= 24.0, s"zorder x span $zx")
-    assert(zy <= 24.0, s"zorder y span $zy")
-    // round-trip: layout never changes content
-    assert(spark.read.parquet(zDir).as[(Long, Long)].collect().toSet ===
-      grid.as[(Long, Long)].collect().toSet)
-  }
-
-  test("statsManifest + pruneFraction: z-order beats linear sort on the non-sort dim") {
-    val grid = spark.range(4096)
-      .select((col("id") % 64).as("x"),
-        (col("id") / 64).cast("long").as("y"))
-    val zDir = java.nio.file.Files.createTempDirectory("graft-zstat").toString
-    val linDir = java.nio.file.Files.createTempDirectory("graft-lstat").toString
-    Layout.zorderWrite(grid, "x", "y", zDir, nFiles = 16)
-    grid.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
-      .write.mode("overwrite").parquet(linDir)
-    val zMan = Layout.statsManifest(spark, zDir, Seq("x", "y"))
-    val lMan = Layout.statsManifest(spark, linDir, Seq("x", "y"))
-    // manifest covers every row exactly once
-    assert(zMan.agg(sum(col("rows"))).as[Long].head() === 4096L)
-    // a narrow y-range predicate prunes most z-ordered files, no linear ones
-    val zPrune = Layout.pruneFraction(zMan, "y", lit(10L), lit(12L))
-    val lPrune = Layout.pruneFraction(lMan, "y", lit(10L), lit(12L))
-    assert(zPrune >= 0.5, s"zorder y-prune $zPrune")
-    assert(lPrune === 0.0, s"linear y-prune $lPrune")
-    // both layouts prune on x (the linear sort's own key is near-perfect)
-    assert(Layout.pruneFraction(lMan, "x", lit(10L), lit(12L)) >= 0.75)
-    assert(Layout.pruneFraction(zMan, "x", lit(10L), lit(12L)) >= 0.5)
-  }
-
   test("globalRowNumber: exact parallel ranking without a global window") {
     import graft.ops.Relational
     // multi-partition input, tie-heavy score + unique tiebreak; compare

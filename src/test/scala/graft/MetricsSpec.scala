@@ -86,18 +86,6 @@ class MetricsSpec extends AnyFunSuite {
     assert(one(df, RankingMetrics.averagePrecision(col("pred"), col("gt"))) === 0.0)
   }
 
-  test("novelty defaults missing item popularity to count 1, not 0 (metrics.py:474)") {
-    val recs = Seq((1, Seq(10, 99))).toDF("u", "pred") // 99 not in popularity
-    val pop = Seq((10, 4L)).toDF("it", "cnt")
-    val novelty = RankingMetrics
-      .noveltyAtK(recs, "pred", 10, pop, "it", "cnt", lit(8.0))
-      .head().getDouble(0)
-    // mean of -log2(4/8 + 1e-10) and -log2(1/8 + 1e-10)
-    val expected = (-math.log(0.5 + 1e-10) / math.log(2)
-      + -math.log(0.125 + 1e-10) / math.log(2)) / 2
-    assert(math.abs(novelty - expected) < 1e-9)
-  }
-
   test("implicit labels [5,4,3,2] at threshold 4.0 → [1,1,0,0] (test_data_loading.py:171-184)") {
     val df = Seq(5, 4, 3, 2).toDF("rating")
     val labels = Relational.implicitLabels(df, "rating", 4.0)
@@ -115,5 +103,31 @@ class MetricsSpec extends AnyFunSuite {
     // approx_percentile accuracy 10000 → ~1e-4 rank error; 1% value ceiling
     assert(row.getAs[Double]("p50_rel_err") <= 0.01,
       s"t-digest rel err ${row.getAs[Double]("p50_rel_err")}")
+  }
+
+  test("recallVsExact: per-arm hits over one read of the exact set; a " +
+    "zero-hit arm reports 0") {
+    // exact answers (q, i) = (0,0), (0,1), (1,10) from a Range scan, so
+    // the plan shows how often the exact side is read
+    val exact = spark.range(3).select(
+      (col("id") / 2).cast("long").as("q"),
+      when(col("id") === 2, 10L).otherwise(col("id")).as("i"))
+    val approx = Seq((0L, 0L, "a"), (1L, 10L, "a"), (1L, 11L, "a"),
+      (0L, 99L, "b")).toDF("q", "i", "arm")
+    val perArm = RankingMetrics.recallVsExact(exact, approx, Seq("q", "i"),
+      Seq("arm"))
+    assert(perArm.as[(String, Long, Long)].collect().sortBy(_._1).toSeq ===
+      Seq(("a", 3L, 2L), ("b", 3L, 0L)))
+    val ranges = perArm.queryExecution.sparkPlan.collect {
+      case r: org.apache.spark.sql.execution.RangeExec => r
+    }
+    assert(ranges.size === 1, "the exact set must be read once")
+    // no arm columns: one row; an empty approximate set scores 0 hits
+    val single = RankingMetrics.recallVsExact(exact,
+      approx.filter(col("arm") === "a").drop("arm"), Seq("q", "i"))
+    assert(single.as[(Long, Long)].collect().toSeq === Seq((3L, 2L)))
+    val none = RankingMetrics.recallVsExact(exact,
+      approx.filter(lit(false)).drop("arm"), Seq("q", "i"))
+    assert(none.as[(Long, Long)].collect().toSeq === Seq((3L, 0L)))
   }
 }

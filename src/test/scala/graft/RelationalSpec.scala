@@ -211,27 +211,6 @@ class RelationalSpec extends AnyFunSuite {
     }
   }
 
-  test("binByQuantiles: near-even deciles, monotone in value, no global sort") {
-    val df = (1L to 10000L).map(i => (i, ((i * 48271L) % 10007L).toDouble))
-      .toDF("id", "v")
-    val binned = Relational.binByQuantiles(df, "v", 10)
-    val counts = binned.groupBy("bin").count()
-      .as[(Int, Long)].collect().toMap
-    assert(counts.keySet === (1 to 10).toSet)
-    counts.values.foreach(c => assert(math.abs(c - 1000L) <= 50, s"counts $counts"))
-    // order-consistency: max value of bin k < min value of bin k+1
-    val edges = binned.groupBy("bin")
-      .agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
-      .as[(Int, Double, Double)].collect().sortBy(_._1)
-    edges.sliding(2).foreach {
-      case Array((_, _, hi1), (_, lo2, _)) => assert(hi1 <= lo2)
-      case _ =>
-    }
-    val plan = binned.queryExecution.executedPlan.toString
-    assert(!plan.contains("Sort ") || !plan.contains("global"),
-      s"binByQuantiles must not globally sort the data:\n$plan")
-  }
-
   test("bandJoin: equals the naive theta-join result, plans as an equi-join") {
     // deterministic pseudo-random values with plenty of boundary cases
     val df = (1L to 400L)

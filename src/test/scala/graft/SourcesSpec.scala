@@ -279,30 +279,6 @@ class SourcesSpec extends AnyFunSuite {
       e3, Seq("user_id"), "ts", f3, view2, "fid")) === expected)
   }
 
-  test("request-time source: one-row frame of request literals (S7, feature_definitions.py:259-272)") {
-    val req = Readers.requestSource(spark,
-      Map("device_type" -> "mobile", "time_of_day" -> 14, "is_weekend" -> false))
-    assert(req.count() === 1)
-    val row = req.head()
-    assert(row.getAs[String]("device_type") === "mobile")
-    assert(row.getAs[Int]("time_of_day") === 14)
-    assert(row.getAs[Boolean]("is_weekend") === false)
-    // request-time join shape: cross join against an entity frame
-    val joined = Seq(1L, 2L).toDF("user_id").crossJoin(req)
-    assert(joined.count() === 2 && joined.columns.contains("device_type"))
-  }
-
-  test("JSON sink round-trip (S11, evaluate_model.py:334-346)") {
-    val dir = Files.createTempDirectory("graft-json").toString + "/out"
-    val metrics = Seq(("recall_at_10", 0.0136), ("mrr", 0.1524))
-      .toDF("metric", "value")
-    Readers.writeJson(metrics, dir)
-    val back = spark.read.json(dir)
-    val got = back.select("metric", "value").as[(String, Double)]
-      .collect().toMap
-    assert(got === Map("recall_at_10" -> 0.0136, "mrr" -> 0.1524))
-  }
-
   test("materialization: offline range → latest-per-key online snapshot (T10, simple_feature_store.py:82-90)") {
     val events = Seq(
       (1L, 100L, 1.0), (1L, 200L, 2.0), (1L, 900L, 9.0), (2L, 150L, 5.0))
