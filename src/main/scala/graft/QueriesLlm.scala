@@ -130,9 +130,9 @@ object QueriesLlm {
 
   /** One arm's hit count, for a recall row that reports its arms as
     * columns: pivots the per-arm rows of [[RankingMetrics.recallVsExact]]
-    * (`arm` selects the arm's row). */
+    * (`arm` selects the arm's row; an arm with no row reports 0). */
   private def armHits(arm: org.apache.spark.sql.Column) =
-    max(when(arm, col("n_hits")))
+    coalesce(max(when(arm, col("n_hits"))), lit(0L))
 
   /** 3-step BPE oracle, shared by t_bpe_merges (recomputing form) and
     * t_bpe_materialized (checkpointing form) — the two must learn the

@@ -1,7 +1,6 @@
 package graft.eval
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Ranking-metric layer (SURVEY §2.10 E1–E10) — the reference's
@@ -140,36 +139,53 @@ object RankingMetrics {
     * reference's one evaluation rule for ANN retrieval and near-dup
     * recall (SURVEY §2.9/§2.10): count the exact answers the approximate
     * path also returns. `approx` may hold several arms, told apart by
-    * `armCols` (none = one arm); `exact` must be unique on `keys`, and
-    * `approx` unique on `keys` within each arm. Returns one row per arm
-    * that answered: `armCols…, n_exact, n_hits`, with 0 hits for an arm
-    * none of whose answers is exact (an empty `approx` gives one row with
-    * null arms and 0 hits).
+    * the non-null values of `armCols` (none = one arm); `exact` must be
+    * unique on `keys`, and `approx` unique on `keys` within each arm.
+    * Returns one row per arm that answered: `armCols…, n_exact, n_hits`,
+    * with 0 hits for an arm none of whose answers is exact (with no arm
+    * columns, one row; with arm columns and an empty `approx`, one row
+    * with null arms and 0 hits).
     *
-    * The exact set is read ONCE, with no checkpoint, and nothing is
-    * joined: the exact answers and every arm's answers are stacked in one
-    * union, and a max over each key's rows tells an arm's answer whether
-    * its key is exact. One grouped aggregate then counts the exact rows
-    * and each arm's hits; a last one-row aggregate puts `n_exact` beside
-    * each arm. An arm none of whose answers is exact keeps its row, with
-    * 0 hits, because its answers are in the union. */
+    * The exact set is read ONCE, with no checkpoint and no sort. One arm
+    * is one left join of the exact set to the answers and one aggregate:
+    * every exact row is counted, and so is every one the answers carry,
+    * and the join may become a broadcast, which matters for the large
+    * near-dup pair sets. Several arms cannot join that way (an exact key
+    * would be counted once per arm, and an arm with no exact answer would
+    * lose its row), so they are stacked with the exact answers in one
+    * union and grouped by `keys`: one aggregate gives each key its exact
+    * flag and the arms that returned it, the arms are fanned back out,
+    * one aggregate grouped by the arm columns counts the exact keys (once
+    * each, on the key's first row) and each arm's hits, and a last one-row
+    * aggregate puts `n_exact` beside each arm. */
   def recallVsExact(exact: DataFrame, approx: DataFrame, keys: Seq[String],
-                    armCols: Seq[String] = Nil): DataFrame = {
-    val arms = armCols.map(col)
-    exact.select(keys.map(col) ++ armCols.map(c => lit(null).as(c)) :+
-        lit(1).as("__exact"): _*)
-      .union(approx.select((keys ++ armCols).map(col) :+
-        lit(null).cast("int").as("__exact"): _*))
-      .withColumn("__hit",
-        max(col("__exact")).over(Window.partitionBy(keys.map(col): _*)))
-      .groupBy(col("__exact").isNull.as("__answer") +: arms: _*)
-      .agg(count(col("__exact")).as("__n_exact"),
-        count(col("__hit")).as("n_hits"))
-      .agg(coalesce(sum(col("__n_exact")), lit(0L)).as("n_exact"),
-        collect_list(when(col("__answer"),
-          struct(arms :+ col("n_hits"): _*))).as("__arms"))
-      .select(col("n_exact"), explode_outer(col("__arms")).as("__a"))
-      .select(armCols.map(c => col("__a." + c)) ++ Seq(col("n_exact"),
-        coalesce(col("__a.n_hits"), lit(0L)).as("n_hits")): _*)
-  }
+                    armCols: Seq[String] = Nil): DataFrame =
+    if (armCols.isEmpty)
+      exact.select(keys.map(col): _*)
+        .join(approx.select(keys.map(col) :+ lit(1).as("__hit"): _*), keys,
+          "left")
+        .agg(count(lit(1)).as("n_exact"), count(col("__hit")).as("n_hits"))
+    else {
+      val arms = armCols.map(col)
+      exact.select(keys.map(col) ++ armCols.map(c => lit(null).as(c)) :+
+          lit(1).as("__exact"): _*)
+        .union(approx.select((keys ++ armCols).map(col) :+
+          lit(null).cast("int").as("__exact"): _*))
+        .groupBy(keys.map(col): _*)
+        .agg(max(col("__exact")).as("__e"),
+          collect_list(when(col("__exact").isNull, struct(arms: _*)))
+            .as("__by"))
+        .select(col("__e"),
+          posexplode_outer(col("__by")).as(Seq("__pos", "__a")))
+        .groupBy(armCols.map(c => col("__a." + c).as(c)): _*)
+        .agg(count(when(coalesce(col("__pos"), lit(0)) === 0, col("__e")))
+            .as("__n_exact"),
+          count(when(col("__a").isNotNull, col("__e"))).as("n_hits"))
+        .agg(coalesce(sum(col("__n_exact")), lit(0L)).as("n_exact"),
+          collect_list(when(arms.map(_.isNotNull).reduce(_ && _),
+            struct(arms :+ col("n_hits"): _*))).as("__arms"))
+        .select(col("n_exact"), explode_outer(col("__arms")).as("__a"))
+        .select(armCols.map(c => col("__a." + c)) ++ Seq(col("n_exact"),
+          coalesce(col("__a.n_hits"), lit(0L)).as("n_hits")): _*)
+    }
 }

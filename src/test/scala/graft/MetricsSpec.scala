@@ -122,10 +122,16 @@ class MetricsSpec extends AnyFunSuite {
       case r: org.apache.spark.sql.execution.RangeExec => r
     }
     assert(ranges.size === 1, "the exact set must be read once")
+    // several arms fold in aggregates only: no per-key sort or window
+    val plan = perArm.queryExecution.executedPlan.toString
+    assert(!plan.contains("Sort") && !plan.contains("Window"), plan)
     // no arm columns: one row; an empty approximate set scores 0 hits
     val single = RankingMetrics.recallVsExact(exact,
       approx.filter(col("arm") === "a").drop("arm"), Seq("q", "i"))
     assert(single.as[(Long, Long)].collect().toSeq === Seq((3L, 2L)))
+    assert(single.queryExecution.sparkPlan.collect {
+      case r: org.apache.spark.sql.execution.RangeExec => r
+    }.size === 1, "the exact set must be read once")
     val none = RankingMetrics.recallVsExact(exact,
       approx.filter(lit(false)).drop("arm"), Seq("q", "i"))
     assert(none.as[(Long, Long)].collect().toSeq === Seq((3L, 0L)))
