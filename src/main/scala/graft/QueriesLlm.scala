@@ -2882,10 +2882,7 @@ object QueriesLlm {
           .select(col("doc_id"), col("lang"))
           .orderBy(col("doc_id"))
           .localCheckpoint()
-      } finally { // the swap staging dir is a sibling — delete both
-        fs.delete(p, true)
-        fs.delete(new org.apache.hadoop.fs.Path(store + ".stage"), true)
-      }
+      } finally fs.delete(p, true)
     },
       Some("""WITH k AS (SELECT doc_id, lang,
              |  row_number() OVER (
@@ -2923,10 +2920,7 @@ object QueriesLlm {
         graft.streaming.StreamingJobs.passageCleanCorpus(s, store, "doc_id")
           .orderBy(col("doc_id"))
           .localCheckpoint()
-      } finally {
-        fs.delete(p, true)
-        fs.delete(new org.apache.hadoop.fs.Path(store + ".stage"), true)
-      }
+      } finally fs.delete(p, true)
     },
       Some(s"""WITH t AS (SELECT doc_id, $DuckTokens AS ts FROM documents),
               |seg AS (SELECT doc_id, unnest(list_transform(

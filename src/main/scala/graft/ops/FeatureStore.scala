@@ -39,13 +39,20 @@ object FeatureStore {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** How a bucketed store is laid out: each row sits in partition
-    * `__bucket = pmod(xxhash64(keyCols…), numBuckets)` ([[bucketOf]]).
-    * The bucketed writers (`StreamingJobs.upsertBucketedBatch` and the
-    * two dedup stores) record it at the store root and refuse a batch
-    * that asks for another layout; [[onlineLookup]] reads it to prune a
-    * lookup to the requested keys' buckets. */
+  /** How a bucketed store is laid out: each row sits in bucket
+    * `__bucket = pmod(xxhash64(keyCols…), numBuckets)` ([[bucketOf]]), and
+    * each bucket is one parquet file, [[bucketFile]], directly under the
+    * store root, with `__bucket` as its last data column (no partition
+    * directories, so a reader resolves the store by listing one
+    * directory on the driver). The bucketed writers
+    * (`StreamingJobs.upsertBucketedBatch` and the two dedup stores)
+    * record it at the store root and refuse a batch that asks for
+    * another layout; [[onlineLookup]] reads it to prune a lookup to the
+    * requested keys' bucket files. */
   final case class BucketLayout(numBuckets: Int, keyCols: Seq[String])
+
+  /** The file of bucket `b` under a bucketed store's root. */
+  private[graft] def bucketFile(b: Int): String = f"bucket-$b%05d.parquet"
 
   /** The layout record under the store root: the bucket count on the
     * first line, one key column per line after it. The `_` prefix keeps
@@ -96,14 +103,14 @@ object FeatureStore {
     * become a literal filter on the key columns, typed to those columns
     * when the request's type up-casts to them, so Parquet can push it
     * down. A key with a null part matches nothing, as under equality.
-    * When `features` reads a bucketed store directly — one file
+    * When `features` reads a bucketed store directly — one flat file
     * relation whose root holds a [[BucketLayout]] record for
     * `view.entityCols`, with the key and `__bucket` columns unchanged —
-    * the lookup also filters `__bucket` to the requested keys' buckets,
-    * computed on the driver, and the scan reads only those partitions.
-    * Nothing is cached between calls: every lookup reads the store as
-    * the caller's frame lists it. Any other frame is read unpruned,
-    * with the same result. */
+    * the lookup also filters `__bucket` and `_metadata.file_name` to the
+    * requested keys' buckets and their [[bucketFile]]s, computed on the
+    * driver, and the scan reads only those files. Nothing is cached
+    * between calls: every lookup reads the store as the caller's frame
+    * lists it. Any other frame is read unpruned, with the same result. */
   def onlineLookup(features: DataFrame, view: FeatureView,
                    requestKeys: DataFrame, now: Column,
                    tiebreakCol: String): DataFrame = {
@@ -120,9 +127,13 @@ object FeatureStore {
     val typed = lits.forall(_.map(_.dataType) == keyTypes)
     val fresh = freshOnly(features, view.tsCol, now, view.ttlSeconds)
     val buckets = storeLayout(features, keyCols).filter(_ => typed)
-      .map(l => col("__bucket").isin(lits.map(ls => java.lang.Math.floorMod(
-        new XxHash64(ls).eval().asInstanceOf[Long], l.numBuckets.toLong)
-        .toInt).distinct.sorted: _*))
+      .map { l =>
+        val bs = lits.map(ls => java.lang.Math.floorMod(
+          new XxHash64(ls).eval().asInstanceOf[Long], l.numBuckets.toLong)
+          .toInt).distinct.sorted
+        col("__bucket").isin(bs: _*) &&
+          col("_metadata.file_name").isin(bs.map(bucketFile): _*)
+      }
     val scoped = fresh.filter(buckets.foldLeft(keyFilter(keyCols, lits))(_ && _))
     latestPerKey(scoped, keyCols, view.tsCol, tiebreakCol)
   }
@@ -156,15 +167,18 @@ object FeatureStore {
     }
 
   /** The bucket layout of the store `features` reads directly: its one
-    * leaf is a file relation with a single root holding a layout record
-    * for `keyCols`, and the key and `__bucket` columns are the
-    * relation's own (not recomputed above it). */
+    * leaf is an unpartitioned file relation with a single root holding a
+    * layout record for `keyCols`, the key and `__bucket` columns are the
+    * relation's own (not recomputed above it), and its `_metadata`
+    * column still resolves on `features`. */
   private def storeLayout(features: DataFrame,
                           keyCols: Seq[String]): Option[BucketLayout] = {
     val plan = features.queryExecution.analyzed
     plan.collectLeaves() match {
       case Seq(lr: LogicalRelation) => lr.relation match {
-        case h: HadoopFsRelation if h.location.rootPaths.size == 1 =>
+        case h: HadoopFsRelation if h.location.rootPaths.size == 1 &&
+            h.partitionSchema.isEmpty &&
+            plan.metadataOutput.exists(_.name == "_metadata") =>
           val own = lr.output.map(_.exprId).toSet
           val resolve = SQLConf.get.resolver
           val kept = (keyCols :+ "__bucket").forall(c =>

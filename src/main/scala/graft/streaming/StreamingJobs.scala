@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -147,19 +148,20 @@ object StreamingJobs {
       .toDF("user_id", "event_id", "clicks_5min", "views_5min", "events_5min")
   }
 
-  /** T6 at 100 TB: hash-bucket-partitioned online-store upsert. The store
-    * is a parquet table partitioned by
-    * `__bucket = pmod(xxhash64(key...), numBuckets)`; each micro-batch
-    * merges latest-per-key ONLY for the buckets its keys touch and
-    * dynamically overwrites just those partition directories. Per-batch
-    * work is O(size of touched buckets), not O(store): a batch touching k
-    * distinct keys reads and rewrites at most min(k, numBuckets) of the
-    * numBuckets partitions. Size numBuckets so one bucket ≈ a few HDFS
-    * blocks (store_size / numBuckets ~ 128–512 MB). The untouched-bucket
-    * files are never opened — asserted byte-for-byte in StreamingSpec.
-    * (Production alternative with file-level ACID merge: Delta/Iceberg
-    * MERGE INTO; this is the dependency-free parquet equivalent of the
-    * same pruned-rewrite plan.) */
+  /** T6 at 100 TB: hash-bucketed online-store upsert. The store is a
+    * parquet table of `numBuckets` files, one per bucket
+    * `__bucket = pmod(xxhash64(key...), numBuckets)`
+    * ([[graft.ops.FeatureStore.BucketLayout]]); each micro-batch merges
+    * latest-per-key ONLY for the buckets its keys touch and swaps just
+    * those bucket files by rename. Per-batch work is O(size of touched
+    * buckets), not O(store): a batch touching k distinct keys reads and
+    * rewrites at most min(k, numBuckets) of the numBuckets files. Size
+    * numBuckets so one bucket ≈ a few HDFS blocks (store_size /
+    * numBuckets ~ 128–512 MB). The untouched bucket files are never
+    * opened — asserted byte-for-byte in StreamingSpec. (Production
+    * alternative with file-level ACID merge: Delta/Iceberg MERGE INTO;
+    * this is the dependency-free parquet equivalent of the same
+    * pruned-rewrite plan.) */
   def upsertOnlineStorePartitioned(features: DataFrame, keyCols: Seq[String],
                                    tsCol: String, tiebreakCol: String,
                                    storePath: String, checkpointPath: String,
@@ -195,62 +197,126 @@ object StreamingJobs {
     * rows. The record is written after the first swap (and after any
     * swap that finds it missing, so a crash between the two heals on
     * the next batch). A store written before the record existed is
-    * recorded with the layout of its next batch. The `touched` collect
-    * is bounded by numBuckets — a driver-side action on purpose, it IS
-    * the partition-pruning decision. */
+    * recorded with the layout of its next batch; a store in the older
+    * partitioned layout (`__bucket=` directories) is refused, so one
+    * store never mixes the two. The root is listed once with Hadoop FS
+    * calls, which also finishes a swap a crash cut short; the touched
+    * buckets' files are read with a footer schema (no Spark job lists
+    * the store or infers its schema) under a `_metadata.file_name`
+    * filter, left out when every bucket file is touched. The `touched`
+    * collect is bounded by numBuckets — a driver-side action on purpose,
+    * it IS the bucket-pruning decision. */
   private def mergeTouchedBuckets(incoming: DataFrame, storePath: String,
                                   layout: FeatureStore.BucketLayout)(
                                   merge: DataFrame => DataFrame): Unit = {
     val spark = incoming.sparkSession
+    val root = new Path(storePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed = if (fs.exists(root)) fs.listStatus(root).toSeq else Nil
+    require(!listed.exists(_.getPath.getName.startsWith("__bucket=")),
+      s"bucketed store $storePath holds __bucket= partition directories " +
+        "(the older layout); a one-file-per-bucket merge would mix layouts")
     val recorded = FeatureStore.readLayout(spark, storePath)
     recorded.foreach(r => require(r == layout,
       s"bucketed store $storePath is laid out as $r; a batch with $layout " +
         "would give a key rows in two buckets"))
+    val present = restoreAsides(fs, root, listed.map(_.getPath.getName))
     val touched = incoming.select(col("__bucket")).distinct()
       .collect().map(_.getInt(0))
     // A zero-row batch (the no-data batch Spark runs after a watermark
-    // advance) touches no bucket: nothing to merge, and staging nothing
-    // would leave no parquet file for the swap to read back
-    // ([UNABLE_TO_INFER_SCHEMA]).
+    // advance) touches no bucket: nothing to merge, and nothing to stage.
     if (touched.isEmpty) return
+    val read = touched.map(FeatureStore.bucketFile).filter(present)
     // Explicit existence check, NOT a catch-all: a transient read failure on
     // an existing store must fail the micro-batch (checkpoint retries it),
     // never silently rewrite touched buckets from the batch alone.
     val existing =
-      if (pathExists(spark, storePath))
-        spark.read.parquet(storePath)
-          .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
-      else spark.createDataFrame(
+      if (read.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         incoming.schema)
+      else {
+        val all = spark.read
+          .schema(footerSchema(spark, new Path(root, read.head)))
+          .parquet(storePath)
+        if (read.length == present.size) all
+        else all.filter(col("_metadata.file_name").isin(read: _*))
+      }
     stageAndSwapBuckets(spark,
       merge(existing.unionByName(incoming, allowMissingColumns = true)),
-      storePath)
+      touched, fs, root)
     if (recorded.isEmpty) FeatureStore.writeLayout(spark, storePath, layout)
   }
 
-  /** Stage the merged touched buckets, then dynamic-overwrite ONLY those
-    * bucket partitions into the store (Spark rejects overwriting a path
-    * the plan reads from); untouched bucket directories are neither read
-    * nor rewritten. Both steps are O(touched buckets). Shared by every
-    * bucketed foreachBatch merge ([[upsertBucketedBatch]],
-    * [[incrementalDedupBatch]]) so the crash-window proof covers all of
-    * them. */
+  /** The hidden name a bucket file is moved aside to while its
+    * replacement is renamed in; Spark's file listing skips it. */
+  private[graft] def asideFile(bucketFile: String): String =
+    s".$bucketFile.aside"
+
+  /** Finish what a crash in [[stageAndSwapBuckets]] left under the root
+    * (`names`): an aside file whose bucket file is missing is renamed
+    * back (the crash fell between moving it aside and renaming the new
+    * file in), any other aside file is deleted. Returns the bucket
+    * files the store then holds. */
+  private def restoreAsides(fs: FileSystem, root: Path,
+                            names: Seq[String]): Set[String] = {
+    val files = names.filter(_.endsWith(".parquet")).filterNot(n =>
+      n.startsWith(".") || n.startsWith("_")).toSet
+    names.filter(n => n.startsWith(".") && n.endsWith(".aside"))
+      .foldLeft(files) { (have, aside) =>
+        val file = aside.stripPrefix(".").stripSuffix(".aside")
+        if (have(file)) { fs.delete(new Path(root, aside), false); have }
+        else {
+          require(fs.rename(new Path(root, aside), new Path(root, file)),
+            s"bucketed store $root: restoring $aside failed")
+          have + file
+        }
+      }
+  }
+
+  /** Write the merged touched buckets ONCE into the sibling `.stage`,
+    * one file per bucket, then swap each staged file over its bucket
+    * file by rename (Spark rejects overwriting a path the plan reads
+    * from); untouched bucket files are neither read nor rewritten, and
+    * the stage is not read back. Each swap moves the old bucket file
+    * aside before the rename and deletes it after, so a crash at any
+    * point leaves every bucket as a file or an aside file, which the
+    * next merge restores before it reads ([[restoreAsides]]): the retry
+    * re-merges the same batch, which every bucketed merge absorbs
+    * idempotently. Shared by every bucketed foreachBatch merge
+    * ([[upsertBucketedBatch]], [[incrementalDedupBatch]],
+    * [[incrementalPassageDedupBatch]]) so the crash-window proofs cover
+    * all of them. */
   private def stageAndSwapBuckets(spark: SparkSession, merged: DataFrame,
-                                  storePath: String): Unit = {
-    val stage = storePath + ".stage"
+                                  touched: Seq[Int], fs: FileSystem,
+                                  root: Path): Unit = {
+    val stage = new Path(root.toString + ".stage")
     // repartition by __bucket so each touched bucket is written as ONE
-    // file: without it, every writer task holding rows of a bucket opens
-    // its own file, and since the merge shuffle's AQE-coalesced task
-    // count grows with store size, file count crept toward
-    // numBuckets x tasks (a 100-batch long run measured 64 buckets -> 462
-    // files and 13-row parquet files inflating the store ~2x at
-    // numBuckets=1024; IncDedupLongRun harness, last in commit 65b4b15).
-    // One extra exchange of the touched data — the same magnitude the
-    // merge shuffle already paid — buys a store whose file count is
-    // ≤ numBuckets FOREVER, with bucket-sized row groups.
-    merged.repartition(col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(stage)
+    // file by one task: without it, every writer task holding rows of a
+    // bucket opens its own file, and since the merge shuffle's
+    // AQE-coalesced task count grows with store size, file count crept
+    // toward numBuckets x tasks (a 100-batch long run measured 64 buckets
+    // -> 462 files at numBuckets=1024; IncDedupLongRun harness, last in
+    // commit 65b4b15). The stage is partitioned by a copy of __bucket, so
+    // the staged file keeps __bucket as its last data column.
+    merged.select((merged.columns.filterNot(_ == "__bucket") :+ "__bucket")
+        .map(col): _*)
+      .withColumn("__stage_bucket", col("__bucket"))
+      .repartition(col("__stage_bucket"))
+      .write.mode("overwrite").partitionBy("__stage_bucket")
+      .parquet(stage.toString)
+    val staged = fs.listStatus(stage).toSeq.collect {
+      case d if d.isDirectory &&
+          d.getPath.getName.startsWith("__stage_bucket=") =>
+        val b = d.getPath.getName.stripPrefix("__stage_bucket=").toInt
+        val parts = fs.listStatus(d.getPath).toSeq.map(_.getPath)
+          .filterNot(f => f.getName.startsWith(".") ||
+            f.getName.startsWith("_"))
+        require(parts.length == 1,
+          s"stageAndSwapBuckets: bucket $b staged as ${parts.length} files")
+        b -> parts.head
+    }.toMap
+    require(staged.keySet == touched.toSet, "stageAndSwapBuckets: staged " +
+      s"buckets ${staged.keys.toSeq.sorted} are not the touched ones")
     // Failure-injection point for the exactly-once proof (StreamingSpec):
     // "once" aborts the micro-batch AFTER the staging write but BEFORE the
     // store swap — the worst crash window (work done, store untouched,
@@ -262,11 +328,16 @@ object StreamingJobs {
       spark.conf.set(abortKey, "done")
       throw new IllegalStateException("injected post-stage abort (test)")
     }
-    spark.read.parquet(stage)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket")
-      .parquet(storePath)
+    fs.mkdirs(root)
+    staged.toSeq.sortBy(_._1).foreach { case (b, file) =>
+      val target = new Path(root, FeatureStore.bucketFile(b))
+      val aside = new Path(root, asideFile(target.getName))
+      if (fs.exists(target))
+        require(fs.rename(target, aside), s"rename $target -> $aside failed")
+      require(fs.rename(file, target), s"rename $file -> $target failed")
+      fs.delete(aside, false)
+    }
+    fs.delete(stage, true)
   }
 
   /** Streaming incremental exact dedup — the ingest-time form of
@@ -282,7 +353,7 @@ object StreamingJobs {
     * merge idempotent under at-least-once delivery: replaying a batch
     * re-derives the same (seen-batch, id) minimum.
     *
-    * Dedup is FULL-HISTORY: identity lives in the partitioned store, not
+    * Dedup is FULL-HISTORY: identity lives in the bucketed store, not
     * executor state, so the horizon is unbounded and restart-safe. Same
     * content key as batch `Dedup.exactDupGroups`, so the batch and the
     * streaming form agree on identity. */
@@ -397,7 +468,7 @@ object StreamingJobs {
   /** Does `path` exist on its filesystem? (Hadoop FS — works for any
     * scheme the session is configured for, not just local files.) */
   private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -475,7 +546,9 @@ object StreamingJobs {
   }
 
   /** The serving catalog view over the base + delta IVF store: union of
-    * whichever halves exist, one row per id — the DELTA row wins a
+    * whichever halves exist, one row per id (base alone, which
+    * [[rebuildIvfStore]] writes one row per id, is served as read, with
+    * no dedup window) — the DELTA row wins a
     * base/delta duplicate DETERMINISTICALLY (the delta holds the
     * fresher assignment: an id present in both halves is the rebuild
     * crash window or an at-least-once replay straddling a rebuild, and
@@ -552,10 +625,15 @@ object StreamingJobs {
     val all = halves.reduceOption(_ unionByName _).getOrElse(
       spark.read.parquet(roots.head._1).withColumn("__epoch", lit(0))
         .filter(lit(false)))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("__epoch").desc)
-    all.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__epoch", "__rn")
+    // base alone is one row per id (rebuildIvfStore writes it from this
+    // deduped view): only a delta brings duplicates to resolve
+    if (!deltaExists) all.drop("__epoch")
+    else {
+      val w = Window.partitionBy(col(idCol)).orderBy(col("__epoch").desc)
+      all.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .drop("__epoch", "__rn")
+    }
   }
 
   /** A store half's `centroid_id=` cell directories — only the `probed`
@@ -563,8 +641,8 @@ object StreamingJobs {
     * them; None when they hold no data file. Hadoop FS calls only. */
   private def ivfCells(spark: SparkSession, root: String,
                        probed: Option[Set[Long]])
-      : Option[(Seq[org.apache.hadoop.fs.Path], StructType)] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
+      : Option[(Seq[Path], StructType)] = {
+    val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cells = fs.listStatus(rootPath).toSeq
       .filter(st => st.isDirectory && (st.getPath.getName.split("=", 2) match {
@@ -584,7 +662,7 @@ object StreamingJobs {
     * with a Spark job: the schema Spark wrote into the footer, else the
     * converted Parquet schema. */
   private def footerSchema(spark: SparkSession,
-                           file: org.apache.hadoop.fs.Path): StructType = {
+                           file: Path): StructType = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
         spark.sparkContext.hadoopConfiguration))
@@ -654,7 +732,7 @@ object StreamingJobs {
                       nlist: Int, iters: Int = 2,
                       seed: Long = 42): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    def p(s: String) = new Path(s)
     val fs = p(basePath).getFileSystem(conf)
     // Validate BEFORE taking the lock (ADVICE r18): the bootstrap case
     // (neither base nor delta exists yet) must fail WITHOUT creating a
@@ -677,8 +755,8 @@ object StreamingJobs {
       // are served via the catalog's delta-wins dedup and folded by the
       // NEXT rebuild, so the check-then-act window cannot lose rows
       // (ADVICE r18: the lock alone only narrowed the race).
-      def listFilesRec(dir: org.apache.hadoop.fs.Path)
-          : Seq[org.apache.hadoop.fs.Path] =
+      def listFilesRec(dir: Path)
+          : Seq[Path] =
         if (!fs.exists(dir)) Seq.empty
         else fs.listStatus(dir).toSeq.flatMap { st =>
           if (st.isDirectory) listFilesRec(st.getPath)
@@ -710,7 +788,7 @@ object StreamingJobs {
       // sweep of now-empty partition dirs; a dir holding a raced-in
       // late file survives both
       deltaSnapshot.foreach(f => fs.delete(f, false))
-      def sweepEmptyDirs(dir: org.apache.hadoop.fs.Path): Unit =
+      def sweepEmptyDirs(dir: Path): Unit =
         if (fs.exists(dir)) {
           fs.listStatus(dir).foreach { st =>
             if (st.isDirectory) sweepEmptyDirs(st.getPath)

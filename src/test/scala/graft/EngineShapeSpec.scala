@@ -132,7 +132,10 @@ class EngineShapeSpec extends AnyFunSuite {
 
   /** Public defs of the objects under `ops/`, `functions/` (not the
     * `expr/` expression classes), `sources/`, `streaming/` and `eval/`. */
-  private def operatorDefs: Seq[OperatorDef] = {
+  private def operatorDefs: Seq[OperatorDef] = objectDefs(withPrivate = false)
+
+  /** Member defs of those objects, the private ones too when asked. */
+  private def objectDefs(withPrivate: Boolean): Seq[OperatorDef] = {
     val scanned = Seq("ops", "functions", "sources", "streaming", "eval")
       .map(d => mainDir.resolve("graft").resolve(d))
     val exprDir = mainDir.resolve("graft/functions/expr")
@@ -149,9 +152,9 @@ class EngineShapeSpec extends AnyFunSuite {
         if (depth == 0) topRx.findPrefixMatchOf(lines(i)).foreach(m =>
           owner = Some(m.group(2)).filter(_ => m.group(1) == "object"))
         val found = defRx.findPrefixMatchOf(lines(i)).filter(m =>
-          depth == 1 && owner.isDefined &&
+          depth == 1 && owner.isDefined && (withPrivate ||
             !m.group(2).split("\\s+").exists(w =>
-              w.startsWith("private") || w.startsWith("protected")))
+              w.startsWith("private") || w.startsWith("protected"))))
           .map { m =>
             val ind = m.group(1).length
             val end = ((i + 1) until lines.length).find { j =>
@@ -301,6 +304,31 @@ class EngineShapeSpec extends AnyFunSuite {
     }
     assert(checks.size === 1, "the centroid_id join REQUIRE should be one " +
       s"helper, found ${checks.size}: ${checks.mkString(", ")}")
+  }
+
+  /** The code of `owner.name`'s definition, comments blanked. */
+  private def defCode(owner: String, name: String): String = {
+    val d = objectDefs(withPrivate = true)
+      .filter(d => d.owner == owner && d.name == name)
+    assert(d.size == 1, s"$owner.$name defined ${d.size} times")
+    val code = lex(new String(Files.readAllBytes(d.head.file), "UTF-8")).code
+    code.split("\n", -1).slice(d.head.lines.start, d.head.lines.end)
+      .mkString("\n")
+  }
+
+  test("bucketed stores: one write per merge, no dynamic partition " +
+    "overwrite, one bucket file name shared by the writer and the lookup") {
+    assert(sources.forall(!_._2.contains("partitionOverwriteMode")),
+      "a bucketed store swaps its files by rename")
+    val mergePath = Seq("mergeTouchedBuckets", "restoreAsides",
+      "stageAndSwapBuckets").map(defCode("StreamingJobs", _))
+    assert(mergePath.map("""\.\s*write\b""".r.findAllIn(_).size).sum === 1,
+      "the bucketed merge writes its touched buckets once")
+    assert(mainCode.map(c => copies(c._2, "\"bucket-")).sum === 1,
+      "one helper names the bucket files")
+    val named = """\bbucketFile\b""".r
+    assert(mergePath.exists(named.findFirstIn(_).nonEmpty))
+    assert(named.findFirstIn(defCode("FeatureStore", "onlineLookup")).nonEmpty)
   }
 
   private def similaritySource: String = new String(

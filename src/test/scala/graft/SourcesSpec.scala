@@ -110,9 +110,14 @@ class SourcesSpec extends AnyFunSuite {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }
 
+  /** A filter on the scanned file's name: what prunes a flat bucketed
+    * store's scan to the requested buckets' files. */
+  private def fileNameFiltered(
+      scan: org.apache.spark.sql.execution.FileSourceScanExec): Boolean =
+    scan.dataFilters.exists(_.toString.contains("file_name"))
+
   private def bucketPruned(df: org.apache.spark.sql.DataFrame): Boolean =
-    fileScans(df).exists(_.partitionFilters.exists(
-      _.references.exists(_.name == "__bucket")))
+    fileScans(df).exists(fileNameFiltered)
 
   test("bucketed online lookup equals the semi-join lookup in every " +
     "bucket: duplicate, null and absent keys, TTL edges, composite keys, " +
@@ -165,11 +170,12 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("bucketed online lookup reads one bucket: the scan carries a " +
-    "__bucket partition filter and reads 1 of 8 bucket files, also for " +
+    "file-name filter and reads 1 of 8 bucket files, also for " +
     "a request key column typed narrower than the store's") {
     val store = lookupStore(8)
-    assert(new java.io.File(store).listFiles()
-      .count(_.getName.startsWith("__bucket=")) === 8)
+    assert(new java.io.File(store).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).toSet ===
+      (0 until 8).map(FeatureStore.bucketFile).toSet)
     Seq(Seq(7L).toDF("user_id"), Seq(7).toDF("user_id")).foreach { keys =>
       val got = FeatureStore.onlineLookup(spark.read.parquet(store),
         lookupView, keys, lookupNow, "v")
@@ -177,9 +183,8 @@ class SourcesSpec extends AnyFunSuite {
         r.getAs[Long]("v"))).toSeq === Seq((7L, 7L)))
       val scans = fileScans(got)
       assert(scans.length === 1)
-      assert(scans.head.partitionFilters.exists(
-        _.references.exists(_.name == "__bucket")),
-        "no __bucket partition filter on the lookup scan")
+      assert(fileNameFiltered(scans.head),
+        "no file-name filter on the lookup scan")
       assert(scans.head.metrics("numFiles").value === 1L,
         "the lookup read more than its key's bucket")
     }

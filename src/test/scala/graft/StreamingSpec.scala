@@ -265,12 +265,15 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("k", "ts_s", "v")
       .withColumn("ts", timestamp_seconds(col("ts_s")))
       .select("k", "ts", "v")
-    def snapshot(): Map[String, Seq[(String, Long, Long)]] =
-      new File(store).listFiles().filter(_.getName.startsWith("__bucket="))
-        .map(d => d.getName ->
-          d.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
-            .map(f => (f.getName, f.length(), f.lastModified())).sorted)
-        .toMap
+    // every data file under the store, by bucket file name: only the
+    // bucket files themselves, one per bucket
+    def snapshot(): Map[String, (Long, Long)] = {
+      val files = new File(store).listFiles().filter(f =>
+        f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+      assert(files.forall(f => f.isFile && f.getName.startsWith("bucket-")),
+        s"not a bucket file: ${files.map(_.getName).toSeq}")
+      files.map(f => f.getName -> ((f.length(), f.lastModified()))).toMap
+    }
 
     // seed: 40 keys spread across 8 buckets
     StreamingJobs.upsertBucketedBatch(
@@ -292,14 +295,83 @@ class StreamingSpec extends AnyFunSuite {
     assert(readBack.contains((7L, 200L, 99.0)))
     assert(readBack.contains((8L, 100L, 8.0)))
 
-    // physical claim: exactly one bucket dir changed; every other dir's
-    // file set is byte-identical (name, size, mtime)
-    val changed = before.keys.filter(b => before(b) != after.getOrElse(b, Nil))
+    // physical claim: exactly one bucket file changed; every other bucket
+    // file is byte-identical (name, size, mtime)
+    assert(after.keySet === before.keySet)
+    val changed = before.keys.filter(b => before(b) != after(b))
     assert(changed.size === 1, s"buckets rewritten: $changed")
     // the changed bucket is key 7's bucket
     val b7 = spark.range(1).select(
       pmod(xxhash64(lit(7L)), lit(8)).cast("int")).as[Int].collect()(0)
-    assert(changed.head === s"__bucket=$b7")
+    assert(changed.head === FeatureStore.bucketFile(b7))
+    assert(!new File(store + ".stage").exists, "the stage outlived the swap")
+  }
+
+  test("a one-file-per-bucket upsert touching all 64 buckets runs at most " +
+    "5 Spark jobs and lists no directory in a job; reading the store " +
+    "lists none either") {
+    val store = Files.createTempDirectory("graft-upjobs").toString + "/store"
+    def feat(keys: Range, ts: Long) = keys.map(k => (k.toLong, ts, k * 1.0))
+      .toDF("k", "ts_s", "v")
+      .withColumn("ts", timestamp_seconds(col("ts_s")))
+      .select("k", "ts", "v")
+    StreamingJobs.upsertBucketedBatch(feat(0 until 2000, 100L), Seq("k"),
+      "ts", "v", store, 64)
+    val batch = feat(0 until 600, 200L)
+    assert(batch.select(pmod(xxhash64(col("k")), lit(64))).distinct().count()
+      === 64L, "the batch must touch every bucket")
+    val ((), jobs) = TestSpark.jobNamesOf(StreamingJobs.upsertBucketedBatch(
+      batch, Seq("k"), "ts", "v", store, 64))
+    assert(jobs.length <= 5, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
+    assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs.mkString(" | "))
+    val (n, reads) = TestSpark.jobNamesOf(spark.read.parquet(store).count())
+    assert(n === 2000L)
+    assert(!reads.exists(_.startsWith("Listing leaf files")),
+      reads.mkString(" | "))
+  }
+
+  test("a swap cut short (some buckets new, one only as its aside file) " +
+    "converges on retry to the no-failure store") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val base = Files.createTempDirectory("graft-halfswap").toString
+    def feat(rows: Seq[(Long, Long, Double)]) = rows
+      .toDF("k", "ts_s", "v")
+      .withColumn("ts", timestamp_seconds(col("ts_s")))
+      .select("k", "ts", "v")
+    def read(store: String) = spark.read.parquet(store)
+      .select(col("k"), col("ts").cast("long"), col("v"), col("__bucket"))
+      .as[(Long, Long, Double, Int)].collect().toSet
+    val seed = feat((1L to 40L).map(k => (k, 100L, k * 1.0)))
+    val b1 = feat((1L to 40L by 3).map(k => (k, 200L, k * 10.0)))
+    val fs = new Path(base).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    // the no-failure run
+    StreamingJobs.upsertBucketedBatch(seed, Seq("k"), "ts", "v",
+      base + "/clean", 4)
+    StreamingJobs.upsertBucketedBatch(b1, Seq("k"), "ts", "v",
+      base + "/clean", 4)
+    val want = read(base + "/clean")
+    // the crashed run: buckets 0 and 1 swapped in, bucket 2 moved aside
+    // and its new file not yet renamed in, bucket 3 untouched
+    val store = base + "/store"
+    StreamingJobs.upsertBucketedBatch(seed, Seq("k"), "ts", "v", store, 4)
+    def at(dir: String, b: Int) =
+      new Path(dir, FeatureStore.bucketFile(b))
+    Seq(0, 1).foreach { b =>
+      assert(fs.delete(at(store, b), false))
+      assert(FileUtil.copy(fs, at(base + "/clean", b), fs, at(store, b),
+        false, spark.sparkContext.hadoopConfiguration))
+    }
+    val aside = new Path(store,
+      StreamingJobs.asideFile(FeatureStore.bucketFile(2)))
+    assert(fs.rename(at(store, 2), aside))
+    assert(read(store) !== want)
+    // the retried batch restores the aside file, then re-merges
+    StreamingJobs.upsertBucketedBatch(b1, Seq("k"), "ts", "v", store, 4)
+    assert(read(store) === want)
+    assert(!fs.exists(aside), "the aside file outlived the retry")
+    assert(new java.io.File(store).list().count(_.endsWith(".parquet"))
+      === 4)
   }
 
   test("partitioned upsert is replay-idempotent: re-applying a micro-batch is a no-op") {
@@ -428,6 +500,16 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(ops.FeatureStore.readLayout(spark, base + "/passages") ===
       Some(ops.FeatureStore.BucketLayout(8, Seq("__key"))))
+    // a store in the partitioned layout (__bucket= directories) is
+    // refused, with or without a record, so one store never mixes layouts
+    val dirs = base + "/dirs"
+    spark.read.parquet(store).write.partitionBy("__bucket").parquet(dirs)
+    val refused = intercept[IllegalArgumentException] {
+      StreamingJobs.upsertBucketedBatch(feat(k, 300L), Seq("k"), "ts", "v",
+        dirs, 64)
+    }
+    assert(refused.getMessage.contains("__bucket= partition directories"))
+    assert(spark.read.parquet(dirs).count() === 40L)
   }
 
   test("watermarked windowed features stream into the bucketed store " +
@@ -1062,7 +1144,7 @@ class StreamingSpec extends AnyFunSuite {
       "vec_id", "embedding", 3, far, nprobe = 1).count() === 0L)
   }
 
-  test("one-key served top-k from a rebuilt IVF store runs at most 5 " +
+  test("one-key served top-k from a rebuilt IVF store runs at most 4 " +
     "Spark jobs and equals serving over the full catalog") {
     val base = Files.createTempDirectory("graft-ivfjobs").toString
     val bs = s"$base/store"; val delta = s"$base/delta"
@@ -1079,7 +1161,7 @@ class StreamingSpec extends AnyFunSuite {
     val (top, jobs) = TestSpark.jobsOf(ops.Similarity.servedTopKFromStore(
       q, bs, delta, "u", "vec_id", "vec", 10, cents, 4, "cosine").collect())
     assert(top.length === 10)
-    assert(jobs <= 5, s"$jobs jobs")
+    assert(jobs <= 4, s"$jobs jobs")
     val full = ops.Similarity.clusterPrunedTopKStored(q,
       StreamingJobs.ivfServingCatalog(spark, bs, delta, "vec_id"),
       "u", "vec_id", "vec", 10, cents, 4, "cosine").collect()

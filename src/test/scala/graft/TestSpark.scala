@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -23,27 +23,39 @@ object TestSpark {
     s
   }
 
-  /** `body`'s result and the number of Spark jobs it started: jobs run
-    * under a job group of their own (broadcast and subquery jobs inherit
-    * it), counted by a `SparkListener` once the listener bus has drained. */
+  /** `body`'s result and the number of Spark jobs it started. */
   def jobsOf[A](body: => A): (A, Int) = {
+    val (out, jobs) = jobNamesOf(body)
+    (out, jobs.length)
+  }
+
+  /** `body`'s result and the Spark jobs it started, each named by its
+    * description (what Spark's own jobs, like a parallel file listing,
+    * set) or else its last stage's name: jobs run under a job group of
+    * their own (broadcast and subquery jobs inherit it), recorded by a
+    * `SparkListener` once the listener bus has drained. */
+  def jobNamesOf[A](body: => A): (A, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"graft-jobs-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
+    val counted = "counted"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+        Option(e.properties).filter(
+            _.getProperty("spark.jobGroup.id") == group).foreach { p =>
+          jobs.add(Option(p.getProperty("spark.job.description"))
+            .filter(_ != counted)
+            .getOrElse(e.stageInfos.lastOption.map(_.name).getOrElse("")))
+        }
     }
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, "counted")
+    sc.setJobGroup(group, counted)
     try {
       val out = body
       // the bus is private to Spark; its drain is reached reflectively
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      (out, jobs.get)
+      (out, jobs.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
