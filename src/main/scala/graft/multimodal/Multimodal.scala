@@ -79,18 +79,19 @@ object Multimodal {
     * signature, not the search; MultimodalSpec measures both). Output:
     * (id1, id2, hamming), id1 < id2. Swapping [[blockHash64]] for a
     * decoded-frame pHash (the environment-stubbed codec slot —
-    * [[decodeFeaturesStub]]) changes only the signature expression;
-    * banding, buckets and verify are byte-for-byte this path.
+    * [[decodeFeaturesStub]]) changes only the signature expression.
     *
-    * Scale shape inherits the text form's: distinct-fingerprint banding
-    * (dup groups never go quadratic), one shuffle by fingerprint, the
-    * Hamming filter runs pre-distinct in the bucket join's stream. */
+    * Banding, buckets and verify are [[graft.ops.Dedup.bandedNearDups]]
+    * over one lane — the operator [[graft.ops.Dedup.simHashNearDups]]
+    * runs on the text SimHash: distinct-fingerprint banding (dup groups
+    * never go quadratic), one shuffle by fingerprint, a depth-salted
+    * candidate join, the Hamming filter pre-distinct in its stream. */
   def mediaNearDups(df: DataFrame, idCol: String, mediaCol: String,
-                    maxHamming: Int = 3, maxRadius: Int = 15,
-                    blockCombos: Int = 1, maxBucketSize: Int = 0): DataFrame =
-    graft.ops.Dedup.nearDups64FromFp(
-      df.select(col(idCol), blockHash64(col(mediaCol)).as("fp")),
-      idCol, maxHamming, maxRadius, blockCombos, maxBucketSize)
+                    maxHamming: Int = 3, blockCombos: Int = 1,
+                    maxBucketSize: Int = 0): DataFrame =
+    graft.ops.Dedup.bandedNearDups(
+      df.select(col(idCol), blockHash64(col(mediaCol)).as("l0")),
+      idCol, maxHamming, blockCombos, maxBucketSize)
 
   /** Content-defined chunk hashes of an opaque binary payload
     * ([[graft.functions.expr.GearChunkHashes]] — Gear/FastCDC rolling

@@ -975,14 +975,14 @@ object Dedup {
     * <= 3). Trade-off: larger radii mean more, narrower blocks (radius 15 →
     * 16 four-bit blocks), whose coarse keys collide more — candidate
     * volume grows toward all-pairs as the radius approaches 63. Radii above
-    * `maxRadius` (default 15) are rejected rather than silently exploding.
+    * 15 are rejected rather than silently exploding.
     *
     * Hot-group posture: the banded candidate join runs over DISTINCT
     * fingerprints only — a group of g identical-fingerprint docs (the
     * dup-heavy case that dominates real corpora) contributes ONE row per
     * block to the join, not g, so candidate generation never goes quadratic
-    * in dup-group size. Identical-fingerprint pairs are emitted by a single
-    * equi-join on the full 64-bit key (exact-dedup shape — no banding
+    * in dup-group size. Identical-fingerprint pairs are emitted directly
+    * from each group's member list (exact-dedup shape — no banding
     * multiplier, no distinct). The OUTPUT pair set is still C(g,2) per
     * identical group by definition; callers wanting a linear representation
     * at extreme scale should group on the fingerprint itself
@@ -995,16 +995,14 @@ object Dedup {
     * many *near*-identical fingerprints share a coarse block key. Recall
     * consequence mirrors MinHash's: a true pair is lost only if evicted
     * from every block it collides in; eviction order is salted per block so
-    * evictions decorrelate across blocks. */
+    * evictions decorrelate across blocks. The pipeline is
+    * [[bandedNearDups]] over one lane. */
   def simHashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3, maxRadius: Int = 15,
-                      blockCombos: Int = 1, maxBucketSize: Int = 0): DataFrame = {
-    val withFp = df
-      .select(col(idCol), tokenHashes(col(textCol)).as("__th"))
-      .select(col(idCol), simHash64Native(col("__th")).as("fp"))
-    nearDups64FromFp(withFp, idCol, maxHamming, maxRadius, blockCombos,
-      maxBucketSize)
-  }
+                      maxHamming: Int = 3, blockCombos: Int = 1,
+                      maxBucketSize: Int = 0): DataFrame =
+    bandedNearDups(df.select(col(idCol), tokenHashes(col(textCol)).as("__th"))
+      .select(col(idCol), simHash64Native(col("__th")).as("l0")),
+      idCol, maxHamming, blockCombos, maxBucketSize)
 
   /** Lex-first-witness predicate for UNCAPPED banded self-joins (r20,
     * guide §2.3 "shuffle fewer bytes"): with combination banding, a
@@ -1046,30 +1044,41 @@ object Dedup {
     element_at(typedlit(comboMasks), (blockCol + 1).cast("int")) === ideal
   }
 
-  /** The banded near-dup pipeline over an arbitrary PRECOMPUTED 64-bit
-    * fingerprint column — everything [[simHashNearDups]] does after the
-    * SimHash itself (pigeonhole banding, hot-group handling, optional
-    * bucket cap, within-bucket Hamming verify), shared with
-    * [[graft.multimodal.Multimodal.mediaNearDups]]'s perceptual
-    * block-hash: any 64-bit signature whose Hamming distance tracks
-    * similarity gets the same complete-candidate-recall guarantee.
-    * `withFp` must be (idCol, fp: long); null fingerprints never pair. */
-  private[graft] def nearDups64FromFp(withFp: DataFrame, idCol: String,
-                                      maxHamming: Int, maxRadius: Int = 15,
-                                      blockCombos: Int = 1,
-                                      maxBucketSize: Int = 0): DataFrame = {
+  /** The one banded near-dup operator behind [[simHashNearDups]],
+    * [[simHashNearDups128]] and
+    * [[graft.multimodal.Multimodal.mediaNearDups]]: pigeonhole banding
+    * over DISTINCT fingerprints, identical-fingerprint groups emitted
+    * directly, an optional bucket cap, a depth-salted self-join and the
+    * within-bucket Hamming verify. Any fingerprint whose Hamming distance
+    * tracks similarity gets the same complete-candidate-recall guarantee.
+    * `withLanes` is (idCol, l0[, l1]): one or two flat 64-bit lanes; a
+    * fingerprint with a null lane never pairs. The radius ceiling is
+    * 16·lanes − 1 (15 of 64, 31 of 128). `saltTau` bounds the rows of
+    * every (block, key, cell) group on the join's build side. Returns
+    * (id1, id2, hamming), id1 < id2. */
+  private[graft] def bandedNearDups(withLanes: DataFrame, idCol: String,
+                                    maxHamming: Int, blockCombos: Int,
+                                    maxBucketSize: Int,
+                                    saltTau: Int = 256): DataFrame = {
+    val numLanes = withLanes.columns.length - 1
+    val laneNames = (0 until numLanes).map(i => s"l$i")
+    require(Seq(1, 2).contains(numLanes) &&
+      withLanes.columns.toSeq == idCol +: laneNames,
+      s"expected ($idCol, l0[, l1]), got ${withLanes.columns.mkString(", ")}")
+    val maxRadius = 16 * numLanes - 1
     require(maxHamming >= 0 && maxHamming <= maxRadius,
-      s"maxHamming=$maxHamming outside [0, $maxRadius]: banding keys get " +
-        "too coarse to prune; raise maxRadius explicitly if you accept that")
+      s"maxHamming=$maxHamming outside [0, $maxRadius]: past it the " +
+        s"${64 * numLanes}-bit banding keys get too coarse to prune")
     require(blockCombos >= 1 && blockCombos <= 3,
       s"blockCombos=$blockCombos outside [1, 3]")
+    require(saltTau >= 1, s"saltTau=$saltTau must be >= 1")
     // Pigeonhole with combinations (Manku et al., WWW'07 §3): with
     // b = maxHamming + c blocks, a pair within Hamming radius maxHamming
     // differs in ≤ maxHamming blocks, so it AGREES on ≥ c blocks — at least
     // one c-subset of blocks matches exactly. Bucketing on every c-subset
     // (key = the c block values packed into one long) keeps candidate
     // recall complete while widening the bucket key from 64/(r+1) bits to
-    // c·64/(r+c) bits. Regime guidance (measured at sf0.1, r=8):
+    // c·64/(r+c) bits. Regime guidance (measured at sf0.1, r=8, 64 bits):
     //  - uniform fingerprints, rare dups → c=2 shrinks bucket-accidental
     //    candidates exponentially (2^7 → 2^13 key space) and wins;
     //  - near-dup-heavy corpora → candidates are mostly TRUE collisions,
@@ -1077,84 +1086,135 @@ object Dedup {
     //    distinct (6s → 15s on the driver testdata) — keep c=1.
     // c=1 is exactly classic banding.
     val numBlocks = maxHamming + blockCombos
-    require(numBlocks <= 64, s"maxHamming + blockCombos > 64")
-    // distribute 64 bits as evenly as possible: first (64 mod b) blocks one
-    // bit wider
-    val baseW = 64 / numBlocks
-    val widths = Seq.tabulate(numBlocks)(i =>
-      if (i < 64 % numBlocks) baseW + 1 else baseW)
-    val offsets = widths.scanLeft(0)(_ + _).init
-    val blocks: Seq[(Int, Int, Int)] =
-      widths.zip(offsets).map { case (w, o) => (0, o, w) }
+    require(numBlocks >= numLanes, "need at least one block per lane " +
+      "(raise blockCombos)")
+    // Blocks never cross a lane boundary: the first (b mod lanes) lanes get
+    // one block more, and each lane's 64 bits split as evenly as possible
+    // (first 64 mod k blocks one bit wider). Any disjoint cover preserves
+    // the pigeonhole guarantee; per-lane blocks keep every block a single
+    // shift-and-mask. (lane, offset, width) per global block index.
+    val blocks: Seq[(Int, Int, Int)] = (0 until numLanes).flatMap { lane =>
+      val k = numBlocks / numLanes + (if (lane < numBlocks % numLanes) 1 else 0)
+      val baseW = 64 / k
+      val ws = Seq.tabulate(k)(i => if (i < 64 % k) baseW + 1 else baseW)
+      ws.zip(ws.scanLeft(0)(_ + _).init).map { case (w, o) => (lane, o, w) }
+    }
     val combos = (0 until numBlocks).combinations(blockCombos).toSeq
-    // One shuffle by fp; every branch below hangs off this same subplan, so
-    // the exchange is planned once and reused (ReuseExchange) — the
-    // fingerprint pass is not recomputed per branch. Null fingerprints
-    // (null text) never pair: SQL equality semantics, same as the join form.
-    val fpGroups = withFp.filter(col("fp").isNotNull).groupBy(col("fp"))
-      .agg(collect_list(col(idCol)).as("__ids"))
+    combos.foreach { c =>
+      // The packed key must fit one long: the fold shifts by each block's
+      // width before OR-ing, so total bits used = sum of widths (exactly 64
+      // is fine — the first shift acts on a zero accumulator).
+      require(c.map(blocks(_)._3).sum <= 64,
+        s"combo key ${c.mkString("+")} exceeds 64 bits — lower blockCombos " +
+          "for this radius")
+    }
+    val lanes = laneNames.map(col)
+    // One shuffle by fingerprint; every branch below hangs off this same
+    // subplan, so the exchange is planned once and reused (ReuseExchange).
+    val fpGroups = withLanes.filter(lanes.map(_.isNotNull).reduce(_ && _))
+      .groupBy(lanes: _*).agg(collect_list(col(idCol)).as("__ids"))
     // Identical fingerprints: all within-group pairs at hamming 0, emitted
     // directly from the member array — no banding, no distinct, no join.
     val identical = fpGroups
       .filter(size(col("__ids")) > 1)
-      .select(col("fp"), explode(col("__ids")).as("ida"), col("__ids"))
+      .select(explode(col("__ids")).as("ida"), col("__ids"))
       .select(col("ida"), explode(col("__ids")).as("idb"))
       .filter(col("ida") < col("idb"))
       .select(col("ida").as("id1"), col("idb").as("id2"),
         lit(0).as("hamming"))
     // Banded candidate join over DISTINCT fingerprints only. All combo
     // keys come from ONE native SimHashBands kernel (constant generated
-    // code size — see simHashBandsNative; the unrolled struct-array form
-    // overflowed janino's 64 KB method limit at high-radius configs).
-    val bandedAll = fpGroups.select(col("fp"),
-      posexplode(simHashBandsNative(array(col("fp")), blocks, combos)))
-      .select(col("fp"), col("pos").as("block"), col("col").as("key"))
+    // code size at any radius — the unrolled struct-array form overflowed
+    // janino's 64 KB method limit at high-radius configs).
+    val bandedAll = fpGroups.select(lanes :+
+      posexplode(simHashBandsNative(array(lanes: _*), blocks, combos)): _*)
+      .select(lanes ++ Seq(col("pos").as("block"), col("col").as("key")): _*)
+    // Bucket order: the lanes' hash salted with the block (so cap evictions
+    // decorrelate across blocks), the lanes as tie-break — a total order,
+    // since a bucket holds each distinct fingerprint once. The hash is a
+    // column, so the rank and depth windows below share one sort.
+    val byBucket = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("block"), col("key"))
+      .orderBy(col("__h") +: lanes: _*)
+    val ranked = bandedAll
+      .withColumn("__h", xxhash64(lanes :+ col("block"): _*))
+      .withColumn("__rn", row_number().over(byBucket))
     val banded =
-      if (maxBucketSize <= 0) bandedAll
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("block"), col("key"))
-          .orderBy(xxhash64(col("fp"), col("block")), col("fp"))
-        bandedAll.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= maxBucketSize).drop("__rn")
-      }
-    // Hamming filter BEFORE distinct: the bucket join streams its
-    // candidate pairs straight through the codegen'd bit_count filter
-    // with no shuffle, so the distinct() dedup (same pair witnessed by
-    // several bands) only pays for SURVIVORS. Banding buckets of
-    // natural-language SimHashes are heavily skewed — correlated head
-    // tokens make some block values near-constant — so candidates can
-    // be 10-100× the uniform estimate (measured 4.3×10⁸ at 50 K docs
-    // for the 128-bit form); a distinct-first ordering shuffles all of
-    // them.
-    // SHUFFLE_HASH build on the left side — same rationale as the 128-bit
-    // form's salted join (r20, guide §3.1): sort-merge buffers each
-    // duplicate-key bucket and sorts both banded sides for no benefit.
-    val fpPairs = banded.select(col("fp").as("fp1"), col("block"), col("key"))
-      .hint("shuffle_hash")
-      .join(banded.select(col("fp").as("fp2"), col("block"), col("key")),
-        Seq("block", "key"))
-      .filter(col("fp1") < col("fp2"))
-      .withColumn("hamming", hamming64(col("fp1"), col("fp2")))
+      if (maxBucketSize <= 0) ranked
+      else ranked.filter(col("__rn") <= maxBucketSize)
+    // Depth-proportional SALTED self-join. Natural-language SimHash bits
+    // are correlated (head tokens vote identically across a corpus), so
+    // band buckets are heavily skewed — measured at 50 K docs (128 bits):
+    // p50 depth 2, max 2222, Σd² ≈ 4.3×10⁸ candidate pairs, and a plain
+    // (block,key) join serializes the deepest buckets onto one task (AQE's
+    // skew split keys off input BYTES and never sees compute skew). Each
+    // bucket of depth d is split into S = ⌈d/τ⌉ cells: the LEFT row of
+    // rank n lands in cell (n−1) mod S, so every cell holds at most τ rows
+    // at every depth; the RIGHT side is replicated to all S cells, so cell
+    // work is ≤ τ·d pairs and the extra shuffle is Σd·S ≈ Σd²/τ, below the
+    // Σd²/2 candidates the buckets produce anyway. Cold buckets (d ≤ τ)
+    // keep S = 1. Coverage: pair (a,b) meets exactly once per witnessing
+    // bucket, in a's cell.
+    val cells = banded.withColumn("__s",
+      ceil(count(lit(1)).over(byBucket.rowsBetween(
+        org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.unboundedFollowing)) /
+        saltTau).cast("int"))
+    // The path below runs once per CANDIDATE (Σd² — measured 4.3×10⁸ at
+    // 50 K docs / 5.0×10⁹ at 500 K), so every joined and filtered column
+    // is a primitive long: flat lanes keep the join keys, the pair-order
+    // predicate and the bit_count filter in whole-stage codegen.
+    def side(p: String) = lanes.indices.map(i => col(s"l$i").as(s"$p$i"))
+    val a = lanes.indices.map(i => col(s"a$i"))
+    val b = lanes.indices.map(i => col(s"b$i"))
+    val left = cells.select(side("a") ++ Seq(col("block"), col("key"),
+      ((col("__rn") - 1) % col("__s")).cast("int").as("__cell")): _*)
+    val right = cells.select(side("b") ++ Seq(col("block"), col("key"),
+      explode(sequence(lit(0), col("__s") - 1)).as("__cell")): _*)
+    // Signed-lexicographic pair order over the lanes.
+    val aBeforeB = lanes.indices.init.foldRight(a.last < b.last) {
+      (i, later) => a(i) < b(i) || (a(i) === b(i) && later)
+    }
+    // Hamming filter BEFORE distinct: the candidate join streams its pairs
+    // straight through the codegen'd bit_count filter with no shuffle, so
+    // distinct() (the same pair witnessed by several combos) pays only for
+    // SURVIVORS, not for the skewed candidate volume.
+    // SHUFFLE_HASH on the LEFT/build side (r20): the planner's
+    // default sort-merge buffers every duplicate-key group of the replica
+    // side per key (hot buckets run to 10³–10⁴ rows) and sorts both
+    // multi-million-row banded sides — measured ~1 700 CPU-seconds for
+    // the sf1 128-bit candidate enumeration, and the strategy was
+    // RUN-VOLATILE (35.9 s vs 102.5 s bench legs). The left side is the
+    // right build: one row per banded entry and at most τ rows per
+    // (block, key, cell), so the per-partition hash relation is bounded;
+    // the replicated right side streams and probes. Values are
+    // join-strategy-independent.
+    val fpPairs = left.hint("shuffle_hash")
+      .join(right, Seq("block", "key", "__cell"))
+      .filter(aBeforeB)
+      .withColumn("hamming",
+        a.zip(b).map { case (x, y) => hamming64(x, y) }.reduce(_ + _)
+          .cast("int"))
       .filter(col("hamming") <= maxHamming)
       // Uncapped: keep each surviving pair only at its lex-first agreeing
-      // combo (see firstWitnessPredicate) — the distinct then dedupes
-      // nothing and its exchange carries each pair once instead of once
-      // per witnessing combo. Capped banding keeps the redundant form
-      // (a cap can evict the first witness).
+      // combo (firstWitnessPredicate) — measured at sf1 (128 bits), the
+      // distinct's exchange otherwise carries ~10⁹ witness-redundant
+      // emission rows for 20.3 M distinct pairs. Capped banding keeps the
+      // redundant form (a cap can evict the first witness).
       .transform(df =>
         if (maxBucketSize <= 0)
-          df.filter(firstWitnessPredicate(blocks, combos,
-            array(col("fp1")), array(col("fp2")), col("block")))
+          df.filter(firstWitnessPredicate(blocks, combos, array(a: _*),
+            array(b: _*), col("block")))
         else df)
-      .select("fp1", "fp2", "hamming").distinct()
-    // Expand distinct-fp pairs to member id pairs (g1 × g2 — the output
-    // size itself, nothing more).
+      .select(a ++ b :+ col("hamming"): _*)
+      .distinct()
+    // Expand distinct-fingerprint pairs to member id pairs (g1 × g2 — the
+    // output size itself, nothing more).
+    def members(p: String, ids: String) =
+      fpGroups.select(side(p) :+ col("__ids").as(ids): _*)
     val cross = fpPairs
-      .join(fpGroups.select(col("fp").as("fp1"), col("__ids").as("ids1")),
-        Seq("fp1"))
-      .join(fpGroups.select(col("fp").as("fp2"), col("__ids").as("ids2")),
-        Seq("fp2"))
+      .join(members("a", "ids1"), lanes.indices.map(i => s"a$i"))
+      .join(members("b", "ids2"), lanes.indices.map(i => s"b$i"))
       .select(explode(col("ids1")).as("ida"), col("ids2"), col("hamming"))
       .select(col("ida"), explode(col("ids2")).as("idb"), col("hamming"))
       .select(least(col("ida"), col("idb")).as("id1"),
@@ -1191,20 +1251,17 @@ object Dedup {
       bit_count(a.getField("l1").bitwiseXOR(b.getField("l1")))
 
   /** [[simHashNearDups]] over the 128-bit fingerprint — the LOSSLESS
-    * scale path for radius-8-equivalent near-dup detection. Semantics
-    * mirror the 64-bit form (pigeonhole banding over distinct
-    * fingerprints, identical-fingerprint groups short-circuited, each
-    * pair emitted once) with `maxHamming` measured over 128 bits:
-    * radius 2r of 128 selects (in expectation) the same similarity
-    * threshold as radius r of 64. Defaults are the radius-8-equivalent
-    * configuration: maxHamming=16, blockCombos=2 → 18 blocks split 9/9
-    * across the lanes, ~7-bit blocks, C(18,2)=153 two-block combo keys
-    * of ~14-15 bits. The 153× replication of each DISTINCT fingerprint
-    * is linear in the corpus and buys a 2⁸× larger bucket-key space —
-    * the quadratic accidental-collision regime of the 64-bit radius-8
-    * banding (BENCH_SF1.md: 14.8× at 10×) is gone without any lossy
-    * bucket cap. No block ever spans the lane boundary, so every block
-    * is a shift-and-mask of one lane. Returns (id1, id2, hamming).
+    * scale path for radius-8-equivalent near-dup detection: the same
+    * [[bandedNearDups]] operator over two lanes, with `maxHamming`
+    * measured over 128 bits: radius 2r of 128 selects (in expectation)
+    * the same similarity threshold as radius r of 64. Defaults are the
+    * radius-8-equivalent configuration: maxHamming=16, blockCombos=2 → 18
+    * blocks split 9/9 across the lanes, ~7-bit blocks, C(18,2)=153
+    * two-block combo keys of ~14-15 bits. The 153× replication of each
+    * DISTINCT fingerprint is linear in the corpus and buys a 2⁸× larger
+    * bucket-key space — the quadratic accidental-collision regime of the
+    * 64-bit radius-8 banding (BENCH_SF1.md: 14.8× at 10×) is gone without
+    * any lossy bucket cap. Returns (id1, id2, hamming).
     *
     * SCALE DECISION RULE (measured, DEDUP_RECALL.md): past ~10⁶ docs the
     * uncapped form's residual accidental-collision volume still grows
@@ -1217,158 +1274,11 @@ object Dedup {
     * noise at the radius boundary — no cap or compute fixes it). */
   def simHashNearDups128(df: DataFrame, idCol: String, textCol: String,
                          maxHamming: Int = 16, blockCombos: Int = 2,
-                         maxBucketSize: Int = 0,
-                         saltTau: Int = 256): DataFrame = {
-    require(saltTau >= 1, s"saltTau=$saltTau must be >= 1")
-    require(maxHamming >= 0 && maxHamming <= 31,
-      s"maxHamming=$maxHamming outside [0, 31]: past 31 the 128-bit " +
-        "banding keys get too coarse to prune")
-    require(blockCombos >= 1 && blockCombos <= 3,
-      s"blockCombos=$blockCombos outside [1, 3]")
-    val numBlocks = maxHamming + blockCombos
-    require(numBlocks >= 2, "need at least 2 blocks (raise blockCombos)")
-    // Blocks never cross the lane boundary: lanes get ceil/floor(b/2)
-    // blocks, each lane's 64 bits split as evenly as possible (first
-    // 64 mod k blocks one bit wider). Any disjoint cover of the 128 bits
-    // preserves the pigeonhole guarantee; per-lane assignment keeps
-    // every block a single shift-and-mask.
-    val perLane = {
-      val base = numBlocks / 2
-      Seq(numBlocks - base, base)
-    }
-    require(perLane.forall(_ >= 1), "need at least one block per lane")
-    // (lane, offset, width) per global block index
-    val blocks: Seq[(Int, Int, Int)] =
-      perLane.zipWithIndex.flatMap { case (k, lane) =>
-        val baseW = 64 / k
-        val ws = Seq.tabulate(k)(i => if (i < 64 % k) baseW + 1 else baseW)
-        val offs = ws.scanLeft(0)(_ + _).init
-        ws.zip(offs).map { case (w, o) => (lane, o, w) }
-      }
-    val combos = (0 until numBlocks).combinations(blockCombos).toSeq
-    combos.foreach { c =>
-      // The packed key must fit one long: the fold shifts by each
-      // block's width before OR-ing, so total bits used = sum of widths
-      // (exactly 64 is fine — the first shift acts on a zero
-      // accumulator).
-      require(c.map(blocks(_)._3).sum <= 64,
-        s"combo key ${c.mkString("+")} exceeds 64 bits — lower " +
-          "blockCombos for this radius (or use the 64-bit form for " +
-          "tiny radii)")
-    }
-    val withFp = df
-      .select(col(idCol), tokenHashes(col(textCol)).as("__th"))
+                         maxBucketSize: Int = 0): DataFrame =
+    bandedNearDups(df.select(col(idCol), tokenHashes(col(textCol)).as("__th"))
       .select(col(idCol), simHash128FromHashes(col("__th")).as("fp"))
-      .filter(col("fp.l0").isNotNull)
-    val fpGroups = withFp.groupBy(col("fp"))
-      .agg(collect_list(col(idCol)).as("__ids"))
-    val identical = fpGroups
-      .filter(size(col("__ids")) > 1)
-      .select(col("fp"), explode(col("__ids")).as("ida"), col("__ids"))
-      .select(col("ida"), explode(col("__ids")).as("idb"))
-      .filter(col("ida") < col("idb"))
-      .select(col("ida").as("id1"), col("idb").as("id2"),
-        lit(0).as("hamming"))
-    // One native SimHashBands kernel over the two lanes — constant
-    // generated code size at ANY radius (the unrolled 153-struct explode
-    // of the radius-16 default was the r10 64 KB codegen overflow).
-    val bandedAll = fpGroups.select(col("fp"),
-      posexplode(simHashBandsNative(
-        array(col("fp.l0"), col("fp.l1")), blocks, combos)))
-      .select(col("fp"), col("pos").as("block"), col("col").as("key"))
-    val banded =
-      if (maxBucketSize <= 0) bandedAll
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("block"), col("key"))
-          .orderBy(xxhash64(col("fp.l0"), col("fp.l1"), col("block")),
-            col("fp"))
-        bandedAll.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= maxBucketSize).drop("__rn")
-      }
-    // Depth-proportional SALTED self-join. Natural-language SimHash
-    // bits are correlated (head tokens vote identically across a
-    // corpus), so band buckets are heavily skewed — measured at 50 K
-    // docs: p50 depth 2, max 2222, Σd² ≈ 4.3×10⁸ candidate pairs, and
-    // a plain (block,key) join serializes the deepest buckets onto one
-    // task (load_avg ~1 on 32 cores; AQE's skew split keys off input
-    // BYTES and never sees compute skew). Each bucket of depth d is
-    // split into S=⌈d/τ⌉ cells: every LEFT row lands in one cell by
-    // fp hash, the RIGHT side is replicated to all S cells, so cell
-    // work is ≤ τ·d pairs and extra shuffle is Σd·S ≈ Σd²/τ — ~1 % of
-    // the candidate volume at τ=256. Cold buckets (d ≤ τ) keep S=1 and
-    // pay nothing. Coverage: pair (a,b) meets exactly once per
-    // witnessing bucket, in a's cell.
-    val wd = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("block"), col("key"))
-    // The path below runs once per CANDIDATE (Σd² — measured 4.3×10⁸
-    // at 50 K docs / 5.0×10⁹ at 500 K), so every joined and filtered
-    // column is kept a primitive long: flattening the fingerprint
-    // struct into (l0, l1) keeps the join keys, the pair-order
-    // predicate and the bit_count filter in whole-stage codegen over
-    // flat longs instead of nested-struct compares.
-    val bandedD = banded
-      .withColumn("__s",
-        least(ceil(count(lit(1)).over(wd) / saltTau), lit(64L)).cast("int"))
-      .select(col("fp.l0").as("l0"), col("fp.l1").as("l1"),
-        col("block"), col("key"), col("__s"))
-    val left = bandedD.select(col("l0").as("a0"), col("l1").as("a1"),
-      col("block"), col("key"),
-      pmod(xxhash64(col("l0"), col("l1"), col("block"), col("key")),
-        col("__s")).cast("int").as("__cell"))
-    val right = bandedD.select(col("l0").as("b0"), col("l1").as("b1"),
-      col("block"), col("key"),
-      explode(sequence(lit(0), col("__s") - 1)).as("__cell"))
-    // Hamming filter BEFORE distinct — see the 64-bit form above: the
-    // candidate join pipelines into the bit_count filter with no
-    // shuffle, and distinct() pays only for surviving near-pairs (the
-    // same pair witnessed by up to C(18,2) combos), not for the skewed
-    // candidate volume. Pair order is signed-lexicographic on (l0, l1),
-    // matching the struct order of the identical-fp branch.
-    // SHUFFLE_HASH on the LEFT/build side (r20, guide §3.1): the planner's
-    // default sort-merge buffers every duplicate-key group of the replica
-    // side per key (hot buckets run to 10³–10⁴ rows) and sorts both
-    // multi-million-row banded sides — measured ~1 700 CPU-seconds for
-    // the sf1 candidate enumeration, and the strategy was RUN-VOLATILE
-    // (same build, same data: 35.9 s vs 102.5 s bench legs). The left
-    // side is the right build: exactly one row per banded entry, with
-    // per-(block,key,cell) depth ≤ saltTau by construction, so the
-    // per-partition hash relation is bounded; the replicated right side
-    // streams and probes. Values are join-strategy-independent.
-    val fpPairs = left.hint("shuffle_hash")
-      .join(right, Seq("block", "key", "__cell"))
-      .filter(col("a0") < col("b0") ||
-        (col("a0") === col("b0") && col("a1") < col("b1")))
-      .withColumn("hamming",
-        (bit_count(col("a0").bitwiseXOR(col("b0"))) +
-          bit_count(col("a1").bitwiseXOR(col("b1")))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      // Uncapped: keep each surviving pair only at its lex-first agreeing
-      // combo (firstWitnessPredicate) — measured at sf1, the distinct's
-      // exchange otherwise carries ~10⁹ witness-redundant emission rows
-      // for 20.3 M distinct pairs. Capped banding keeps the redundant
-      // form (a cap can evict the first witness).
-      .transform(df =>
-        if (maxBucketSize <= 0)
-          df.filter(firstWitnessPredicate(blocks, combos,
-            array(col("a0"), col("a1")), array(col("b0"), col("b1")),
-            col("block")))
-        else df)
-      .select(struct(col("a0").as("l0"), col("a1").as("l1")).as("fp1"),
-        struct(col("b0").as("l0"), col("b1").as("l1")).as("fp2"),
-        col("hamming"))
-      .distinct()
-    val cross = fpPairs
-      .join(fpGroups.select(col("fp").as("fp1"), col("__ids").as("ids1")),
-        Seq("fp1"))
-      .join(fpGroups.select(col("fp").as("fp2"), col("__ids").as("ids2")),
-        Seq("fp2"))
-      .select(explode(col("ids1")).as("ida"), col("ids2"), col("hamming"))
-      .select(col("ida"), explode(col("ids2")).as("idb"), col("hamming"))
-      .select(least(col("ida"), col("idb")).as("id1"),
-        greatest(col("ida"), col("idb")).as("id2"), col("hamming"))
-    identical.unionByName(cross)
-  }
+      .select(col(idCol), col("fp.l0"), col("fp.l1")),
+      idCol, maxHamming, blockCombos, maxBucketSize)
 
   /** Edit-distance (Levenshtein) near-dup verify over bucketed candidates —
     * the fuzzy-dedup verifier for corpora where token-set overlap misses

@@ -80,80 +80,132 @@ class DedupTextSpec extends AnyFunSuite {
     assert(pairs(64) === pairs(0))
   }
 
-  test("simhash banding is COMPLETE vs brute force at the requested radius (sf0.001)") {
+  test("banded near-dups are COMPLETE vs brute force over (lanes, radius, " +
+    "combos), plain and salted (sf0.001)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val fp = docs.select(col("doc_id").as("id"),
-      Dedup.simHash64(col("text")).as("fp"))
-    for (radius <- Seq(3, 8); combos <- Seq(1, 2, 3)) {
-      val brute = fp.select(col("id").as("id1"), col("fp").as("fp1"))
-        .crossJoin(fp.select(col("id").as("id2"), col("fp").as("fp2")))
+    val fp = docs.select(col("doc_id"),
+      Dedup.simHash64(col("text")).as("fp64"),
+      Dedup.simHash128(col("text")).as("fp128")).localCheckpoint()
+    def brute(lanes: Int, radius: Int): Set[(Long, Long)] = {
+      val (c, ham) =
+        if (lanes == 1) ("fp64", Dedup.hamming64 _)
+        else ("fp128", Dedup.hamming128 _)
+      fp.select(col("doc_id").as("id1"), col(c).as("fp1"))
+        .crossJoin(fp.select(col("doc_id").as("id2"), col(c).as("fp2")))
         .filter(col("id1") < col("id2"))
-        .filter(Dedup.hamming64(col("fp1"), col("fp2")) <= radius)
+        .filter(ham(col("fp1"), col("fp2")) <= radius)
         .select("id1", "id2").as[(Long, Long)].collect().toSet
-      val banded = Dedup.simHashNearDups(docs, "doc_id", "text",
-        maxHamming = radius, blockCombos = combos)
+    }
+    // The public entries run the production salt (saltTau 256); saltTau 2
+    // forces the depth-proportional cells (production engages them only
+    // past depth 256) through the shared operator over the same lanes —
+    // pair coverage must be EXACTLY preserved: each pair meets once per
+    // witnessing bucket, in the left row's cell.
+    def banded(lanes: Int, radius: Int, combos: Int, saltTau: Int) =
+      (saltTau, lanes) match {
+        case (256, 1) => Dedup.simHashNearDups(docs, "doc_id", "text",
+          maxHamming = radius, blockCombos = combos)
+        case (256, _) => Dedup.simHashNearDups128(docs, "doc_id", "text",
+          maxHamming = radius, blockCombos = combos)
+        case (_, 1) => Dedup.bandedNearDups(
+          fp.select(col("doc_id"), col("fp64").as("l0")), "doc_id",
+          radius, combos, maxBucketSize = 0, saltTau = saltTau)
+        case _ => Dedup.bandedNearDups(
+          fp.select(col("doc_id"), col("fp128.l0"), col("fp128.l1")),
+          "doc_id", radius, combos, maxBucketSize = 0, saltTau = saltTau)
+      }
+    // (lanes, radius, combos, saltTau). Radius 8 of 64 and 16 of 128 are
+    // the registry configurations (the same similarity threshold); 3 and
+    // 6 probe a second block geometry per lane count; every combo count
+    // takes a different banding path.
+    val table = Seq((1, 3, 1, 256), (1, 3, 2, 256), (1, 3, 3, 256),
+      (1, 8, 1, 256), (1, 8, 2, 256), (1, 8, 3, 256), (1, 8, 1, 2),
+      (2, 6, 1, 256), (2, 6, 2, 256), (2, 16, 1, 256), (2, 16, 2, 256),
+      (2, 16, 2, 2))
+    val bruteBy = table.map { case (l, r, _, _) => (l, r) }.distinct
+      .map(k => k -> brute(k._1, k._2)).toMap
+    for ((lanes, radius, combos, saltTau) <- table) {
+      val want = bruteBy((lanes, radius))
+      val got = banded(lanes, radius, combos, saltTau)
         .select("id1", "id2").as[(Long, Long)].collect().toSet
-      assert(banded === brute,
-        s"radius $radius combos $combos: banded ${banded.size} vs brute " +
-          s"${brute.size}; missed=${brute.diff(banded).take(5)} " +
-          s"extra=${banded.diff(brute).take(5)}")
+      assert(got === want,
+        s"lanes $lanes radius $radius combos $combos saltTau $saltTau: " +
+          s"banded ${got.size} vs brute ${want.size}; " +
+          s"missed=${want.diff(got).take(5)} extra=${got.diff(want).take(5)}")
     }
   }
 
-  test("simhash128: banding is COMPLETE vs brute force at the requested radius") {
+  test("simhash128: lanes are independent, lane 0 is the 64-bit " +
+    "fingerprint, identical docs pair at hamming 0") {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val fp = corpus.select(col("doc_id").as("id"),
-      Dedup.simHash128(col("text")).as("fp"))
-    // radius 16 of 128 = the radius-8-of-64-equivalent similarity
-    // threshold (the registry configuration); radius 6 probes a second
-    // block geometry. combos 1 and 2 take different banding paths.
-    for (radius <- Seq(6, 16); combos <- Seq(1, 2)) {
-      val brute = fp.select(col("id").as("id1"), col("fp").as("fp1"))
-        .crossJoin(fp.select(col("id").as("id2"), col("fp").as("fp2")))
-        .filter(col("id1") < col("id2"))
-        .filter(Dedup.hamming128(col("fp1"), col("fp2")) <= radius)
-        .select("id1", "id2").as[(Long, Long)].collect().toSet
-      val banded = Dedup.simHashNearDups128(corpus, "doc_id", "text",
-        maxHamming = radius, blockCombos = combos)
-        .select("id1", "id2").as[(Long, Long)].collect().toSet
-      assert(banded === brute,
-        s"radius $radius combos $combos: banded ${banded.size} vs brute " +
-          s"${brute.size}; missed=${brute.diff(banded).take(5)} " +
-          s"extra=${banded.diff(brute).take(5)}")
-    }
-    // saltTau=2 forces the depth-proportional salted cells (production
-    // only engages them past depth 256) — pair coverage must be EXACTLY
-    // preserved: each pair meets once per witnessing bucket, in the
-    // left row's cell.
-    {
-      val brute = fp.select(col("id").as("id1"), col("fp").as("fp1"))
-        .crossJoin(fp.select(col("id").as("id2"), col("fp").as("fp2")))
-        .filter(col("id1") < col("id2"))
-        .filter(Dedup.hamming128(col("fp1"), col("fp2")) <= 16)
-        .select("id1", "id2").as[(Long, Long)].collect().toSet
-      val salted = Dedup.simHashNearDups128(corpus, "doc_id", "text",
-        maxHamming = 16, blockCombos = 2, saltTau = 2)
-        .select("id1", "id2").as[(Long, Long)].collect().toSet
-      assert(salted === brute,
-        s"saltTau=2: salted ${salted.size} vs brute ${brute.size}; " +
-          s"missed=${brute.diff(salted).take(5)} " +
-          s"extra=${salted.diff(brute).take(5)}")
-    }
-    // the two lanes are genuinely independent fingerprints: no doc in the
-    // corpus has l0 == l1, and lane 0 equals the 64-bit fingerprint
+    // no doc in the corpus has l0 == l1, and lane 0 equals the 64-bit
+    // fingerprint
     val lanes = corpus.select(Dedup.simHash128(col("text")).as("fp"),
       Dedup.simHash64(col("text")).as("fp64"))
     assert(lanes.filter(col("fp.l0") === col("fp.l1")).count() === 0)
     assert(lanes.filter(col("fp.l0") =!= col("fp64")).count() === 0)
-    // identical docs collide on BOTH lanes (hamming 0); the near-dup pair
-    // is closer than the unrelated pair in 128-bit hamming too
+    // identical docs collide on BOTH lanes (hamming 0)
     val small = Dedup.simHashNearDups128(docs, "doc_id", "text",
       maxHamming = 16)
       .select("id1", "id2", "hamming")
       .as[(Long, Long, Int)].collect()
     assert(small.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 0))
+  }
+
+  /** Largest row count of any join-key group on the build side of the
+    * banded candidate join (the shuffled hash join keyed on `block`) in
+    * `df`'s physical plan, read by executing that build side. */
+  private def maxBuildGroup(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    val joins = df.queryExecution.executedPlan.collect {
+      case j: ShuffledHashJoinExec
+          if j.leftKeys.exists(_.references.exists(_.name == "block")) => j
+    }
+    assert(joins.size === 1, df.queryExecution.executedPlan.treeString)
+    val j = joins.head
+    val (build, keys) =
+      if (j.buildSide == BuildLeft) (j.left, j.leftKeys)
+      else (j.right, j.rightKeys)
+    val key = UnsafeProjection.create(keys, build.output)
+    build.executeCollect().groupBy(r => key(r).copy()).values
+      .map(_.length).max
+  }
+
+  test("salted banded join: a bucket deeper than 64·saltTau keeps every " +
+    "build-side (block, key, cell) group within saltTau, pairs exact") {
+    // 300 distinct fingerprints that differ only in their low 9 bits: in
+    // both geometries below the low block is the only one that varies, so
+    // every other block key is shared by all 300 — deeper than 64·saltTau
+    // = 128, where a 64-cell salt ceiling would leave ~5 rows per cell.
+    val saltTau = 2
+    val n = 300
+    val high = 0x5DEECE66DL << 16
+    val want = (for (i <- 0 until n; j <- i + 1 until n
+                     if Integer.bitCount(i ^ j) <= 6)
+      yield (i.toLong, j.toLong, Integer.bitCount(i ^ j))).toSet
+    val prior = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      // (lanes, radius): 4 blocks of 16 bits, and 7 blocks with lane 0
+      // split 4 × 16
+      for ((lanes, radius) <- Seq((1, 3), (2, 6))) {
+        val l1 = if (lanes == 2) Seq(lit(high).as("l1")) else Nil
+        val fps = spark.range(n).select(
+          col("id").as("doc_id") +: (lit(high) + col("id")).as("l0") +: l1: _*)
+        val pairs = Dedup.bandedNearDups(fps, "doc_id", radius,
+          blockCombos = 1, maxBucketSize = 0, saltTau = saltTau)
+        val got = pairs.as[(Long, Long, Int)].collect().toSet
+        val exact = want.filter(_._3 <= radius)
+        assert(got === exact, s"lanes $lanes: ${got.size} pairs vs brute " +
+          s"${exact.size}; missed=${exact.diff(got).take(5)}")
+        val deepest = maxBuildGroup(pairs)
+        assert(deepest <= saltTau,
+          s"lanes $lanes: a build-side group holds $deepest rows > $saltTau")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prior)
   }
 
   test("SimHashBands native kernel is bit-identical to the unrolled fold packing") {

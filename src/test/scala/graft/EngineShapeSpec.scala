@@ -97,11 +97,11 @@ class EngineShapeSpec extends AnyFunSuite {
       "Dedup.exactDedup" ->
         "batch reference of incrementalDedupStream and the span dedup specs",
       "Dedup.simHash64" ->
-        "brute-force reference of simHashNearDups banding (DedupTextSpec)",
+        "brute-force reference of the one-lane bandedNearDups join (DedupTextSpec)",
       "Dedup.simHash128" ->
-        "brute-force reference of simHashNearDups128 banding (DedupTextSpec)",
+        "brute-force reference of the two-lane bandedNearDups join (DedupTextSpec)",
       "Dedup.hamming128" ->
-        "brute-force reference of simHashNearDups128 banding (DedupTextSpec)",
+        "brute-force reference of the two-lane bandedNearDups join (DedupTextSpec)",
       "Dedup.simHash64FromHashes" ->
         "fold reference the native SimHash64 kernel is bit-compared against",
       "Dedup.minHashSignatureFromHashes" ->
