@@ -39,7 +39,7 @@ object Explain {
     "r14b_ivfpq_recall" ->
       "exact baseline uses the bruteForceTopK small-catalog contract; IVF-PQ retrieval itself is the centroid_id equi-join (the c5 shape) with the nlist-bounded centroid cross (the ann_cluster_recall contract) and request-sized probe/LUT broadcasts",
     "c5c_ivf_stream_refresh" ->
-      "exact baseline uses the bruteForceTopK small-catalog contract; serving itself is the centroid_id equi-join over the stored assignment (plan-REQUIREd in-query) with the nlist-bounded frozen-centroid cross (the ann_cluster_recall contract)",
+      "exact baseline uses the bruteForceTopK small-catalog contract; serving itself is answered from the serving snapshot (the probed cells of the held store, scored on the driver; REQUIREd in-query) or, over the snapshot bound, by the centroid_id equi-join over the stored assignment (plan-REQUIREd in-query), with the nlist-bounded frozen-centroid cross (the ann_cluster_recall contract)",
     "r14c_ivfpq_residual" ->
       "same contracts as r14b_ivfpq_recall: exact baseline = bruteForceTopK small-catalog; residual retrieval = centroid_id equi-join with the nlist-row LOCAL centroid frame crossed against the request batch (frame rebuilt from the frozen driver-side index, nlist-bounded by construction)",
     "r14d_ivfpq_residual_geo" ->

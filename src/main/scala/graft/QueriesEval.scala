@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.eval.RankingMetrics
 import graft.functions.{Vectors => V}
-import graft.ops.{Relational, Similarity}
+import graft.ops.{Relational, ServingSnapshot, Similarity}
 
 /** Eval-metric (SURVEY §2.10 E1–E10) and vector (§2.9 R1–R3, R9, R10)
   * query tranche: the §3.2 evaluation pipeline re-enacted on the driver
@@ -1246,24 +1246,37 @@ object QueriesEval {
           s, baseStore, delta, "vec_id")
         val requests = emb.filter(col("vec_id") < 16)
           .select(col("vec_id").as("u"), col("embedding"))
-        // servedTopKFromStore (r18): the probed centroid set is pushed
-        // BELOW the catalog's dedup as an IN-filter on the partition
-        // column, so unprobed store partitions are never listed — the
-        // r17 form joined ABOVE the assembled catalog and scanned every
-        // partition (ADVICE r17: the dedup shuffle + eval barrier block
-        // pushdown). Both plan contracts REQUIREd below.
-        val served = Similarity.servedTopKFromStore(requests, baseStore,
-          delta, "u", "vec_id", "embedding", k, cents1, nprobe = nprobe,
-          metric = "cosine", excludeSelf = true)
-        requireCentroidJoin(served, "c5c_ivf_stream_refresh")
-        val prunedScans = served.queryExecution.sparkPlan.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec
-              if f.partitionFilters.exists(
-                _.references.exists(_.name == "centroid_id")) => f
+        // servedTopKFromStore: served from the serving snapshot when the
+        // store fits it, else by the pruned scan (r18: the probed centroid
+        // set is pushed BELOW the catalog's dedup as an IN-filter on the
+        // partition column, so unprobed store partitions are never
+        // listed). Either path's pruning contract is REQUIREd below.
+        val sv = Similarity.serveFromStore(requests, baseStore, delta, "u",
+          "vec_id", "embedding", k, cents1, nprobe, "cosine",
+          excludeSelf = true, ServingSnapshot.MaxRootBytes)
+        val served = sv.answer
+        sv.snapshot match {
+          case Some(Similarity.FromSnapshot(scored, held)) =>
+            val listed = graft.streaming.StreamingJobs.ivfCells(s, baseStore)
+              .flatMap(_._3.map(_.getPath)).toSet
+            require(held == listed, "c5c_ivf_stream_refresh: the serving " +
+              "snapshot must hold exactly the base store's listed cell files")
+            val cells = ServingSnapshot.collectOnDriver(
+                scored.select(col("centroid_id").cast("long")))
+              .collect().map(_.getLong(0)).toSet
+            require(cells.subsetOf(sv.probed.toSet),
+              "c5c_ivf_stream_refresh: only the probed cells may be scored")
+          case None =>
+            requireCentroidJoin(served, "c5c_ivf_stream_refresh")
+            val prunedScans = served.queryExecution.sparkPlan.collect {
+              case f: org.apache.spark.sql.execution.FileSourceScanExec
+                  if f.partitionFilters.exists(
+                    _.references.exists(_.name == "centroid_id")) => f
+            }
+            require(prunedScans.nonEmpty,
+              "c5c_ivf_stream_refresh: the probed centroid set must reach " +
+                "the store scans as partitionFilters (file-listing pruning)")
         }
-        require(prunedScans.nonEmpty,
-          "c5c_ivf_stream_refresh: the probed centroid set must reach " +
-            "the store scans as partitionFilters (file-listing pruning)")
         val exact = Similarity.bruteForceTopK(requests,
           catalog.select(col("vec_id"), col("embedding")), "u", "vec_id",
           "embedding", k, "cosine", excludeSelf = true)

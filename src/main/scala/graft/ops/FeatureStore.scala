@@ -108,12 +108,32 @@ object FeatureStore {
     * `view.entityCols`, with the key and `__bucket` columns unchanged —
     * the lookup also filters `__bucket` and `_metadata.file_name` to the
     * requested keys' buckets and their [[bucketFile]]s, computed on the
-    * driver, and the scan reads only those files. Nothing is cached
-    * between calls: every lookup reads the store as the caller's frame
-    * lists it. Any other frame is read unpruned, with the same result. */
+    * driver, and the scan reads only those files. Any other frame is
+    * read unpruned, with the same result.
+    *
+    * When `features` is exactly one flat parquet relation over a single
+    * root (a store read directly), the lookup is answered from the
+    * [[ServingSnapshot]] of that root instead, keyed by the file
+    * statuses (path, length, mtime) the frame's own file index listed:
+    * an unchanged store is answered with no Spark job, and any upsert,
+    * swap or rewrite changes a status, so every lookup still reads the
+    * store as the caller's frame lists it. The same filters and the
+    * same latest-per-key window run on the driver over the held rows of
+    * the requested buckets' files, and the answer is a local relation
+    * equal to the scan's. A root whose files exceed the snapshot's byte
+    * bound is scanned. */
   def onlineLookup(features: DataFrame, view: FeatureView,
                    requestKeys: DataFrame, now: Column,
-                   tiebreakCol: String): DataFrame = {
+                   tiebreakCol: String): DataFrame =
+    onlineLookup(features, view, requestKeys, now, tiebreakCol,
+      ServingSnapshot.MaxRootBytes)
+
+  /** [[onlineLookup]] with the serving snapshot's byte bound: a store
+    * whose listed files exceed `maxSnapshotBytes` is scanned. */
+  private[graft] def onlineLookup(features: DataFrame, view: FeatureView,
+                                  requestKeys: DataFrame, now: Column,
+                                  tiebreakCol: String,
+                                  maxSnapshotBytes: Long): DataFrame = {
     val keyCols = view.entityCols
     val req = requestKeys.select(keyCols.map(col): _*)
     val rows = req.limit(MaxLookupKeys + 1).collect()
@@ -125,17 +145,35 @@ object FeatureStore {
       keyCols.indices.map(i =>
         keyLiteral(r.get(i), req.schema(i).dataType, keyTypes(i))))
     val typed = lits.forall(_.map(_.dataType) == keyTypes)
-    val fresh = freshOnly(features, view.tsCol, now, view.ttlSeconds)
     val buckets = storeLayout(features, keyCols).filter(_ => typed)
-      .map { l =>
-        val bs = lits.map(ls => java.lang.Math.floorMod(
+      .map(l => lits.map(ls => java.lang.Math.floorMod(
           new XxHash64(ls).eval().asInstanceOf[Long], l.numBuckets.toLong)
-          .toInt).distinct.sorted
-        col("__bucket").isin(bs: _*) &&
-          col("_metadata.file_name").isin(bs.map(bucketFile): _*)
+        .toInt).distinct.sorted)
+    // the lookup over `store`: its requested keys' rows, in their buckets
+    // when the layout is known (and their bucket files, when `store` is
+    // scanned), latest per key within the TTL
+    def lookup(store: DataFrame, byFile: Boolean): DataFrame = {
+      val scope = buckets.map { bs =>
+        val inBucket = col("__bucket").isin(bs: _*)
+        if (byFile)
+          inBucket && col("_metadata.file_name").isin(bs.map(bucketFile): _*)
+        else inBucket
       }
-    val scoped = fresh.filter(buckets.foldLeft(keyFilter(keyCols, lits))(_ && _))
-    latestPerKey(scoped, keyCols, view.tsCol, tiebreakCol)
+      latestPerKey(freshOnly(store, view.tsCol, now, view.ttlSeconds)
+          .filter(scope.foldLeft(keyFilter(keyCols, lits))(_ && _)),
+        keyCols, view.tsCol, tiebreakCol)
+    }
+    val held = ServingSnapshot.sourceOf(features) match {
+      case Some((source, files)) => ServingSnapshot.of(features.sparkSession,
+        source, files, maxSnapshotBytes)
+      case None => ServingSnapshot.fallback(); None
+    }
+    held.fold(lookup(features, byFile = true)) { snap =>
+      val files = buckets.map(_.map(bucketFile).toSet)
+      ServingSnapshot.collectOnDriver(lookup(ServingSnapshot.frame(
+        features.sparkSession, snap.schema,
+        snap.rows(p => files.forall(_(p.getName)))), byFile = false))
+    }
   }
 
   /** A request value as a literal: of the key column's type when the

@@ -595,25 +595,28 @@ object Relational {
     * `rank().over(Window.partitionBy(g).orderBy(v))` with a 3-value group
     * key plans 3 single-task sorts of n/3 rows each — the per-group twin
     * of the unpartitioned-window scale killer (parallelism = #groups, not
-    * #cores). Here the rank is recovered from [[globalRowNumber]] over
-    * (group, value): rank = (min global row number of the row's (g, v)
-    * tie class) − (min global row number of its group) + 1 — every step a
-    * parallel shuffle keyed by (g, v), group-size-independent. The
-    * group-minimum frame is #groups rows, broadcast. Intra-tie row-number
-    * order is irrelevant (only the tie-class min is used), so no tiebreak
-    * column is needed. */
+    * #cores). Here the rank is counted: rank = 1 + (rows before the row's
+    * (g, v) tie class) − (rows before its group), in (g, v) order. The
+    * distinct (g, v) tie classes, each with its size, are a total order,
+    * so one [[globalCumSum]] of the sizes over them counts the rows
+    * before every class in parallel, whatever the group sizes; the rows
+    * before each group are the group sizes' running sum over a #groups
+    * frame, broadcast. The ranked classes join back to the rows once. */
   def rankInGroups(df: DataFrame, groupCol: String, valueCol: String,
                    rankCol: String): DataFrame = {
-    val rn = globalRowNumber(df, Seq(col(groupCol), col(valueCol)),
-      rnCol = "__grn")
-    val tieMin = rn.groupBy(col(groupCol), col(valueCol))
-      .agg(min(col("__grn")).as("__tmn"))
-    val grpMin = tieMin.groupBy(col(groupCol))
-      .agg(min(col("__tmn")).as("__gmn"))
-    rn.join(tieMin, Seq(groupCol, valueCol))
-      .join(broadcast(grpMin), Seq(groupCol))
-      .withColumn(rankCol, col("__tmn") - col("__gmn") + 1)
-      .drop("__grn", "__tmn", "__gmn")
+    val keys = Seq(col(groupCol), col(valueCol))
+    val ties = df.groupBy(keys: _*).agg(count(lit(1)).as("__c"))
+    // #groups rows; the constant partition key as in globalRowNumber
+    val grpStart = df.groupBy(col(groupCol)).agg(count(lit(1)).as("__n"))
+      .withColumn("__gs", coalesce(sum(col("__n")).over(
+        Window.partitionBy(pmod(col("__n"), lit(1))).orderBy(col(groupCol))
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .drop("__n")
+    val ranked = globalCumSum(ties, keys, "__c", "__cum")
+      .join(broadcast(grpStart), Seq(groupCol))
+      .select(keys :+
+        (col("__cum") - col("__c") - col("__gs") + 1).as(rankCol): _*)
+    df.join(ranked, Seq(groupCol, valueCol))
   }
 
   /** J14: interval-containment join — every (point, interval) pair with

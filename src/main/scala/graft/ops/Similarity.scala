@@ -2,6 +2,7 @@ package graft.ops
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -207,20 +208,25 @@ object Similarity {
     * argument that justified `broadcast(centroids)` in the old join form,
     * and the same contract as the numBuckets-bounded store-pruning
     * collects). Sorted by id so the reference arrays are deterministic
-    * regardless of collect order. */
+    * regardless of collect order. Memoized per frame when the frame's
+    * leaves are fixed — a checkpointed `LogicalRDD` or a local relation,
+    * like the frozen table [[graft.streaming.StreamingJobs.rebuildIvfStore]]
+    * returns ([[ServingSnapshot.memoCentroids]]); any other frame is
+    * collected per call. */
   private def collectCentroids(
-      centroids: DataFrame): (Array[Long], Array[Array[Double]]) = {
-    // BOUNDED collect, RUNTIME-ENFORCED (r20): limit-gated at the shared
-    // ceiling so an accidentally data-sized "centroid" frame fails loudly
-    // instead of OOMing the driver.
-    val rows = centroids
-      .select(col("centroid_id").cast("long"), col("centroid_vec"))
-      .limit(MaxCollectedCentroids + 1).collect().sortBy(_.getLong(0))
-    require(rows.length <= MaxCollectedCentroids,
-      s"collectCentroids: centroid table exceeds the config-sized bound " +
-        s"($MaxCollectedCentroids rows)")
-    (rows.map(_.getLong(0)), rows.map(r => toDoubles(r.getSeq[Any](1))))
-  }
+      centroids: DataFrame): (Array[Long], Array[Array[Double]]) =
+    ServingSnapshot.memoCentroids(centroids) {
+      // BOUNDED collect, RUNTIME-ENFORCED (r20): limit-gated at the shared
+      // ceiling so an accidentally data-sized "centroid" frame fails
+      // loudly instead of OOMing the driver.
+      val rows = centroids
+        .select(col("centroid_id").cast("long"), col("centroid_vec"))
+        .limit(MaxCollectedCentroids + 1).collect().sortBy(_.getLong(0))
+      require(rows.length <= MaxCollectedCentroids,
+        s"collectCentroids: centroid table exceeds the config-sized bound " +
+          s"($MaxCollectedCentroids rows)")
+      (rows.map(_.getLong(0)), rows.map(r => toDoubles(r.getSeq[Any](1))))
+    }
 
   private def idTypeOf(centroids: DataFrame) =
     centroids.schema("centroid_id").dataType
@@ -1468,13 +1474,49 @@ object Similarity {
     * broadcast local relation of the (query_id, centroid_id, __qv) probe
     * rows on centroid_id. Results are identical to
     * [[clusterPrunedTopKStored]] over the full catalog. Returns the
-    * [[bruteForceTopK]] output contract. */
+    * [[bruteForceTopK]] output contract.
+    *
+    * When the store's halves fit the [[ServingSnapshot]] bound, the
+    * request reads nothing: each half is held on the driver under the
+    * file statuses [[graft.streaming.StreamingJobs.ivfCells]] lists, the
+    * probed catalog is assembled from the held rows with the same
+    * delta-wins dedup and cell-straddle guard
+    * ([[graft.streaming.StreamingJobs.ivfServingSnapshot]]), and the
+    * same scoring tail runs on the driver
+    * ([[ServingSnapshot.collectOnDriver]]): an unchanged store with a
+    * frozen centroid table answers with no Spark job, as a local
+    * relation equal to the scan's. An append or a rebuild changes the
+    * listing, so the next request sees it. */
   def servedTopKFromStore(queries: DataFrame, basePath: String,
                           deltaPath: String, queryId: String,
                           itemId: String, vecCol: String, k: Int,
                           centroids: DataFrame, nprobe: Int,
                           metric: String = "l2",
-                          excludeSelf: Boolean = false): DataFrame = {
+                          excludeSelf: Boolean = false): DataFrame =
+    serveFromStore(queries, basePath, deltaPath, queryId, itemId, vecCol, k,
+      centroids, nprobe, metric, excludeSelf, ServingSnapshot.MaxRootBytes)
+      .answer
+
+  /** A [[servedTopKFromStore]] answer, the cells its queries probed and,
+    * when the serving snapshot answered it (None: the store was
+    * scanned), what it scored. */
+  private[graft] final case class Served(answer: DataFrame,
+                                         probed: Seq[Long],
+                                         snapshot: Option[FromSnapshot])
+
+  /** The probed catalog a snapshot-served request scored (a frame of
+    * driver rows) and the files the snapshot holds for the base half. */
+  private[graft] final case class FromSnapshot(catalog: DataFrame,
+                                               baseFiles: Set[Path])
+
+  /** [[servedTopKFromStore]] with the serving snapshot's byte bound: a
+    * store whose listed files exceed `maxSnapshotBytes` is scanned. */
+  private[graft] def serveFromStore(queries: DataFrame, basePath: String,
+                                    deltaPath: String, queryId: String,
+                                    itemId: String, vecCol: String, k: Int,
+                                    centroids: DataFrame, nprobe: Int,
+                                    metric: String, excludeSelf: Boolean,
+                                    maxSnapshotBytes: Long): Served = {
     require(nprobe >= 1, s"servedTopKFromStore: nprobe=$nprobe")
     require(metric == "cosine" || metric == "l2",
       s"servedTopKFromStore: metric=$metric")
@@ -1489,10 +1531,19 @@ object Similarity {
       StructType(Seq(q.schema("query_id"),
         StructField("centroid_id", LongType, nullable = false),
         q.schema("__qv"))))
-    val catalog = graft.streaming.StreamingJobs.ivfServingCatalog(spark,
-      basePath, deltaPath, itemId,
-      Some(probes.map(_.getLong(1)).distinct.sorted))
-    storedTopK(catalog, qProbe, itemId, vecCol, k, metric, excludeSelf)
+    val probed = probes.map(_.getLong(1)).distinct.sorted
+    val held = graft.streaming.StreamingJobs.ivfServingSnapshot(spark,
+      basePath, deltaPath, itemId, probed, maxSnapshotBytes)
+    def topK(catalog: DataFrame) =
+      storedTopK(catalog, qProbe, itemId, vecCol, k, metric, excludeSelf)
+    held match {
+      case Some((catalog, baseFiles)) => Served(
+        ServingSnapshot.collectOnDriver(topK(catalog)), probed,
+        Some(FromSnapshot(catalog, baseFiles)))
+      case None => Served(topK(graft.streaming.StreamingJobs
+          .ivfServingCatalog(spark, basePath, deltaPath, itemId,
+            Some(probed))), probed, None)
+    }
   }
 
   // =====================================================================

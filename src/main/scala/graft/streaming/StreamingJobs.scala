@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -563,11 +563,13 @@ object StreamingJobs {
     * the consistent pre-rebuild view).
     *
     * `probedCentroids`: read only those cells. Each half lists its
-    * root once with Hadoop FS calls, keeps the probed `centroid_id=`
-    * directories, and reads them (schema from one of their footers, so
-    * no Spark job infers it) under a centroid_id IN-filter that lands
-    * in the scan's partitionFilters; a half holding none of the probed
-    * cells is left out. The pruning happens BELOW the union/dedup,
+    * root and its cells with Hadoop FS calls ([[ivfCells]]), keeps the
+    * probed `centroid_id=` directories, and reads them (schema from one
+    * of their footers, so no Spark job infers it) under a centroid_id
+    * IN-filter that lands in the scan's partitionFilters; a half
+    * holding none of the probed cells is left out. The same probed
+    * catalog over the serving snapshot's held rows, with the same
+    * guard and dedup, is [[ivfServingSnapshot]]. The pruning happens BELOW the union/dedup,
     * which is the only place it can: the catalog's dedup shuffles, so
     * a centroid_id predicate applied ABOVE the catalog never reaches
     * the scan ([[graft.ops.Similarity.servedTopKFromStore]] is the
@@ -587,6 +589,90 @@ object StreamingJobs {
                         deltaPath: String, idCol: String,
                         probedCentroids: Option[Seq[Long]] = None)
       : DataFrame = {
+    val roots = ivfRoots(spark, basePath, deltaPath)
+    val halves = probedCentroids match {
+      case None => roots.map { case (root, epoch) =>
+        spark.read.parquet(root).withColumn("__epoch", lit(epoch)) }
+      case Some(ids) =>
+        val cells = roots.map { case (root, epoch) =>
+          (root, epoch, ivfCells(spark, root)) }
+        def schemaOf(files: Seq[FileStatus]) =
+          footerSchema(spark, files.head.getPath)
+        // the delta's ids, read whole, for the cell-straddle guard
+        val deltaIds = cells.collectFirst {
+          case (root, 1, cs) if cs.exists(_._3.nonEmpty) =>
+            spark.read.schema(schemaOf(cs.flatMap(_._3))).parquet(root)
+              .select(col(idCol))
+        }
+        probedHalves(cells.flatMap { case (root, epoch, cs) =>
+          val probed = cs.filter(c => ids.contains(c._1))
+          Option.when(probed.exists(_._3.nonEmpty))(epoch ->
+            spark.read.schema(schemaOf(probed.flatMap(_._3)))
+              .option("basePath", root)
+              .parquet(probed.map(_._2.toString): _*))
+        }, deltaIds, ids, idCol)
+    }
+    // no probed cell in either half: the empty catalog, with its schema
+    latestEpoch(halves.reduceOption(_ unionByName _).getOrElse(
+      spark.read.parquet(roots.head._1).withColumn("__epoch", lit(0))
+        .filter(lit(false))), roots.exists(_._2 == 1), idCol)
+  }
+
+  /** [[ivfServingCatalog]] with `probedCentroids`, answered from the
+    * serving snapshot ([[graft.ops.ServingSnapshot]]): the same halves
+    * (base → base.old, delta), each listed by [[ivfCells]] and held by the
+    * snapshot under those statuses, and the same cell-straddle guard and
+    * delta-wins dedup, over the held rows. Returns the catalog as a frame
+    * of driver rows and the files the base half holds; None — the
+    * caller scans — when the halves' files exceed `maxBytes` or a file
+    * changed while it was read. */
+  private[graft] def ivfServingSnapshot(spark: SparkSession,
+                                        basePath: String, deltaPath: String,
+                                        idCol: String, probed: Seq[Long],
+                                        maxBytes: Long)
+      : Option[(DataFrame, Set[Path])] = {
+    import graft.ops.ServingSnapshot
+    val roots = ivfRoots(spark, basePath, deltaPath)
+    val cells = roots.map { case (root, epoch) =>
+      (root, epoch, ivfCells(spark, root)) }.filter(_._3.exists(_._3.nonEmpty))
+    if (cells.flatMap(_._3.flatMap(_._3)).map(_.getLen).sum > maxBytes ||
+        cells.isEmpty) {
+      ServingSnapshot.fallback(); return None
+    }
+    val held = cells.map { case (root, epoch, cs) =>
+      val r = new Path(root)
+      ServingSnapshot.of(spark, ServingSnapshot.Source(
+          r.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .makeQualified(r), None, Map.empty), cs.flatMap(_._3), maxBytes)
+        .map(snap => (epoch, cs, snap))
+    }
+    Option.when(held.forall(_.nonEmpty)) {
+      val halves = held.flatten
+      def rows(snap: ServingSnapshot.Snapshot,
+               files: Seq[FileStatus]): DataFrame = {
+        val paths = files.map(_.getPath).toSet
+        ServingSnapshot.frame(spark, snap.schema, snap.rows(paths))
+      }
+      val deltaIds = halves.collectFirst { case (1, cs, snap) =>
+        rows(snap, cs.flatMap(_._3)).select(col(idCol)) }
+      val probedRows = halves.flatMap { case (epoch, cs, snap) =>
+        val files = cs.filter(c => probed.contains(c._1)).flatMap(_._3)
+        Option.when(files.nonEmpty)(epoch -> rows(snap, files))
+      }
+      (latestEpoch(probedHalves(probedRows, deltaIds, probed, idCol)
+          .reduceOption(_ unionByName _).getOrElse(
+            ServingSnapshot.frame(spark, halves.head._3.schema, Nil)
+              .withColumn("__epoch", lit(0))),
+          roots.exists(_._2 == 1), idCol),
+        halves.collectFirst { case (0, _, snap) =>
+          snap.files.keySet.map(_.path) }.getOrElse(Set.empty))
+    }
+  }
+
+  /** The store halves that exist: base (or, in the rebuild's rename
+    * window, base.old) as epoch 0, then the delta as epoch 1. */
+  private def ivfRoots(spark: SparkSession, basePath: String,
+                       deltaPath: String): Seq[(String, Int)] = {
     val base =
       if (pathExists(spark, basePath)) Some(basePath)
       else if (pathExists(spark, basePath + ".old")) Some(basePath + ".old")
@@ -594,39 +680,29 @@ object StreamingJobs {
     val deltaExists = pathExists(spark, deltaPath)
     require(base.nonEmpty || deltaExists,
       s"ivfServingCatalog: neither $basePath(.old) nor $deltaPath exists")
-    val roots = base.toSeq.map(_ -> 0) ++
-      Seq(deltaPath -> 1).filter(_ => deltaExists)
-    val halves = probedCentroids match {
-      case None => roots.map { case (root, epoch) =>
-        spark.read.parquet(root).withColumn("__epoch", lit(epoch)) }
-      case Some(ids) =>
-        // the delta's ids, read whole, for the cell-straddle guard
-        lazy val deltaIds = Option.when(deltaExists)(
-            ivfCells(spark, deltaPath, None)).flatten
-          .map { case (_, schema) =>
-            spark.read.schema(schema).parquet(deltaPath).select(col(idCol)) }
-        roots.flatMap { case (root, epoch) =>
-          ivfCells(spark, root, Some(ids.toSet)).map { case (cells, schema) =>
-            val h = spark.read.schema(schema).option("basePath", root)
-              .parquet(cells.map(_.toString): _*)
-              .filter(col("centroid_id").isin(ids: _*))
-            // cell-straddle guard (see the probedCentroids scaladoc):
-            // under pruning, a base row whose id has ANY delta row is
-            // dropped here — the global delta-wins winner may live in an
-            // unprobed cell, and serving the stale base row would
-            // diverge from the unpruned catalog
-            (if (epoch == 1) h
-            else deltaIds.fold(h)(h.join(_, Seq(idCol), "left_anti")))
-              .withColumn("__epoch", lit(epoch))
-          }
-        }
+    base.toSeq.map(_ -> 0) ++ Seq(deltaPath -> 1).filter(_ => deltaExists)
+  }
+
+  /** The probed cells of each half, `(epoch, rows)`, under a centroid_id
+    * IN-filter (the scans' partitionFilters), with the cell-straddle
+    * guard on the base half (see [[ivfServingCatalog]]): under pruning,
+    * a base row whose id has ANY delta row is dropped, since the global
+    * delta-wins winner may live in an unprobed cell. */
+  private def probedHalves(halves: Seq[(Int, DataFrame)],
+                           deltaIds: Option[DataFrame], ids: Seq[Long],
+                           idCol: String): Seq[DataFrame] =
+    halves.map { case (epoch, half) =>
+      val h = half.filter(col("centroid_id").isin(ids: _*))
+      (if (epoch == 1) h
+      else deltaIds.fold(h)(h.join(_, Seq(idCol), "left_anti")))
+        .withColumn("__epoch", lit(epoch))
     }
-    // no probed cell in either half: the empty catalog, with its schema
-    val all = halves.reduceOption(_ unionByName _).getOrElse(
-      spark.read.parquet(roots.head._1).withColumn("__epoch", lit(0))
-        .filter(lit(false)))
-    // base alone is one row per id (rebuildIvfStore writes it from this
-    // deduped view): only a delta brings duplicates to resolve
+
+  /** One row per id, the delta's winning: base alone is one row per id
+    * (rebuildIvfStore writes it from this deduped view), so only a delta
+    * brings duplicates to resolve. */
+  private def latestEpoch(all: DataFrame, deltaExists: Boolean,
+                          idCol: String): DataFrame =
     if (!deltaExists) all.drop("__epoch")
     else {
       val w = Window.partitionBy(col(idCol)).orderBy(col("__epoch").desc)
@@ -634,34 +710,30 @@ object StreamingJobs {
         .filter(col("__rn") === 1)
         .drop("__epoch", "__rn")
     }
-  }
 
-  /** A store half's `centroid_id=` cell directories — only the `probed`
-    * ones, when given — and the schema of the first data file among
-    * them; None when they hold no data file. Hadoop FS calls only. */
-  private def ivfCells(spark: SparkSession, root: String,
-                       probed: Option[Set[Long]])
-      : Option[(Seq[Path], StructType)] = {
+  /** A store half's `centroid_id=` cells: each cell's id, directory and
+    * data files. Hadoop FS calls only: the root and each cell listed
+    * once. */
+  private[graft] def ivfCells(spark: SparkSession, root: String)
+      : Seq[(Long, Path, Seq[FileStatus])] = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cells = fs.listStatus(rootPath).toSeq
-      .filter(st => st.isDirectory && (st.getPath.getName.split("=", 2) match {
-        case Array("centroid_id", v) =>
-          probed.forall(ids => v.toLongOption.exists(ids))
-        case _ => false
-      }))
-      .map(_.getPath)
-    cells.iterator.flatMap(c => fs.listStatus(c).iterator)
-      .find(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(f => cells -> footerSchema(spark, f.getPath))
+    fs.listStatus(rootPath).toSeq.filter(_.isDirectory).flatMap { st =>
+      st.getPath.getName.split("=", 2) match {
+        case Array("centroid_id", v) => v.toLongOption.map(id =>
+          (id, st.getPath, fs.listStatus(st.getPath).toSeq.filter(f =>
+            f.isFile && !f.getPath.getName.startsWith("_") &&
+              !f.getPath.getName.startsWith("."))))
+        case _ => None
+      }
+    }
   }
 
   /** The Spark schema of one parquet file, read from its footer on the
     * driver — the schema `spark.read.parquet` infers from the same file
     * with a Spark job: the schema Spark wrote into the footer, else the
     * converted Parquet schema. */
-  private def footerSchema(spark: SparkSession,
+  private[graft] def footerSchema(spark: SparkSession,
                            file: Path): StructType = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,

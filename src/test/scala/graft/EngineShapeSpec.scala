@@ -306,14 +306,45 @@ class EngineShapeSpec extends AnyFunSuite {
       s"helper, found ${checks.size}: ${checks.mkString(", ")}")
   }
 
-  /** The code of `owner.name`'s definition, comments blanked. */
+  test("the serving snapshot is the only driver-resident serving state: " +
+    "no other engine object holds a mutable map, the serving operators " +
+    "cache nothing, and both request paths pass the snapshot's bound") {
+    val engineDirs = Seq("ops", "streaming", "sources", "eval", "functions")
+      .map(d => mainDir.resolve(s"graft/$d"))
+    // an object-level val or var, with its initializer's continuation lines
+    val member = """(?m)^  (?:@volatile\s+)?(?:private(?:\[\w+\])?\s+)?""" +
+      """(?:lazy\s+)?(?:val|var)\s+\w+[^\n]*(?:\n    [^\n]*)*"""
+    val mutableMap = ("""\b(?:mutable\.\w*Map|HashMap|WeakHashMap|TrieMap|""" +
+      """IdentityHashMap|ConcurrentHashMap(?!\s*\.\s*newKeySet))\b""").r
+    val holders = mainCode.collect {
+      case (p, code) if engineDirs.exists(p.startsWith) &&
+          member.r.findAllIn(code).exists(mutableMap.findFirstIn(_).nonEmpty) =>
+        mainDir.relativize(p).toString
+    }
+    assert(holders === Seq("graft/ops/ServingSnapshot.scala"))
+    Seq("ops/FeatureStore", "ops/Similarity", "streaming/StreamingJobs")
+      .foreach { f =>
+        val code = lex(new String(Files.readAllBytes(
+          mainDir.resolve(s"graft/$f.scala")), "UTF-8")).bare
+        assert("""\.\s*(?:cache|persist)\s*\(""".r.findFirstIn(code).isEmpty,
+          s"$f caches a frame")
+      }
+    assert(defCode("FeatureStore", "onlineLookup").contains(
+      "ServingSnapshot.MaxRootBytes"))
+    assert(defCode("Similarity", "servedTopKFromStore").contains(
+      "ServingSnapshot.MaxRootBytes"))
+  }
+
+  /** The code of `owner.name`'s definitions (its overloads, in source
+    * order), comments blanked. */
   private def defCode(owner: String, name: String): String = {
-    val d = objectDefs(withPrivate = true)
+    val ds = objectDefs(withPrivate = true)
       .filter(d => d.owner == owner && d.name == name)
-    assert(d.size == 1, s"$owner.$name defined ${d.size} times")
-    val code = lex(new String(Files.readAllBytes(d.head.file), "UTF-8")).code
-    code.split("\n", -1).slice(d.head.lines.start, d.head.lines.end)
-      .mkString("\n")
+    assert(ds.nonEmpty, s"$owner.$name is not defined")
+    ds.map { d =>
+      val code = lex(new String(Files.readAllBytes(d.file), "UTF-8")).code
+      code.split("\n", -1).slice(d.lines.start, d.lines.end).mkString("\n")
+    }.mkString("\n")
   }
 
   test("bucketed stores: one write per merge, no dynamic partition " +

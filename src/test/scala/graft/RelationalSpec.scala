@@ -355,6 +355,29 @@ class RelationalSpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  test("nested rankInGroups (the r11 Spearman shape) keeps every row of " +
+    "every group and equals the window rank() at 300K rows") {
+    // big enough that the range partitioner samples rather than collects
+    // its partitions: a rank that references its row numbers more than
+    // once then read differently sampled range bounds and lost rows
+    val li = spark.range(300000).select(
+      element_at(array(lit("A"), lit("N"), lit("R")),
+        (pmod(xxhash64(col("id")), lit(3)) + 1).cast("int")).as("g"),
+      (pmod(xxhash64(col("id"), lit(1)), lit(50)) + 1).cast("long").as("q"),
+      pmod(xxhash64(col("id"), lit(2)), lit(10000000L)).as("p"))
+    val got = Relational.rankInGroups(
+      Relational.rankInGroups(li, "g", "q", "rq"), "g", "p", "rp")
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
+    val want = li.select(col("g"),
+      rank().over(w.orderBy(col("q"))).cast("long").as("rq"),
+      rank().over(w.orderBy(col("p"))).cast("long").as("rp"))
+    def summary(df: org.apache.spark.sql.DataFrame) = df.groupBy(col("g"))
+      .agg(count(lit(1)), sum(col("rq")), sum(col("rp")),
+        sum(col("rq") * col("rp")))
+      .as[(String, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(summary(got) === summary(want))
+  }
+
   test("intervalJoin: equals the naive BETWEEN result, plans as an equi-join") {
     // points on a line; intervals of assorted widths incl. cell-straddlers,
     // a zero-width interval, and an inverted one (matches nothing)

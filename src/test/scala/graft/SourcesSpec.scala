@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{FeatureStore, Features}
+import graft.ops.{FeatureStore, Features, ServingSnapshot}
 import graft.sources.{Readers, SyntheticData}
 
 /** S1 `.dat` scan golden tests (FIXTURES.md §1.1 micro-files), synthetic
@@ -119,54 +119,72 @@ class SourcesSpec extends AnyFunSuite {
   private def bucketPruned(df: org.apache.spark.sql.DataFrame): Boolean =
     fileScans(df).exists(fileNameFiltered)
 
+  /** The bound that serves a store frame from the serving snapshot (the
+    * default), and the one that scans every frame (the fallback). */
+  private val snapshotPath = ServingSnapshot.MaxRootBytes
+  private val scanPath = 0L
+
   test("bucketed online lookup equals the semi-join lookup in every " +
     "bucket: duplicate, null and absent keys, TTL edges, composite keys, " +
     "and frames without a bucket layout record") {
+    // on both paths: the serving snapshot and the scan
     val store = lookupStore(8)
     val keys = ((1L to 40L).map(Option(_)) ++
       Seq(Some(3L), Some(3L), None, Some(999L), Some(1000L)))
       .toDF("user_id")
     assert(spark.read.parquet(store).select("__bucket").distinct().count()
       === 8L, "the keys must cover every bucket")
-    def check(features: org.apache.spark.sql.DataFrame,
-              pruned: Boolean): Unit = {
-      val got = FeatureStore.onlineLookup(features, lookupView, keys,
-        lookupNow, "v")
-      val rows = got.collect()
-      assert(rows.toSet ===
-        semiJoinLookup(features, keys, lookupView).collect().toSet)
-      assert(rows.length === rows.map(_.getAs[Long]("user_id")).distinct
-        .length, "one row per key")
-      assert(bucketPruned(got) === pruned)
+    for (bound <- Seq(scanPath, snapshotPath)) {
+      def check(features: org.apache.spark.sql.DataFrame,
+                pruned: Boolean): Unit = {
+        val got = FeatureStore.onlineLookup(features, lookupView, keys,
+          lookupNow, "v", bound)
+        val rows = got.collect()
+        assert(rows.toSet ===
+          semiJoinLookup(features, keys, lookupView).collect().toSet)
+        assert(rows.length === rows.map(_.getAs[Long]("user_id")).distinct
+          .length, "one row per key")
+        assert(got.schema === features.schema)
+        // the store, read directly, is served by the snapshot: no scan
+        if (bound == scanPath || !pruned)
+          assert(bucketPruned(got) === pruned)
+        else assert(fileScans(got).isEmpty, "not served by the snapshot")
+      }
+      // the store, read directly: pruned to the requested keys' buckets
+      check(spark.read.parquet(store), pruned = true)
+      assert(FeatureStore.onlineLookup(spark.read.parquet(store), lookupView,
+          keys, lookupNow, "v", bound).count() === 24L, // 3 of every 5 fresh
+        "the TTL edges are inclusive, the future and the expired excluded")
+      // the same rows with no layout record, and the raw rows (several
+      // per key, no store at all): read unpruned, same contract
+      val copy = store + s"_copy$bound"
+      spark.read.parquet(store).write.partitionBy("__bucket").parquet(copy)
+      check(spark.read.parquet(copy), pruned = false)
+      check(lookupRows, pruned = false)
+      // a store frame whose key column is recomputed is not pruned either
+      check(spark.read.parquet(store).withColumn("user_id",
+        col("user_id") + 0L), pruned = false)
+      // composite key: a request pairing the parts of two keys matches
+      // neither, from a frame and from a store
+      val pairs = Seq((1L, 1L, 1800L, 1L), (1L, 2L, 1800L, 2L),
+          (2L, 1L, 1800L, 3L), (2L, 2L, 1800L, 4L))
+        .toDF("a", "b", "ts_s", "v")
+        .withColumn("ts", timestamp_seconds(col("ts_s")))
+      val pairStore = Files.createTempDirectory("graft-pairs").toString +
+        "/store"
+      graft.streaming.StreamingJobs.upsertBucketedBatch(pairs,
+        Seq("a", "b"), "ts", "v", pairStore, 4)
+      val pairView = FeatureStore.FeatureView("p", Seq("a", "b"), "ts", 500L)
+      val pairKeys = Seq((Option(1L), Option(2L)), (Some(2L), Some(1L)),
+        (None, Some(1L)), (Some(3L), Some(3L))).toDF("a", "b")
+      for (frame <- Seq(pairs, spark.read.parquet(pairStore))) {
+        val got = FeatureStore.onlineLookup(frame, pairView, pairKeys,
+          lookupNow, "v", bound).select("v").as[Long].collect().toSet
+        assert(got === Set(2L, 3L))
+        assert(got === semiJoinLookup(pairs, pairKeys, pairView)
+          .select("v").as[Long].collect().toSet)
+      }
     }
-    // the store, read directly: pruned to the requested keys' buckets
-    check(spark.read.parquet(store), pruned = true)
-    assert(FeatureStore.onlineLookup(spark.read.parquet(store), lookupView,
-        keys, lookupNow, "v").count() === 24L, // 3 of every 5 keys fresh
-      "the TTL edges are inclusive, the future and the expired excluded")
-    // the same rows with no layout record, and the raw rows (several per
-    // key, no store at all): read unpruned, same contract
-    val copy = store + "_copy"
-    spark.read.parquet(store).write.partitionBy("__bucket").parquet(copy)
-    check(spark.read.parquet(copy), pruned = false)
-    check(lookupRows, pruned = false)
-    // a store frame whose key column is recomputed is not pruned either
-    check(spark.read.parquet(store).withColumn("user_id",
-      col("user_id") + 0L), pruned = false)
-    // composite key: a request pairing the parts of two keys matches
-    // neither
-    val pairs = Seq((1L, 1L, 1800L, 1L), (1L, 2L, 1800L, 2L),
-        (2L, 1L, 1800L, 3L), (2L, 2L, 1800L, 4L))
-      .toDF("a", "b", "ts_s", "v")
-      .withColumn("ts", timestamp_seconds(col("ts_s")))
-    val pairView = FeatureStore.FeatureView("p", Seq("a", "b"), "ts", 500L)
-    val pairKeys = Seq((Option(1L), Option(2L)), (Some(2L), Some(1L)),
-      (None, Some(1L)), (Some(3L), Some(3L))).toDF("a", "b")
-    val got = FeatureStore.onlineLookup(pairs, pairView, pairKeys,
-      lookupNow, "v").select("v").as[Long].collect().toSet
-    assert(got === Set(2L, 3L))
-    assert(got === semiJoinLookup(pairs, pairKeys, pairView)
-      .select("v").as[Long].collect().toSet)
   }
 
   test("bucketed online lookup reads one bucket: the scan carries a " +
@@ -178,7 +196,7 @@ class SourcesSpec extends AnyFunSuite {
       (0 until 8).map(FeatureStore.bucketFile).toSet)
     Seq(Seq(7L).toDF("user_id"), Seq(7).toDF("user_id")).foreach { keys =>
       val got = FeatureStore.onlineLookup(spark.read.parquet(store),
-        lookupView, keys, lookupNow, "v")
+        lookupView, keys, lookupNow, "v", scanPath)
       assert(got.collect().map(r => (r.getAs[Long]("user_id"),
         r.getAs[Long]("v"))).toSeq === Seq((7L, 7L)))
       val scans = fileScans(got)
@@ -190,18 +208,30 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
-  test("online lookup after an upsert sees the new row (nothing is " +
-    "cached per store version)") {
+  test("online lookup after an upsert sees the new row (the snapshot is " +
+    "keyed by the store's file statuses), also when the rewritten bucket " +
+    "file keeps its length") {
     val store = lookupStore(4)
     def lookup(k: Long): Seq[Long] = FeatureStore.onlineLookup(
         spark.read.parquet(store), lookupView, Seq(k).toDF("user_id"),
         lookupNow, "v").select("v").as[Long].collect().toSeq
+    def upsert(k: Long, ts: Long, v: Long): Unit =
+      graft.streaming.StreamingJobs.upsertBucketedBatch(
+        Seq((k, ts, v)).toDF("user_id", "ts_s", "v")
+          .withColumn("ts", timestamp_seconds(col("ts_s"))).drop("ts_s"),
+        Seq("user_id"), "ts", "v", store, 4)
+    def bucketLengths: Map[String, Long] = new java.io.File(store)
+      .listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> f.length()).toMap
     assert(lookup(2L) === Seq(2L)) // its latest row is at ts 1700
-    graft.streaming.StreamingJobs.upsertBucketedBatch(
-      Seq((2L, 1900L, 200L)).toDF("user_id", "ts_s", "v")
-        .withColumn("ts", timestamp_seconds(col("ts_s"))).drop("ts_s"),
-      Seq("user_id"), "ts", "v", store, 4)
+    upsert(2L, 1900L, 200L)
     assert(lookup(2L) === Seq(200L))
+    // same ts, a value of the same width: the bucket file is rewritten
+    // with the same length
+    val before = bucketLengths
+    upsert(2L, 1900L, 201L)
+    assert(bucketLengths === before, "the rewrite changed a file's length")
+    assert(lookup(2L) === Seq(201L))
   }
 
   test("one-key online lookup over a bucketed store runs at most 2 Spark " +
@@ -210,7 +240,7 @@ class SourcesSpec extends AnyFunSuite {
     val features = spark.read.parquet(store)
     val keys = Seq(7L).toDF("user_id")
     val (rows, jobs) = TestSpark.jobsOf(FeatureStore.onlineLookup(features,
-      lookupView, keys, lookupNow, "v").collect())
+      lookupView, keys, lookupNow, "v", scanPath).collect())
     assert(rows.length === 1)
     assert(jobs <= 2, s"$jobs jobs")
   }

@@ -15,6 +15,19 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The bound that serves an IVF store from the serving snapshot (the
+    * default), and the one that scans it (the fallback). */
+  private val scanPath = 0L
+  private val servingPaths = Seq(scanPath, ops.ServingSnapshot.MaxRootBytes)
+
+  /** `servedTopKFromStore` (l2) under the snapshot bound `bound`. */
+  private def served(q: org.apache.spark.sql.DataFrame, bs: String,
+                     delta: String, k: Int,
+                     cents: org.apache.spark.sql.DataFrame, nprobe: Int,
+                     bound: Long) =
+    ops.Similarity.serveFromStore(q, bs, delta, "u", "vec_id", "embedding",
+      k, cents, nprobe, "l2", excludeSelf = false, bound).answer
+
   private def eventsFixture(dir: String): Unit = {
     val rows = Seq(
       (1L, 10L, 1L, "click", 5.0, "{}"),
@@ -1062,11 +1075,11 @@ class StreamingSpec extends AnyFunSuite {
     val full = ops.Similarity.clusterPrunedTopKStored(reqs,
       StreamingJobs.ivfServingCatalog(spark, bs, delta, "vec_id"),
       "u", "vec_id", "embedding", 3, cents2, nprobe = 2)
-    val pruned = ops.Similarity.servedTopKFromStore(reqs, bs, delta,
-      "u", "vec_id", "embedding", 3, cents2, nprobe = 2)
-    assert(pruned.orderBy("query_id", "rank").collect().toSeq ===
+    for (bound <- servingPaths) assert(served(reqs, bs, delta, 3, cents2, 2,
+        bound).orderBy("query_id", "rank").collect().toSeq ===
       full.orderBy("query_id", "rank").collect().toSeq,
-      "pruned serving diverged from the full catalog")
+      s"pruned serving diverged from the full catalog (bound $bound)")
+    val pruned = served(reqs, bs, delta, 3, cents2, 2, scanPath)
     val scans = pruned.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.partitionFilters.exists(
@@ -1099,16 +1112,18 @@ class StreamingSpec extends AnyFunSuite {
     val full = ops.Similarity.clusterPrunedTopKStored(reqs,
       StreamingJobs.ivfServingCatalog(spark, bs, delta, "vec_id"),
       "u", "vec_id", "embedding", 3, cents, nprobe = 1)
-    val pruned = ops.Similarity.servedTopKFromStore(reqs, bs, delta,
-      "u", "vec_id", "embedding", 3, cents, nprobe = 1)
-    val prunedRows = pruned.orderBy("query_id", "rank").collect().toSeq
-    assert(prunedRows === full.orderBy("query_id", "rank").collect().toSeq,
-      "pruned serving diverged from the full catalog on a cell-straddle")
-    assert(!prunedRows.exists(_.getLong(2) == 1L),
-      "the straddling id's STALE base row was served from the probed cell")
-    assert(prunedRows.map(_.getLong(2)).toSet === Set(2L, 4L),
-      s"expected exactly the live cell-0 candidates, got $prunedRows")
+    for (bound <- servingPaths) {
+      val prunedRows = served(reqs, bs, delta, 3, cents, 1, bound)
+        .orderBy("query_id", "rank").collect().toSeq
+      assert(prunedRows === full.orderBy("query_id", "rank").collect().toSeq,
+        "pruned serving diverged from the full catalog on a cell-straddle")
+      assert(!prunedRows.exists(_.getLong(2) == 1L),
+        "the straddling id's STALE base row was served from the probed cell")
+      assert(prunedRows.map(_.getLong(2)).toSet === Set(2L, 4L),
+        s"expected exactly the live cell-0 candidates, got $prunedRows")
+    }
     // every scan reads with the schema inference would give the store
+    val pruned = served(reqs, bs, delta, 3, cents, 1, scanPath)
     val readSchemas = pruned.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         r.schema
@@ -1125,23 +1140,22 @@ class StreamingSpec extends AnyFunSuite {
     val multi = Seq((100L, Seq(0f, 0f)), (101L, Seq(10f, 9f)),
       (102L, Seq(19f, 1f)), (103L, Seq(0.2f, 0.1f)))
       .toDF("u", "embedding")
-    for (np <- 1 to 3) {
+    for (np <- 1 to 3; bound <- servingPaths) {
       val fullM = ops.Similarity.clusterPrunedTopKStored(multi,
         StreamingJobs.ivfServingCatalog(spark, bs, delta, "vec_id"),
         "u", "vec_id", "embedding", 3, cents3, nprobe = np)
         .orderBy("query_id", "rank").collect().toSeq
-      val prunedM = ops.Similarity.servedTopKFromStore(multi, bs, delta,
-        "u", "vec_id", "embedding", 3, cents3, nprobe = np)
+      val prunedM = served(multi, bs, delta, 3, cents3, np, bound)
         .orderBy("query_id", "rank").collect().toSeq
-      assert(prunedM === fullM, s"nprobe=$np")
+      assert(prunedM === fullM, s"nprobe=$np bound=$bound")
       assert(prunedM.map(_.getLong(0)).distinct.length === 4)
     }
     // a probed cell held by neither half: an empty answer, no failure
     val far = cents3.union(Seq((3L, Seq(100f, 100f))).toDF("centroid_id",
       "centroid_vec"))
-    assert(ops.Similarity.servedTopKFromStore(
-      Seq((104L, Seq(99f, 99f))).toDF("u", "embedding"), bs, delta, "u",
-      "vec_id", "embedding", 3, far, nprobe = 1).count() === 0L)
+    for (bound <- servingPaths)
+      assert(served(Seq((104L, Seq(99f, 99f))).toDF("u", "embedding"), bs,
+        delta, 3, far, 1, bound).count() === 0L)
   }
 
   test("one-key served top-k from a rebuilt IVF store runs at most 4 " +
@@ -1158,8 +1172,9 @@ class StreamingSpec extends AnyFunSuite {
     val cents = StreamingJobs.rebuildIvfStore(spark, bs, delta, "vec_id",
       "vec", 16)
     val q = Seq((1L, vecs(7)._2)).toDF("u", "vec")
-    val (top, jobs) = TestSpark.jobsOf(ops.Similarity.servedTopKFromStore(
-      q, bs, delta, "u", "vec_id", "vec", 10, cents, 4, "cosine").collect())
+    val (top, jobs) = TestSpark.jobsOf(ops.Similarity.serveFromStore(
+      q, bs, delta, "u", "vec_id", "vec", 10, cents, 4, "cosine", false,
+      scanPath).answer.collect())
     assert(top.length === 10)
     assert(jobs <= 4, s"$jobs jobs")
     val full = ops.Similarity.clusterPrunedTopKStored(q,
