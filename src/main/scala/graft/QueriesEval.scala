@@ -1251,31 +1251,45 @@ object QueriesEval {
         // set is pushed BELOW the catalog's dedup as an IN-filter on the
         // partition column, so unprobed store partitions are never
         // listed). Either path's pruning contract is REQUIREd below.
-        val sv = Similarity.serveFromStore(requests, baseStore, delta, "u",
-          "vec_id", "embedding", k, cents1, nprobe, "cosine",
-          excludeSelf = true, ServingSnapshot.MaxRootBytes)
-        val served = sv.answer
-        sv.snapshot match {
-          case Some(Similarity.FromSnapshot(scored, held)) =>
-            val listed = graft.streaming.StreamingJobs.ivfCells(s, baseStore)
-              .flatMap(_._3.map(_.getPath)).toSet
-            require(held == listed, "c5c_ivf_stream_refresh: the serving " +
-              "snapshot must hold exactly the base store's listed cell files")
-            val cells = ServingSnapshot.collectOnDriver(
-                scored.select(col("centroid_id").cast("long")))
-              .collect().map(_.getLong(0)).toSet
-            require(cells.subsetOf(sv.probed.toSet),
-              "c5c_ivf_stream_refresh: only the probed cells may be scored")
-          case None =>
-            requireCentroidJoin(served, "c5c_ivf_stream_refresh")
-            val prunedScans = served.queryExecution.sparkPlan.collect {
-              case f: org.apache.spark.sql.execution.FileSourceScanExec
-                  if f.partitionFilters.exists(
-                    _.references.exists(_.name == "centroid_id")) => f
-            }
-            require(prunedScans.nonEmpty,
-              "c5c_ivf_stream_refresh: the probed centroid set must reach " +
-                "the store scans as partitionFilters (file-listing pruning)")
+        def serve() = Similarity.servedTopKFromStore(requests, baseStore,
+          delta, "u", "vec_id", "embedding", k, cents1, nprobe, "cosine",
+          excludeSelf = true)
+        val served = serve()
+        if (served.queryExecution.analyzed.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) {
+          // the snapshot answered. Compute pruning: every answered item
+          // is stored in a cell its query probes, the probes recomputed
+          // here by the Spark probe plan
+          val probes = Similarity.probeNearestCentroids(
+              Similarity.metricPrep(requests, "u", "embedding", "query_id",
+                "__qv", "cosine"), cents1, nprobe)
+            .select(col("query_id"), col("centroid_id").cast("long"))
+          val unprobed = served.join(catalog.select(
+                col("vec_id").as("item_id"),
+                col("centroid_id").cast("long")), "item_id")
+            .join(probes, Seq("query_id", "centroid_id"), "left_anti")
+            .count()
+          require(unprobed == 0L, "c5c_ivf_stream_refresh: only the " +
+            s"probed cells may be scored ($unprobed answers from others)")
+          // I/O pruning: a repeated request against the unchanged store
+          // reads no file, it is answered from the held rows
+          val before = ServingSnapshot.counters
+          serve()
+          val after = ServingSnapshot.counters
+          require(after.misses == before.misses &&
+              after.fallbacks == before.fallbacks,
+            "c5c_ivf_stream_refresh: a repeated request against the " +
+              "unchanged store must read no file")
+        } else {
+          requireCentroidJoin(served, "c5c_ivf_stream_refresh")
+          val prunedScans = served.queryExecution.sparkPlan.collect {
+            case f: org.apache.spark.sql.execution.FileSourceScanExec
+                if f.partitionFilters.exists(
+                  _.references.exists(_.name == "centroid_id")) => f
+          }
+          require(prunedScans.nonEmpty,
+            "c5c_ivf_stream_refresh: the probed centroid set must reach " +
+              "the store scans as partitionFilters (file-listing pruning)")
         }
         val exact = Similarity.bruteForceTopK(requests,
           catalog.select(col("vec_id"), col("embedding")), "u", "vec_id",

@@ -120,8 +120,8 @@ object FeatureStore {
     * store as the caller's frame lists it. The same filters and the
     * same latest-per-key window run on the driver over the held rows of
     * the requested buckets' files, and the answer is a local relation
-    * equal to the scan's. A root whose files exceed the snapshot's byte
-    * bound is scanned. */
+    * equal to the scan's. A root whose files or decoded rows exceed the
+    * snapshot's byte bound is scanned. */
   def onlineLookup(features: DataFrame, view: FeatureView,
                    requestKeys: DataFrame, now: Column,
                    tiebreakCol: String): DataFrame =
@@ -129,7 +129,8 @@ object FeatureStore {
       ServingSnapshot.MaxRootBytes)
 
   /** [[onlineLookup]] with the serving snapshot's byte bound: a store
-    * whose listed files exceed `maxSnapshotBytes` is scanned. */
+    * whose listed files or decoded rows exceed `maxSnapshotBytes` is
+    * scanned. */
   private[graft] def onlineLookup(features: DataFrame, view: FeatureView,
                                   requestKeys: DataFrame, now: Column,
                                   tiebreakCol: String,
@@ -163,16 +164,18 @@ object FeatureStore {
           .filter(scope.foldLeft(keyFilter(keyCols, lits))(_ && _)),
         keyCols, view.tsCol, tiebreakCol)
     }
+    // the files the lookup reads: its keys' bucket files, when known
+    val files = buckets.map(_.map(bucketFile).toSet)
+    def needs(p: Path) = files.forall(_(p.getName))
     val held = ServingSnapshot.sourceOf(features) match {
-      case Some((source, files)) => ServingSnapshot.of(features.sparkSession,
-        source, files, maxSnapshotBytes)
+      case Some((source, listed)) => ServingSnapshot.of(
+        features.sparkSession, source, listed, needs, maxSnapshotBytes)
       case None => ServingSnapshot.fallback(); None
     }
     held.fold(lookup(features, byFile = true)) { snap =>
-      val files = buckets.map(_.map(bucketFile).toSet)
       ServingSnapshot.collectOnDriver(lookup(ServingSnapshot.frame(
-        features.sparkSession, snap.schema,
-        snap.rows(p => files.forall(_(p.getName)))), byFile = false))
+        features.sparkSession, snap.schema, snap.rows(needs)),
+        byFile = false))
     }
   }
 

@@ -34,37 +34,50 @@ import org.apache.spark.sql.types.StructType
   * operators their scan path plans, evaluated on the driver
   * ([[collectOnDriver]]).
   *
-  *  - A request passes the statuses its own listing saw. When they equal
-  *    the held generation's, it is a hit. Otherwise it is a miss, which
-  *    loads, in one job, every listed file the generation does not hold
-  *    and keeps the rows of the files it still lists. The new
-  *    generation replaces the old one only when a stat after the read
-  *    shows that no file it read changed; else the request is served by
-  *    its scan. Any swap, upsert or rebuild changes a status, so a
+  *  - A request passes the statuses its own listing saw and the files
+  *    it needs (a lookup its keys' bucket files, a retrieval its probed
+  *    cells and the delta). When the held generation holds every needed
+  *    file as listed, it is a hit. Otherwise it is a miss, which loads,
+  *    in one job, the root's listed files on its first build and the
+  *    needed files the generation lacks after that, and keeps the rows
+  *    of the files still listed unchanged: a store rewritten under
+  *    ingest costs a request the files it reads, as its scan would. The
+  *    new generation replaces the old one only when a stat after the
+  *    read shows that no file it read changed; else the request is
+  *    served by its scan. Any swap, upsert or rebuild changes a status, so a
   *    snapshot is never stale against the caller's listing. This relies
   *    on a rewrite changing the length or the mtime, which the bucketed
   *    writers guarantee: each rewrite is a new file written by a Spark
   *    job and renamed in, far more than the file system's mtime
   *    granularity after the file it replaces.
-  *  - A root whose listed files exceed a byte bound is not held: its
-  *    request is served by the scan path (a fallback).
+  *  - A root is held only while it is small: its listed file bytes are
+  *    checked against a bound before any read, its decoded bytes against
+  *    the same bound after the read. Past either, its request is served
+  *    by the scan path (a fallback). The decoded bytes per listed byte
+  *    of a root's last build predict the next, so a root whose rows
+  *    decoded over the bound is not read again while the prediction
+  *    stays over it.
   *  - Each root holds one generation; a miss builds once per root
-  *    (single-flight). The decoded bytes of all roots are bounded, with
-  *    least-recently-used eviction, and everything is dropped with the
-  *    SparkContext it was read by.
+  *    (single-flight). The decoded bytes of all roots are bounded to
+  *    [[HeldRoots]] roots at the bound, with least-recently-used
+  *    eviction that never drops the generation just built: a request
+  *    reads at most three roots (a feature store, an IVF base and its
+  *    delta), so the roots of one request never evict each other.
+  *    Everything is dropped with the SparkContext it was read by.
   *  - [[memoCentroids]] keeps the collected centroid table of a frame
   *    whose leaves are fixed (checkpointed or local).
   *
   * Hits, misses, fallbacks and bytes held are [[counters]]. */
 private[graft] object ServingSnapshot {
 
-  /** Largest store root, in listed file bytes, that a snapshot holds;
-    * checked before any read. Past it the request is served by its
-    * scan. */
+  /** Largest store root a snapshot holds: its listed file bytes,
+    * checked before any read, and its decoded bytes, checked after. Past
+    * it the request is served by its scan. */
   private[graft] val MaxRootBytes: Long = 32L << 20
 
-  /** Decoded bytes all roots' generations may hold together. */
-  private val MaxHeldBytes: Long = 256L << 20
+  /** Roots held at once at the bound: the held decoded bytes are kept
+    * within `HeldRoots` times a request's bound. */
+  private val HeldRoots = 8
 
   /** Centroid tables memoized at once; past it the memo starts over. */
   private val MaxMemoCentroids = 64
@@ -82,14 +95,17 @@ private[graft] object ServingSnapshot {
   private def keyOf(st: FileStatus) =
     FileKey(st.getPath, st.getLen, st.getModificationTime)
 
-  /** One generation of a root: the rows of each file, decoded with
-    * `dataSchema` under `schema` (the data columns, then any partition
-    * columns). */
+  /** One generation of a root: the rows of each file it holds (a subset
+    * of the root's listing), decoded with `dataSchema` under `schema`
+    * (the data columns, then any partition columns). */
   final class Snapshot private[ServingSnapshot] (
       val source: Source, val dataSchema: StructType, val schema: StructType,
       val files: Map[FileKey, Array[UnsafeRow]]) {
-    val bytes: Long = files.valuesIterator.flatten.map(_.getSizeInBytes.toLong)
-      .sum
+    lazy val bytes: Long = files.valuesIterator.flatten
+      .map(_.getSizeInBytes.toLong).sum
+    /** This generation's rows of the `need`ed files alone. */
+    def holding(need: Set[FileKey]): Snapshot =
+      new Snapshot(source, dataSchema, schema, files.filter(f => need(f._1)))
     /** The rows of the files `keep` selects. */
     def rows(keep: Path => Boolean = _ => true): Seq[InternalRow] =
       files.iterator.filter(f => keep(f._1.path)).flatMap(_._2).toSeq
@@ -112,6 +128,8 @@ private[graft] object ServingSnapshot {
   private final class Slot {
     @volatile var snap: Snapshot = _
     @volatile var used: Long = 0L
+    /** The listed and the decoded bytes of the root's last build. */
+    @volatile var built: (Long, Long) = (1L, 0L)
   }
 
   private val slots = new ConcurrentHashMap[String, Slot]()
@@ -155,36 +173,50 @@ private[graft] object ServingSnapshot {
       case _ => None
     }
 
-  /** The snapshot of `source` for the listed `files`: the held
-    * generation when they match it, else a new one built by one job.
-    * None — the request takes its scan path — when the files exceed
-    * `maxBytes` or one changed while it was read. */
+  /** The snapshot of `source` holding the listed `files` that `needs`
+    * selects: the held generation when it holds them as listed, else a
+    * new one built by one job. None — the request takes its scan path —
+    * when the files or their decoded rows exceed `maxBytes`, or one
+    * changed while it was read. */
   def of(spark: SparkSession, source: Source, files: Seq[FileStatus],
-         maxBytes: Long): Option[Snapshot] = {
-    if (files.iterator.map(_.getLen).sum > maxBytes) { fallback(); return None }
+         needs: Path => Boolean, maxBytes: Long): Option[Snapshot] = {
+    val listed = files.iterator.map(_.getLen).sum
+    if (listed > maxBytes) { fallback(); return None }
     own(spark.sparkContext)
     val want = files.map(keyOf).toSet
+    val need = want.filter(k => needs(k.path))
     val name = source.root.toString
     val slot = slots.computeIfAbsent(name, _ => new Slot)
     slot.synchronized {
       slot.used = clock.incrementAndGet()
       val cur = Option(slot.snap).filter(_.source == source)
-      if (cur.exists(_.files.keySet == want)) { hits.incrementAndGet(); cur }
+      if (cur.exists(c => need.forall(c.files.contains))) {
+        hits.incrementAndGet(); cur.map(_.holding(need))
+      }
+      // the last build's decoded bytes per listed byte predict this one's
+      else if (BigInt(listed) * slot.built._2 >
+          BigInt(maxBytes) * slot.built._1) { fallback(); None }
       else {
         misses.incrementAndGet()
         val dataSchema = source.dataSchema.getOrElse(
           graft.streaming.StreamingJobs.footerSchema(spark,
             files.map(_.getPath).minBy(_.toString)))
-        val kept = cur.filter(_.dataSchema == dataSchema)
-          .fold(Map.empty[FileKey, Array[UnsafeRow]])(
-            _.files.filter(f => want(f._1)))
+        val prev = cur.filter(_.dataSchema == dataSchema)
+        val kept = prev.fold(Map.empty[FileKey, Array[UnsafeRow]])(
+          _.files.filter(f => want(f._1)))
         load(spark, source.root, dataSchema, source.options, files,
-            want -- kept.keySet) match {
+            (if (prev.isEmpty) want else need) -- kept.keySet)
+          .map { case (schema, read) =>
+            new Snapshot(source, dataSchema, schema, kept ++ read) } match {
+          case Some(s) =>
+            slot.built = (math.max(s.files.keysIterator.map(_.length).sum,
+              1L), s.bytes)
+            if (s.bytes > maxBytes) { fallback(); None }
+            else {
+              install(name, slot, s, HeldRoots * maxBytes)
+              Some(s.holding(need))
+            }
           case None => fallback(); None
-          case Some((schema, read)) =>
-            val s = new Snapshot(source, dataSchema, schema, kept ++ read)
-            install(name, slot, s)
-            Some(s)
         }
       }
     }
@@ -234,9 +266,10 @@ private[graft] object ServingSnapshot {
   }
 
   /** Make `s` the generation of `slot` (unless the slot was dropped in
-    * the meantime), then evict the least recently used generations
-    * until the held bytes fit [[MaxHeldBytes]]. */
-  private def install(name: String, slot: Slot, s: Snapshot): Unit =
+    * the meantime), then evict the least recently used other generations
+    * until the held bytes fit `budget`. */
+  private def install(name: String, slot: Slot, s: Snapshot,
+                      budget: Long): Unit =
     synchronized {
       if (slots.get(name) eq slot) {
         slot.snap = s
@@ -244,7 +277,9 @@ private[graft] object ServingSnapshot {
           .sortBy(_.used)
         var total = gens.map(_.snap.bytes).sum
         gens.foreach { g =>
-          if (total > MaxHeldBytes) { total -= g.snap.bytes; g.snap = null }
+          if (total > budget && (g ne slot)) {
+            total -= g.snap.bytes; g.snap = null
+          }
         }
         held = total
       }
@@ -301,91 +336,78 @@ private[graft] object ServingSnapshot {
     * partition keys sorted by Catalyst's ordering of its order spec (a
     * window group limit below it is only a pre-filter), an inner or
     * anti equi-join on byte-comparable keys as a hash join, a union and a
-    * generator as Catalyst evaluates them. Any other operator leaves the
-    * plan to Spark, over the same rows. */
-  def collectOnDriver(df: DataFrame): DataFrame = {
-    val plan = df.queryExecution.optimizedPlan
-    val rows = eval(plan).getOrElse(ColumnBridge.dataFrame(df.sparkSession,
-        plan.transform { case DriverRows(o, r) => LocalRelation(o, r) })
-      .queryExecution.executedPlan.executeCollect().toSeq)
+    * generator as Catalyst evaluates them. Any other operator fails the
+    * request, naming it: the serving paths plan none. */
+  def collectOnDriver(df: DataFrame): DataFrame =
     ColumnBridge.dataFrame(df.sparkSession,
-      LocalRelation(DataTypeUtils.toAttributes(df.schema), rows))
-  }
+      LocalRelation(DataTypeUtils.toAttributes(df.schema),
+        eval(df.queryExecution.optimizedPlan)))
 
-  private def eval(plan: LogicalPlan): Option[Seq[InternalRow]] = plan match {
-    case DriverRows(_, rows) => Some(rows)
-    case l: LocalRelation => Some(l.data)
+  private def eval(plan: LogicalPlan): Seq[InternalRow] = plan match {
+    case DriverRows(_, rows) => rows
+    case l: LocalRelation => l.data
     case Project(list, child) if evaluable(list) =>
-      eval(child).map { rows =>
-        val p = new InterpretedMutableProjection(list, child.output)
-        p.initialize(0)
-        rows.map(r => p(r).copy())
-      }
+      val p = new InterpretedMutableProjection(list, child.output)
+      p.initialize(0)
+      eval(child).map(r => p(r).copy())
     case Filter(cond, child) if evaluable(Seq(cond)) =>
-      eval(child).map { rows =>
-        val p = Predicate.createInterpreted(
-          BindReferences.bindReference(cond, child.output))
-        p.initialize(0)
-        rows.filter(p.eval)
-      }
+      val p = Predicate.createInterpreted(
+        BindReferences.bindReference(cond, child.output))
+      p.initialize(0)
+      eval(child).filter(p.eval)
     case w: WindowGroupLimit => eval(w.child)
     case w: Window if w.windowExpressions.forall {
           case Alias(WindowExpression(_: RowNumber, _), _) => true
           case _ => false
         } && evaluable(w.partitionSpec ++ w.orderSpec.map(_.child)) =>
-      eval(w.child).map { rows =>
-        val in = w.child.output
-        val key = InterpretedUnsafeProjection.createProjection(
-          w.partitionSpec.map(BindReferences.bindReference(_, in)))
-        val order = new InterpretedOrdering(w.orderSpec, in)
-        val n = w.windowExpressions.length
-        rows.groupBy(r => key(r).copy()).valuesIterator.flatMap { group =>
-          group.sorted(order).iterator.zipWithIndex.map { case (r, i) =>
+      val in = w.child.output
+      val key = InterpretedUnsafeProjection.createProjection(
+        w.partitionSpec.map(BindReferences.bindReference(_, in)))
+      val order = new InterpretedOrdering(w.orderSpec, in)
+      val n = w.windowExpressions.length
+      eval(w.child).groupBy(r => key(r).copy()).valuesIterator.flatMap {
+        group => group.sorted(order).iterator.zipWithIndex.map {
+          case (r, i) =>
             new JoinedRow(r, InternalRow.fromSeq(Seq.fill(n)(i + 1))).copy()
-          }
-        }.toSeq
-      }
-    case u: Union if !u.byName =>
-      u.children.foldLeft(Option(Seq.empty[InternalRow]))((acc, c) =>
-        for (a <- acc; b <- eval(c)) yield a ++ b)
-    case g: Generate if evaluable(Seq(g.generator)) =>
-      eval(g.child).map { rows =>
-        val gen = BindReferences.bindReference(g.generator: Expression,
-          g.child.output)
-        val keep = new InterpretedMutableProjection(g.requiredChildOutput,
-          g.child.output)
-        val none = Seq(new GenericInternalRow(g.generatorOutput.length))
-        rows.flatMap { r =>
-          val kept = keep(r).copy()
-          val out = gen.eval(r).asInstanceOf[IterableOnce[InternalRow]]
-            .iterator.toSeq
-          (if (out.isEmpty && g.outer) none else out)
-            .map(o => new JoinedRow(kept, o).copy())
         }
+      }.toSeq
+    case u: Union if !u.byName => u.children.flatMap(eval)
+    case g: Generate if evaluable(Seq(g.generator)) =>
+      val gen = BindReferences.bindReference(g.generator: Expression,
+        g.child.output)
+      val keep = new InterpretedMutableProjection(g.requiredChildOutput,
+        g.child.output)
+      val none = Seq(new GenericInternalRow(g.generatorOutput.length))
+      eval(g.child).flatMap { r =>
+        val kept = keep(r).copy()
+        val out = gen.eval(r).asInstanceOf[IterableOnce[InternalRow]]
+          .iterator.toSeq
+        (if (out.isEmpty && g.outer) none else out)
+          .map(o => new JoinedRow(kept, o).copy())
       }
     // an equi-join of keys whose bytes decide equality: a hash join
     case ExtractEquiJoinKeys(jt @ (Inner | LeftAnti), lk, rk,
         other, _, left, right, _)
         if lk.forall(k => UnsafeRowUtils.isBinaryStable(k.dataType)) &&
           evaluable(lk ++ rk ++ other) =>
-      for (ls <- eval(left); rs <- eval(right)) yield {
-        val lKey = InterpretedUnsafeProjection.createProjection(
-          lk.map(BindReferences.bindReference(_, left.output)))
-        val rKey = InterpretedUnsafeProjection.createProjection(
-          rk.map(BindReferences.bindReference(_, right.output)))
-        val cond = other.map(c => Predicate.createInterpreted(
-          BindReferences.bindReference(c, left.output ++ right.output)))
-        // a null key part matches nothing, as under equality
-        val table = rs.groupBy(r => rKey(r).copy()).filter(!_._1.anyNull)
-        ls.flatMap { l =>
-          val k = lKey(l)
-          val hits = if (k.anyNull) Nil else table.getOrElse(k, Nil)
-            .filter(r => cond.forall(_.eval(new JoinedRow(l, r))))
-          if (jt == Inner) hits.map(r => new JoinedRow(l, r).copy())
-          else if (hits.isEmpty) Seq(l) else Nil
-        }
+      val lKey = InterpretedUnsafeProjection.createProjection(
+        lk.map(BindReferences.bindReference(_, left.output)))
+      val rKey = InterpretedUnsafeProjection.createProjection(
+        rk.map(BindReferences.bindReference(_, right.output)))
+      val cond = other.map(c => Predicate.createInterpreted(
+        BindReferences.bindReference(c, left.output ++ right.output)))
+      // a null key part matches nothing, as under equality
+      val table = eval(right).groupBy(r => rKey(r).copy())
+        .filter(!_._1.anyNull)
+      eval(left).flatMap { l =>
+        val k = lKey(l)
+        val hits = if (k.anyNull) Nil else table.getOrElse(k, Nil)
+          .filter(r => cond.forall(_.eval(new JoinedRow(l, r))))
+        if (jt == Inner) hits.map(r => new JoinedRow(l, r).copy())
+        else if (hits.isEmpty) Seq(l) else Nil
       }
-    case _ => None
+    case other => throw new IllegalArgumentException("collectOnDriver: " +
+      s"no driver evaluation of ${other.nodeName}: ${other.simpleString(5)}")
   }
 
   /** Catalyst evaluates `es` row by row: no subquery or other

@@ -75,9 +75,10 @@ object Similarity {
     * (idCol as outId, vecCol as outVec, extra…) and, for "cosine",
     * L2-normalize the vector ONCE below any join (O(n) norms), so the
     * per-pair work is a bare dot product instead of a per-pair norm. */
-  private def metricPrep(df: DataFrame, idCol: String, vecCol: String,
-                         outId: String, outVec: String, metric: String,
-                         extra: Seq[Column] = Nil): DataFrame = {
+  private[graft] def metricPrep(df: DataFrame, idCol: String,
+                                vecCol: String, outId: String,
+                                outVec: String, metric: String,
+                                extra: Seq[Column] = Nil): DataFrame = {
     val sel = df.select(Seq(col(idCol).as(outId), col(vecCol).as(outVec)) ++
       extra: _*)
     if (metric == "cosine") normalized(sel, outVec, outVec) else sel
@@ -1495,28 +1496,16 @@ object Similarity {
                           excludeSelf: Boolean = false): DataFrame =
     serveFromStore(queries, basePath, deltaPath, queryId, itemId, vecCol, k,
       centroids, nprobe, metric, excludeSelf, ServingSnapshot.MaxRootBytes)
-      .answer
-
-  /** A [[servedTopKFromStore]] answer, the cells its queries probed and,
-    * when the serving snapshot answered it (None: the store was
-    * scanned), what it scored. */
-  private[graft] final case class Served(answer: DataFrame,
-                                         probed: Seq[Long],
-                                         snapshot: Option[FromSnapshot])
-
-  /** The probed catalog a snapshot-served request scored (a frame of
-    * driver rows) and the files the snapshot holds for the base half. */
-  private[graft] final case class FromSnapshot(catalog: DataFrame,
-                                               baseFiles: Set[Path])
 
   /** [[servedTopKFromStore]] with the serving snapshot's byte bound: a
-    * store whose listed files exceed `maxSnapshotBytes` is scanned. */
+    * store half whose listed files or decoded rows exceed
+    * `maxSnapshotBytes` is scanned. */
   private[graft] def serveFromStore(queries: DataFrame, basePath: String,
                                     deltaPath: String, queryId: String,
                                     itemId: String, vecCol: String, k: Int,
                                     centroids: DataFrame, nprobe: Int,
                                     metric: String, excludeSelf: Boolean,
-                                    maxSnapshotBytes: Long): Served = {
+                                    maxSnapshotBytes: Long): DataFrame = {
     require(nprobe >= 1, s"servedTopKFromStore: nprobe=$nprobe")
     require(metric == "cosine" || metric == "l2",
       s"servedTopKFromStore: metric=$metric")
@@ -1532,17 +1521,13 @@ object Similarity {
         StructField("centroid_id", LongType, nullable = false),
         q.schema("__qv"))))
     val probed = probes.map(_.getLong(1)).distinct.sorted
-    val held = graft.streaming.StreamingJobs.ivfServingSnapshot(spark,
-      basePath, deltaPath, itemId, probed, maxSnapshotBytes)
     def topK(catalog: DataFrame) =
       storedTopK(catalog, qProbe, itemId, vecCol, k, metric, excludeSelf)
-    held match {
-      case Some((catalog, baseFiles)) => Served(
-        ServingSnapshot.collectOnDriver(topK(catalog)), probed,
-        Some(FromSnapshot(catalog, baseFiles)))
-      case None => Served(topK(graft.streaming.StreamingJobs
-          .ivfServingCatalog(spark, basePath, deltaPath, itemId,
-            Some(probed))), probed, None)
+    graft.streaming.StreamingJobs.ivfServingSnapshot(spark, basePath,
+        deltaPath, itemId, probed, maxSnapshotBytes) match {
+      case Some(catalog) => ServingSnapshot.collectOnDriver(topK(catalog))
+      case None => topK(graft.streaming.StreamingJobs.ivfServingCatalog(
+        spark, basePath, deltaPath, itemId, Some(probed)))
     }
   }
 

@@ -623,14 +623,13 @@ object StreamingJobs {
     * (base → base.old, delta), each listed by [[ivfCells]] and held by the
     * snapshot under those statuses, and the same cell-straddle guard and
     * delta-wins dedup, over the held rows. Returns the catalog as a frame
-    * of driver rows and the files the base half holds; None — the
-    * caller scans — when the halves' files exceed `maxBytes` or a file
-    * changed while it was read. */
+    * of driver rows; None — the caller scans — when a half is over
+    * `maxBytes` or a file changed while it was read. */
   private[graft] def ivfServingSnapshot(spark: SparkSession,
                                         basePath: String, deltaPath: String,
                                         idCol: String, probed: Seq[Long],
                                         maxBytes: Long)
-      : Option[(DataFrame, Set[Path])] = {
+      : Option[DataFrame] = {
     import graft.ops.ServingSnapshot
     val roots = ivfRoots(spark, basePath, deltaPath)
     val cells = roots.map { case (root, epoch) =>
@@ -639,11 +638,17 @@ object StreamingJobs {
         cells.isEmpty) {
       ServingSnapshot.fallback(); return None
     }
+    // each half's files the request reads: the probed cells, and all of
+    // the delta (its ids guard the base half)
     val held = cells.map { case (root, epoch, cs) =>
       val r = new Path(root)
+      val needed = (if (epoch == 1) cs
+        else cs.filter(c => probed.contains(c._1))).flatMap(_._3)
+        .map(_.getPath).toSet
       ServingSnapshot.of(spark, ServingSnapshot.Source(
           r.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .makeQualified(r), None, Map.empty), cs.flatMap(_._3), maxBytes)
+            .makeQualified(r), None, Map.empty), cs.flatMap(_._3), needed,
+          maxBytes)
         .map(snap => (epoch, cs, snap))
     }
     Option.when(held.forall(_.nonEmpty)) {
@@ -659,13 +664,11 @@ object StreamingJobs {
         val files = cs.filter(c => probed.contains(c._1)).flatMap(_._3)
         Option.when(files.nonEmpty)(epoch -> rows(snap, files))
       }
-      (latestEpoch(probedHalves(probedRows, deltaIds, probed, idCol)
+      latestEpoch(probedHalves(probedRows, deltaIds, probed, idCol)
           .reduceOption(_ unionByName _).getOrElse(
             ServingSnapshot.frame(spark, halves.head._3.schema, Nil)
               .withColumn("__epoch", lit(0))),
-          roots.exists(_._2 == 1), idCol),
-        halves.collectFirst { case (0, _, snap) =>
-          snap.files.keySet.map(_.path) }.getOrElse(Set.empty))
+        roots.exists(_._2 == 1), idCol)
     }
   }
 

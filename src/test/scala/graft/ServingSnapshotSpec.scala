@@ -30,9 +30,9 @@ class ServingSnapshotSpec extends AnyFunSuite {
     StreamingJobs.upsertBucketedBatch(batch, Seq("user_id"), "ts", "v",
       store, 8)
 
-  private def featureStore(): String = {
+  private def featureStore(keys: Long = 60L): String = {
     val store = Files.createTempDirectory("graft-snap").toString + "/store"
-    upsert(store, rows(1, 60, 1800))
+    upsert(store, rows(1, keys, 1800))
     store
   }
 
@@ -60,7 +60,7 @@ class ServingSnapshotSpec extends AnyFunSuite {
                    cents: DataFrame,
                    bound: Long = ServingSnapshot.MaxRootBytes) =
     Similarity.serveFromStore(q, base, delta, "u", "vec_id", "vec", 10,
-      cents, 3, "cosine", excludeSelf = false, bound).answer.collect().toSeq
+      cents, 3, "cosine", excludeSelf = false, bound).collect().toSeq
       .sortBy(r => (r.getLong(0), r.getInt(1)))
 
   /** The full-catalog answer the served top-10 must equal. */
@@ -138,6 +138,31 @@ class ServingSnapshotSpec extends AnyFunSuite {
     assert(counted(lookup(fresh, Seq(7L)))._2 === 1L, "the build was not kept")
   }
 
+  test("after an upsert rewrites every bucket file, the next lookup reads " +
+    "only its key's bucket file") {
+    val store = featureStore()
+    assert(lookup(spark.read.parquet(store), Seq(7L)).size === 1)
+    upsert(store, rows(1, 60, 1900).withColumn("v", col("v") + 100L))
+    val fresh = spark.read.parquet(store)
+    var read = 0L
+    val count = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        synchronized(read += e.taskMetrics.inputMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(count)
+    val got = try lookup(fresh, Seq(7L)) finally {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      spark.sparkContext.removeSparkListener(count)
+    }
+    assert(got.map(_.getAs[Long]("v")) === Set(107L))
+    assert(got === lookup(fresh, Seq(7L), scanPath))
+    // one of 8 buckets, not the 60 rows of the store
+    assert(read > 0L && read < 30L, s"$read rows read")
+  }
+
   test("two requests that miss together run one build job, and both " +
     "answer as the scan path does") {
     val features = spark.read.parquet(featureStore())
@@ -182,5 +207,62 @@ class ServingSnapshotSpec extends AnyFunSuite {
     assert(scanned === lookup(features, Seq(5L, 6L)))
     assert(top === topK(q, base, delta, cents))
     assert(ServingSnapshot.counters.bytesHeld > 0L)
+  }
+
+  test("a store whose decoded rows exceed the bound is scanned and not " +
+    "read again while it stays that size; the held roots stay within " +
+    "the budget, the most recent kept") {
+    def store(): DataFrame = spark.read.parquet(featureStore(20000L))
+    def counted[A](body: => A) = {
+      val b = ServingSnapshot.counters
+      val out = body
+      val a = ServingSnapshot.counters
+      (out, a.misses - b.misses, a.fallbacks - b.fallbacks)
+    }
+    // a root's listed and decoded sizes: 20,000 rows decode larger than
+    // their parquet files
+    val probe = store()
+    val (source, files) = ServingSnapshot.sourceOf(probe).get
+    val listed = files.map(_.getLen).sum
+    val decoded = ServingSnapshot.of(spark, source, files, _ => true,
+      ServingSnapshot.MaxRootBytes).get.bytes
+    assert(listed < decoded, s"listed $listed, decoded $decoded")
+
+    val between = (listed + decoded) / 2
+    val big = featureStore(20000L)
+    val features = spark.read.parquet(big)
+    val (got, misses, fallbacks) = counted(lookup(features, Seq(5L), between))
+    assert((misses, fallbacks) === ((1L, 1L)))
+    assert(got === lookup(features, Seq(5L), scanPath))
+    assert(counted(lookup(features, Seq(5L), between)).productIterator
+      .drop(1).toSeq === Seq(0L, 1L), "the rows over the bound were read again")
+    // a changed listing of about the same size is predicted over the bound
+    // from the rejected build: scanned, not read
+    upsert(big, rows(5, 5, 1900).withColumn("v", lit(500L)))
+    val changed = spark.read.parquet(big)
+    val (seen, again, scanned) = counted(lookup(changed, Seq(5L), between))
+    assert((again, scanned) === ((0L, 1L)))
+    assert(seen.map(_.getAs[Long]("v")) === Set(500L))
+
+    // nine roots at the bound, eight roots' worth of budget: the least
+    // recently used goes, the two most recent still answer with no job
+    val roots = Seq.fill(9)(store())
+    roots.foreach(r => lookup(r, Seq(1L), decoded))
+    assert(ServingSnapshot.counters.bytesHeld <= 8 * decoded)
+    Seq(roots(8), roots(7), roots(8)).foreach { r =>
+      val (_, jobs) = TestSpark.jobsOf(lookup(r, Seq(2L), decoded))
+      assert(jobs === 0, s"$jobs jobs")
+    }
+    assert(counted(lookup(roots(0), Seq(2L), decoded))._2 === 1L)
+  }
+
+  test("an operator the driver does not evaluate fails the request, " +
+    "naming it") {
+    val held = ServingSnapshot.frame(spark,
+      org.apache.spark.sql.types.StructType.fromDDL("a LONG"),
+      Seq(org.apache.spark.sql.catalyst.InternalRow(1L)))
+    val e = intercept[IllegalArgumentException](
+      ServingSnapshot.collectOnDriver(held.groupBy("a").count()))
+    assert(e.getMessage.contains("Aggregate"))
   }
 }

@@ -26,7 +26,7 @@ class StreamingSpec extends AnyFunSuite {
                      cents: org.apache.spark.sql.DataFrame, nprobe: Int,
                      bound: Long) =
     ops.Similarity.serveFromStore(q, bs, delta, "u", "vec_id", "embedding",
-      k, cents, nprobe, "l2", excludeSelf = false, bound).answer
+      k, cents, nprobe, "l2", excludeSelf = false, bound)
 
   private def eventsFixture(dir: String): Unit = {
     val rows = Seq(
@@ -1174,7 +1174,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = Seq((1L, vecs(7)._2)).toDF("u", "vec")
     val (top, jobs) = TestSpark.jobsOf(ops.Similarity.serveFromStore(
       q, bs, delta, "u", "vec_id", "vec", 10, cents, 4, "cosine", false,
-      scanPath).answer.collect())
+      scanPath).collect())
     assert(top.length === 10)
     assert(jobs <= 4, s"$jobs jobs")
     val full = ops.Similarity.clusterPrunedTopKStored(q,
